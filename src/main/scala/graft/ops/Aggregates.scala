@@ -188,8 +188,14 @@ object Aggregates extends QueryPack {
       // = broadcast offset + row_number within (group, band). Equal
       // values share a band (floor is monotone), so the row AT any rank —
       // all the interpolation consumes — is unchanged. Group sizes fall
-      // out of the same counts, dropping the old max(rn) pass, and the
-      // ranked frame is now single-consumer so its checkpoint is gone.
+      // out of the same counts, dropping the old max(rn) pass. The ranked
+      // frame `rk` keeps its lazy checkpoint: two consumers read it (the
+      // band counts and the offset join), so the cut is load-bearing.
+      // Domain assumption: TPC-H l_extendedprice = l_quantity (1-50) ×
+      // p_retailprice (900.00-2098.99), about 900-105 000, so 4096-wide
+      // bands give ~26 per flag. Ranks stay exact for any domain (floor is
+      // monotone); only the parallelism rests on it — a domain far
+      // narrower than the width falls back to one serial sort per group.
       val bandW = 4096.0
       val wRank = Window.partitionBy(col("l_returnflag"), col("band"))
         .orderBy(col("l_extendedprice"))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.queue.BatchScan
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,7 +43,8 @@ object Ingestion extends QueryPack {
 
   /** The pre-insert-flush scan (`main.go:208-228`): an item whose size
     * would cross the threshold first flushes the *existing* queue (if any)
-    * and then seeds the next batch. Shared by q_batch_assignment/payload.
+    * and then seeds the next batch ([[graft.queue.EventQueue.crosses]], the
+    * rule the live façade applies). Shared by q_batch_assignment/payload.
     */
   private def assignBatches(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -53,20 +55,18 @@ object Ingestion extends QueryPack {
       .groupByKey(_.user_id)
       .flatMapGroups { (uid, it) =>
         val sorted = it.toSeq.sortBy(e => (e.tsMicros, e.event_id))
-        var cur = 0L
-        var batch = 0L
+        val scan = new BatchScan(MaxSizeBytes)
         sorted.iterator.map { e =>
-          if (cur + e.sz >= MaxSizeBytes && cur > 0) { batch += 1; cur = 0 }
-          val out = EvBatch(e.event_id, uid, batch, cur, e.sz)
-          cur += e.sz
-          out
+          val before = scan.add(e.sz)
+          EvBatch(e.event_id, uid, scan.batch, before, e.sz)
         }
       }
       .toDF()
   }
 
-  /** Recursive-CTE mirror of the same scan for the DuckDB oracle — the two
-    * formulations are kept line-for-line parallel (SURVEY §7.4). */
+  /** Recursive-CTE mirror of the same scan for the DuckDB oracle (SURVEY
+    * §7.4). It spells the rule out again rather than sharing `crosses`, so
+    * it stays an independent check of the scan. */
   private val batchCte = s"""
     WITH RECURSIVE ev AS (
       SELECT event_id, user_id, strlen(event_type) + strlen(props) AS sz,

@@ -312,6 +312,11 @@ object MiningOps extends QueryPack {
       // checkpointed (two tiny consumers); offsets come from a window
       // OVER THAT FRAME, never over facts, and group sizes fall out of
       // the same counts, dropping the old max(rn) pass.
+      // Domain assumption: TPC-H l_extendedprice = l_quantity (1-50) ×
+      // p_retailprice (900.00-2098.99), about 900-105 000, so 4096-wide
+      // bands give ~26 per flag. Ranks stay exact for any domain (floor is
+      // monotone); only the parallelism rests on it — a domain far
+      // narrower than the width falls back to one serial sort per group.
       val bandW = 4096.0
       val wRank = Window.partitionBy(col("rf"), col("band"))
         .orderBy(col("pd"))

@@ -26,7 +26,9 @@ import scala.util.{Failure, Success, Try}
   *  - I/O outside the lock: the drained batch is sent after the critical
   *    section ends (`main.go:212-222`), so the sink never blocks producers;
   *  - counter clamp: draining never lets `currentSize` go negative
-  *    (`main.go:307-309`).
+  *    (`main.go:307-309`); the reference re-marshals each drained item to
+  *    decrement the counter, here the size stored at enqueue is exact, so
+  *    a drain empties the queue and zeroes the counter.
   *
   * Intentional upgrade over the reference (documented, SURVEY §4.1): on a
   * send failure the drained items are RETURNED inside the Failure (the
@@ -122,10 +124,35 @@ object EventQueue {
       case _ =>
         Failure(new IllegalArgumentException("event field is required"))
     }
+
+  /** The pre-insert-flush rule (`main.go:208-210`), the one definition the
+    * façade and `Ingestion.assignBatches` share: an item of `size` bytes
+    * arriving with `cur` bytes buffered first flushes the buffer when the
+    * buffer is non-empty and the two together reach `max`. */
+  def crosses(cur: Long, size: Long, max: Long): Boolean = cur > 0 && cur + size >= max
+}
+
+/** The running batch assignment that [[EventQueue.crosses]] implies, over
+  * one producer's item sizes in arrival order: `add` returns the bytes
+  * buffered before the item, and `batch` is the item's batch number. */
+final class BatchScan(max: Long) {
+  var batch = 0L
+  private var cur = 0L
+  def add(size: Long): Long = {
+    if (EventQueue.crosses(cur, size, max)) { batch += 1; cur = 0 }
+    val before = cur
+    cur += size
+    before
+  }
 }
 
 /** The buffered implementation — state mirrors the `kinesisQueue` struct
   * (`main.go:26-35`): FIFO queue + byte counter behind one lock.
+  *
+  * Each item is JSON-encoded once, on enqueue, and the queue keeps that
+  * encoding beside it: it sizes the item, and the batch payload is the
+  * stored encodings joined into one array — byte-identical to
+  * `Json.encode(batch)` by construction, with no encoding under the lock.
   */
 final class BufferedEventQueue private[queue] (
     val streamName: String,
@@ -135,9 +162,10 @@ final class BufferedEventQueue private[queue] (
     val streamArn: String,
     sink: StreamSink,
     clock: () => Long) extends EventQueue {
+  import BufferedEventQueue.Encoded
 
   private val lock = new Object
-  private val queue = mutable.Queue.empty[Map[String, Any]]
+  private var queue = mutable.ArrayBuffer.empty[Encoded]
   private var currentSize: Long = 0L
   private val keySeq = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -145,77 +173,97 @@ final class BufferedEventQueue private[queue] (
   def bufferedBytes: Long = lock.synchronized(currentSize)
   /** Test/inspection hook: current buffered item count. */
   def bufferedCount: Int = lock.synchronized(queue.size)
+  /** Test/inspection hook: the stored encoding sizes of the buffered items. */
+  def bufferedSizes: Seq[Long] = lock.synchronized(queue.map(_.bytes.length.toLong).toSeq)
 
-  /** `Enqueue` (`main.go:197-231`): enrich → size → [lock: maybe drain
-    * existing, insert, grow counter] → send drained batch OUTSIDE the lock.
+  /** `Enqueue` (`main.go:197-231`): enrich → encode (the size) → [lock:
+    * maybe drain existing, insert, grow counter] → send the drained batch
+    * OUTSIDE the lock.
     */
   override def enqueue(event: Map[String, Any]): Try[Unit] =
-    EventQueue.enrichAndValidate(event, origin, clock()).flatMap { enriched =>
-      // Sizing inside Try: a non-finite number fails THIS enqueue loudly
-      // (upgrade over the reference, which discards the sizing-marshal
-      // error (main.go:202) and lets the bad item poison the whole batch
-      // at send time).
-      Try(Json.byteSize(enriched)).flatMap { itemSize =>
-        val toFlush: Seq[Map[String, Any]] = lock.synchronized {
-          val drained =
-            if (currentSize + itemSize >= maxSizeBytes) drainItemsLocked()
-            else Seq.empty
-          queue.enqueue(enriched)
-          currentSize += itemSize
-          drained
-        }
-        if (toFlush.isEmpty) Success(())
-        else sendBatch(toFlush).map(_ => ())
+    encoded(event).flatMap { item =>
+      val itemSize = item.bytes.length.toLong
+      val toFlush: mutable.ArrayBuffer[Encoded] = lock.synchronized {
+        val drained =
+          if (EventQueue.crosses(currentSize, itemSize, maxSizeBytes)) drainLocked()
+          else null
+        queue += item
+        currentSize += itemSize
+        drained
       }
+      if (toFlush == null) Success(())
+      else sendBatch(toFlush)
     }
 
   /** `Flush` (`main.go:244-264`): drain under lock, send outside it.
     * Success → the sent items (reference returns nil on success; returning
     * them is a strict upgrade the tests rely on); empty queue → empty seq. */
   override def flush(): Try[Seq[Map[String, Any]]] = {
-    val items = lock.synchronized(drainItemsLocked())
-    if (items.isEmpty) Success(Seq.empty)
-    else sendBatch(items)
+    val batch = lock.synchronized(drainLocked())
+    if (batch.isEmpty) Success(Seq.empty)
+    else sendBatch(batch).map(_ => itemsOf(batch))
   }
 
   /** `Send` (`main.go:233-242`): enrich → immediate one-item batch; no
     * queue, no lock. */
   override def send(event: Map[String, Any]): Try[Unit] =
-    EventQueue.enrichAndValidate(event, origin, clock())
-      .flatMap(e => sendBatch(Seq(e)))
-      .map(_ => ())
+    encoded(event).flatMap(e => sendBatch(mutable.ArrayBuffer(e)))
 
-  /** `drainItems` (`main.go:291-312`): pop FIFO while the counter is
-    * positive, decrement by each item's re-measured size, clamp at zero.
-    * Caller must hold the lock. */
-  private def drainItemsLocked(): Seq[Map[String, Any]] = {
-    val out = mutable.ArrayBuffer.empty[Map[String, Any]]
-    while (currentSize > 0 && queue.nonEmpty) {
-      val item = queue.dequeue()
-      out += item
-      currentSize -= Json.byteSize(item)
-      if (currentSize < 0) currentSize = 0
-    }
-    // Defensive parity with the reference's loop guard: if sizes ever
-    // under-count (marshal failure → size 0, main.go:202), items could
-    // outlive the counter; sweep them so FIFO order still holds.
-    if (queue.nonEmpty && currentSize == 0) { out ++= queue; queue.clear() }
-    out.toSeq
+  /** Enrichment, then the one encoding. Encoding inside Try: a non-finite
+    * number fails THIS call loudly (upgrade over the reference, which
+    * discards the sizing-marshal error (main.go:202) and lets the bad item
+    * poison the whole batch at send time). */
+  private def encoded(event: Map[String, Any]): Try[Encoded] =
+    EventQueue.enrichAndValidate(event, origin, clock())
+      .flatMap(e => Try(Encoded(e, Json.encodeBytes(e))))
+
+  /** `drainItems` (`main.go:291-312`) pops FIFO while the counter is
+    * positive, decrementing by each item's size and clamping at zero. The
+    * counter is exactly the sum of the stored sizes, each at least 2 bytes
+    * (`{}`), so that loop always ends with the queue empty and the counter
+    * zero: here it takes the whole queue at once. Caller holds the lock. */
+  private def drainLocked(): mutable.ArrayBuffer[Encoded] = {
+    val out = queue
+    queue = mutable.ArrayBuffer.empty[Encoded]
+    currentSize = 0L
+    out
   }
 
   /** `sendToKinesis` (`main.go:266-289`): whole batch as ONE JSON-array
     * record, fresh partition key per record. On failure the batch rides
     * inside the Failure (upgrade over the reference's silent drop). */
-  private def sendBatch(batch: Seq[Map[String, Any]]): Try[Seq[Map[String, Any]]] =
-    Try {
-      val payload = Json.encode(batch).getBytes("UTF-8")
-      sink.putRecord(payload, nextPartitionKey())
-      batch
-    }.recoverWith { case e => Failure(SendFailed(batch, e)) }
+  private def sendBatch(batch: mutable.ArrayBuffer[Encoded]): Try[Unit] =
+    Try(sink.putRecord(BufferedEventQueue.payload(batch), nextPartitionKey()))
+      .recoverWith { case e => Failure(SendFailed(itemsOf(batch), e)) }
+
+  private def itemsOf(batch: mutable.ArrayBuffer[Encoded]): Seq[Map[String, Any]] =
+    batch.view.map(_.item).toList
 
   /** UUID-shaped partition key from a counter (deterministic for tests,
     * uniform for sharding — the reference uses `uuid.NewString()`,
     * `main.go:275`). */
   private def nextPartitionKey(): String =
     new java.util.UUID(streamName.hashCode.toLong, keySeq.getAndIncrement()).toString
+}
+
+private object BufferedEventQueue {
+  /** An enriched item and its JSON encoding. */
+  final case class Encoded(item: Map[String, Any], bytes: Array[Byte])
+
+  /** `[` + the encodings joined by `,` + `]`: what `Json.encode` writes
+    * for the sequence of items. */
+  def payload(batch: mutable.ArrayBuffer[Encoded]): Array[Byte] = {
+    var total = 1 + batch.size
+    batch.foreach(total += _.bytes.length)
+    val out = new Array[Byte](total)
+    out(0) = '['
+    var at = 1
+    batch.foreach { e =>
+      if (at > 1) { out(at) = ','; at += 1 }
+      System.arraycopy(e.bytes, 0, out, at, e.bytes.length)
+      at += e.bytes.length
+    }
+    out(at) = ']'
+    out
+  }
 }

@@ -61,7 +61,9 @@ class EventsV2MicroBatchStream(path: String, required: StructType,
   // Spark's own offset log referenced entries beyond the recovered log).
   // Load resolves the highest version; older versions are pruned only
   // AFTER the new one is durable, and a crash mid-prune just leaves
-  // extra files for the next load to ignore.
+  // extra files for the next load to ignore. The directory is listed once,
+  // at load: the first persist prunes what that listing found, and each
+  // later persist prunes the version this stream wrote before it.
   private val LogPrefix = "graft-files.log"
   private val LogVersion = s"""\\Qgraft-files.log.\\E(\\d+)""".r
   private val legacyLogPath = new Path(checkpointLocation, LogPrefix)
@@ -83,15 +85,19 @@ class EventsV2MicroBatchStream(path: String, required: StructType,
   private val seenLog = ArrayBuffer.empty[String]
   private val seenSet = scala.collection.mutable.HashSet.empty[String]
   private val lock = new Object
+  // superseded log copies, deleted after the next durable persist
+  private var toPrune: Seq[Path] = Nil
 
   locally {
     val fs = legacyLogPath.getFileSystem(hadoopConf)
     val versioned = versionedLogs(fs)
+    val legacy = fs.exists(legacyLogPath)
+    toPrune = versioned.map(_._2) ++ (if (legacy) Seq(legacyLogPath) else Nil)
     // highest version wins; a pre-versioning checkpoint falls back to
     // the legacy unversioned file so old checkpoints keep resuming
     val toLoad: Option[Path] =
       if (versioned.nonEmpty) Some(versioned.maxBy(_._1)._2)
-      else if (fs.exists(legacyLogPath)) Some(legacyLogPath)
+      else if (legacy) Some(legacyLogPath)
       else None
     toLoad.foreach { p =>
       val in = fs.open(p)
@@ -119,11 +125,9 @@ class EventsV2MicroBatchStream(path: String, required: StructType,
       throw new java.io.IOException(s"could not persist file log $dst")
     // the new version is durable — prune superseded copies (best-effort;
     // leftovers are ignored by the max-version load)
-    versionedLogs(fs).filter(_._1 < ver)
-      .foreach { case (_, p) => try fs.delete(p, false) catch {
-        case _: java.io.IOException => () } }
-    try { if (fs.exists(legacyLogPath)) fs.delete(legacyLogPath, false) }
-    catch { case _: java.io.IOException => () }
+    toPrune.filter(_ != dst).foreach { p =>
+      try fs.delete(p, false) catch { case _: java.io.IOException => () } }
+    toPrune = Seq(dst)
   }
 
   override def initialOffset(): Offset = EventsV2Offset(0L)

@@ -118,6 +118,114 @@ object BatchingProps extends Properties("batching") {
     EventQueue.enrichAndValidate(once, "app", T0).get == once
   }
 
+  /** One batching rule: the façade's flushes and `BatchScan` (the scan
+    * `Ingestion.assignBatches` runs per producer) assign every item of a
+    * random size sequence to the same batch, with the same bytes buffered
+    * before it. */
+  property("facade-and-batch-scan-agree") =
+    forAll(Gen.listOf(Gen.choose(0, 400)).map(_.take(80)), genMax) { (pads, max) =>
+      val sink = new InMemorySink
+      val q = EventQueue.withOpts("s", "", max, "", "", sink, () => T0)
+        .get.asInstanceOf[BufferedEventQueue]
+      val scan = new BatchScan(max)
+      val (batches, befores) = pads.map { pad =>
+        val e = Map[String, Any]("event" -> "e", "pad" -> ("x" * pad))
+        val size = Json.byteSize(EventQueue.enrichAndValidate(e, "", T0).get)
+        val before = scan.add(size)
+        q.enqueue(e).get
+        ((scan.batch, sink.records().size.toLong), (before, q.bufferedBytes - size))
+      }.unzip
+      Prop(batches.forall { case (a, b) => a == b }) :| s"batch ids $batches" &&
+        Prop(befores.forall { case (a, b) => a == b }) :| s"bytes before $befores"
+    }
+
+  private sealed trait Op
+  private final case class Enqueue(e: Map[String, Any]) extends Op
+  private final case class Send(e: Map[String, Any]) extends Op
+  private case object Flush extends Op
+  private case object FailNext extends Op
+
+  private val genItem: Gen[Map[String, Any]] = for {
+    name <- Gen.oneOf("view", "buy", "é<&>")
+    pad  <- Gen.frequency(8 -> Gen.choose(0, 200), 1 -> Gen.choose(1000, 2500))
+    n    <- Gen.choose(-1000, 1000)
+    nest <- Gen.oneOf(true, false)
+  } yield {
+    val base = Map[String, Any]("event" -> name, "pad" -> ("ü" * pad), "n" -> n / 8.0)
+    if (nest) base + ("tags" -> Seq("a", Map("k" -> 1L, "\uff61" -> null))) else base
+  }
+  private val genOps: Gen[List[Op]] = Gen.listOf(Gen.frequency(
+    12 -> genItem.map(Enqueue(_)), 2 -> genItem.map(Send(_)),
+    1 -> Gen.const(Flush), 1 -> Gen.const(FailNext))).map(_.take(60))
+
+  /** Encode once: over random operation sequences (oversize items, `send`,
+    * a failing sink whose `SendFailed.batch` is then re-enqueued), every
+    * payload is `Json.encode` of its batch, in order, and after every
+    * operation the byte counter is the sum of the stored encodings' sizes.
+    * The model spells the pre-insert-flush rule out independently. */
+  property("payload-is-encode-of-batch") = forAll(genOps, genMax) { (ops, max) =>
+    val sink = new InMemorySink
+    val q = EventQueue.withOpts("s", "", max, "app", "", sink, () => T0)
+      .get.asInstanceOf[BufferedEventQueue]
+    var buf = Vector.empty[Map[String, Any]]
+    val want = scala.collection.mutable.ArrayBuffer.empty[String]
+    var failing = false
+    var ok = true
+    def enrich(e: Map[String, Any]) = EventQueue.enrichAndValidate(e, "app", T0).get
+    // the model's delivery: the payload lands unless the sink is failing,
+    // in which case the batch comes back for re-enqueueing
+    def deliver(batch: Seq[Map[String, Any]]): Seq[Map[String, Any]] =
+      if (failing) { failing = false; batch } else { want += Json.encode(batch); Nil }
+    def check(): Unit = {
+      val cur = buf.map(Json.byteSize).sum
+      ok &&= q.bufferedBytes == q.bufferedSizes.sum && q.bufferedBytes == cur &&
+        sink.records().map(_._1) == want.toSeq
+    }
+    def enqueue(e: Map[String, Any]): Unit = {
+      val en = enrich(e)
+      val size = Json.byteSize(en)
+      val cur = buf.map(Json.byteSize).sum
+      val back =
+        if (cur > 0 && cur + size >= max) { val b = buf; buf = Vector.empty; deliver(b) }
+        else Nil
+      buf :+= en
+      val r = q.enqueue(e)
+      ok &&= (back.isEmpty == r.isSuccess)
+      check()
+      reEnqueue(r.failed.toOption, back)
+    }
+    def reEnqueue(failure: Option[Throwable], back: Seq[Map[String, Any]]): Unit =
+      failure.foreach {
+        case SendFailed(batch, _) =>
+          ok &&= batch == back
+          batch.foreach(enqueue)
+        case _ => ok = false
+      }
+    ops.foreach {
+      case Enqueue(e) => enqueue(e)
+      case Send(e) =>
+        val back = deliver(Seq(enrich(e)))
+        val r = q.send(e)
+        check()
+        reEnqueue(r.failed.toOption, back)
+      case Flush =>
+        val b = buf; buf = Vector.empty
+        val back = if (b.isEmpty) Nil else deliver(b)
+        val r = q.flush()
+        ok &&= r.toOption.forall(_ == b)
+        check()
+        reEnqueue(r.failed.toOption, back)
+      case FailNext =>
+        failing = true; sink.failNext = true
+    }
+    failing = false; sink.failNext = false
+    val rest = buf; buf = Vector.empty
+    if (rest.nonEmpty) deliver(rest)
+    ok &&= q.flush().toOption.contains(rest)
+    check()
+    Prop(ok) :| s"payloads ${sink.records().map(_._1)} expected $want"
+  }
+
   /** Required-field rejection (main.go:175-177). */
   property("enrichment-rejects-missing-event") = forAll(Gen.identifier) { k =>
     EventQueue.enrichAndValidate(Map(("not_" + k) -> "v"), "", T0).isFailure

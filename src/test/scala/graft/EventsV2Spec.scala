@@ -300,4 +300,23 @@ class EventsV2Spec extends AnyFunSuite {
            !after.contains("graft-files.log.1"),
       s"superseded versions must prune after the new persist: $after")
   }
+
+  test("seen-files log: each persist of one stream prunes the version it " +
+       "wrote before") {
+    import graft.sources.v2.{EventsV2, EventsV2MicroBatchStream, EventsV2Offset}
+    spark // the stream resolves its Hadoop conf through the active session
+    val data = java.nio.file.Files.createTempDirectory("ev2-prune-d").toFile
+    val ckpt = java.nio.file.Files.createTempDirectory("ev2-prune-c").toFile
+    data.deleteOnExit(); ckpt.deleteOnExit()
+    val s = new EventsV2MicroBatchStream(data.getAbsolutePath,
+      EventsV2.Schema, Array.empty, ckpt.getAbsolutePath)
+    def logs() = ckpt.listFiles().map(_.getName)
+      .filter(_.startsWith("graft-files.log")).toSet
+    (1 to 3).foreach { i =>
+      java.nio.file.Files.write(new java.io.File(data, s"f$i.json").toPath,
+        s"""{"event_id":$i}\n""".getBytes)
+      assert(s.latestOffset().asInstanceOf[EventsV2Offset].index == i.toLong)
+      assert(logs() == Set(s"graft-files.log.$i"), s"after persist $i: ${logs()}")
+    }
+  }
 }
