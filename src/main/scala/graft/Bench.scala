@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main (driver-run per round → BENCH_r{N}.json).
@@ -41,32 +40,9 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      // the engine runs under its own extensions (r16): the EvalAfterSort
-      // optimizer rule + SQL-registered custom expressions are active in
-      // the driver contract sessions, not just user sessions — the hash
-      // gate then certifies the rule changes no values on any key
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(s"local[$cpus]", cpus)
       .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.catalog.graftlake",
-        "graft.sources.GraftLakeCatalog")
-      // column-mapped (rename-evolved) graftlake scans match by field id
-      .config("spark.sql.parquet.fieldId.read.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // r19: divisible bucket counts co-locate via the reducer;
-      // a join against an unbucketed/incompatible side shuffles
-      // ONLY that side into the reported bucket layout
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-        "true")
-      .config("spark.sql.sources.v2.bucketing" +
-        ".allowCompatibleTransforms.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -193,8 +169,11 @@ object Bench {
     val loads = loadPerPass.mkString("[", ",", "]")
     val gcs = gcMax.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    // the run describes itself: cpus is the local[N] it ran at, and the
+    // shuffle fan-out is read back from the session, not echoed from env
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"steal_ticks":$steal,"cpu_ticks":$ticks,"wall_cpu_ratio":$ratios,"loadavg1":$loads,"gc_ms_max":$gcs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"steal_ticks":$steal,"cpu_ticks":$ticks,"wall_cpu_ratio":$ratios,"loadavg1":$loads,"gc_ms_max":$gcs,"cpus":$cpus,"shuffle_partitions":$shufflePartitions,"sf":"$sfDir"}"""
     println(json)
     // STDOUT CONTRACT (ADVICE r8): the LAST stdout line is the canonical
     // parse target. The full record above outgrew the driver's stdout

@@ -11,7 +11,7 @@ import graft.expr.{DotProduct, GoTimestampFormat, Md5Prefix60, NfcNormalize, Wor
   * Scala Column API:
   *
   * {{{
-  *   SparkSession.builder()
+  *   GraftSession.builder("local[4]", 4)
   *     .withExtensions(new GraftExtensions)            // programmatic
   *   // or spark.sql.extensions=graft.GraftExtensions  // config-driven
   *   spark.sql("SELECT go_ts(ts), md5_prefix60(text) FROM ...")

@@ -106,38 +106,54 @@ object ScaleSmoke {
         "q_dedup_minhash", "q_dedup_simhash", "q_basket_lift",
         "q_negative_sample", "q_dedup_cluster_rep", "q_fuzzy_match")
 
+  // Portable like Bench (ADVICE r8): source fixture and parallelism come
+  // from the same env knobs
+  private def src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  private def cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** Every mode's session: Bench's config and extensions at `local[cpus]`. */
+  private def session(): SparkSession = {
+    val spark = GraftSession.builder(s"local[$cpus]", cpus)
+      .withExtensions(new GraftExtensions).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  private val Decades = Seq("sf1" -> "target/sf1", "sf10" -> "target/sf10")
+
+  /** [[session]] with both [[Decades]] synthesized from [[src]]. */
+  private def decadeSession(): SparkSession = {
+    val spark = session()
+    buildSf1(spark, src, "target/sf1", 10)
+    buildSfN(spark, src, "target/sf10", 100)
+    spark
+  }
+
+  /** `body`'s result and its wall seconds. */
+  private def timed[A](body: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val a = body
+    (a, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** One key run the way Bench runs it (noop sink); wall seconds. */
+  private def runKey(spark: SparkSession, key: String, dir: String): Double =
+    timed(SparkEntry.queries(key)(spark, dir)
+      .write.format("noop").mode("overwrite").save())._2
+
   private def sf10Main(only: Set[String]): Unit = {
     val unknown = only -- Sf10Keys
     require(unknown.isEmpty, s"unknown sf10 keys: ${unknown.mkString(", ")}")
     val keys = Sf10Keys.filter(k => only.isEmpty || only(k))
     val countKeys = Sf10CountKeys.filter(k => only.isEmpty || only(k))
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    buildSf1(spark, src, "target/sf1", 10)
-    buildSfN(spark, src, "target/sf10", 100)
-    def run(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    val spark = decadeSession()
     // warm both scales, then one timed pass per scale (the sf10 side is
     // minutes-long — min-of-N would double a already-long run; the
     // DECADE ratio sf10/sf1 is the signal and tolerates pass noise)
-    keys.foreach(k => run(k, "target/sf1"))
+    keys.foreach(k => runKey(spark, k, "target/sf1"))
     System.gc(); Thread.sleep(2000)
-    val sf1 = keys.map(k => k -> run(k, "target/sf1")).toMap
-    val sf10 = keys.map(k => k -> run(k, "target/sf10")).toMap
+    val sf1 = keys.map(k => k -> runKey(spark, k, "target/sf1")).toMap
+    val sf10 = keys.map(k => k -> runKey(spark, k, "target/sf10")).toMap
     val counts = countKeys.toSeq.sorted.map { k =>
       k -> (SparkEntry.queries(k)(spark, "target/sf1").count(),
             SparkEntry.queries(k)(spark, "target/sf10").count())
@@ -162,30 +178,14 @@ object ScaleSmoke {
     * ≈ linear in corpus size (the gate outruns the tail).
     * Run with `runMain graft.ScaleSmoke embedAuto`. */
   private def embedAutoMain(): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    buildSf1(spark, src, "target/sf1", 10)
-    buildSfN(spark, src, "target/sf10", 100)
+    val spark = decadeSession()
     println("\nscale | n | signBits | minCos | pairs | s")
-    for ((label, dir) <- Seq("sf0.1" -> src, "sf1" -> "target/sf1",
-        "sf10" -> "target/sf10")) {
+    for ((label, dir) <- ("sf0.1" -> src) +: Decades) {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val n = emb.count()
       val (bits, cosGate) = graft.ops.PipelineOps.sizeEmbedGate(emb)
-      val t0 = System.nanoTime()
-      val pairs = graft.ops.PipelineOps
-        .embedNearDup(emb, bits, cosGate).count()
-      val secs = (System.nanoTime() - t0) / 1e9
+      val (pairs, secs) = timed(graft.ops.PipelineOps
+        .embedNearDup(emb, bits, cosGate).count())
       println(f"$label | $n | $bits | $cosGate%.4f | $pairs | $secs%.1f")
     }
     spark.stop()
@@ -199,20 +199,7 @@ object ScaleSmoke {
     * and cross-checks a top-slice equality at each scale — the crossover
     * guidance for SCALE.md. Run with `runMain graft.ScaleSmoke pagerank`. */
   private def pagerankMain(): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    buildSf1(spark, src, "target/sf1", 10)
-    buildSfN(spark, src, "target/sf10", 100)
+    val spark = decadeSession()
     def graphOf(dir: String): DataFrame = {
       val le = spark.read.parquet(s"$dir/lineitem.parquet")
         .select(col("l_orderkey"), col("l_suppkey"))
@@ -230,19 +217,17 @@ object ScaleSmoke {
                 col("e.w").as("w"))
     }
     println("\nscale | nodes | broadcast s | co-partitioned s | top-20 equal")
-    for ((label, dir) <- Seq("sf1" -> "target/sf1", "sf10" -> "target/sf10")) {
+    for ((label, dir) <- Decades) {
       val edges = graphOf(dir)
       val nodes = edges.select(col("src")).distinct().count()
-      def run(bcast: Boolean): (Double, Seq[(Long, Double)]) = {
-        val t0 = System.nanoTime()
-        val r = graft.ops.GraphRank.pagerank(edges, iters = 8,
+      def run(bcast: Boolean) = timed {
+        graft.ops.GraphRank.pagerank(edges, iters = 8,
           checkpointEvery = 2, broadcastRanks = bcast)
-        val top = r.orderBy(col("r").desc, col("node")).limit(20)
+          .orderBy(col("r").desc, col("node")).limit(20)
           .collect().map(x => x.getLong(0) -> x.getDouble(1)).toSeq
-        ((System.nanoTime() - t0) / 1e9, top)
       }
-      val (tb, topB) = run(bcast = true)
-      val (tc, topC) = run(bcast = false)
+      val (topB, tb) = run(bcast = true)
+      val (topC, tc) = run(bcast = false)
       println(f"$label | $nodes | $tb%.1f | $tc%.1f | ${topB == topC}")
     }
     spark.stop()
@@ -254,22 +239,9 @@ object ScaleSmoke {
     * at sf1 and sf10 for both widths.
     * Run with `runMain graft.ScaleSmoke simhash128`. */
   private def simhash128Main(): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    buildSf1(spark, src, "target/sf1", 10)
-    buildSfN(spark, src, "target/sf10", 100)
+    val spark = decadeSession()
     println("\nscale | width | pairs | s")
-    for ((label, dir) <- Seq("sf1" -> "target/sf1", "sf10" -> "target/sf10")) {
+    for ((label, dir) <- Decades) {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       for ((w, f) <- Seq(
           "60" -> ((d: DataFrame) => graft.ops.PipelineOps.simhashPairs(d)),
@@ -277,9 +249,7 @@ object ScaleSmoke {
             graft.ops.PipelineOps.simhashPairs128(d)))) {
         // the 60-bit form at sf10 is the known 184 s row — skip re-timing
         if (!(label == "sf10" && w == "60")) {
-          val t0 = System.nanoTime()
-          val pairs = f(docs).count()
-          val secs = (System.nanoTime() - t0) / 1e9
+          val (pairs, secs) = timed(f(docs).count())
           println(f"$label | $w | $pairs | $secs%.1f")
         }
       }
@@ -294,29 +264,14 @@ object ScaleSmoke {
     * quadratic at the decade. Run with `runMain graft.ScaleSmoke
     * simhashAuto`. */
   private def simhashAutoMain(): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    buildSf1(spark, src, "target/sf1", 10)
-    buildSfN(spark, src, "target/sf10", 100)
+    val spark = decadeSession()
     println("\nscale | n | width(auto) | pairs | s")
-    for ((label, dir) <- Seq("sf1" -> "target/sf1",
-                             "sf10" -> "target/sf10")) {
+    for ((label, dir) <- Decades) {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       val n = docs.count()
       val w = graft.ops.PipelineOps.simhashWidthFor(n)
-      val t0 = System.nanoTime()
-      val pairs = graft.ops.PipelineOps.simhashPairsAuto(docs).count()
-      val secs = (System.nanoTime() - t0) / 1e9
+      val (pairs, secs) =
+        timed(graft.ops.PipelineOps.simhashPairsAuto(docs).count())
       println(f"$label | $n | $w | $pairs | $secs%.1f")
     }
     spark.stop()
@@ -331,19 +286,8 @@ object ScaleSmoke {
     * (sf1) or `bucketJoin10` (the r19 decade row — same shape at 10×,
     * where the deleted shuffle is 10× bigger). */
   private def bucketJoinMain(decade: Boolean = false): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val (sfDir, root) =
       if (decade) {
         buildSfN(spark, src, "target/sf10", 100)
@@ -362,16 +306,14 @@ object ScaleSmoke {
       SnapshotLake.commit(li, s"$root/li_plain", append = false)
       SnapshotLake.commit(ord, s"$root/ord_plain", append = false)
       SnapshotLake.commitBucketed(li.withColumnRenamed("l_orderkey", "k"),
-        s"$root/li_bucket", Seq("k"), cpus.toInt, append = false)
+        s"$root/li_bucket", Seq("k"), cpus, append = false)
       SnapshotLake.commitBucketed(ord.withColumnRenamed("o_orderkey", "k"),
-        s"$root/ord_bucket", Seq("k"), cpus.toInt, append = false)
+        s"$root/ord_bucket", Seq("k"), cpus, append = false)
       Files.createFile(Paths.get(s"$root/_built_v1"))
     }
     def lake(t: String) = spark.read.format("graftlake").load(s"$root/$t")
     def time(df: DataFrame): (Double, Int) = {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val secs = (System.nanoTime() - t0) / 1e9
+      val (_, secs) = timed(df.write.format("noop").mode("overwrite").save())
       val plan = df.queryExecution.executedPlan.toString
       (secs, "Exchange (hash|range|single)".r.findAllIn(plan).length)
     }
@@ -401,40 +343,21 @@ object ScaleSmoke {
     * (vs the exact truth join's Σdf² arm). Run with `runMain
     * graft.ScaleSmoke textScale`. */
   private def textScaleMain(): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    buildSf1(spark, src, "target/sf1", 10)
-    buildSfN(spark, src, "target/sf10", 100)
-    def time[T](body: => T): (Double, T) = {
-      val t0 = System.nanoTime()
-      val r = body
-      ((System.nanoTime() - t0) / 1e9, r)
-    }
+    val spark = decadeSession()
     println("\nfuzzy variant | scale | rows | s")
-    for ((label, dir) <- Seq("sf1" -> "target/sf1",
-                             "sf10" -> "target/sf10")) {
+    for ((label, dir) <- Decades) {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
-      val (secs, n) = time(
+      val (n, secs) = timed(
         graft.ops.TextOps.fuzzyMatchDeletes(docs).count())
       println(f"deletes | $label | $n | $secs%.1f")
     }
     println("\nrecall arm | scale | s | recall@0.5")
     def recallAt05(df: org.apache.spark.sql.DataFrame): Double =
       df.filter(col("threshold") === 0.5).head.getDouble(4)
-    val (fs, fr) = time(recallAt05(
+    val (fr, fs) = timed(recallAt05(
       graft.ops.TextOps.minhashRecall(spark, "target/sf1")))
     println(f"exact | sf1 | $fs%.1f | $fr%.4f")
-    val (ss, sr) = time(recallAt05(
+    val (sr, ss) = timed(recallAt05(
       graft.ops.TextOps.minhashRecallSampled(spark, "target/sf10", 10)))
     println(f"sampled 1-in-10 | sf10 | $ss%.1f | $sr%.4f")
     spark.stop()
@@ -447,20 +370,7 @@ object ScaleSmoke {
     * group-filtering claim measured, not just plan-asserted. Run with
     * `runMain graft.ScaleSmoke sqlDml`. */
   private def sqlDmlMain(): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.catalog.graftlake",
-        "graft.sources.GraftLakeCatalog")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     import graft.sources.SnapshotLake
     val t = new java.io.File("target/sql_dml_sf1/docs").getAbsolutePath
     val docs = spark.read.parquet(s"$src/documents.parquet")
@@ -480,10 +390,8 @@ object ScaleSmoke {
     }.sum
     val totalBytes = bytesOf(before)
     val target = 3L * 10000000L + 42L // one row inside copy 3's dir
-    val t0 = System.nanoTime()
-    spark.sql(s"UPDATE graftlake.`$t` SET lang = 'xx' " +
-      s"WHERE doc_id = $target")
-    val secs = (System.nanoTime() - t0) / 1e9
+    val (_, secs) = timed(spark.sql(s"UPDATE graftlake.`$t` SET lang = 'xx' " +
+      s"WHERE doc_id = $target"))
     val after = SnapshotLake.manifestDirs(spark, t,
       SnapshotLake.latest(spark, t).get)
     val replaced = before.diff(after)
@@ -507,20 +415,7 @@ object ScaleSmoke {
     *    joining the fact, DPP on vs off — pruned-dir count printed, row
     *    sets must match. */
   private def lakePlanMain(): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.catalog.graftlake",
-        "graft.sources.GraftLakeCatalog")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     import graft.sources.SnapshotLake
     val t = new java.io.File("target/lake_plan_sf1/fact").getAbsolutePath
     val li = spark.read.parquet(s"$src/lineitem.parquet")
@@ -535,18 +430,13 @@ object ScaleSmoke {
     val dirs = SnapshotLake
       .manifestDirs(spark, t, SnapshotLake.latest(spark, t).get)
 
-    def timeIt[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
     // warm footers/codegen on both paths
     spark.read.format("graftlake").load(t).count()
 
     val aggSql = s"SELECT count(*) AS c, min(k) AS mn, max(k) AS mx " +
       s"FROM graftlake.`$t`"
     spark.sql(aggSql).collect() // warm (catalog load, manifest read)
-    val (metaRow, metaSecs) = timeIt(spark.sql(aggSql).collect()(0))
+    val (metaRow, metaSecs) = timed(spark.sql(aggSql).collect()(0))
     val metaLocal = {
       val q = spark.sql(aggSql); q.collect()
       val pl = q.queryExecution.executedPlan.toString
@@ -557,7 +447,7 @@ object ScaleSmoke {
       df.agg(count(lit(1)), min("k"), max("k")).collect()(0)
     }
     scanAgg() // warm
-    val (scanRow, scanSecs) = timeIt(scanAgg())
+    val (scanRow, scanSecs) = timed(scanAgg())
     require(metaRow.toSeq == scanRow.toSeq,
       s"metadata agg ≠ scan agg: ${metaRow.toSeq} vs ${scanRow.toSeq}")
 
@@ -578,7 +468,7 @@ object ScaleSmoke {
     dpp(true)
     val rowsOn = spark.sql(joinSql).count()
     val onSecs = (1 to 2).map(_ =>
-      timeIt(spark.sql(joinSql).count())._2).min
+      timed(spark.sql(joinSql).count())._2).min
     val prunedDirs = {
       def nodes(p: org.apache.spark.sql.execution.SparkPlan)
           : Seq[org.apache.spark.sql.execution.SparkPlan] = {
@@ -602,7 +492,7 @@ object ScaleSmoke {
     dpp(false)
     val rowsOff = spark.sql(joinSql).count()
     val offSecs = (1 to 2).map(_ =>
-      timeIt(spark.sql(joinSql).count())._2).min
+      timed(spark.sql(joinSql).count())._2).min
     dpp(true)
     require(rowsOn == rowsOff,
       s"DPP changed the row count: $rowsOn vs $rowsOff")
@@ -616,10 +506,10 @@ object ScaleSmoke {
     }
     SnapshotLake.dropBranch(spark, t, "smoke")
     val tableBytes = bytesUnder(s"$t/data")
-    val (_, brSecs) = timeIt(SnapshotLake.branch(spark, t, "smoke"))
+    val (_, brSecs) = timed(SnapshotLake.branch(spark, t, "smoke"))
     val branchDataBytes = bytesUnder(
       s"${SnapshotLake.branchRoot(t, "smoke")}/data")
-    val (_, ffSecs) = timeIt {
+    val (_, ffSecs) = timed {
       // publish the (unchanged) branch back — a pure manifest commit
       SnapshotLake.fastForward(spark, t, "smoke").get
     }
@@ -698,24 +588,25 @@ object ScaleSmoke {
     Files.createFile(Paths.get(s"$out/_built_v1"))
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("sf10")) return sf10Main(args.drop(1).toSet)
-    if (args.toSeq == Seq("embedAuto")) return embedAutoMain()
-    if (args.toSeq == Seq("pagerank")) return pagerankMain()
-    if (args.toSeq == Seq("simhash128")) return simhash128Main()
-    if (args.toSeq == Seq("simhashAuto")) return simhashAutoMain()
-    if (args.toSeq == Seq("bucketJoin")) return bucketJoinMain()
-    if (args.toSeq == Seq("bucketJoin10")) return bucketJoinMain(true)
-    if (args.toSeq == Seq("sqlDml")) return sqlDmlMain()
-    if (args.toSeq == Seq("lakePlan")) return lakePlanMain()
-    if (args.toSeq == Seq("textScale")) return textScaleMain()
-    // Portable like Bench (ADVICE r8): source fixture and parallelism come
-    // from the same env knobs; SPARK_GRAFT_SMOKE_PASSES > 1 takes the
-    // min-of-N of the timed passes (min, not median: the smoke compares
-    // the SAME key across scales, so the best observed pass is the least
-    // noise-contaminated estimate of intrinsic cost on both sides).
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  def main(args: Array[String]): Unit = args.toSeq match {
+    case "sf10" +: only => sf10Main(only.toSet)
+    case Seq("embedAuto") => embedAutoMain()
+    case Seq("pagerank") => pagerankMain()
+    case Seq("simhash128") => simhash128Main()
+    case Seq("simhashAuto") => simhashAutoMain()
+    case Seq("bucketJoin") => bucketJoinMain()
+    case Seq("bucketJoin10") => bucketJoinMain(true)
+    case Seq("sqlDml") => sqlDmlMain()
+    case Seq("lakePlan") => lakePlanMain()
+    case Seq("textScale") => textScaleMain()
+    case only => smokeMain(only.toSet)
+  }
+
+  private def smokeMain(only: Set[String]): Unit = {
+    // SPARK_GRAFT_SMOKE_PASSES > 1 takes the min-of-N of the timed passes
+    // (min, not median: the smoke compares the SAME key across scales, so
+    // the best observed pass is the least noise-contaminated estimate of
+    // intrinsic cost on both sides).
     val passes = math.max(1,
       scala.util.Try(sys.env.getOrElse("SPARK_GRAFT_SMOKE_PASSES", "1")
         .trim.toInt).getOrElse(1))
@@ -723,27 +614,12 @@ object ScaleSmoke {
     val copies = 10
     // optional positional args restrict the smoke to the named keys —
     // same contract as Bench/Verify (unknown names fail fast)
-    val only = args.toSet
     val unknownKeys = only -- Keys
     require(unknownKeys.isEmpty,
       s"unknown smoke keys: ${unknownKeys.mkString(", ")}")
     val keys = Keys.filter(k => only.isEmpty || only(k))
     val countKeys = CountKeys.filter(k => only.isEmpty || only(k))
-    val spark = SparkSession.builder()
-      // the engine runs under its own extensions (r16): the EvalAfterSort
-      // optimizer rule + SQL-registered custom expressions are active in
-      // the driver contract sessions, not just user sessions — the hash
-      // gate then certifies the rule changes no values on any key
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+    val spark = session()
     buildSf1(spark, src, out, copies)
     buildSf1Hier(spark, src, copies)
 
@@ -753,21 +629,16 @@ object ScaleSmoke {
     def bigDir(k: String): String =
       if (k == "q_hierarchy_rollup" || k == "q_tree_paths") "target/sf1h" else out
 
-    def run(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-
     // warm both scales (JIT/codegen/footers), then min-of-N timed passes
-    keys.foreach(k => run(k, src)); keys.foreach(k => run(k, bigDir(k)))
+    keys.foreach(k => runKey(spark, k, src))
+    keys.foreach(k => runKey(spark, k, bigDir(k)))
     System.gc(); Thread.sleep(2000)
-    def timed(dirFor: String => String): Map[String, Double] =
-      (1 to passes).map(_ => keys.map(k => k -> run(k, dirFor(k))).toMap)
+    def minOfPasses(dirFor: String => String): Map[String, Double] =
+      (1 to passes)
+        .map(_ => keys.map(k => k -> runKey(spark, k, dirFor(k))).toMap)
         .reduce((a, b) => a.map { case (k, v) => k -> math.min(v, b(k)) })
-    val small = timed(_ => src)
-    val big = timed(bigDir)
+    val small = minOfPasses(_ => src)
+    val big = minOfPasses(bigDir)
     val counts = countKeys.toSeq.sorted.map { k =>
       k -> (SparkEntry.queries(k)(spark, src).count(),
             SparkEntry.queries(k)(spark, bigDir(k)).count())

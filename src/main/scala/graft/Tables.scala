@@ -31,14 +31,15 @@ object Tables {
     * harness pins (and what downstream ops — unix_micros, go_ts,
     * watermarks — require).
     *
-    * `nanosAsLong` is session-global: Verify/Bench/test harnesses set it at
-    * session build. The set here is a defensive fallback for sessions the
-    * driver constructs itself — it writes the same constant every time, so
-    * it is idempotent and safe under concurrent query construction.
+    * `nanosAsLong` is session-global: [[GraftSession]] sets it at build
+    * for every engine-built session. The set here is a defensive fallback
+    * for sessions the driver constructs itself — it writes the same
+    * constant every time, so it is idempotent and safe under concurrent
+    * query construction.
     */
   def events(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Engine-built sessions (Verify/Bench/TestSpark/ScaleSmoke) also set
+    // Engine-built sessions (every GraftSession.builder caller) also set
     // spark.sql.parquet.inferTimestampNTZ.enabled=false at build, so an
     // NTZ-annotated micros fixture surfaces as session-local TIMESTAMP AT
     // THE SCAN and ts predicates keep pushing into parquet (PlanSpec pins

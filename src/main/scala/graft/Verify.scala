@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -20,32 +19,9 @@ object Verify {
     val selected =
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.view.filterKeys(only).toMap
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      // the engine runs under its own extensions (r16): the EvalAfterSort
-      // optimizer rule + SQL-registered custom expressions are active in
-      // the driver contract sessions, not just user sessions — the hash
-      // gate then certifies the rule changes no values on any key
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.builder(s"local[$cpus]", cpus)
       .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.catalog.graftlake",
-        "graft.sources.GraftLakeCatalog")
-      // column-mapped (rename-evolved) graftlake scans match by field id
-      .config("spark.sql.parquet.fieldId.read.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // r19: divisible bucket counts co-locate via the reducer;
-      // a join against an unbucketed/incompatible side shuffles
-      // ONLY that side into the reported bucket layout
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-        "true")
-      .config("spark.sql.sources.v2.bucketing" +
-        ".allowCompatibleTransforms.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

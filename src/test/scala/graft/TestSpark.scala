@@ -3,36 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for every suite (sbt forks a single test JVM).
-  * Mirrors Verify/Bench session config: UTC, small shuffle fan-out, and
-  * the two fixture-encoding confs (nanos-as-long for TIMESTAMP(NANOS)
-  * vintages; NTZ inference off so micros-NTZ vintages surface as UTC
-  * TIMESTAMP at the scan — see Tables.events).
+  * Built by [[GraftSession.builder]] — the Verify/Bench config — at a
+  * shuffle fan-out of 4, and WITHOUT [[GraftExtensions]]: the extension
+  * specs compare the extended session against this one.
   */
 object TestSpark {
   private def baseBuilder(master: String): SparkSession.Builder =
-    SparkSession.builder()
-      .master(master)
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.catalog.graftlake",
-        "graft.sources.GraftLakeCatalog")
-      // column-mapped (rename-evolved) graftlake scans match by field id
-      .config("spark.sql.parquet.fieldId.read.enabled", "true")
-      // storage-partitioned joins (r19): lets bucket-laid-out graftlake
-      // catalog tables plan co-located SQL joins exchange-free;
-      // pushPartValues + allowCompatibleTransforms extend it to
-      // divisible bucket counts via the reducer, shuffle.enabled lets a
-      // join against an unbucketed side shuffle ONLY that side
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-        "true")
-      .config("spark.sql.sources.v2.bucketing" +
-        ".allowCompatibleTransforms.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    GraftSession.builder(master, 4).appName("graft-test")
 
   lazy val spark: SparkSession = {
     val s = baseBuilder("local[4]").getOrCreate()
