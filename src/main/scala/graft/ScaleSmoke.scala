@@ -119,13 +119,42 @@ object ScaleSmoke {
     spark
   }
 
-  private val Decades = Seq("sf1" -> "target/sf1", "sf10" -> "target/sf10")
+  /** Column label of [[src]] scaled `times`× ("sf0.1", 10 → "sf1"); a
+    * source dir not named sf<scale> labels as "<name>×<times>". */
+  private def scaleLabel(times: Int): String = {
+    val name = Paths.get(src).getFileName.toString
+    "sf(\\d+(?:\\.\\d+)?)".r.unapplySeq(name) match {
+      case Some(Seq(sf)) =>
+        "sf" + (BigDecimal(sf) * times).bigDecimal.stripTrailingZeros
+          .toPlainString
+      case _ => if (times == 1) name else s"$name×$times"
+    }
+  }
 
-  /** [[session]] with both [[Decades]] synthesized from [[src]]. */
+  private def decades =
+    Seq(scaleLabel(10) -> "target/sf1", scaleLabel(100) -> "target/sf10")
+
+  /** Marker-guarded synthesis: runs `build` unless `out` holds a
+    * `_built_<version>` marker that records [[src]] as its source, then
+    * writes that marker. A dir synthesized from another source (another
+    * scale) is rebuilt, never silently reused; the old marker goes first,
+    * so an interrupted rebuild is never mistaken for a finished one. */
+  private def synthesizeOnce(out: String, version: String)(build: => Unit)
+      : Unit = {
+    val marker = Paths.get(s"$out/_built_$version")
+    val from = Paths.get(src).toAbsolutePath.normalize.toString
+    if (Files.exists(marker) && Files.readString(marker) == from) return
+    Files.deleteIfExists(marker)
+    build
+    Files.createDirectories(marker.getParent)
+    Files.writeString(marker, from)
+  }
+
+  /** [[session]] with both [[decades]] synthesized from [[src]]. */
   private def decadeSession(): SparkSession = {
     val spark = session()
-    buildSf1(spark, src, "target/sf1", 10)
-    buildSfN(spark, src, "target/sf10", 100)
+    buildSf1(spark, "target/sf1", 10)
+    buildSfN(spark, "target/sf10", 100)
     spark
   }
 
@@ -158,11 +187,12 @@ object ScaleSmoke {
       k -> (SparkEntry.queries(k)(spark, "target/sf1").count(),
             SparkEntry.queries(k)(spark, "target/sf10").count())
     }
-    println(f"%nkey | sf1 s | sf10 s | decade ratio")
+    val (lo, hi) = (scaleLabel(10), scaleLabel(100))
+    println(s"\nkey | $lo s | $hi s | decade ratio")
     keys.foreach { k =>
       println(f"$k | ${sf1(k)}%.2f | ${sf10(k)}%.2f | ${sf10(k) / sf1(k)}%.1fx")
     }
-    println("\nkey | rows sf1 | rows sf10 | ratio")
+    println(s"\nkey | rows $lo | rows $hi | ratio")
     counts.foreach { case (k, (a, b)) =>
       println(f"$k | $a | $b | ${b.toDouble / a}%.1fx")
     }
@@ -180,7 +210,7 @@ object ScaleSmoke {
   private def embedAutoMain(): Unit = {
     val spark = decadeSession()
     println("\nscale | n | signBits | minCos | pairs | s")
-    for ((label, dir) <- ("sf0.1" -> src) +: Decades) {
+    for ((label, dir) <- (scaleLabel(1) -> src) +: decades) {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val n = emb.count()
       val (bits, cosGate) = graft.ops.PipelineOps.sizeEmbedGate(emb)
@@ -217,7 +247,7 @@ object ScaleSmoke {
                 col("e.w").as("w"))
     }
     println("\nscale | nodes | broadcast s | co-partitioned s | top-20 equal")
-    for ((label, dir) <- Decades) {
+    for ((label, dir) <- decades) {
       val edges = graphOf(dir)
       val nodes = edges.select(col("src")).distinct().count()
       def run(bcast: Boolean) = timed {
@@ -241,7 +271,7 @@ object ScaleSmoke {
   private def simhash128Main(): Unit = {
     val spark = decadeSession()
     println("\nscale | width | pairs | s")
-    for ((label, dir) <- Decades) {
+    for ((label, dir) <- decades) {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       for ((w, f) <- Seq(
           "60" -> ((d: DataFrame) => graft.ops.PipelineOps.simhashPairs(d)),
@@ -266,7 +296,7 @@ object ScaleSmoke {
   private def simhashAutoMain(): Unit = {
     val spark = decadeSession()
     println("\nscale | n | width(auto) | pairs | s")
-    for ((label, dir) <- Decades) {
+    for ((label, dir) <- decades) {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       val n = docs.count()
       val w = graft.ops.PipelineOps.simhashWidthFor(n)
@@ -290,10 +320,10 @@ object ScaleSmoke {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val (sfDir, root) =
       if (decade) {
-        buildSfN(spark, src, "target/sf10", 100)
+        buildSfN(spark, "target/sf10", 100)
         ("target/sf10", "target/bucket_join_sf10")
       } else {
-        buildSf1(spark, src, "target/sf1", 10)
+        buildSf1(spark, "target/sf1", 10)
         ("target/sf1", "target/bucket_join_sf1")
       }
     import graft.sources.SnapshotLake
@@ -302,14 +332,13 @@ object ScaleSmoke {
         col("l_extendedprice"))
     val ord = spark.read.parquet(s"$sfDir/orders.parquet")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    if (!Files.exists(Paths.get(s"$root/_built_v1"))) {
+    synthesizeOnce(root, "v1") {
       SnapshotLake.commit(li, s"$root/li_plain", append = false)
       SnapshotLake.commit(ord, s"$root/ord_plain", append = false)
       SnapshotLake.commitBucketed(li.withColumnRenamed("l_orderkey", "k"),
         s"$root/li_bucket", Seq("k"), cpus, append = false)
       SnapshotLake.commitBucketed(ord.withColumnRenamed("o_orderkey", "k"),
         s"$root/ord_bucket", Seq("k"), cpus, append = false)
-      Files.createFile(Paths.get(s"$root/_built_v1"))
     }
     def lake(t: String) = spark.read.format("graftlake").load(s"$root/$t")
     def time(df: DataFrame): (Double, Int) = {
@@ -345,7 +374,7 @@ object ScaleSmoke {
   private def textScaleMain(): Unit = {
     val spark = decadeSession()
     println("\nfuzzy variant | scale | rows | s")
-    for ((label, dir) <- Decades) {
+    for ((label, dir) <- decades) {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       val (n, secs) = timed(
         graft.ops.TextOps.fuzzyMatchDeletes(docs).count())
@@ -356,10 +385,10 @@ object ScaleSmoke {
       df.filter(col("threshold") === 0.5).head.getDouble(4)
     val (fr, fs) = timed(recallAt05(
       graft.ops.TextOps.minhashRecall(spark, "target/sf1")))
-    println(f"exact | sf1 | $fs%.1f | $fr%.4f")
+    println(f"exact | ${scaleLabel(10)} | $fs%.1f | $fr%.4f")
     val (sr, ss) = timed(recallAt05(
       graft.ops.TextOps.minhashRecallSampled(spark, "target/sf10", 10)))
-    println(f"sampled 1-in-10 | sf10 | $ss%.1f | $sr%.4f")
+    println(f"sampled 1-in-10 | ${scaleLabel(100)} | $ss%.1f | $sr%.4f")
     spark.stop()
   }
 
@@ -535,9 +564,8 @@ object ScaleSmoke {
 
   /** N-copy synthesis with the [[buildSf1]] rules generalized (only the
     * tables the sf10 keys read are scaled; dims pass through). */
-  private def buildSfN(spark: SparkSession, src: String, out: String,
-                       copies: Int): Unit = {
-    if (Files.exists(Paths.get(s"$out/_built_v1"))) return
+  private def buildSfN(spark: SparkSession, out: String, copies: Int)
+      : Unit = synthesizeOnce(out, "v1") {
     val maxBaseId = Seq(
       "documents.parquet" -> "doc_id", "embeddings.parquet" -> "vec_id",
       "orders.parquet" -> "o_custkey").map { case (t, c) =>
@@ -585,7 +613,6 @@ object ScaleSmoke {
         "events"))
       spark.read.parquet(s"$src/$t.parquet")
         .write.mode("overwrite").parquet(s"$out/$t.parquet")
-    Files.createFile(Paths.get(s"$out/_built_v1"))
   }
 
   def main(args: Array[String]): Unit = args.toSeq match {
@@ -620,8 +647,8 @@ object ScaleSmoke {
     val keys = Keys.filter(k => only.isEmpty || only(k))
     val countKeys = CountKeys.filter(k => only.isEmpty || only(k))
     val spark = session()
-    buildSf1(spark, src, out, copies)
-    buildSf1Hier(spark, src, copies)
+    buildSf1(spark, out, copies)
+    buildSf1Hier(spark, copies)
 
     // q_hierarchy_rollup reads ONLY customer, which the main synthesis
     // deliberately leaves unscaled (q_gini's reading depends on the
@@ -644,28 +671,27 @@ object ScaleSmoke {
             SparkEntry.queries(k)(spark, bigDir(k)).count())
     }
 
-    println(f"%nkey | sf0.1 s | sf1 s | ratio")
+    val (lo, hi) = (scaleLabel(1), scaleLabel(10))
+    println(s"\nkey | $lo s | $hi s | ratio")
     keys.foreach { k =>
       println(f"$k | ${small(k)}%.2f | ${big(k)}%.2f | ${big(k) / small(k)}%.1fx")
     }
-    println("\nkey | rows sf0.1 | rows sf1 | ratio")
+    println(s"\nkey | rows $lo | rows $hi | ratio")
     counts.foreach { case (k, (a, b)) =>
       println(f"$k | $a | $b | ${b.toDouble / a}%.1fx")
     }
     spark.stop()
   }
 
-  /** Synthesize target/sf1 once (marker-file guarded; delete the dir to
-    * rebuild). */
-  private def buildSf1(spark: SparkSession, src: String, out: String,
-                       copies: Int): Unit = {
-    // versioned marker: the orders-scaling change (r11) and the
-    // embeddings-scaling changes (r13 q_kmeans; r16 per-copy sign
-    // pattern) invalidate any sf1 built
-    // by an earlier synthesis — an unversioned marker would let a stale
-    // fixture (unscaled orders / embeddings) feed a 1/10-size input and
-    // print a plausible-but-wrong ratio
-    if (Files.exists(Paths.get(s"$out/_built_v4"))) return
+  /** Synthesize target/sf1 from [[src]] once per source (see
+    * [[synthesizeOnce]]). The marker is versioned: the orders-scaling
+    * change (r11) and the embeddings-scaling changes (r13 q_kmeans; r16
+    * per-copy sign pattern) invalidate any sf1 built by an earlier
+    * synthesis — an unversioned marker would let a stale fixture
+    * (unscaled orders / embeddings) feed a 1/10-size input and print a
+    * plausible-but-wrong ratio. */
+  private def buildSf1(spark: SparkSession, out: String, copies: Int)
+      : Unit = synthesizeOnce(out, "v4") {
     // The copy shift (c·10M for doc_id/event_id/user_id/vec_id/o_custkey)
     // is only collision-free while every base id stays below 10M — a
     // larger source fixture would silently alias keys across copies and
@@ -747,7 +773,6 @@ object ScaleSmoke {
     for (t <- Seq("region", "nation", "customer", "supplier", "part"))
       spark.read.parquet(s"$src/$t.parquet")
         .write.mode("overwrite").parquet(s"$out/$t.parquet")
-    Files.createFile(Paths.get(s"$out/_built_v4"))
   }
 
   /** 10× customer dim for q_hierarchy_rollup / q_tree_paths (target/sf1h): copy c
@@ -756,16 +781,14 @@ object ScaleSmoke {
     * the deepest level saturates at 20 (the keyspace-log2 growth a 10×
     * dim actually exhibits). Kept OUT of target/sf1 because q_gini's
     * smoke reading depends on the unscaled customer frame. */
-  private def buildSf1Hier(spark: SparkSession, src: String,
-                           copies: Int): Unit = {
-    val out = "target/sf1h"
-    if (Files.exists(Paths.get(s"$out/_built_v1"))) return
+  private def buildSf1Hier(spark: SparkSession, copies: Int): Unit =
+      synthesizeOnce("target/sf1h", "v1") {
     val cust = spark.read.parquet(s"$src/customer.parquet")
     (0 until copies).map { c =>
       cust.withColumn("c_custkey",
         (col("c_custkey") + lit(c * 200000)).cast("int"))
     }.reduce(_ unionByName _)
-      .coalesce(4).write.mode("overwrite").parquet(s"$out/customer.parquet")
-    Files.createFile(Paths.get(s"$out/_built_v1"))
+      .coalesce(4).write.mode("overwrite")
+      .parquet("target/sf1h/customer.parquet")
   }
 }

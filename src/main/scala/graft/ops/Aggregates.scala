@@ -1,10 +1,9 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** SURVEY.md §2.B "Aggregation": hash agg, distinct agg, sketches,
   * rollup/cube/grouping-sets, ordered collect. All built-in Catalyst —
@@ -31,21 +30,13 @@ object Aggregates extends QueryPack {
     },
 
     // TPC-H Q1: multi-measure hash agg by (returnflag, linestatus).
-    // r20 opt (guide §1.2 per-task work / §2.3 narrower types — the
-    // q_corr_matrix long-chunk rewrite, see its comment in Analytics):
-    // every decimal product (disc_price, charge) ran through Java
-    // BigDecimal per row and every byte-backed sum buffer update
-    // allocated — all measures have ≤ 2 decimal digits, so the moments
-    // are exact integers in cent/1e-4/1e-6 units: multiply as LONGS,
-    // chunk base-2^20, sum longs (mutable tungsten words, zero
-    // allocation), reassemble the exact decimals at the 6-row group
-    // grain. Values are bit-identical; chunk sums stay exact to ~9e12
-    // rows per group.
+    // r20 opt (guide §1.2 per-task work / §2.3 narrower types): every
+    // decimal product (disc_price, charge) ran through Java BigDecimal
+    // per row — all measures have ≤ 2 decimal digits, so the moments are
+    // exact integers in cent/1e-4/1e-6 units: multiply as LONGS and sum
+    // through `exactSum` (long chunk sums, exact decimals reassembled at
+    // the 6-row group grain). Values are bit-identical.
     "q_agg_groupby" -> { (s, d) =>
-      val B = 1L << 20
-      val mask = B - 1
-      def lo(c: Column) = c.bitwiseAND(lit(mask))
-      def mid(c: Column) = shiftright(c, 20).bitwiseAND(lit(mask))
       val qc = round(col("l_quantity") * 100).cast("long")      // <= 5e3
       val pc = round(col("l_extendedprice") * 100).cast("long") // <= 1.05e7
       val dc = round(col("l_discount") * 100).cast("long")      // <= 10
@@ -55,30 +46,25 @@ object Aggregates extends QueryPack {
       val g = Tables.lineitem(s, d)
         .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
         .select(col("l_returnflag"), col("l_linestatus"),
-          qc.as("qc"), pc.as("pc"), dc.as("dc"),
-          lo(disc).as("dp0"), mid(disc).as("dp1"),
-          lo(chg).as("ch0"), mid(chg).as("ch1"))
+          qc.as("qc"), pc.as("pc"), dc.as("dc"), disc.as("disc"),
+          chg.as("chg"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(col("qc")).as("sq0"),
-          sum(lo(col("pc"))).as("sp0"), sum(mid(col("pc"))).as("sp1"),
-          sum(col("dc")).as("sd0"),
-          sum(col("dp0")).as("sdp0"), sum(col("dp1")).as("sdp1"),
-          sum(col("ch0")).as("sch0"), sum(col("ch1")).as("sch1"),
+        .agg(exactSum(col("qc"), 1, 2).as("sum_qty"),
+          exactSum(col("pc"), 2, 2).as("sum_price"),
+          exactSum(col("dc"), 1, 2).as("sum_disc"),
+          exactSum(col("disc"), 2, 4).as("sum_disc_price"),
+          exactSum(col("chg"), 2, 6).as("sum_charge"),
           count(lit(1)).as("cnt"))
-      def de(c: Column) = c.cast(DecimalType(38, 0))
-      val sumQty = de(col("sq0")) / 100
-      val sumPrice = (de(col("sp1")) * B + de(col("sp0"))) / 100
-      val sumDisc = de(col("sd0")) / 100
       g.select(col("l_returnflag"), col("l_linestatus"),
-          outd(sumQty).as("sum_qty"),
-          outd(sumPrice).as("sum_base_price"),
-          outd((de(col("sdp1")) * B + de(col("sdp0"))) / 10000)
-            .as("sum_disc_price"),
-          outd((de(col("sch1")) * B + de(col("sch0"))) / 1000000)
-            .as("sum_charge"),
-          round(sumQty.cast("double") / col("cnt"), 4).as("avg_qty"),
-          round(sumPrice.cast("double") / col("cnt"), 4).as("avg_price"),
-          round(sumDisc.cast("double") / col("cnt"), 4).as("avg_disc"),
+          outd(col("sum_qty")).as("sum_qty"),
+          outd(col("sum_price")).as("sum_base_price"),
+          outd(col("sum_disc_price")).as("sum_disc_price"),
+          outd(col("sum_charge")).as("sum_charge"),
+          round(col("sum_qty").cast("double") / col("cnt"), 4).as("avg_qty"),
+          round(col("sum_price").cast("double") / col("cnt"), 4)
+            .as("avg_price"),
+          round(col("sum_disc").cast("double") / col("cnt"), 4)
+            .as("avg_disc"),
           col("cnt").as("count_order"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
     },
@@ -105,21 +91,16 @@ object Aggregates extends QueryPack {
 
     // ROLLUP with grouping() flags.
     // r20 opt: the rollup Expand triples every row, so the decimal sum
-    // buffer paid its byte-backed update 3× per input row — same
-    // long-chunk rewrite as q_agg_groupby (price in cents, base-2^20
-    // chunks, long sums, exact reassembly at the 10-row output grain).
+    // buffer paid its byte-backed update 3× per input row — price in
+    // cents through `exactSum` (long chunk sums, exact reassembly at the
+    // 10-row output grain).
     "q_rollup" -> { (s, d) =>
-      val B = 1L << 20
       val pc = round(col("l_extendedprice") * 100).cast("long")
       Tables.lineitem(s, d)
-        .select(col("l_returnflag"), col("l_linestatus"),
-          pc.bitwiseAND(lit(B - 1)).as("pc0"),
-          shiftright(pc, 20).as("pc1"))
+        .select(col("l_returnflag"), col("l_linestatus"), pc.as("pc"))
         .rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n"),
-             outd((sum(col("pc1")).cast(DecimalType(38, 0)) * B +
-                   sum(col("pc0")).cast(DecimalType(38, 0))) / 100)
-               .as("sum_price"),
+             outd(exactSum(col("pc"), 2, 2)).as("sum_price"),
              grouping(col("l_returnflag")).as("g_rf"),
              grouping(col("l_linestatus")).as("g_ls"))
         .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))
@@ -181,44 +162,13 @@ object Aggregates extends QueryPack {
       // TypedImperative serialization, graceful spill at 100 TB.
       // r20 opt (VERDICT r19 item 2): the r19 rank window was
       // partitionBy(l_returnflag) — 3 groups = 3 serial sort tasks at any
-      // scale. Two-phase rank (q_sort_multi discipline, same shape as
-      // q_winsorize): deterministic floor-derived price bands, one tiny
-      // band-count agg (checkpointed — offsets and sizes both read it),
-      // prefix offsets from a window over THAT frame, and the global rank
-      // = broadcast offset + row_number within (group, band). Equal
-      // values share a band (floor is monotone), so the row AT any rank —
-      // all the interpolation consumes — is unchanged. Group sizes fall
-      // out of the same counts, dropping the old max(rn) pass. The ranked
-      // frame `rk` keeps its lazy checkpoint: two consumers read it (the
-      // band counts and the offset join), so the cut is load-bearing.
-      // Domain assumption: TPC-H l_extendedprice = l_quantity (1-50) ×
-      // p_retailprice (900.00-2098.99), about 900-105 000, so 4096-wide
-      // bands give ~26 per flag. Ranks stay exact for any domain (floor is
-      // monotone); only the parallelism rests on it — a domain far
-      // narrower than the width falls back to one serial sort per group.
-      val bandW = 4096.0
-      val wRank = Window.partitionBy(col("l_returnflag"), col("band"))
-        .orderBy(col("l_extendedprice"))
-      val rk = Tables.lineitem(s, d)
-        .select(col("l_returnflag"), col("l_extendedprice"))
-        .withColumn("band",
-          floor(col("l_extendedprice") / bandW).cast("long"))
-        .withColumn("rnb", row_number().over(wRank))
-        .localCheckpoint(eager = false)
-      // band sizes = max in-band rank: a tiny mergeable agg over the
-      // checkpoint (|groups × bands| rows, read by offsets AND sizes)
-      val bandCnts = rk.groupBy(col("l_returnflag"), col("band"))
-        .agg(max(col("rnb")).cast("long").as("cntb"))
-        .localCheckpoint(eager = false)
-      val offDf = bandCnts.withColumn("off",
-        coalesce(sum(col("cntb")).over(Window.partitionBy(col("l_returnflag"))
-          .orderBy(col("band")).rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-        .select(col("l_returnflag"), col("band"), col("off"))
-      val r = rk.join(broadcast(offDf), Seq("l_returnflag", "band"))
-        .withColumn("rn", col("off") + col("rnb").cast("long"))
-      val sizes = bandCnts.groupBy(col("l_returnflag"))
-        .agg(sum(col("cntb")).as("n"))
+      // scale. `bandedRank` (q_sort_multi discipline, shared with
+      // q_winsorize) ranks within price bands and adds band offsets; the
+      // row AT any rank — all the interpolation consumes — is unchanged,
+      // and the group sizes fall out of the band counts.
+      val (r, sizes) = bandedRank(Tables.lineitem(s, d)
+        .select(col("l_returnflag"), col("l_extendedprice")),
+        "l_returnflag", "l_extendedprice")
       val targets = sizes.select(col("l_returnflag").as("rf"), col("n"),
           explode(array(Seq(0.5, 0.9, 0.99).map(lit): _*)).as("p"))
         .withColumn("pos", col("p") * (col("n") - 1).cast("double"))
@@ -420,31 +370,19 @@ object Aggregates extends QueryPack {
     // dimension), which is exactly how a production feature store ships
     // normalization constants.
     "q_feature_scale" -> { (s, d) =>
-      // r20 opt: sum(x) and sum(x·x) via the long-chunk rewrite (see
-      // q_agg_groupby) — the per-row BigDecimal square and byte-backed
-      // buffer updates were the key's hot path; min/max stay decimal
-      // (long-backed (18,2) buffers are already allocation-free).
+      // r20 opt: sum(x) and sum(x·x) through `exactSum` — the per-row
+      // BigDecimal square and byte-backed buffer updates were the key's
+      // hot path; min/max stay decimal (long-backed (18,2) buffers are
+      // already allocation-free).
       val x = dec(col("l_extendedprice"))
-      val B = 1L << 20
-      val mask = B - 1
-      def lo(c: Column) = c.bitwiseAND(lit(mask))
-      def mid(c: Column) = shiftright(c, 20).bitwiseAND(lit(mask))
-      def de(c: Column) = c.cast(DecimalType(38, 0))
       val pc = round(col("l_extendedprice") * 100).cast("long")
       val stats = Tables.lineitem(s, d)
         .select(col("l_returnflag"), x.as("xd"), pc.as("pc"))
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),
-             sum(lo(col("pc"))).as("sx0"), sum(mid(col("pc"))).as("sx1"),
-             sum(lo(col("pc") * col("pc"))).as("sxx0"),
-             sum(mid(col("pc") * col("pc"))).as("sxx1"),
-             sum(shiftright(col("pc") * col("pc"), 40)).as("sxx2"),
+             exactSum(col("pc"), 2, 2).as("sx"),
+             exactSum(col("pc") * col("pc"), 3, 4).as("sxx"),
              min(col("xd")).as("mn"), max(col("xd")).as("mx"))
-        .select(col("l_returnflag"), col("n"),
-          ((de(col("sx1")) * B + de(col("sx0"))) / 100).as("sx"),
-          ((de(col("sxx2")) * B * B + de(col("sxx1")) * B + de(col("sxx0")))
-            / 10000).as("sxx"),
-          col("mn"), col("mx"))
       val nD = col("n").cast("double")
       val mean = col("sx").cast("double") / nD
       val varr = (col("sxx").cast("double") -

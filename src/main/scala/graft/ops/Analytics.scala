@@ -900,67 +900,30 @@ object Analytics extends QueryPack {
     "q_corr_matrix" -> { (s, d) =>
       // r20 opt (guide §1.2 per-task work / §2.3 narrower types; VERDICT
       // r19 item 4, the suite's worst GC marker at 1269 ms): the r19 agg
-      // was ten exact-DECIMAL moment sums — but Spark's Decimal.* always
-      // multiplies through Java BigDecimal, and every byte-backed
-      // (precision > 18) sum-buffer update allocates BigInteger/BigDecimal
-      // — tens of millions of allocations per pass for ONE 3-group agg.
-      // All three measures carry ≤ 2 decimal digits, so every moment is
-      // EXACTLY an integer in units of 1e-4: per row the cent values
-      // (x·100, the same half-up rounding dec() applies) multiply in
-      // codegen'd LONG arithmetic and split into base-1e6 chunks; the agg
-      // sums longs only (mutable tungsten buffer words, zero allocation).
-      // The exact decimal moments are reassembled from the chunk sums at
-      // the GROUP grain (3 rows) — identical exact values, identical
-      // doubles, identical rounds. Headroom: every chunk is < 1e6, so the
-      // long sums are exact to ~9e12 rows PER GROUP (≈ 2 PB of lineitem);
-      // overflow beyond that is the same class of bound the decimal
-      // buffers' 38 digits encoded, traded for a zero-garbage hot path.
-      val B = 1L << 20 // chunk base: bit-shift extraction is exact on longs
-      val mask = B - 1
+      // was ten exact-DECIMAL moment sums, each multiplying through Java
+      // BigDecimal per row with a byte-backed buffer that allocates per
+      // update. All three measures carry ≤ 2 decimal digits, so every
+      // moment is EXACTLY an integer in units of 1e-2 (first) or 1e-4
+      // (second): the cent values (x·100, the same half-up rounding dec()
+      // applies) multiply as codegen'd longs and sum through `exactSum` —
+      // the values equal the r19 decimal sums bit for bit.
       val qc = round(col("l_quantity") * 100).cast("long")    // <= 5e3
       val pc = round(col("l_extendedprice") * 100).cast("long") // <= 1.05e7
       val dc = round(col("l_discount") * 100).cast("long")    // <= 10
-      val base = Tables.lineitem(s, d).select(col("l_returnflag"),
-        qc.as("qc"), pc.as("pc"), dc.as("dc"))
-      def lo(c: Column) = c.bitwiseAND(lit(mask))
-      def mid(c: Column) = shiftright(c, 20).bitwiseAND(lit(mask))
-      def hi2(c: Column) = shiftright(c, 40)
-      val g = base.groupBy(col("l_returnflag"))
+      val (q, p, dd) = (col("qc"), col("pc"), col("dc"))
+      val m = Tables.lineitem(s, d)
+        .select(col("l_returnflag"), qc.as("qc"), pc.as("pc"), dc.as("dc"))
+        .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),
-          sum(col("qc")).as("sq0"),                         // <= 5e3/row
-          sum(lo(col("pc"))).as("sp0"),                     // pc chunked
-          sum(mid(col("pc"))).as("sp1"),
-          sum(col("dc")).as("sd0"),                         // <= 10/row
-          sum(lo(col("qc") * col("qc"))).as("sqq0"),        // qq <= 2.5e7
-          sum(mid(col("qc") * col("qc"))).as("sqq1"),
-          sum(lo(col("pc") * col("pc"))).as("spp0"),        // pp <= 1.2e14
-          sum(mid(col("pc") * col("pc"))).as("spp1"),
-          sum(hi2(col("pc") * col("pc"))).as("spp2"),
-          sum(col("dc") * col("dc")).as("sdd0"),            // <= 100/row
-          sum(lo(col("qc") * col("pc"))).as("sqp0"),        // qp <= 5.3e10
-          sum(mid(col("qc") * col("pc"))).as("sqp1"),
-          sum(col("qc") * col("dc")).as("sqd0"),            // <= 5e4/row
-          sum(lo(col("pc") * col("dc"))).as("spd0"),        // pd <= 1.05e8
-          sum(mid(col("pc") * col("dc"))).as("spd1"))
-      // exact reassembly at the 3-row group grain: Σ chunk_i·B^i (lifted
-      // to decimal BEFORE the multiply — a long-side multiply could wrap
-      // at extreme row counts), then the scale shift (÷100 for first
-      // moments, ÷10000 for second) as exact decimal division — the
-      // values equal the r19 decimal sums bit for bit, so the double
-      // casts below are unchanged.
-      def de(c: Column) = c.cast(DecimalType(38, 0))
-      def m1(c0: String) = (de(col(c0)) / 100).as(c0.dropRight(1))
-      def m1c(c0: String, c1: String) =
-        ((de(col(c1)) * B + de(col(c0))) / 100).as(c0.dropRight(1))
-      def m2(c0: String) = (de(col(c0)) / 10000).as(c0.dropRight(1))
-      def m2c(c0: String, c1: String) =
-        ((de(col(c1)) * B + de(col(c0))) / 10000).as(c0.dropRight(1))
-      val m = g.select(col("l_returnflag"), col("n"),
-        m1("sq0"), m1c("sp0", "sp1"), m1("sd0"),
-        m2c("sqq0", "sqq1"),
-        ((de(col("spp2")) * B * B + de(col("spp1")) * B + de(col("spp0")))
-          / 10000).as("spp"),
-        m2("sdd0"), m2c("sqp0", "sqp1"), m2("sqd0"), m2c("spd0", "spd1"))
+          exactSum(q, 1, 2).as("sq"),
+          exactSum(p, 2, 2).as("sp"),
+          exactSum(dd, 1, 2).as("sd"),
+          exactSum(q * q, 2, 4).as("sqq"),      // qq <= 2.5e7
+          exactSum(p * p, 3, 4).as("spp"),      // pp <= 1.2e14
+          exactSum(dd * dd, 1, 4).as("sdd"),    // <= 100/row
+          exactSum(q * p, 2, 4).as("sqp"),      // qp <= 5.3e10
+          exactSum(q * dd, 1, 4).as("sqd"),     // <= 5e4/row
+          exactSum(p * dd, 2, 4).as("spd"))     // pd <= 1.05e8
       def dbl(c: String) = col(c).cast("double")
       def corr(sx: String, sy: String, sxx: String, syy: String,
                sxy: String) =
@@ -991,37 +954,20 @@ object Analytics extends QueryPack {
     // point of both keys is that classic statistics at 100 TB is one
     // mergeable scan + driver-free closed forms, never an iterative fit.
     "q_linreg" -> { (s, d) =>
-      // r20 opt: same long-chunk moment rewrite as q_corr_matrix (see its
-      // comment) — six exact-decimal sums with per-row BigDecimal products
-      // become ten zero-allocation long sums + a 3-row exact reassembly.
-      val B = 1L << 20
-      val mask = B - 1
+      // r20 opt: same exact long moment sums as q_corr_matrix (see its
+      // comment) in place of six per-row BigDecimal products.
       val xc = round(col("l_quantity") * 100).cast("long")      // <= 5e3
       val yc = round(col("l_extendedprice") * 100).cast("long") // <= 1.05e7
-      val base = Tables.lineitem(s, d).select(col("l_returnflag"),
-        xc.as("xc"), yc.as("yc"))
-      def lo(c: Column) = c.bitwiseAND(lit(mask))
-      def mid(c: Column) = shiftright(c, 20).bitwiseAND(lit(mask))
-      def hi2(c: Column) = shiftright(c, 40)
-      val g = base.groupBy(col("l_returnflag"))
+      val (x, y) = (col("xc"), col("yc"))
+      val m = Tables.lineitem(s, d)
+        .select(col("l_returnflag"), xc.as("xc"), yc.as("yc"))
+        .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),
-          sum(col("xc")).as("sx0"),
-          sum(lo(col("yc"))).as("sy0"), sum(mid(col("yc"))).as("sy1"),
-          sum(lo(col("xc") * col("xc"))).as("sxx0"),
-          sum(mid(col("xc") * col("xc"))).as("sxx1"),
-          sum(lo(col("yc") * col("yc"))).as("syy0"),
-          sum(mid(col("yc") * col("yc"))).as("syy1"),
-          sum(hi2(col("yc") * col("yc"))).as("syy2"),
-          sum(lo(col("xc") * col("yc"))).as("sxy0"),
-          sum(mid(col("xc") * col("yc"))).as("sxy1"))
-      def de(c: Column) = c.cast(DecimalType(38, 0))
-      val m = g.select(col("l_returnflag"), col("n"),
-        (de(col("sx0")) / 100).as("sx"),
-        ((de(col("sy1")) * B + de(col("sy0"))) / 100).as("sy"),
-        ((de(col("sxx1")) * B + de(col("sxx0"))) / 10000).as("sxx"),
-        ((de(col("syy2")) * B * B + de(col("syy1")) * B + de(col("syy0")))
-          / 10000).as("syy"),
-        ((de(col("sxy1")) * B + de(col("sxy0"))) / 10000).as("sxy"))
+          exactSum(x, 1, 2).as("sx"),
+          exactSum(y, 2, 2).as("sy"),
+          exactSum(x * x, 2, 4).as("sxx"),
+          exactSum(y * y, 3, 4).as("syy"),
+          exactSum(x * y, 2, 4).as("sxy"))
       def dbl(c: String) = col(c).cast("double")
       val slope = (dbl("n") * dbl("sxy") - dbl("sx") * dbl("sy")) /
                   (dbl("n") * dbl("sxx") - dbl("sx") * dbl("sx"))

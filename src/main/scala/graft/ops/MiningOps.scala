@@ -301,49 +301,21 @@ object MiningOps extends QueryPack {
       // bit-identical (same rank semantics, same clamp/trim expressions).
       // r20 opt (VERDICT r19 item 2): that surviving window was
       // partitionBy(rf) — 3 groups = 3 serial sort tasks at ANY scale.
-      // Two-phase rank in the q_sort_multi discipline: bucket on a
-      // DATA-derived price band (floor arithmetic — deterministic, no
-      // range-sampler), count bands in one tiny mergeable agg, and the
-      // global rank = broadcast per-band prefix offset + row_number
-      // within (rf, band) — each sort task now holds one band, not one
-      // group. Equal values always share a band (floor is monotone), so
-      // the value AT any global rank — all this key consumes — is
-      // unchanged. The band-count frame is |groups × bands| rows,
-      // checkpointed (two tiny consumers); offsets come from a window
-      // OVER THAT FRAME, never over facts, and group sizes fall out of
-      // the same counts, dropping the old max(rn) pass.
-      // Domain assumption: TPC-H l_extendedprice = l_quantity (1-50) ×
-      // p_retailprice (900.00-2098.99), about 900-105 000, so 4096-wide
-      // bands give ~26 per flag. Ranks stay exact for any domain (floor is
-      // monotone); only the parallelism rests on it — a domain far
-      // narrower than the width falls back to one serial sort per group.
-      val bandW = 4096.0
-      val wRank = Window.partitionBy(col("rf"), col("band"))
-        .orderBy(col("pd"))
-      val rk = Tables.lineitem(s, d)
+      // `bandedRank` (q_sort_multi discipline, shared with
+      // q_agg_percentiles) ranks within price bands and adds band
+      // offsets: each sort task holds one band, not one group, the value
+      // AT any global rank — all this key consumes — is unchanged, and
+      // the group sizes fall out of the band counts.
+      val (r, groupSizes) = bandedRank(Tables.lineitem(s, d)
         .select(col("l_returnflag").as("rf"),
           dec(col("l_extendedprice")).as("p"),
-          col("l_extendedprice").as("pd"))
-        .withColumn("band", floor(col("pd") / bandW).cast("long"))
-        .withColumn("rnb", row_number().over(wRank))
-        .localCheckpoint(eager = false)
-      // band sizes = max in-band rank: a tiny mergeable agg over the
-      // checkpoint (|groups × bands| rows, read by offsets AND sizes)
-      val bandCnts = rk.groupBy(col("rf"), col("band"))
-        .agg(max(col("rnb")).cast("long").as("cntb"))
-        .localCheckpoint(eager = false)
-      val offDf = bandCnts.withColumn("off",
-        coalesce(sum(col("cntb")).over(Window.partitionBy(col("rf"))
-          .orderBy(col("band")).rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-        .select(col("rf"), col("band"), col("off"))
-      val r = rk.join(broadcast(offDf), Seq("rf", "band"))
-        .withColumn("rn", col("off") + col("rnb").cast("long"))
+          col("l_extendedprice").as("pd")),
+        "rf", "pd")
       val kLoC = ceil(col("n").cast("double") * lit(0.05)).cast("long")
       val kHiC = ceil(col("n").cast("double") * lit(0.95)).cast("long")
       // n stays BIGINT exactly as the old count()-over-group spelling
       // (and the oracle schema) produced it
-      val sizes = bandCnts.groupBy(col("rf")).agg(sum(col("cntb")).as("n"))
+      val sizes = groupSizes
         .select(col("rf"), col("n"), kLoC.as("kLo"), kHiC.as("kHi"))
       val bounds = r.join(broadcast(sizes), Seq("rf"))
         .filter(col("rn") === col("kLo") || col("rn") === col("kHi"))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -28,4 +29,74 @@ trait QueryPack {
 
   /** Final float output: exact decimal → rounded double, both engines agree. */
   protected def outd(c: Column): Column = round(c.cast("double"), 4)
+
+  /** Exact sum aggregate of a scaled long `x` (the value times 10^`scale`,
+    * e.g. cents for `scale` = 2), as an exact decimal.
+    *
+    * A decimal sum multiplies through Java BigDecimal per row and its
+    * byte-backed buffer allocates on every update. Here `x` splits into `k`
+    * base-2^20 chunks: the lower k−1 are masked to [0, 2^20), the top one
+    * is the unmasked arithmetic shift `x >> 20(k−1)`, so Σ chunk_i·2^(20i)
+    * equals `x` for every long, negatives included. Each chunk is summed
+    * as a plain long (codegen'd, a mutable buffer word, no allocation) and
+    * the exact total is reassembled in DECIMAL(38,0) at group grain, then
+    * shifted by 10^`scale`. Pick `k` so the top chunk of the largest
+    * per-row `x` leaves room for the group's row count.
+    *
+    * Precondition: ANSI mode (the session default). A long `*` or `sum`
+    * that overflows then raises ARITHMETIC_OVERFLOW; a too-small `k`
+    * fails loudly, never wraps. */
+  protected[graft] def exactSum(x: Column, k: Int, scale: Int): Column = {
+    require(k >= 1 && scale >= 0 && scale <= 9, s"k=$k scale=$scale")
+    val base = 1L << 20
+    val sums = (0 until k).map { i =>
+      val shifted = if (i == 0) x else shiftright(x, 20 * i)
+      val chunk = if (i == k - 1) shifted else shifted.bitwiseAND(lit(base - 1))
+      sum(chunk).cast(DecimalType(38, 0))
+    }
+    sums.reduceRight((s, above) => above * base + s) / math.pow(10, scale).toInt
+  }
+
+  /** Exact global rank of `value` within `group`, in two phases that never
+    * put a whole group into one sort task: rank inside fixed-width value
+    * bands partitioned by (group, band), then add each band's prefix
+    * offset. Returns the ranked frame (`df`'s columns plus `band`, `rnb`,
+    * `off` and the 1-based global `rn`) and the per-group sizes
+    * (`group`, `n`).
+    *
+    * Equal values always share a band (floor is monotone), so the value
+    * AT any rank is that of one sort by `value`; ties break arbitrarily,
+    * as in any `row_number`. The in-band ranked frame keeps a lazy
+    * checkpoint (the band counts and the offset join both read it), and
+    * so does the |groups × bands| band-count frame (read by the offsets
+    * and the sizes). Offsets come from a window over that frame, never
+    * over facts.
+    *
+    * Domain assumption: TPC-H l_extendedprice = l_quantity (1-50) ×
+    * p_retailprice (900.00-2098.99), about 900-105 000, so 4096-wide
+    * bands give ~26 per flag. Ranks stay exact for any domain; only the
+    * parallelism rests on it — a domain far narrower than the width
+    * falls back to one serial sort per group. */
+  protected[graft] def bandedRank(df: DataFrame, group: String,
+                                  value: String): (DataFrame, DataFrame) = {
+    val bandW = 4096.0
+    val wRank = Window.partitionBy(col(group), col("band"))
+      .orderBy(col(value))
+    val rk = df.withColumn("band", floor(col(value) / bandW).cast("long"))
+      .withColumn("rnb", row_number().over(wRank))
+      .localCheckpoint(eager = false)
+    // band sizes = max in-band rank
+    val bandCnts = rk.groupBy(col(group), col("band"))
+      .agg(max(col("rnb")).cast("long").as("cntb"))
+      .localCheckpoint(eager = false)
+    val offDf = bandCnts.withColumn("off",
+      coalesce(sum(col("cntb")).over(Window.partitionBy(col(group))
+        .orderBy(col("band")).rowsBetween(Window.unboundedPreceding, -1)),
+        lit(0L)))
+      .select(col(group), col("band"), col("off"))
+    val ranked = rk.join(broadcast(offDf), Seq(group, "band"))
+      .withColumn("rn", col("off") + col("rnb").cast("long"))
+    val sizes = bandCnts.groupBy(col(group)).agg(sum(col("cntb")).as("n"))
+    (ranked, sizes)
+  }
 }

@@ -184,11 +184,15 @@ class MiningDefinitionSpec extends AnyFunSuite {
     val liSchema = StructType(Seq(
       StructField("l_returnflag", StringType),
       StructField("l_extendedprice", DoubleType)))
-    val flags = Seq("A", "B")
-    // group B is a singleton-ish tiny group — the ceil boundary case
+    val flags = Seq("A", "B", "C")
+    // group B is a singleton-ish tiny group — the ceil boundary case;
+    // A and B each sit inside one 4096-wide rank band, while C spans ~29
+    // bands with heavy ties, on and just below the band edges
+    val edges = (1 to 29).flatMap(i => Seq(i * 4096.0, i * 4096.0 - 0.01))
     val rows = (0 until 500).map(_ =>
       Row("A", (rnd.nextInt(100000) + 1) / 100.0)) ++
-      (0 until 7).map(_ => Row("B", (rnd.nextInt(1000) + 1) / 100.0))
+      (0 until 7).map(_ => Row("B", (rnd.nextInt(1000) + 1) / 100.0)) ++
+      (0 until 600).map(_ => Row("C", edges(rnd.nextInt(edges.size))))
     val dir = tmpDir("wz")
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), liSchema)
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")

@@ -114,6 +114,29 @@ class PlanSpec extends AnyFunSuite {
       "partial agg and filter not fused into one codegen stage")
   }
 
+  test("exact-sum keys: the partial agg over lineitem sums only bigints") {
+    // the r20 property `QueryPack.exactSum` exists for: every fact-grain
+    // sum buffer is a long word, never a byte-backed decimal buffer
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Partial, Sum}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.types.LongType
+    val aqe = new AdaptiveSparkPlanHelper {}
+    for (k <- Seq("q_agg_groupby", "q_rollup", "q_feature_scale",
+                  "q_corr_matrix", "q_linreg")) {
+      val df = SparkEntry.queries(k)(spark, TestSpark.Sf0001)
+      df.collect() // finalize AQE
+      val sums = aqe.collect(df.queryExecution.executedPlan) {
+        case a: HashAggregateExec => a.aggregateExpressions
+      }.flatten.filter(_.mode == Partial).map(_.aggregateFunction)
+        .collect { case s: Sum => s.child }
+      assert(sums.nonEmpty, s"$k has no partial sum")
+      assert(sums.forall(_.dataType == LongType),
+        s"$k sums a non-bigint input at fact grain: " +
+          sums.filter(_.dataType != LongType).mkString(", "))
+    }
+  }
+
   test("near-dup candidate generation never plans a cartesian product") {
     for (k <- Seq("q_dedup_simhash", "q_dedup_ngram", "q_dedup_embed",
                   "q_dedup_minhash")) {
