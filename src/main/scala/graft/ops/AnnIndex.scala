@@ -189,8 +189,8 @@ object AnnIndex {
     * centroids degrades recall at fixed nProbe (AnnIndexSpec measures the
     * decay). `rebuild` retrains on the CURRENT corpus (base + every
     * append, read from the lists table itself) and re-files every vector,
-    * under the same optimistic single-CAS discipline as
-    * `SnapshotLake.compact`: the rewrite targets exactly base+1 and
+    * under the same optimistic discipline as `SnapshotLake.compact`
+    * (one `SnapshotLake.publish`): the rewrite targets exactly base+1 and
     * returns None if ANY commit (i.e. a concurrent [[append]]) landed
     * meanwhile — retrying with the stale rewrite would silently DROP the
     * racing append's vectors, so the caller re-invokes on the new base
@@ -215,11 +215,10 @@ object AnnIndex {
       .select(col("cid"), col("vec_id"), col("vec"), col("nrm"))
       .repartitionByRange(col("cid"))
     val dir = SnapshotLake.writeData(lists, listsT, 1000000L)
-    if (SnapshotLake.latest(spark, listsT).contains(base) &&
-        SnapshotLake.tryCommitManifest(spark, listsT, base + 1, Seq(dir))) {
+    SnapshotLake.publish(spark, listsT, base, Seq(dir), Nil, None).map { id =>
       SnapshotLake.commit(cents, s"$root/centroids", append = false)
-      Some(base + 1)
-    } else None
+      id
+    }
   }
 
   /** Hot-list re-balance (r17, VERDICT r16 item 8): [[append]] files new
@@ -315,8 +314,7 @@ object AnnIndex {
       .foldLeft(lists.filter(!col("cid").isin(splitCids: _*)))(_ unionByName _)
       .repartitionByRange(col("cid"))
     val dir = SnapshotLake.writeData(newLists, listsT, 1000000L)
-    if (!(SnapshotLake.latest(spark, listsT).contains(base) &&
-          SnapshotLake.tryCommitManifest(spark, listsT, base + 1, Seq(dir))))
+    if (SnapshotLake.publish(spark, listsT, base, Seq(dir), Nil, None).isEmpty)
       return None
     val newCents = splits.map(_._2)
       .foldLeft(cents.filter(!col("cid").isin(splitCids: _*)))(_ unionByName _)

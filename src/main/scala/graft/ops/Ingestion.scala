@@ -24,10 +24,11 @@ case class EvBatch(event_id: Long, user_id: Long, batch_id: Long,
   *
   * Scale notes: batch assignment is inherently sequential *per producer*
   * (each item's batch depends on every prior item's size), so it runs as
-  * `flatMapGroups` keyed by `user_id` — one shuffle, then a linear pass per
-  * group; this is exactly how a 1000-executor cluster would do per-producer
-  * batching (the reference itself is single-producer — a global order would
-  * serialize the world). Everything else is narrow projections/filters.
+  * `flatMapSortedGroups` keyed by `user_id` — one shuffle and a spillable
+  * sort, then a streaming pass per group; this is exactly how a
+  * 1000-executor cluster would do per-producer batching (the reference
+  * itself is single-producer — a global order would serialize the world).
+  * Everything else is narrow projections/filters.
   */
 object Ingestion extends QueryPack {
 
@@ -52,11 +53,12 @@ object Ingestion extends QueryPack {
       .select(col("event_id"), col("user_id"),
               unix_micros(col("ts")).as("tsMicros"), evSize.as("sz"))
       .as[EvIn]
-      .groupByKey(_.user_id)
-      .flatMapGroups { (uid, it) =>
-        val sorted = it.toSeq.sortBy(e => (e.tsMicros, e.event_id))
+      .groupBy(col("user_id")).as[Long, EvIn]
+      // the per-producer order comes from Spark's spillable SortExec, so
+      // the scan streams one producer's history instead of holding it
+      .flatMapSortedGroups(col("tsMicros"), col("event_id")) { (uid, it) =>
         val scan = new BatchScan(MaxSizeBytes)
-        sorted.iterator.map { e =>
+        it.map { e =>
           val before = scan.add(e.sz)
           EvBatch(e.event_id, uid, scan.batch, before, e.sz)
         }

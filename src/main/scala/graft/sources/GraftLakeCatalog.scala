@@ -52,8 +52,8 @@ import graft.sources.v2.HadoopConfCarrier
   *    vectorized reader, pushdown, pruning — the manifest only decides
   *    which files exist);
   *  - `INSERT INTO` / `INSERT OVERWRITE`  — one atomic snapshot commit
-  *    per statement ([[SnapshotLake.commit]] semantics, append vs
-  *    full-replace);
+  *    per statement through the object API's commit path
+  *    ([[SnapshotLake.commitDir]]: a guarded append vs a full replace);
   *  - `DELETE FROM` / `UPDATE` / `MERGE INTO` — planned by Spark's own
   *    row-level machinery onto the existing CoW mutation protocol. The
   *    table implements BOTH row-level interfaces the planner knows:
@@ -87,12 +87,12 @@ import graft.sources.v2.HadoopConfCarrier
   *    ALTER without data rewrite.
   *
   * Concurrency: every statement pins the latest committed snapshot at
-  * table-load time; mutation commits CAS exactly `base + 1` and FAIL
-  * LOUDLY if any other commit landed in between (GraftLakeCatalogSpec
-  * races one) — the single-CAS discipline of the object API, surfaced as
-  * a statement error instead of a silent lost update. Pre-mutation
-  * snapshots stay time-travel-readable (`snapshotId` read option /
-  * [[SnapshotLake.readAt]]).
+  * table-load time; mutation commits take one [[SnapshotLake.publish]]
+  * at exactly `base + 1` and FAIL LOUDLY if any other commit landed in
+  * between (GraftLakeCatalogSpec races one) — the object API's mutation
+  * discipline, surfaced as a statement error instead of a silent lost
+  * update. Pre-mutation snapshots stay time-travel-readable
+  * (`snapshotId` read option / [[SnapshotLake.readAt]]).
   *
   * Rename-evolved tables scan natively by column mapping (r17,
   * origin-hash parquet field ids) — except a rename chain that REUSES a
@@ -709,7 +709,7 @@ private[graft] class GraftLakeWriteBuilder(tableRoot: String,
 
 private[graft] object GraftLakeBatchWrite {
   sealed trait Mode
-  /** Stack onto the latest manifest (CAS retry loop, like commit). */
+  /** Stack onto the latest manifest (guarded and retried, like commit). */
   case object Append extends Mode
   /** Atomic full replace of whatever is latest (INSERT OVERWRITE). */
   case object Truncate extends Mode
@@ -731,9 +731,10 @@ private[graft] object GraftLakeBatchWrite {
   * config as `df.write.parquet`) into a staging directory under
   * `data/` that no manifest references; job commit renames exactly the
   * REPORTED files into a fresh data directory (a speculative duplicate
-  * that lost the task race never lands) and then CAS-commits the
-  * manifest. A crash at any point leaves only unreferenced directories —
-  * invisible to readers, GC'd by [[SnapshotLake.expire]]. */
+  * that lost the task race never lands) and then commits it through
+  * [[SnapshotLake]]'s one commit path. A crash at any point leaves only
+  * unreferenced directories — invisible to readers, GC'd by
+  * [[SnapshotLake.expire]]. */
 private[graft] class GraftLakeBatchWrite(tableRoot: String,
                                          schema: StructType,
                                          mode: GraftLakeBatchWrite.Mode,
@@ -742,11 +743,6 @@ private[graft] class GraftLakeBatchWrite(tableRoot: String,
                                            Seq[String], Seq[String])] = None)
     extends BatchWrite {
   import GraftLakeBatchWrite._
-
-  private def bucketLine: Option[String] = bucketSpec.map {
-    case (n, cols, sortCols) =>
-      s"#bucket\t$n\t${cols.mkString(",")}\t${sortCols.mkString(",")}"
-  }
 
   private val jobId = UUID.randomUUID().toString
   private def stagingDir = s"$tableRoot/data/$jobId-staging"
@@ -793,55 +789,15 @@ private[graft] class GraftLakeBatchWrite(tableRoot: String,
     }
     fs.delete(new Path(stagingDir), true)
     mode match {
+      // the statement's rows were routed for the layout it LOADED; the
+      // append guard refuses if a concurrent writer changed the table's
+      // bucket line or dropped a column this INSERT still carries
       case Append =>
-        var attempts = 0
-        var done = false
-        while (!done && attempts < 64) {
-          val base = SnapshotLake.latest(spark, tableRoot)
-          // layout race guard (r18): this write routed rows for the
-          // layout the statement LOADED; if a concurrent writer changed
-          // the table's bucket line meanwhile, appending our dir would
-          // mix layouts under one declaration — fail loudly instead
-          base.foreach { b =>
-            val current = SnapshotLake.manifestBucket(spark, tableRoot, b)
-              .map { case (n, cols, _) => (n, cols) }
-            val ours = bucketSpec.map { case (n, cols, _) => (n, cols) }
-            require(current == ours,
-              s"bucket layout of $tableRoot changed while this INSERT " +
-              s"ran (loaded: $ours, now: $current) — re-run the statement")
-          }
-          val (visible, dirvs) = base.map(b =>
-            (SnapshotLake.manifestDirs(spark, tableRoot, b),
-             SnapshotLake.manifestDirectives(spark, tableRoot, b)))
-            .getOrElse((Nil, Nil))
-          // dropped-name guard (r19, advice): an INSERT racing a
-          // concurrent ALTER TABLE DROP COLUMN would land a directory
-          // still carrying the retired physical column — refuse loudly,
-          // matching the object API's append guard
-          val retired = SnapshotLake.droppedNames(dirvs)
-            .intersect(schema.fieldNames.toSet)
-          require(retired.isEmpty,
-            s"INSERT INTO $tableRoot carries dropped column(s) $retired " +
-            "— reads mask them out; drop them from the insert, or " +
-            "compact the table and re-add the column first")
-          done = SnapshotLake.tryCommitManifest(spark, tableRoot,
-            base.getOrElse(0L) + 1, visible :+ dataDir, dirvs, bucketLine)
-          attempts += 1
-        }
-        if (!done) throw new IllegalStateException(
-          s"INSERT INTO lost $attempts CAS races at $tableRoot — livelock?")
+        SnapshotLake.commitDir(spark, tableRoot, dataDir, bucketSpec,
+          append = true, schema.fieldNames.toSeq, "INSERT INTO")
       case Truncate =>
-        var attempts = 0
-        var done = false
-        while (!done && attempts < 64) {
-          val base = SnapshotLake.latest(spark, tableRoot).getOrElse(0L)
-          // full replace resets directives: the table IS the new frame
-          done = SnapshotLake.tryCommitManifest(spark, tableRoot,
-            base + 1, Seq(dataDir), Nil, bucketLine)
-          attempts += 1
-        }
-        if (!done) throw new IllegalStateException(
-          s"INSERT OVERWRITE lost $attempts CAS races at $tableRoot")
+        SnapshotLake.commitDir(spark, tableRoot, dataDir, bucketSpec,
+          append = false, schema.fieldNames.toSeq, "INSERT OVERWRITE")
       case ReplaceDirs(base, served) =>
         // no-op statement guard (r19, advice): a row-level statement
         // whose runtime probe matched ZERO directories replaces nothing;
@@ -860,17 +816,11 @@ private[graft] class GraftLakeBatchWrite(tableRoot: String,
             return
           }
         }
-        val committed =
-          SnapshotLake.latest(spark, tableRoot).contains(base) && {
-            val visible = SnapshotLake.manifestDirs(spark, tableRoot, base)
-            val dirvs =
-              SnapshotLake.manifestDirectives(spark, tableRoot, base)
-            val replaced = served.dirs.toSet
-            val kept = visible.filterNot(replaced)
-            SnapshotLake.tryCommitManifest(spark, tableRoot, base + 1,
-              kept :+ dataDir, dirvs, bucketLine)
-          }
-        if (!committed) {
+        val kept = SnapshotLake.manifestDirs(spark, tableRoot, base)
+          .filterNot(served.dirs.toSet)
+        if (SnapshotLake.publish(spark, tableRoot, base, kept :+ dataDir,
+            SnapshotLake.manifestDirectives(spark, tableRoot, base),
+            bucketSpec).isEmpty) {
           fs.delete(new Path(dataDir), true)
           throw new IllegalStateException(
             s"concurrent commit at $tableRoot: this statement read " +

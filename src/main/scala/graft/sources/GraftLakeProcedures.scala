@@ -155,9 +155,7 @@ private[graft] object GraftProcedures {
       // default -1 = tag the latest committed snapshot
       val id =
         if (args.getLong(2) >= 0) args.getLong(2)
-        else SnapshotLake.latest(spark, table).getOrElse(
-          throw new IllegalArgumentException(
-            s"no committed snapshot at $table"))
+        else SnapshotLake.requireLatest(spark, table)
       SnapshotLake.tag(spark, table, name, id)
       Array(new GenericInternalRow(Array[Any](
         org.apache.spark.unsafe.types.UTF8String.fromString(name), id)))

@@ -57,8 +57,8 @@ import org.apache.spark.sql.types.StructType
   * tables.
   *
   * Write path (r16, the read path's completion): the same short name is a
-  * batch sink and a streaming sink, both delegating to the manifest-CAS
-  * commit protocol — every `save` is ONE atomic snapshot (readers see
+  * batch sink and a streaming sink, both delegating to [[SnapshotLake]]'s
+  * one commit path — every `save` is ONE atomic snapshot (readers see
   * old-or-new, never a partial directory) and `overwrite` is the atomic
   * full-replace that plain parquet `mode("overwrite")` cannot give:
   *  - `df.write.format("graftlake").mode(m).save(table)` — `append` →
@@ -102,9 +102,7 @@ class GraftLakeProvider extends RelationProvider
         root
       case None => table0
     }
-    val latest = SnapshotLake.latest(spark, table).getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed snapshot at $table"))
+    val latest = SnapshotLake.requireLatest(spark, table)
     // tag option (r19): read at a named snapshot tag — ≡ snapshotId at
     // the tagged id (SnapshotLake.tag / VERSION AS OF 'name' parity)
     val snap = parameters.get("snapshotId").map(_.trim.toLong)

@@ -94,6 +94,14 @@ object LakeSink {
   * Caveat inherited from every rename-based table format: the store must
   * give atomic rename-no-overwrite (HDFS/ABFS do; raw S3 needs a
   * metastore or a conditional-put shim at this seam).
+  *
+  * Every writer commits through ONE path: [[writeData]] lands the data
+  * dir under the layout it must honor, [[guardAppend]] checks an append
+  * against the base it lands on, [[publish]] CASes the manifest at
+  * `base + 1`, and [[retryCommit]] re-runs the attempt against a newer
+  * base after a lost race. Rewrites that are a function of their base
+  * (compact, the row-level mutations, rollback, publishing a branch) take
+  * one [[publish]] and return None on a lost race instead of retrying.
   */
 object SnapshotLake {
   import org.apache.hadoop.fs.{FileSystem, Path => HPath}
@@ -120,6 +128,16 @@ object SnapshotLake {
   /** Latest committed snapshot id, if any commit ever succeeded. */
   def latest(spark: SparkSession, table: String): Option[Long] =
     snapshots(spark, table).lastOption
+
+  /** [[latest]] for operations that need a committed table. */
+  private[graft] def requireLatest(spark: SparkSession, table: String): Long =
+    latest(spark, table).getOrElse(throw noSnapshot(table))
+
+  private def noSnapshot(table: String) =
+    new IllegalArgumentException(s"no committed snapshot at $table")
+
+  /** A recorded bucket layout: (nBuckets, bucket cols, sort cols). */
+  private[graft] type Bucket = (Int, Seq[String], Seq[String])
 
   // ------------------------------------------------------------------
   // Named snapshot tags (r19, VERDICT r18 item 6): immutable refs over
@@ -227,8 +245,7 @@ object SnapshotLake {
   def branch(spark: SparkSession, table: String, name: String): Long = {
     require(TagNameRe.matches(name),
       s"branch names are [A-Za-z][A-Za-z0-9._-]*, got '$name'")
-    val head = latest(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot at $table"))
+    val head = requireLatest(spark, table)
     val root = branchRoot(table, name)
     require(latest(spark, root).isEmpty,
       s"branch '$name' already exists at $table — dropBranch first")
@@ -252,11 +269,10 @@ object SnapshotLake {
       }
     try ff.write(s"$head\n".getBytes("UTF-8")) finally ff.close()
     // a failed seed must not leave an orphan marker poisoning retries
-    if (!tryCommitManifest(spark, root, 1L,
-        manifestDirs(spark, table, head),
+    if (publish(spark, root, 0L, manifestDirs(spark, table, head),
         manifestDirectives(spark, table, head),
-        bucketLineOf(manifestBucket(spark, table, head)),
-        inheritStatsFrom = Some((table, head)))) {
+        manifestBucket(spark, table, head),
+        inheritStatsFrom = Some((table, head))).isEmpty) {
       fs.delete(forkFile(table, name), false)
       throw new IllegalStateException(
         s"branch '$name' seed commit lost a race at $table — retry")
@@ -321,19 +337,15 @@ object SnapshotLake {
     val fork = forkOf(spark, table, name).getOrElse(
       throw new IllegalStateException(
         s"branch '$name' at $table has no forked-from marker"))
-    val base = latest(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot at $table"))
+    val base = requireLatest(spark, table)
     require(base == fork,
       s"main advanced past the fork of branch '$name' " +
       s"($fork → $base) — the branch is diverged; re-branch from the " +
       "new head and replay its writes")
-    if (tryCommitManifest(spark, table, base + 1,
-        manifestDirs(spark, root, bhead),
-        manifestDirectives(spark, root, bhead),
-        bucketLineOf(manifestBucket(spark, root, bhead)),
-        inheritStatsFrom = Some((root, bhead))))
-      Some(base + 1)
-    else None
+    publish(spark, table, base, manifestDirs(spark, root, bhead),
+      manifestDirectives(spark, root, bhead),
+      manifestBucket(spark, root, bhead),
+      inheritStatsFrom = Some((root, bhead)))
   }
 
   /** Drop a branch: manifests and fork marker first (the branch
@@ -434,8 +446,7 @@ object SnapshotLake {
     * so the line's presence IS the invariant that all dirs carry
     * bucket-tagged files. */
   private[graft] def manifestBucket(spark: SparkSession, table: String,
-                                    id: Long)
-      : Option[(Int, Seq[String], Seq[String])] =
+                                    id: Long): Option[Bucket] =
     manifestLines(spark, table, id).find(_.startsWith("#bucket"))
       .map { l =>
         val p = l.split("\t", -1)
@@ -444,24 +455,10 @@ object SnapshotLake {
          p(3).split(",").filter(_.nonEmpty).toSeq)
       }
 
-  /** The one `#bucket` line formatter (r19) — every committer that
-    * carries a layout forward writes exactly this form. */
-  private[graft] def bucketLineOf(
-      bucket: Option[(Int, Seq[String], Seq[String])]): Option[String] =
+  /** The one `#bucket` line formatter (r19), called by [[publish]]. */
+  private def bucketLineOf(bucket: Option[Bucket]): Option[String] =
     bucket.map { case (n, cols, sortCols) =>
       s"#bucket\t$n\t${cols.mkString(",")}\t${sortCols.mkString(",")}"
-    }
-
-  /** Write `df` as one new data directory HONORING the table's recorded
-    * layout (r19): bucket-routed + tagged when `bucket` is set, plain
-    * otherwise — the write half every layout-preserving mutation shares. */
-  private def writeDataLayout(df: DataFrame, table: String,
-                              bucket: Option[(Int, Seq[String], Seq[String])],
-                              maxRecordsPerFile: Long): String =
-    bucket match {
-      case Some((n, cols, sortCols)) =>
-        writeDataBucketed(df, table, cols, n, sortCols, maxRecordsPerFile)
-      case None => writeData(df, table, maxRecordsPerFile)
     }
 
   /** Manifest v3 (r17): per-directory column statistics recorded at
@@ -633,31 +630,69 @@ object SnapshotLake {
     spark.read.schema(stripped).parquet(dirs: _*)
   }
 
-  /** Step 1 of a commit — land the data somewhere no reader looks. A
-    * crash after this leaves an unreferenced directory: invisible.
-    * `private[graft]` so LakeSinkSpec can simulate exactly that crash.
-    * Writes attach origin-hash parquet field ids (column mapping, r17)
-    * derived from the latest committed directive chain. */
+  /** Step 1 of a commit, and the one data-dir writer: land `df`
+    * somewhere no reader looks. A crash after this leaves an unreferenced
+    * directory: invisible. `private[graft]` so LakeSinkSpec can simulate
+    * exactly that crash.
+    *
+    * Files carry origin-hash parquet field ids (column mapping, r17)
+    * under `idDirectives`, the chain the commit will RECORD (r18);
+    * default: the latest committed chain. A full replace or compact
+    * resets directives, so it passes `Some(Nil)`: stamping ids from the
+    * pre-replace chain would desynchronize them from any post-replace
+    * rename (the rename→overwrite→rename repro).
+    *
+    * With a `layout` (r18) rows route to bucket
+    * `pmod(murmur3(cols), n)` — `repartition(n, cols)` IS Spark's
+    * HashPartitioning bucket function, so partition index = bucket id —
+    * sort within buckets by `cols ++ sortCols`, and every part file is
+    * renamed to carry the `_%05d` tag Spark's BucketingUtils parses
+    * (inserted before the first extension dot). `intoDir` (r19) names the
+    * dir instead of a fresh UUID: the idempotent stream commit keys it by
+    * batch. */
   private[graft] def writeData(df: DataFrame, table: String,
-                                 maxRecordsPerFile: Long,
-                                 idDirectives: Option[Seq[String]] = None)
-      : String = {
-    val dir = s"$table/data/${java.util.UUID.randomUUID()}"
+                               maxRecordsPerFile: Long,
+                               layout: Option[Bucket] = None,
+                               idDirectives: Option[Seq[String]] = None,
+                               intoDir: Option[String] = None): String = {
     val spark = df.sparkSession
-    // field ids hash the ORIGIN name under the directive chain the commit
-    // will RECORD (r18): a full replace / compact resets directives, so
-    // its files must carry current-name-hash ids — stamping them from the
-    // pre-replace chain would desynchronize ids from any post-replace
-    // rename (the rename→overwrite→rename repro)
+    val dir = intoDir.getOrElse(s"$table/data/${java.util.UUID.randomUUID()}")
     val dirvs = idDirectives.getOrElse(latest(spark, table)
       .map(manifestDirectives(spark, table, _)).getOrElse(Nil))
     val withIds = withFieldIds(df.schema, dirvs)
     val tagged = df.select(df.columns.zipWithIndex.map { case (c, i) =>
-      org.apache.spark.sql.functions.col(s"`$c`")
-        .as(c, withIds.fields(i).metadata)
+      col(s"`$c`").as(c, withIds.fields(i).metadata)
     }.toIndexedSeq: _*)
-    tagged.write.option("maxRecordsPerFile", maxRecordsPerFile)
+    // an EMPTY bucketed frame must still land one schema-bearing file (an
+    // empty bucketed CREATE TABLE) — n empty shuffle partitions may write
+    // none, so route it through a single partition, tagged bucket 0 below
+    // (an empty bucket 0 is vacuously correctly routed)
+    val routed = layout match {
+      case Some(_) if tagged.isEmpty => tagged.repartition(1)
+      case Some((n, cols, sortCols)) =>
+        tagged.repartition(n, cols.map(col): _*)
+          .sortWithinPartitions((cols ++ sortCols).map(col): _*)
+      case None => tagged
+    }
+    routed.write.option("maxRecordsPerFile", maxRecordsPerFile)
       .mode("errorifexists").parquet(dir)
+    if (layout.isDefined) {
+      val fs = fsFor(spark, dir)
+      val PartIdx = "part-(\\d+)-.*".r
+      fs.listStatus(new HPath(dir)).foreach { st =>
+        val n = st.getPath.getName
+        if (st.isFile && !n.startsWith("_") && !n.startsWith(".")) {
+          val tag = n match {
+            case PartIdx(idx) => f"_${idx.toInt}%05d"
+            case _ => throw new IllegalStateException(
+              s"unexpected part-file name in bucketed write: $n")
+          }
+          val renamed = n.replaceFirst("\\.", s"$tag.")
+          require(fs.rename(st.getPath, new HPath(dir, renamed)),
+            s"bucket-tag rename failed: $n -> $renamed")
+        }
+      }
+    }
     dir
   }
 
@@ -925,69 +960,132 @@ object SnapshotLake {
     }
   }
 
+  /** The one publish step: CAS the manifest at `base + 1` iff the latest
+    * snapshot is still `base` (0 = a table with no commit yet). Some(id)
+    * on success; None when any other commit landed first. A rewrite that
+    * is a function of `base` (compact, a mutation, rollback) calls this
+    * once: retrying it against a newer base would silently drop (or
+    * resurrect) the concurrent commit's rows. */
+  private[graft] def publish(spark: SparkSession, table: String, base: Long,
+                             dirs: Seq[String], directives: Seq[String],
+                             bucket: Option[Bucket],
+                             inheritStatsFrom: Option[(String, Long)] = None)
+      : Option[Long] =
+    if (latest(spark, table).getOrElse(0L) == base &&
+        tryCommitManifest(spark, table, base + 1, dirs, directives,
+          bucketLineOf(bucket), inheritStatsFrom))
+      Some(base + 1)
+    else None
+
+  /** The one bounded retry loop, for commits that stay correct on any base
+    * (appends, full replaces, ALTERs): each attempt observes the latest
+    * snapshot, re-checks its guards against it and publishes; None = lost
+    * the race, so the next attempt observes a NEWER latest. */
+  private[graft] def retryCommit[T](spark: SparkSession, table: String,
+                                    writer: String)
+                                   (attempt: Option[Long] => Option[T]): T = {
+    var attempts = 0
+    while (attempts < 64) {
+      attempt(latest(spark, table)) match {
+        case Some(done) => return done
+        case None       => attempts += 1
+      }
+    }
+    throw new IllegalStateException(
+      s"$writer lost $attempts CAS races at $table — livelock?")
+  }
+
+  /** The one append guard, checked against the base an append lands on
+    * (before the write, and again inside every retry — a concurrent
+    * commit can change either between the two):
+    *  - the recorded bucket layout must be the one the write routed for
+    *    (`routed`): appending under a different `#bucket` line would mix
+    *    routings, and a plain append would silently drop the line. A base
+    *    with no data dirs has no rows to keep co-located.
+    *  - no column a `drop` directive retired may ride along: reads mask it
+    *    out, so its rows would be silently lost (r18). */
+  private[graft] def guardAppend(spark: SparkSession, table: String,
+                                 base: Option[Long], routed: Option[Bucket],
+                                 columns: Seq[String], writer: String): Unit =
+    base.foreach { b =>
+      def layout(l: Option[Bucket]) =
+        l.map { case (n, cols, _) => s"$n buckets on ${cols.mkString(",")}" }
+          .getOrElse("unbucketed")
+      val recorded = manifestBucket(spark, table, b)
+      require(manifestDirs(spark, table, b).isEmpty ||
+          recorded.map(l => (l._1, l._2)) == routed.map(l => (l._1, l._2)),
+        s"$writer to $table wrote ${layout(routed)} but the table's bucket " +
+        s"layout is ${layout(recorded)} — append with commitBucketed on " +
+        "the recorded columns and bucket count, re-run it if the layout " +
+        "changed meanwhile, or overwrite to replace the layout")
+      val retired = droppedNames(manifestDirectives(spark, table, b))
+        .intersect(columns.toSet)
+      require(retired.isEmpty,
+        s"$writer to $table carries dropped column(s) $retired — reads " +
+        "mask them out; drop them from the frame, or compact the table " +
+        "and re-add the column first")
+    }
+
+  /** Commit data dir `dir`, written for `layout`, as the next snapshot:
+    * stacked onto the latest one (its dirs and directives carried, the
+    * append guard checked) or, with `append = false`, as the whole table.
+    * None only when `replayed` turns true (a twin committed the same
+    * idempotent batch). */
+  private[graft] def commitDir(spark: SparkSession, table: String,
+                               dir: String, layout: Option[Bucket],
+                               append: Boolean, columns: Seq[String],
+                               writer: String,
+                               replayed: => Boolean = false): Option[Long] =
+    retryCommit(spark, table, writer) { base =>
+      if (replayed) Some(None)
+      else {
+        // an append carries the base's evolution directives (old dirs
+        // still need them applied); a full replace resets them — the table
+        // IS the new frame, its schema carried by its own files
+        val (visible, dirvs) =
+          if (!append) (Nil, Nil)
+          else {
+            guardAppend(spark, table, base, layout, columns, writer)
+            base.map(b => (manifestDirs(spark, table, b),
+                           manifestDirectives(spark, table, b)))
+              .getOrElse((Nil, Nil))
+          }
+        publish(spark, table, base.getOrElse(0L), visible :+ dir, dirvs,
+          layout).map(Some(_))
+      }
+    }
+
+  /** [[writeData]] + [[commitDir]]: an append is guarded before the write
+    * too, so a refused one leaves no orphan dir behind. */
+  private def commitFrame(df: DataFrame, table: String,
+                          layout: Option[Bucket], append: Boolean,
+                          maxRecordsPerFile: Long, writer: String,
+                          intoDir: Option[String] = None,
+                          replayed: => Boolean = false): Option[Long] = {
+    val spark = df.sparkSession
+    if (append)
+      guardAppend(spark, table, latest(spark, table), layout, df.columns,
+        writer)
+    val dir = writeData(df, table, maxRecordsPerFile, layout,
+      idDirectives = if (append) None else Some(Nil), intoDir)
+    commitDir(spark, table, dir, layout, append, df.columns, writer, replayed)
+  }
+
   /** Commit `df` as the next snapshot. `append = true` stacks onto the
     * latest committed manifest (ingest/compaction-input pattern);
     * `append = false` makes the new data the whole table (the atomic
     * full-replace the plain `mode("overwrite")` writer can't give —
     * readers see old-or-new, never a mid-delete mix). Returns the
-    * committed snapshot id. */
+    * committed snapshot id. A bucket-laid-out table only grows through
+    * [[commitBucketed]] (an append here refuses); a full replace clears
+    * the layout with the data. */
   def commit(df: DataFrame, table: String, append: Boolean = true,
-             maxRecordsPerFile: Long = 1000000L): Long = {
-    val spark = df.sparkSession
-    // bucketed tables only grow through commitBucketed: a plain append
-    // would break the all-dirs-bucket-tagged invariant the BucketSpec
-    // declaration rests on (r18); a full replace is fine — it clears
-    // the property with the data
-    require(!append || latest(spark, table)
-        .flatMap(manifestBucket(spark, table, _)).isEmpty,
-      s"$table is bucket-laid-out — append with commitBucketed (same " +
-      "columns and bucket count), or overwrite to drop the layout")
-    // full replace resets directives, so its files carry
-    // current-name-hash ids (see writeData's idDirectives note)
-    val dir = writeData(df, table, maxRecordsPerFile,
-      idDirectives = if (append) None else Some(Nil))
-    var attempts = 0
-    while (attempts < 64) { // CAS loop: each retry observes a NEWER latest
-      val base = latest(spark, table)
-      // re-check the layout INSIDE the loop (r19, advice): an append
-      // racing a concurrent commitBucketed could pass the upfront check,
-      // then CAS against the newly bucketed base and silently drop the
-      // #bucket line — refuse loudly instead, like the V2 Append guard
-      require(!append || base
-          .flatMap(manifestBucket(spark, table, _)).isEmpty,
-        s"$table became bucket-laid-out while this append ran — append " +
-        "with commitBucketed (same columns and bucket count)")
-      // append inherits the base's evolution directives (old dirs still
-      // need them applied); full-replace resets them — the table IS the
-      // new frame, its schema carried by its own files
-      val (visible, dirvs) =
-        if (append)
-          base.map(b => (manifestDirs(spark, table, b),
-                         manifestDirectives(spark, table, b)))
-            .getOrElse((Nil, Nil))
-        else (Nil, Nil)
-      // a dropped name is reserved until compact materializes the drop —
-      // an append carrying it would silently write rows whose column
-      // every read masks out (r18)
-      val retired = droppedNames(dirvs).intersect(df.columns.toSet)
-      require(retired.isEmpty,
-        s"append to $table carries dropped column(s) $retired — reads " +
-        "mask them out; drop them from the frame, or compact the table " +
-        "and re-add the column first")
-      val id = base.getOrElse(0L) + 1
-      if (tryCommitManifest(spark, table, id, visible :+ dir, dirvs)) return id
-      attempts += 1
-    }
-    throw new IllegalStateException(
-      s"snapshot commit lost ${attempts} CAS races at $table — livelock?")
-  }
+             maxRecordsPerFile: Long = 1000000L): Long =
+    commitFrame(df, table, None, append, maxRecordsPerFile,
+      if (append) "append" else "overwrite").get
 
-  /** Bucket-laid-out commit (r18) — the co-located-join layout: rows
-    * route to bucket `pmod(murmur3(bucketCols), nBuckets)` (exactly
-    * Spark's HashPartitioning bucket function — `repartition(n, cols)`
-    * IS that routing, so each output partition index equals its bucket
-    * id), sort within buckets by `bucketCols ++ sortCols`, and every
-    * written file carries Spark's `_%05d` bucket-id tag. With the
+  /** Bucket-laid-out commit (r18) — the co-located-join layout (see
+    * [[writeData]] for the routing and the file tags). With the
     * `#bucket` manifest line recorded, the V1 relation declares the
     * BucketSpec and Spark plans joins/aggregations on the bucket columns
     * across two same-(cols, n) tables WITHOUT an exchange — at 100 TB
@@ -995,12 +1093,10 @@ object SnapshotLake {
     * `nBuckets` ≈ the cluster's target parallelism for the table's size
     * (buckets are the join's parallelism unit).
     *
-    * Appends validate the recorded (cols, n) exactly; a first commit (or
-    * `append = false`) establishes it. Every OTHER committer drops the
-    * line — plain [[commit]] appends refuse loudly, mutations/compact
-    * rewrite unbucketed and clear the property (correct reads, shuffles
-    * return; re-establish with a fresh `commitBucketed(append=false)`).
-    * Same CAS discipline as [[commit]]. */
+    * Appends must match the recorded (cols, n) exactly; a first commit
+    * (or `append = false`) establishes it. Plain [[commit]] appends
+    * refuse; compact, ALTER, the row-level mutations, SQL INSERT and the
+    * idempotent stream commit keep the layout. */
   def commitBucketed(df: DataFrame, table: String,
                      bucketCols: Seq[String], nBuckets: Int,
                      sortCols: Seq[String] = Nil,
@@ -1012,88 +1108,9 @@ object SnapshotLake {
         !c.contains(",") && !c.contains("\t") && df.columns.contains(c)),
       s"bucket/sort columns must exist in the frame and be separator-" +
       s"free: ${bucketCols ++ sortCols} vs ${df.columns.toSeq}")
-    val spark = df.sparkSession
-    val line = s"#bucket\t$nBuckets\t${bucketCols.mkString(",")}\t" +
-      sortCols.mkString(",")
-    val dir = writeDataBucketed(df, table, bucketCols, nBuckets, sortCols,
-      maxRecordsPerFile)
-    var attempts = 0
-    while (attempts < 64) {
-      val base = latest(spark, table)
-      if (append) {
-        base.foreach { b =>
-          val existing = manifestBucket(spark, table, b)
-          require(manifestDirs(spark, table, b).isEmpty ||
-              existing.exists(e => e._1 == nBuckets && e._2 == bucketCols),
-            s"$table is not bucket-laid-out as ($bucketCols, $nBuckets) — " +
-            s"recorded: $existing; matching appends only, or overwrite")
-        }
-        val (visible, dirvs) = base.map(b =>
-          (manifestDirs(spark, table, b),
-           manifestDirectives(spark, table, b))).getOrElse((Nil, Nil))
-        if (tryCommitManifest(spark, table, base.getOrElse(0L) + 1,
-            visible :+ dir, dirvs, Some(line)))
-          return base.getOrElse(0L) + 1
-      } else {
-        if (tryCommitManifest(spark, table, base.getOrElse(0L) + 1,
-            Seq(dir), Nil, Some(line)))
-          return base.getOrElse(0L) + 1
-      }
-      attempts += 1
-    }
-    throw new IllegalStateException(
-      s"bucketed commit lost $attempts CAS races at $table — livelock?")
-  }
-
-  /** The write half of [[commitBucketed]]: partition-index = bucket-id
-    * routing, within-bucket sort, then every part file renamed to carry
-    * the `_%05d` tag Spark's BucketingUtils parses (inserted before the
-    * first extension dot, the last underscore group in the name). */
-  private def writeDataBucketed(df: DataFrame, table: String,
-                                bucketCols: Seq[String], nBuckets: Int,
-                                sortCols: Seq[String],
-                                maxRecordsPerFile: Long,
-                                idDirectives: Option[Seq[String]] = None,
-                                intoDir: Option[String] = None)
-      : String = {
-    val spark = df.sparkSession
-    val dirvs = idDirectives.getOrElse(latest(spark, table)
-      .map(manifestDirectives(spark, table, _)).getOrElse(Nil))
-    val withIds = withFieldIds(df.schema, dirvs)
-    val tagged = df.select(df.columns.zipWithIndex.map { case (c, i) =>
-      col(s"`$c`").as(c, withIds.fields(i).metadata)
-    }.toIndexedSeq: _*)
-    // intoDir (r19): the idempotent streaming commit names its dir by
-    // the batch key — the dedup identity — instead of a fresh UUID
-    val dir = intoDir.getOrElse(
-      s"$table/data/${java.util.UUID.randomUUID()}")
-    // an EMPTY frame must still land one schema-bearing file (an empty
-    // bucketed CREATE TABLE) — n empty shuffle partitions may write
-    // none, so route the empty case through a single partition; the
-    // rename below tags it bucket 0 (an empty bucket 0 is vacuously
-    // correctly routed)
-    val routed =
-      if (tagged.isEmpty) tagged.repartition(1)
-      else tagged.repartition(nBuckets, bucketCols.map(col): _*)
-        .sortWithinPartitions((bucketCols ++ sortCols).map(col): _*)
-    routed.write.option("maxRecordsPerFile", maxRecordsPerFile)
-      .mode("errorifexists").parquet(dir)
-    val fs = fsFor(spark, dir)
-    val PartIdx = "part-(\\d+)-.*".r
-    fs.listStatus(new HPath(dir)).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isFile && !n.startsWith("_") && !n.startsWith(".")) {
-        val tag = n match {
-          case PartIdx(idx) => f"_${idx.toInt}%05d"
-          case _ => throw new IllegalStateException(
-            s"unexpected part-file name in bucketed write: $n")
-        }
-        val renamed = n.replaceFirst("\\.", s"$tag.")
-        require(fs.rename(st.getPath, new HPath(dir, renamed)),
-          s"bucket-tag rename failed: $n -> $renamed")
-      }
-    }
-    dir
+    commitFrame(df, table, Some((nBuckets, bucketCols, sortCols)), append,
+      maxRecordsPerFile,
+      if (append) "bucketed append" else "bucketed overwrite").get
   }
 
   /** Time-travel read: the table exactly as of committed snapshot `id`,
@@ -1122,8 +1139,8 @@ object SnapshotLake {
     * data dirs are unchanged and whose directive list grows by one. The
     * column reads as a typed NULL from every directory that predates it
     * and flows through once writers start carrying it; every snapshot
-    * BEFORE the returned id is readAt-byte-stable. Same CAS discipline
-    * as [[commit]]. Returns the ALTER's snapshot id. */
+    * BEFORE the returned id is readAt-byte-stable. Commits through
+    * [[retryCommit]]. Returns the ALTER's snapshot id. */
   def addColumn(spark: SparkSession, table: String, name: String,
                 typeDdl: String): Long = {
     require(name.nonEmpty && typeDdl.nonEmpty &&
@@ -1176,7 +1193,7 @@ object SnapshotLake {
     * [[compact]] rewrites the data without the column and clears the
     * directive chain (reusing the name earlier would collide with the
     * masked physical column in pre-drop directories at merged read).
-    * Same CAS discipline as [[commit]]. Returns the ALTER's snapshot
+    * Commits through [[retryCommit]]. Returns the ALTER's snapshot
     * id. */
   def dropColumn(spark: SparkSession, table: String, name: String): Long = {
     require(name.nonEmpty && !name.contains("\t") && !name.contains("\n"),
@@ -1197,36 +1214,22 @@ object SnapshotLake {
 
   private def evolve(spark: SparkSession, table: String, directive: String,
                      validate: (org.apache.spark.sql.types.StructType,
-                                Seq[String]) => Unit): Long = {
-    var attempts = 0
-    while (attempts < 64) {
-      val base = latest(spark, table).getOrElse(
-        throw new IllegalArgumentException(s"no committed snapshot at $table"))
+                                Seq[String]) => Unit): Long =
+    retryCommit(spark, table, "schema evolution") { latestId =>
+      val base = latestId.getOrElse(throw noSnapshot(table))
       val dirs = manifestDirs(spark, table, base)
       val dirvs = manifestDirectives(spark, table, base)
       validate(evolvedSchema(spark, dirs, dirvs), dirvs)
       // an ALTER rewrites no data, so a recorded bucket layout survives
       // verbatim (r18); renaming/dropping a BUCKET column is refused in
       // the respective entry points — the recorded names must stay live
-      val line = manifestBucket(spark, table, base).map {
-        case (n, cols, sortCols) =>
-          s"#bucket\t$n\t${cols.mkString(",")}\t${sortCols.mkString(",")}"
-      }
-      if (tryCommitManifest(spark, table, base + 1, dirs,
-          dirvs :+ directive, line))
-        return base + 1
-      attempts += 1
+      publish(spark, table, base, dirs, dirvs :+ directive,
+        manifestBucket(spark, table, base))
     }
-    throw new IllegalStateException(
-      s"schema evolution lost $attempts CAS races at $table — livelock?")
-  }
 
   /** Read the latest committed snapshot. */
-  def readLatest(spark: SparkSession, table: String): DataFrame = {
-    val id = latest(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot at $table"))
-    readAt(spark, table, id)
-  }
+  def readLatest(spark: SparkSession, table: String): DataFrame =
+    readAt(spark, table, requireLatest(spark, table))
 
   /** Incremental (CDC-ish) read: the rows ADDED between committed
     * snapshots `fromId` (exclusive) and `toId` (inclusive) — i.e. the
@@ -1285,7 +1288,8 @@ object SnapshotLake {
     *
     * The key IS the data directory name (`data/<dedupKey>`), so "was this
     * delivery committed?" = "does any retained manifest reference the
-    * dir" — checked before writing AND re-checked inside the CAS loop, so
+    * dir" — checked before writing AND re-checked at every
+    * [[retryCommit]] attempt, so
     * a zombie writer that lost a race to its own twin sees the twin's
     * commit and stops. A crashed half-write leaves `data/<dedupKey>`
     * unreferenced; the retry deletes and rewrites it (safe precisely
@@ -1311,39 +1315,14 @@ object SnapshotLake {
     // a bucket-laid-out table keeps its layout through streaming ingest
     // (r19): each micro-batch routes through the bucket function into
     // tagged files and the commit carries the line — co-located joins
-    // keep working while the stream runs
+    // keep working while the stream runs; a layout change racing the
+    // batch fails the append guard, and the replayed batch re-routes
     val bucket = latest(spark, table).flatMap(manifestBucket(spark, table, _))
-    bucket match {
-      case Some((n, cols, sortCols)) =>
-        writeDataBucketed(df, table, cols, n, sortCols, maxRecordsPerFile,
-          intoDir = Some(dir))
-      case None =>
-        df.write.option("maxRecordsPerFile", maxRecordsPerFile)
-          .mode("errorifexists").parquet(dir)
-    }
-    var attempts = 0
-    while (attempts < 64) {
-      val base = latest(spark, table)
-      val visible = base.map(manifestDirs(spark, table, _)).getOrElse(Nil)
-      val dirvs = base.map(manifestDirectives(spark, table, _)).getOrElse(Nil)
-      if (committedIds.nonEmpty) return None // twin zombie won the key
-      // layout race guard: this batch routed for the layout read above;
-      // a concurrent layout change would mix routings — refuse loudly
-      // (the stream restarts and the replayed batch re-routes)
-      val current = base.flatMap(manifestBucket(spark, table, _))
-        .map { case (n, cols, _) => (n, cols) }
-      require(current == bucket.map { case (n, cols, _) => (n, cols) },
-        s"bucket layout of $table changed while batch $dedupKey " +
-        s"committed (wrote: ${bucket.map(b => (b._1, b._2))}, now: " +
-        s"$current) — re-run the batch")
-      val id = base.getOrElse(0L) + 1
-      if (tryCommitManifest(spark, table, id, visible :+ dir, dirvs,
-          bucketLineOf(bucket)))
-        return Some(id)
-      attempts += 1
-    }
-    throw new IllegalStateException(
-      s"idempotent commit lost $attempts CAS races at $table — livelock?")
+    // `replayed` is re-checked at every attempt: a twin zombie may have
+    // won the key meanwhile
+    commitFrame(df, table, bucket, append = true, maxRecordsPerFile,
+      s"idempotent append $dedupKey", intoDir = Some(dir),
+      replayed = committedIds.nonEmpty)
   }
 
   /** `foreachBatch` sink: exactly-once streaming ingest into the snapshot
@@ -1387,11 +1366,8 @@ object SnapshotLake {
     * a time-travel read of any pre-compaction snapshot still sees the
     * original small files until [[expire]] reclaims them. */
   def compact(spark: SparkSession, table: String,
-              maxRecordsPerFile: Long = 1000000L): Option[Long] = {
-    val base = latest(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot at $table"))
-    compactFrom(spark, table, base, maxRecordsPerFile)
-  }
+              maxRecordsPerFile: Long = 1000000L): Option[Long] =
+    compactFrom(spark, table, requireLatest(spark, table), maxRecordsPerFile)
 
   /** The rewrite-then-CAS half of [[compact]], split out so the
     * concurrent-append race (a commit landing between observing `base`
@@ -1404,28 +1380,13 @@ object SnapshotLake {
     // per commit — n files per bucket per dir — and this bin-packs them
     // back to one dir without losing the co-located-join property
     val bucket = manifestBucket(spark, table, base)
-    // compact materializes directives and DROPS them — ids must hash the
-    // post-compact (current) names, not the dropped chain's origins
-    val dir = bucket match {
-      case Some((n, cols, sortCols)) =>
-        writeDataBucketed(readAt(spark, table, base), table, cols, n,
-          sortCols, maxRecordsPerFile, idDirectives = Some(Nil))
-      case None =>
-        writeData(readAt(spark, table, base), table,
-          maxRecordsPerFile, idDirectives = Some(Nil))
-    }
-    val line = bucket.map { case (n, cols, sortCols) =>
-      s"#bucket\t$n\t${cols.mkString(",")}\t${sortCols.mkString(",")}"
-    }
-    // single CAS attempt at exactly base+1 — anything else means the
-    // rewrite's input is no longer the table. Evolution directives are
-    // deliberately DROPPED: readAt already materialized them into the
-    // rewritten files, so carrying them forward would be a no-op at best
-    // and a re-rename hazard at worst.
-    if (latest(spark, table).contains(base) &&
-        tryCommitManifest(spark, table, base + 1, Seq(dir), Nil, line))
-      Some(base + 1)
-    else None
+    // Evolution directives are deliberately DROPPED: readAt materializes
+    // them into the rewritten files (whose ids therefore hash the current
+    // names), so carrying them forward would be a no-op at best and a
+    // re-rename hazard at worst.
+    val dir = writeData(readAt(spark, table, base), table, maxRecordsPerFile,
+      bucket, idDirectives = Some(Nil))
+    publish(spark, table, base, Seq(dir), Nil, bucket)
   }
 
   /** Bit-interleaved z-curve value over `cols` (each masked to `bits`
@@ -1448,7 +1409,7 @@ object SnapshotLake {
   /** Z-ORDER layout pass (r15, VERDICT r14 item 8 — the executable form
     * of SCALE.md's z-order row): rewrite the latest snapshot
     * `repartitionByRange`-partitioned and sorted on the z-curve of
-    * `zCols`, under the same single-CAS discipline as [[compact]]. What
+    * `zCols`, one [[publish]] at base + 1 like [[compact]]. What
     * it buys at 100 TB: each written file covers one contiguous z-range,
     * so its parquet min/max stats confine EVERY clustered column to a
     * bounded envelope — scans filtered on ANY of the zCols (not just a
@@ -1468,8 +1429,7 @@ object SnapshotLake {
     require(bits * zCols.length <= 63,
       s"bits*zCols = ${bits * zCols.length} exceeds the 63-bit z-value " +
       s"budget — reduce bits to ${63 / zCols.length} or fewer")
-    val base = latest(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot at $table"))
+    val base = requireLatest(spark, table)
     val df = readAt(spark, table, base)
     val withZ = df.withColumn("__z", zValue(zCols.map(col), bits))
     // explicit targetFiles pins the range-partition count (AQE coalesces
@@ -1482,27 +1442,15 @@ object SnapshotLake {
     // materializes directives like compact — current-name-hash ids
     val dir = writeData(laid, table, maxRecordsPerFile,
       idDirectives = Some(Nil))
-    if (latest(spark, table).contains(base) &&
-        tryCommitManifest(spark, table, base + 1, Seq(dir)))
-      Some(base + 1)
-    else None
+    publish(spark, table, base, Seq(dir), Nil, None)
   }
 
-  /** Row-level DELETE — copy-on-write at data-directory granularity (the
-    * Delta/Iceberg CoW shape): directories with NO matching row survive
-    * into the new manifest UNTOUCHED (their files keep identity for
-    * expire/readIncremental and cost zero rewrite I/O); only affected
-    * directories rewrite, minus the doomed rows. SQL DELETE semantics:
-    * rows where `predicate` is TRUE go; FALSE **and NULL** stay (the
-    * keep-filter is null-safe `!(p <=> true)`, not `!p` — plain negation
-    * would silently delete every NULL-predicate row).
-    *
-    * Concurrency: same optimistic single-CAS as [[compact]] — the
-    * rewrite targets exactly base+1 and returns None if any commit
-    * landed meanwhile (retrying with the stale rewrite would resurrect
-    * concurrently-appended rows' absence); the orphaned rewrite dir is
-    * invisible and GC'd by [[expire]]. Returns Some(base) untouched when
-    * nothing matches (a no-op needs no new snapshot).
+  /** Row-level DELETE — [[copyOnWrite]] at data-directory granularity.
+    * SQL DELETE semantics: rows where `predicate` is TRUE go; FALSE
+    * **and NULL** stay (the keep-filter is null-safe `!(p <=> true)`,
+    * not `!p` — plain negation would silently delete every
+    * NULL-predicate row). Returns Some(base) untouched when nothing
+    * matches, None on a lost race.
     *
     * At 100 TB: the per-directory existence probes are limit-1 scans
     * with the predicate pushed to parquet stats (row groups that can't
@@ -1510,11 +1458,9 @@ object SnapshotLake {
     * column prunes most of the table before any rewrite. */
   def delete(spark: SparkSession, table: String,
              predicate: org.apache.spark.sql.Column,
-             maxRecordsPerFile: Long = 1000000L): Option[Long] = {
-    val base = latest(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot at $table"))
-    deleteFrom(spark, table, base, predicate, maxRecordsPerFile)
-  }
+             maxRecordsPerFile: Long = 1000000L): Option[Long] =
+    deleteFrom(spark, table, requireLatest(spark, table), predicate,
+      maxRecordsPerFile)
 
   /** Read `dirs` aligned to the snapshot's full merged schema: columns a
     * pre-evolution directory lacks come back as typed NULLs in merged-
@@ -1544,65 +1490,85 @@ object SnapshotLake {
                             directives: Seq[String]) =
     applyDirectives(readMergedRaw(spark, dirs), directives).schema
 
-  /** The prune/rewrite/CAS half of [[delete]], base-parameterized so the
-    * concurrent-commit race is testable deterministically. */
-  private[graft] def deleteFrom(spark: SparkSession, table: String,
-                                base: Long,
-                                predicate: org.apache.spark.sql.Column,
-                                maxRecordsPerFile: Long): Option[Long] = {
+  /** What one copy-on-write mutation supplies: `probe` keeps a dir's
+    * matching rows (any row marks the dir affected), `rewrite` maps the
+    * affected dirs' rows to what survives, `insert` lands one more dir
+    * (merge's source) and `addDirectives` extend the chain in the same
+    * commit. */
+  private case class Rewrite(probe: DataFrame => DataFrame,
+                             rewrite: DataFrame => DataFrame,
+                             insert: Option[DataFrame] = None,
+                             addDirectives: Seq[String] = Nil)
+
+  /** The one copy-on-write rewrite (the Delta/Iceberg CoW shape at
+    * data-directory granularity) behind [[delete]], [[update]], [[merge]]
+    * and [[deleteMatching]]. It resolves dirs, directives, evolved schema
+    * and bucket layout at `base`, lets `plan` validate against them and
+    * name the [[Rewrite]], probes each dir, carries the untouched dirs
+    * into the new manifest by identity (their files keep identity for
+    * expire/readIncremental and cost zero rewrite I/O), rewrites the
+    * affected ones into one dir routed through the SAME bucket function
+    * (r19: the co-located-join property holds across mutations) and
+    * publishes at exactly base + 1. Some(base) when nothing is affected
+    * and nothing inserts; None on a lost race — the orphaned rewrite dir
+    * is invisible and GC'd by [[expire]]. */
+  private def copyOnWrite(spark: SparkSession, table: String, base: Long,
+                          maxRecordsPerFile: Long)
+                         (plan: (org.apache.spark.sql.types.StructType,
+                                 Seq[String]) => Rewrite): Option[Long] = {
     val dirs = manifestDirs(spark, table, base)
     val dirvs = manifestDirectives(spark, table, base)
     val full = evolvedSchema(spark, dirs, dirvs)
-    // a recorded bucket layout survives the mutation (r19): rewritten
-    // rows route through the SAME bucket function into tagged files, so
-    // the co-located-join property holds across DELETE/UPDATE/MERGE
     val bucket = manifestBucket(spark, table, base)
-    val affected = dirs.filter { d =>
-      !readAligned(spark, Seq(d), dirvs, full).filter(predicate).isEmpty
-    }
-    if (affected.isEmpty) return Some(base)
+    val m = plan(full, dirvs)
+    val affected = dirs.filter(d =>
+      !m.probe(readAligned(spark, Seq(d), dirvs, full)).isEmpty)
+    if (affected.isEmpty && m.insert.isEmpty) return Some(base)
+    def write(df: DataFrame) =
+      writeData(df, table, maxRecordsPerFile, bucket)
     val kept = dirs.diff(affected)
-    val remaining = readAligned(spark, affected, dirvs, full)
-      .filter(!(predicate <=> lit(true)))
-    // an empty rewrite writes no part files and would break schema
-    // inference at read — materialize one schema-bearing empty file only
-    // when it is the ONLY directory left in the table
-    val newDirs =
-      if (!remaining.isEmpty)
-        kept :+ writeDataLayout(remaining, table, bucket, maxRecordsPerFile)
-      else if (kept.nonEmpty) kept
-      else Seq(writeDataLayout(remaining.repartition(1), table, bucket,
-        maxRecordsPerFile))
-    if (latest(spark, table).contains(base) &&
-        tryCommitManifest(spark, table, base + 1, newDirs, dirvs,
-          bucketLineOf(bucket)))
-      Some(base + 1)
-    else None
+    val rewritten =
+      if (affected.isEmpty) None
+      else {
+        val rows = m.rewrite(readAligned(spark, affected, dirvs, full))
+        // an empty rewrite writes no part files and would break schema
+        // inference at read — materialize one schema-bearing empty file
+        // only when it is the ONLY directory left in the table
+        if (!rows.isEmpty) Some(write(rows))
+        else if (kept.isEmpty && m.insert.isEmpty)
+          Some(write(rows.repartition(1)))
+        else None
+      }
+    publish(spark, table, base, kept ++ rewritten ++ m.insert.map(write),
+      dirvs ++ m.addDirectives, bucket)
   }
 
+  /** The base-parameterized half of [[delete]], so the concurrent-commit
+    * race is testable deterministically. */
+  private[graft] def deleteFrom(spark: SparkSession, table: String,
+                                base: Long,
+                                predicate: org.apache.spark.sql.Column,
+                                maxRecordsPerFile: Long): Option[Long] =
+    copyOnWrite(spark, table, base, maxRecordsPerFile)((_, _) =>
+      Rewrite(_.filter(predicate), _.filter(!(predicate <=> lit(true)))))
+
   /** Row-level UPDATE — the third CoW mutation (r13 verdict item 6),
-    * same directory-granular copy-on-write as [[delete]]: directories
-    * with NO matching row survive into the new manifest untouched; each
-    * affected directory rewrites with the SET expressions applied to the
-    * predicate-TRUE rows only (FALSE **and NULL** rows pass through
-    * unchanged — SQL UPDATE ... WHERE semantics, the null-safe
-    * `p <=> true` gate [[delete]] documents). SET values cast to the
-    * column's existing type; only existing columns may be set (schema
-    * evolution is [[commit]]'s job, not UPDATE's).
-    *
-    * Concurrency: identical single-CAS discipline — targets exactly
-    * base+1, returns None on a lost race (LakeSinkSpec races two live
-    * writers and asserts exactly one wins), orphaned rewrite dirs are
-    * invisible and GC'd by [[expire]]. Returns Some(base) untouched when
-    * nothing matches. */
+    * [[copyOnWrite]] like [[delete]]: each affected directory rewrites
+    * with the SET expressions applied to the predicate-TRUE rows only
+    * (FALSE **and NULL** rows pass through unchanged — SQL UPDATE ...
+    * WHERE semantics, the null-safe `p <=> true` gate [[delete]]
+    * documents). SET values cast to the column's existing type; only
+    * existing columns may be set (schema evolution is [[commit]]'s job,
+    * not UPDATE's); a SET that touches a bucket column re-routes the
+    * updated rows to their new buckets. None on a lost race
+    * (LakeSinkSpec races two live writers and asserts exactly one wins);
+    * Some(base) untouched when nothing matches. */
   def update(spark: SparkSession, table: String,
              predicate: org.apache.spark.sql.Column,
              set: Map[String, org.apache.spark.sql.Column],
-             maxRecordsPerFile: Long = 1000000L): Option[Long] = {
-    val base = latest(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot at $table"))
-    updateFrom(spark, table, base, predicate, set, maxRecordsPerFile)
-  }
+             maxRecordsPerFile: Long = 1000000L): Option[Long] =
+    updateFrom(spark, table, requireLatest(spark, table), predicate, set,
+      maxRecordsPerFile)
 
   private[graft] def updateFrom(spark: SparkSession, table: String,
                                 base: Long,
@@ -1610,58 +1576,37 @@ object SnapshotLake {
                                 set: Map[String, org.apache.spark.sql.Column],
                                 maxRecordsPerFile: Long): Option[Long] = {
     require(set.nonEmpty, "UPDATE needs at least one SET column")
-    val dirs = manifestDirs(spark, table, base)
-    val dirvs = manifestDirectives(spark, table, base)
-    val full = evolvedSchema(spark, dirs, dirvs)
-    val missing = set.keySet.diff(full.fieldNames.toSet)
-    require(missing.isEmpty,
-      s"UPDATE may only set existing columns; unknown: $missing")
-    val bucket = manifestBucket(spark, table, base)
-    val affected = dirs.filter { d =>
-      !readAligned(spark, Seq(d), dirvs, full).filter(predicate).isEmpty
-    }
-    if (affected.isEmpty) return Some(base)
-    val kept = dirs.diff(affected)
-    val hit = predicate <=> lit(true)
-    val rewritten = readAligned(spark, affected, dirvs, full)
-      .select(full.fields.toSeq.map { f =>
+    copyOnWrite(spark, table, base, maxRecordsPerFile) { (full, _) =>
+      val missing = set.keySet.diff(full.fieldNames.toSet)
+      require(missing.isEmpty,
+        s"UPDATE may only set existing columns; unknown: $missing")
+      val hit = predicate <=> lit(true)
+      Rewrite(_.filter(predicate), _.select(full.fields.toSeq.map { f =>
         set.get(f.name) match {
           case Some(e) =>
             when(hit, e.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
           case None => col(f.name)
         }
-      }: _*)
-    // layout survives (r19); a SET that touches a bucket column simply
-    // re-routes the updated rows to their new correct buckets
-    val newDirs = kept :+ writeDataLayout(rewritten, table, bucket,
-      maxRecordsPerFile)
-    if (latest(spark, table).contains(base) &&
-        tryCommitManifest(spark, table, base + 1, newDirs, dirvs,
-          bucketLineOf(bucket)))
-      Some(base + 1)
-    else None
+      }: _*))
+    }
   }
 
   /** Row-level MERGE (SCD-1 upsert as a LAKE MUTATION — q_upsert is the
     * query shape, this is the table write): every target row whose
     * `keys` match a source row is REPLACED by that source row; unmatched
-    * source rows INSERT; unmatched target rows keep. Copy-on-write at
-    * directory granularity like [[delete]]: a directory with no key hit
-    * (probed via a broadcast semi join against the source keys — the
-    * change set is the small side by construction) survives untouched;
-    * affected directories rewrite via an anti join on `keys`; the source
-    * lands as one new directory. `source` must be key-unique and
-    * schema-compatible with the table (additive columns merge at read).
-    *
-    * Same single-CAS discipline as [[delete]]/[[compact]]: targets
-    * exactly base+1, None on a lost race, orphans GC'd by [[expire]]. */
+    * source rows INSERT; unmatched target rows keep. [[copyOnWrite]]
+    * like [[delete]]: a directory with no key hit (probed via a
+    * broadcast semi join against the source keys — the change set is the
+    * small side by construction) survives untouched; affected
+    * directories rewrite via an anti join on `keys`; the source lands as
+    * one new directory, bucket-routed like every other. `source` must be
+    * key-unique and schema-compatible with the table (additive columns
+    * merge at read). None on a lost race. */
   def merge(spark: SparkSession, table: String, source: DataFrame,
             keys: Seq[String],
-            maxRecordsPerFile: Long = 1000000L): Option[Long] = {
-    val base = latest(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot at $table"))
-    mergeFrom(spark, table, base, source, keys, maxRecordsPerFile)
-  }
+            maxRecordsPerFile: Long = 1000000L): Option[Long] =
+    mergeFrom(spark, table, requireLatest(spark, table), source, keys,
+      maxRecordsPerFile)
 
   private[graft] def mergeFrom(spark: SparkSession, table: String,
                                base: Long, source: DataFrame,
@@ -1671,84 +1616,57 @@ object SnapshotLake {
     val src = source.localCheckpoint(false) // one evaluation feeds probes, anti join, and the insert write
     if (src.isEmpty) return Some(base) // empty change set: no-op, no snapshot
     val srcKeys = broadcast(src.select(keys.map(col): _*).distinct())
-    val dirs = manifestDirs(spark, table, base)
-    val dirvs = manifestDirectives(spark, table, base)
-    val full = evolvedSchema(spark, dirs, dirvs)
-    val bucket = manifestBucket(spark, table, base)
-    // schema evolution at MERGE (r19, the Delta mergeSchema shape):
-    // a shared column whose type conflicts refuses loudly UP FRONT
-    // (pre-r19 it surfaced as a parquet footer-merge error at the next
-    // read — after the bad dir had landed); a source-only column
-    // auto-ALTERs — an add directive recorded IN THE SAME commit, so
-    // old directories serve it as a typed NULL and time travel before
-    // the merge stays byte-stable
-    val fullByName = full.fields.map(f => f.name -> f).toMap
-    val conflicts = src.schema.fields.flatMap(sf =>
-      fullByName.get(sf.name).collect {
-        case tf if !org.apache.spark.sql.types.DataType
-            .equalsIgnoreNullability(tf.dataType, sf.dataType) =>
-          s"${sf.name}: table ${tf.dataType.sql} vs source " +
-            s"${sf.dataType.sql}"
-      })
-    require(conflicts.isEmpty,
-      s"MERGE source type conflict at $table — ${conflicts.mkString("; ")}" +
-      "; cast the source column or evolve the table explicitly")
-    val extras = src.schema.fields.filterNot(f => fullByName.contains(f.name))
-    val retiredExtras = droppedNames(dirvs)
-      .intersect(extras.map(_.name).toSet)
-    require(retiredExtras.isEmpty,
-      s"MERGE source carries dropped column(s) $retiredExtras at $table " +
-      "— reads mask them out; compact the table before reusing the name")
-    require(extras.forall(f =>
-        !f.name.contains("\t") && !f.name.contains("\n")),
-      s"evolved column names must be tab/newline-free: " +
-      extras.map(_.name).toSeq)
-    val addDirvs = extras.map(f =>
-      s"#schema\tadd\t${f.name}\t${f.dataType.sql}").toSeq
-    val affected = dirs.filter { d =>
-      !readAligned(spark, Seq(d), dirvs, full)
-        .join(srcKeys, keys, "left_semi").isEmpty
+    copyOnWrite(spark, table, base, maxRecordsPerFile) { (full, dirvs) =>
+      // schema evolution at MERGE (r19, the Delta mergeSchema shape):
+      // a shared column whose type conflicts refuses loudly UP FRONT
+      // (pre-r19 it surfaced as a parquet footer-merge error at the next
+      // read — after the bad dir had landed); a source-only column
+      // auto-ALTERs — an add directive recorded IN THE SAME commit, so
+      // old directories serve it as a typed NULL and time travel before
+      // the merge stays byte-stable
+      val fullByName = full.fields.map(f => f.name -> f).toMap
+      val conflicts = src.schema.fields.flatMap(sf =>
+        fullByName.get(sf.name).collect {
+          case tf if !org.apache.spark.sql.types.DataType
+              .equalsIgnoreNullability(tf.dataType, sf.dataType) =>
+            s"${sf.name}: table ${tf.dataType.sql} vs source " +
+              s"${sf.dataType.sql}"
+        })
+      require(conflicts.isEmpty,
+        s"MERGE source type conflict at $table — " +
+        conflicts.mkString("; ") +
+        "; cast the source column or evolve the table explicitly")
+      val extras = src.schema.fields.filterNot(f => fullByName.contains(f.name))
+      val retiredExtras = droppedNames(dirvs)
+        .intersect(extras.map(_.name).toSet)
+      require(retiredExtras.isEmpty,
+        s"MERGE source carries dropped column(s) $retiredExtras at $table " +
+        "— reads mask them out; compact the table before reusing the name")
+      require(extras.forall(f =>
+          !f.name.contains("\t") && !f.name.contains("\n")),
+        s"evolved column names must be tab/newline-free: " +
+        extras.map(_.name).toSeq)
+      Rewrite(_.join(srcKeys, keys, "left_semi"),
+        _.join(srcKeys, keys, "left_anti"), insert = Some(src),
+        addDirectives = extras.map(f =>
+          s"#schema\tadd\t${f.name}\t${f.dataType.sql}").toSeq)
     }
-    val kept = dirs.diff(affected)
-    val rewrittenOpt =
-      if (affected.isEmpty) None
-      else {
-        val surviving = readAligned(spark, affected, dirvs, full)
-          .join(srcKeys, keys, "left_anti")
-        if (surviving.isEmpty) None
-        else Some(writeDataLayout(surviving, table, bucket,
-          maxRecordsPerFile))
-      }
-    // the source lands bucket-routed too (r19) — the layout invariant
-    // is all-dirs-tagged, inserts included (source carries the bucket
-    // columns by the schema-compatibility contract; additive extras
-    // still merge at read)
-    val newDirs = kept ++ rewrittenOpt :+ writeDataLayout(src, table,
-      bucket, maxRecordsPerFile)
-    if (latest(spark, table).contains(base) &&
-        tryCommitManifest(spark, table, base + 1, newDirs,
-          dirvs ++ addDirvs, bucketLineOf(bucket)))
-      Some(base + 1)
-    else None
   }
 
   /** Keyed row DELETE — [[merge]] without the insert half (r18): every
     * target row whose `keys` match a row of `doomed` is removed, at the
     * same directory granularity (broadcast semi-join probe per dir — the
-    * doomed set is the small side by construction; unaffected dirs
-    * survive into the new manifest untouched; affected ones rewrite via
-    * an anti join). The API [[delete]] cannot give when the doomed set
-    * is a FRAME rather than a predicate (an `isin` over a collected list
-    * stops being a plan at scale). Same single-CAS discipline: targets
-    * exactly base+1, None on a lost race (a racing append is never
-    * dropped), Some(base) untouched when nothing matches. */
+    * doomed set is the small side by construction; affected dirs rewrite
+    * via an anti join). The API [[delete]] cannot give when the doomed
+    * set is a FRAME rather than a predicate (an `isin` over a collected
+    * list stops being a plan at scale). None on a lost race (a racing
+    * append is never dropped), Some(base) untouched when nothing
+    * matches. */
   def deleteMatching(spark: SparkSession, table: String, doomed: DataFrame,
                      keys: Seq[String],
-                     maxRecordsPerFile: Long = 1000000L): Option[Long] = {
-    val base = latest(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot at $table"))
-    deleteMatchingFrom(spark, table, base, doomed, keys, maxRecordsPerFile)
-  }
+                     maxRecordsPerFile: Long = 1000000L): Option[Long] =
+    deleteMatchingFrom(spark, table, requireLatest(spark, table), doomed,
+      keys, maxRecordsPerFile)
 
   private[graft] def deleteMatchingFrom(spark: SparkSession, table: String,
                                         base: Long, doomed: DataFrame,
@@ -1760,31 +1678,40 @@ object SnapshotLake {
       .localCheckpoint(false) // one evaluation feeds every dir probe
     if (k.isEmpty) return Some(base)
     val bk = broadcast(k)
-    val dirs = manifestDirs(spark, table, base)
-    val dirvs = manifestDirectives(spark, table, base)
-    val full = evolvedSchema(spark, dirs, dirvs)
-    val bucket = manifestBucket(spark, table, base)
-    val affected = dirs.filter { d =>
-      !readAligned(spark, Seq(d), dirvs, full)
-        .join(bk, keys, "left_semi").isEmpty
-    }
-    if (affected.isEmpty) return Some(base)
-    val kept = dirs.diff(affected)
-    val surviving = readAligned(spark, affected, dirvs, full)
-      .join(bk, keys, "left_anti")
-    // same empty-rewrite discipline as [[deleteFrom]]: keep the table
-    // schema-readable even when the delete empties it
-    val newDirs =
-      if (!surviving.isEmpty)
-        kept :+ writeDataLayout(surviving, table, bucket, maxRecordsPerFile)
-      else if (kept.nonEmpty) kept
-      else Seq(writeDataLayout(surviving.repartition(1), table, bucket,
-        maxRecordsPerFile))
-    if (latest(spark, table).contains(base) &&
-        tryCommitManifest(spark, table, base + 1, newDirs, dirvs,
-          bucketLineOf(bucket)))
-      Some(base + 1)
-    else None
+    copyOnWrite(spark, table, base, maxRecordsPerFile)((_, _) =>
+      Rewrite(_.join(bk, keys, "left_semi"), _.join(bk, keys, "left_anti")))
+  }
+
+  /** ROLLBACK (r19): restore the table head to the state of an earlier
+    * committed snapshot — AS A NEW COMMIT, never by deleting history
+    * (the Iceberg rollback shape). The new manifest re-references the
+    * target's data directories, evolution directives and `#bucket`
+    * layout line verbatim, so reads after the rollback ≡
+    * `readAt(target)` (bucket co-location included) while every
+    * intermediate snapshot stays time-travel-readable and the bad
+    * head remains inspectable. Shared dirs inherit their stats lines
+    * byte-for-byte; dirs the current head no longer references get
+    * footer-recomputed lines (immutable dirs — identical values).
+    * One [[publish]] at base + 1: None on a lost race. Rolling back to
+    * the current head is a recorded no-op (returns the head, commits
+    * nothing). The target must still be a committed snapshot — expired
+    * snapshots refuse loudly. */
+  def rollback(spark: SparkSession, table: String, to: Long)
+      : Option[Long] =
+    rollbackFrom(spark, table, requireLatest(spark, table), to)
+
+  /** The check-then-CAS half of [[rollback]], split out (like
+    * [[compactFrom]]) so the concurrent-commit race is testable
+    * deterministically. */
+  private[graft] def rollbackFrom(spark: SparkSession, table: String,
+                                  base: Long, to: Long): Option[Long] = {
+    require(snapshots(spark, table).contains(to),
+      s"no committed snapshot $to at $table (expired or never " +
+      "committed) — rollback needs a live manifest to restore")
+    if (to == base) Some(base)
+    else publish(spark, table, base, manifestDirs(spark, table, to),
+      manifestDirectives(spark, table, to), manifestBucket(spark, table, to),
+      inheritStatsFrom = Some((table, to)))
   }
 
   /** VACUUM: retain only the last `keepLast` snapshots, then delete every
@@ -1798,46 +1725,6 @@ object SnapshotLake {
     * every table format documents: a reader that planned a time-travel
     * scan of an expired snapshot before the expire ran can lose files
     * mid-read — retention must exceed the longest running query. */
-  /** ROLLBACK (r19): restore the table head to the state of an earlier
-    * committed snapshot — AS A NEW COMMIT, never by deleting history
-    * (the Iceberg rollback shape). The new manifest re-references the
-    * target's data directories, evolution directives and `#bucket`
-    * layout line verbatim, so reads after the rollback ≡
-    * `readAt(target)` (bucket co-location included) while every
-    * intermediate snapshot stays time-travel-readable and the bad
-    * head remains inspectable. Shared dirs inherit their stats lines
-    * byte-for-byte; dirs the current head no longer references get
-    * footer-recomputed lines (immutable dirs — identical values).
-    * Same single-CAS-at-base+1 discipline as [[compact]]: None on a
-    * lost race. Rolling back to the current head is a recorded no-op
-    * (returns the head, commits nothing). The target must still be a
-    * committed snapshot — expired snapshots refuse loudly. */
-  def rollback(spark: SparkSession, table: String, to: Long)
-      : Option[Long] = {
-    val base = latest(spark, table).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot at $table"))
-    rollbackFrom(spark, table, base, to)
-  }
-
-  /** The check-then-CAS half of [[rollback]], split out (like
-    * [[compactFrom]]) so the concurrent-commit race is testable
-    * deterministically. */
-  private[graft] def rollbackFrom(spark: SparkSession, table: String,
-                                  base: Long, to: Long): Option[Long] = {
-    require(snapshots(spark, table).contains(to),
-      s"no committed snapshot $to at $table (expired or never " +
-      "committed) — rollback needs a live manifest to restore")
-    if (to == base) return Some(base)
-    val dirs = manifestDirs(spark, table, to)
-    val dirvs = manifestDirectives(spark, table, to)
-    val line = bucketLineOf(manifestBucket(spark, table, to))
-    if (latest(spark, table).contains(base) &&
-        tryCommitManifest(spark, table, base + 1, dirs, dirvs, line,
-          inheritStatsFrom = Some((table, to))))
-      Some(base + 1)
-    else None
-  }
-
   def expire(spark: SparkSession, table: String, keepLast: Int): Unit = {
     require(keepLast >= 1, "must retain at least the latest snapshot")
     val fs = fsFor(spark, table)

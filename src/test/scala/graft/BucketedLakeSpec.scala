@@ -227,6 +227,11 @@ class BucketedLakeSpec extends AnyFunSuite {
     SnapshotLake.renameColumn(s, t, "note", "memo")
     assert(SnapshotLake.manifestBucket(s, t,
       SnapshotLake.latest(s, t).get).isDefined)
+    // a matching bucketed append still refuses a dropped column
+    SnapshotLake.dropColumn(s, t, "x")
+    val exX = intercept[IllegalArgumentException](
+      SnapshotLake.commitBucketed(frame(5, "d"), t, Seq("k"), 4))
+    assert(exX.getMessage.contains("dropped column"))
   }
 
   test("bucket routing matches Spark's bucket function file by file") {

@@ -84,18 +84,21 @@ class GraftLakeProviderSpec extends AnyFunSuite {
     import s.implicits._
     val table = tmpDir("glake-rename")
     SnapshotLake.commit(Seq((1L, "a")).toDF("k", "v"), table)
+    // a stream-ingested dir (the idempotent commit) carries ids too
+    SnapshotLake.commitIdempotent(Seq((5L, "e")).toDF("k", "v"), table,
+      "batch-0")
     SnapshotLake.renameColumn(s, table, "v", "val")
     // pre-rename history reads through the NEW logical name: the r16
     // refusal is lifted by column mapping — the requested schema carries
-    // the origin-hash field ids the pre-rename file was written with
+    // the origin-hash field ids the pre-rename files were written with
     val native = s.read.format("graftlake").load(table)
     assert(native.schema.fieldNames.toSeq == Seq("k", "val"))
     assert(rows(native) == rows(SnapshotLake.readLatest(s, table)))
-    assert(rows(native) == Set(Vector(1L, "a")))
+    assert(rows(native) == Set(Vector(1L, "a"), Vector(5L, "e")))
     // a post-rename append writes the new physical name; both read
     SnapshotLake.commit(Seq((2L, "b")).toDF("k", "val"), table)
     assert(rows(s.read.format("graftlake").load(table)) ==
-      Set(Vector(1L, "a"), Vector(2L, "b")))
+      Set(Vector(1L, "a"), Vector(5L, "e"), Vector(2L, "b")))
     // chained rename still maps (origin resolves through the chain)
     SnapshotLake.renameColumn(s, table, "val", "label")
     assert(rows(s.read.format("graftlake").load(table)) ==

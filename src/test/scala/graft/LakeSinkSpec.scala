@@ -545,6 +545,13 @@ class LakeSinkSpec extends AnyFunSuite {
     val ex = intercept[IllegalArgumentException](SnapshotLake.commit(
       Seq((3L, "c", 1.0)).toDF("k", "v", "score"), table, append = true))
     assert(ex.getMessage.contains("dropped column"))
+    // ... and so does an idempotent (stream) append
+    val exStream = intercept[IllegalArgumentException](
+      SnapshotLake.commitIdempotent(
+        Seq((3L, "c", 1.0)).toDF("k", "v", "score"), table, "batch-7"))
+    assert(exStream.getMessage.contains("dropped column"))
+    assert(SnapshotLake.latest(s, table).contains(alterId),
+      "a refused append must not commit")
     // the name stays reserved until compact materializes the removal
     intercept[IllegalArgumentException](
       SnapshotLake.addColumn(s, table, "score", "double"))

@@ -359,6 +359,22 @@ class PlanSpec extends AnyFunSuite {
       s"q_seq_pack no longer runs the linear mapPartitions pass:\n$s")
   }
 
+  test("q_batch_assignment streams each producer: Spark sorts (user_id, tsMicros, event_id) under the group map") {
+    // the per-producer scan must not buffer a producer's whole history in
+    // a task's heap (`it.toSeq.sortBy`): the order comes from a spillable
+    // SortExec on the grouping key plus the scan order, directly under
+    // the MapGroups node
+    val plan = finalPlan("q_batch_assignment").split("== Initial Plan ==")(0)
+    val lines = plan.linesIterator.toSeq
+    val at = lines.indexWhere(_.contains("MapGroups"))
+    assert(at >= 0, s"q_batch_assignment lost its MapGroups node:\n$plan")
+    val sort = lines.drop(at + 1).find(_.contains("Sort ["))
+    assert(sort.exists(("Sort \\[user_id#\\d+L? ASC NULLS FIRST, " +
+        "tsMicros#\\d+L? ASC NULLS FIRST, event_id#\\d+L? ASC NULLS FIRST\\]")
+        .r.findFirstIn(_).isDefined),
+      s"no (user_id, tsMicros, event_id) sort under MapGroups:\n$plan")
+  }
+
   test("q_ann_ivf nested-loop joins only against the broadcast centroids") {
     // the 16-row centroid cross joins are deliberate broadcast BNLJs; the
     // corpus-side list lookup and top-k must stay equi-joins
