@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2.B "Aggregation": hash agg, distinct agg, sketches,
@@ -282,7 +281,7 @@ object Aggregates extends QueryPack {
     // Median + deterministic mode per group. Spark's built-in mode() is
     // explicitly non-deterministic on ties, so the mode here is the
     // pinned-tiebreak form (highest count, then smallest value) computed
-    // as a groupBy + windowed argmax — the same plan both engines run.
+    // as a groupBy + argmax ([[quantityMode]]).
     // Median interpolates (quantile_cont semantics in both engines);
     // quantities are integral doubles so the midpoint is exact.
     // SCALE SWAP (SCALE.md "median / percentiles"): exact median() buffers
@@ -291,21 +290,13 @@ object Aggregates extends QueryPack {
     // approx_percentile(col, 0.5) (t-digest: mergeable partials, bounded
     // memory) — same swap q_agg_percentiles documents. The exact form here
     // is the oracle-parity fixture path. The mode half is two-phase
-    // mergeable (groupBy-count + windowed argmax) and scale-safe as is.
+    // mergeable (groupBy-count + argmax aggregate) and scale-safe as is.
     "q_median_mode" -> { (s, d) =>
       val li = Tables.lineitem(s, d)
       val med = li.groupBy(col("l_returnflag"))
         .agg(round(median(col("l_quantity")), 4).as("med_qty"),
              count(lit(1)).as("n"))
-      val w = Window.partitionBy(col("l_returnflag"))
-        .orderBy(col("cnt").desc, col("l_quantity"))
-      val mode = li.groupBy(col("l_returnflag"), col("l_quantity"))
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("l_returnflag"), col("l_quantity").as("mode_qty"),
-                col("cnt").as("mode_n"))
-      med.join(mode, Seq("l_returnflag"))
+      med.join(quantityMode(li), Seq("l_returnflag"))
         .orderBy(col("l_returnflag"))
     },
 
@@ -426,26 +417,28 @@ object Aggregates extends QueryPack {
       .orderBy(col("l_returnflag"))
   }
 
+  /** The mode of l_quantity per return flag, shared by q_median_mode and
+    * [[medianModeApprox]]: highest count, then smallest value. */
+  private def quantityMode(li: DataFrame): DataFrame =
+    QueryPack.argmaxBy(
+        li.groupBy(col("l_returnflag"), col("l_quantity"))
+          .agg(count(lit(1)).as("cnt")),
+        Seq("l_returnflag"), Seq(col("cnt").desc, col("l_quantity")),
+        Seq("l_quantity", "cnt"))
+      .select(col("l_returnflag"), col("l_quantity").as("mode_qty"),
+              col("cnt").as("mode_n"))
+
   /** The IMPLEMENTED corpus-scale swap for q_median_mode: the exact
-    * `median` becomes an `approx_percentile(…, 0.5)` sketch, and the mode
-    * argmax drops its row_number window for a fully mergeable
-    * `max(struct(cnt, -value))` — highest count then smallest value, the
-    * same pinned tie-break, with no Window anywhere in the plan. */
+    * `median` becomes an `approx_percentile(…, 0.5)` sketch; the mode is
+    * the key's own mergeable argmax, so no Window appears anywhere in the
+    * plan. */
   def medianModeApprox(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d)
     val med = li.groupBy(col("l_returnflag"))
       .agg(round(expr("approx_percentile(l_quantity, 0.5D, 100000)"), 4)
              .as("med_qty"),
            count(lit(1)).as("n"))
-    val mode = li.groupBy(col("l_returnflag"), col("l_quantity"))
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy(col("l_returnflag"))
-      .agg(max(struct(col("cnt"), (-col("l_quantity")).as("neg_qty")))
-             .as("top"))
-      .select(col("l_returnflag"),
-              (-col("top.neg_qty")).as("mode_qty"),
-              col("top.cnt").as("mode_n"))
-    med.join(mode, Seq("l_returnflag"))
+    med.join(quantityMode(li), Seq("l_returnflag"))
       .orderBy(col("l_returnflag"))
   }
 

@@ -176,10 +176,8 @@ object Analytics extends QueryPack {
         .crossJoin(broadcast(n))
         .withColumn("tfidf", round((col("tf") / col("dl")) *
           log(col("n_docs") / col("df").cast("double")), 4))
-      val rankW = Window.partitionBy(col("doc_id"))
-        .orderBy(col("tfidf").desc, col("word"))
-      scored.withColumn("rn", row_number().over(rankW))
-        .filter(col("rn") <= 3)
+      QueryPack.topK(scored, Seq("doc_id"),
+          Seq(col("tfidf").desc, col("word")), 3)
         .select(col("doc_id"), col("rn"), col("word"), col("tfidf"))
         .orderBy(col("doc_id"), col("rn"))
     },
@@ -661,7 +659,7 @@ object Analytics extends QueryPack {
     "q_changepoint" -> { (s, d) =>
       val wOrd = Window.partitionBy(col("event_type")).orderBy(col("day"))
       val wAll = Window.partitionBy(col("event_type"))
-      Tables.events(s, d)
+      val cusum = Tables.events(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(sum(dec(col("value"))).as("x"))
         .withColumn("i", row_number().over(wOrd))
@@ -669,10 +667,8 @@ object Analytics extends QueryPack {
         .withColumn("n", count(lit(1)).over(wAll))
         .withColumn("tot", sum(col("x")).over(wAll))
         .withColumn("sdev", col("n") * col("cx") - col("i") * col("tot"))
-        .withColumn("rk", row_number().over(Window
-          .partitionBy(col("event_type"))
-          .orderBy(abs(col("sdev")).desc, col("day"))))
-        .filter(col("rk") === 1)
+      QueryPack.argmaxBy(cusum, Seq("event_type"),
+          Seq(abs(col("sdev")).desc, col("day")), Seq("day", "i", "sdev", "n"))
         .select(col("event_type"), col("day").as("cp_day"),
           col("i").cast("int").as("day_idx"),
           round(col("sdev").cast("double") / col("n").cast("double"), 4)

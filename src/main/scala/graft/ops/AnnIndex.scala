@@ -45,6 +45,13 @@ object AnnIndex {
   private[ops] def dotD(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (p, q) => p + q)
 
+  /** Each probe's top-`k` rows of a (probe_id, vec_id, cos) frame, ranked
+    * in `rn` by cosine DESC with ties to the smaller vec_id: the one serve
+    * order of every similarity key, the index serves and the IVF serve. */
+  def cosTopK(scored: DataFrame, k: Int): DataFrame =
+    QueryPack.topK(scored, Seq("probe_id"),
+      Seq(col("cos").desc, col("vec_id")), k)
+
   /** Per-vector ordered centroid preferences, computed IN-ROW: one
     * broadcast of the (sorted) centroid array (norms precomputed), one
     * `transform` building (-cos, cid) structs, one `array_sort` — no
@@ -632,24 +639,20 @@ object AnnIndex {
               (size(col("pe")) / m).cast("int")),
             carr, (x, y) => x * y), lit(0.0), (a, b) => a + b))))
       .drop("cbs")
-    val shortlist = probes.join(codes, Seq("cid"))
+    val scoredAdc = probes.join(codes, Seq("cid"))
       .filter(col("vec_id") =!= col("probe_id"))
       .withColumn("adc",
         (col("qc") + aggregate(zip_with(col("lut"), col("codes"),
           (l, c) => element_at(l, c + 1)), lit(0.0), (a, b) => a + b)) /
         (col("pnrm") * col("nrm")))
-      .withColumn("arn", row_number().over(Window.partitionBy(col("probe_id"))
-        .orderBy(col("adc").desc, col("vec_id"))))
-      .filter(col("arn") <= k * refine)
+    val shortlist = QueryPack.topK(scoredAdc, Seq("probe_id"),
+        Seq(col("adc").desc, col("vec_id")), k * refine, "arn")
       .select(col("probe_id"), col("pe"), col("pnrm"), col("cid"),
         col("vec_id"))
-    shortlist.join(lists, Seq("cid", "vec_id"))
+    cosTopK(shortlist.join(lists, Seq("cid", "vec_id"))
       .select(col("probe_id"), col("vec_id"),
         round(dotD(col("pe"), col("vec")) /
-          (col("pnrm") * col("nrm")), 4).as("cos"))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("probe_id"))
-        .orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rn") <= k)
+          (col("pnrm") * col("nrm")), 4).as("cos")), k)
       .select(col("probe_id"), col("rn"), col("vec_id"), col("cos"))
   }
 
@@ -675,14 +678,11 @@ object AnnIndex {
         posexplode(slice(col("clist"), 1, nProbe)).as(Seq("pp", "dc")))
       .select(col("probe_id"), col("pe"), col("pnrm"),
         col("dc").getField("cid").as("cid"))
-    plists.join(lists, Seq("cid"))
+    cosTopK(plists.join(lists, Seq("cid"))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
         round(dotD(col("pe"), col("vec")) /
-          (col("pnrm") * col("nrm")), 4).as("cos"))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("probe_id"))
-        .orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rn") <= k)
+          (col("pnrm") * col("nrm")), 4).as("cos")), k)
       .select(col("probe_id"), col("rn"), col("vec_id"), col("cos"))
   }
 }

@@ -594,12 +594,9 @@ object PipelineOps extends QueryPack {
     // (the q_topk_per_group machinery), so each partition forwards at
     // most k rows per group at any corpus size.
     "q_stratified_sample" -> { (s, d) =>
-      val w = Window.partitionBy(col("lang"))
-        .orderBy(h60(col("text")), col("doc_id"))
-      Tables.documents(s, d)
-        .select(col("lang"), col("doc_id"), col("n_chars"),
-                row_number().over(w).as("rk"))
-        .filter(col("rk") <= 5)
+      QueryPack.topK(Tables.documents(s, d), Seq("lang"),
+          Seq(h60(col("text")), col("doc_id")), 5, "rk")
+        .select(col("lang"), col("doc_id"), col("n_chars"), col("rk"))
         .orderBy(col("lang"), col("rk"))
     },
 
@@ -1420,49 +1417,69 @@ object PipelineOps extends QueryPack {
   def ivfTopK(emb: DataFrame, isProbe: Column, nLists: Int, nProbe: Int,
               k: Int): DataFrame = {
     require(nLists >= 1 && nProbe >= 1 && k >= 1, "ivfTopK params must be >= 1")
-    // Norms precomputed once per vector/centroid (see embedNearDup).
-    val e = emb.select(col("vec_id"), col("embedding"),
-      sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
+    val e = withNorm(emb)
     val cents = e.filter(col("vec_id") < nLists)
       .select(col("vec_id").as("cent_id"), col("embedding").as("ce"),
               col("nrm").as("cnrm"))
-    // r20 opt (VERDICT r19 item 6, guide §2.3/§2.4): the per-vector argmax
-    // was a row_number window over the |V|×nLists broadcast-join fan-out —
-    // a full shuffle + sort of the amplified frame. max(struct(cc, -cent))
-    // is the same selection (highest cc, ties to the smallest cent_id —
-    // struct ordering is lexicographic) as a MERGEABLE aggregate: the
-    // map-side combine collapses to one row per vector before the
-    // exchange, so the shuffle is |V| rows and the sort is gone.
-    val asg = e.join(broadcast(cents))
-      .groupBy(col("vec_id"))
-      .agg(max(struct(
-        (dot(col("embedding"), col("ce")) /
-          (col("nrm") * col("cnrm"))).as("cc"),
-        (-col("cent_id")).as("negc"))).as("top"))
-      .select(col("vec_id"), (-col("top.negc")).as("cent_id"))
-    val probes = e.filter(isProbe)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-              col("nrm").as("pnrm"))
-    val plists = probes.join(broadcast(cents))
+    ivfServe(e, cents, dot, isProbe, nProbe, k)
+  }
+
+  /** (vec_id, embedding, nrm): norms precomputed once per vector (see
+    * embedNearDup). */
+  private def withNorm(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), col("embedding"),
+      sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
+
+  /** Round-4 cosine of probe `pe` to corpus vector `embedding`. */
+  private val probeCos: Column = round(dot(col("pe"), col("embedding")) /
+    (col("pnrm") * col("nrm")), 4).as("cos")
+
+  /** The probes of an IVF serve as (probe_id, pe, pnrm). */
+  private def probesOf(e: DataFrame, isProbe: Column): DataFrame =
+    e.filter(isProbe).select(col("vec_id").as("probe_id"),
+      col("embedding").as("pe"), col("nrm").as("pnrm"))
+
+  /** The IVF candidate frame (probe_id, vec_id, plrn, cos) behind
+    * [[ivfTopK]], [[ivfTopKTrained]] and [[annRecall]]. Given the corpus
+    * `e` ([[withNorm]]), a centroid frame (cent_id, ce, cnrm) and its dot
+    * product `cdot(vector, centroid)`:
+    *  - assignment: each vector files under its best-cosine centroid, ties
+    *    to the smaller cent_id, as one mergeable argmax aggregate (the
+    *    |V| × nLists broadcast fan-out collapses map-side to one row per
+    *    vector before the shuffle);
+    *  - routing: each probe ranks the centroids the same way and keeps the
+    *    `nProbe` best in `plrn`;
+    *  - scoring: every other vector in a routed list, with its round-4
+    *    cosine to the probe.
+    * Probe work is ~nProbe·n/nLists per query; centroids are broadcast. */
+  private def ivfCandidates(e: DataFrame, cents: DataFrame,
+                            cdot: (Column, Column) => Column,
+                            isProbe: Column, nProbe: Int): DataFrame = {
+    def centCos(v: Column, nrm: Column) =
+      cdot(v, col("ce")) / (nrm * col("cnrm"))
+    val asg = QueryPack.argmaxBy(
+      e.join(broadcast(cents))
+        .withColumn("cc", centCos(col("embedding"), col("nrm"))),
+      Seq("vec_id"), Seq(col("cc").desc, col("cent_id")), Seq("cent_id"))
+    val plists = QueryPack.topK(
+        probesOf(e, isProbe).join(broadcast(cents))
+          .withColumn("pc", centCos(col("pe"), col("pnrm"))),
+        Seq("probe_id"), Seq(col("pc").desc, col("cent_id")), nProbe, "plrn")
       .select(col("probe_id"), col("pe"), col("pnrm"), col("cent_id"),
-        (dot(col("pe"), col("ce")) /
-          (col("pnrm") * col("cnrm"))).as("pc"))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("probe_id"))
-        .orderBy(col("pc").desc, col("cent_id"))))
-      .filter(col("rn") <= nProbe)
-      .select(col("probe_id"), col("pe"), col("pnrm"), col("cent_id"))
+              col("plrn"))
     plists.join(asg, Seq("cent_id"))
       .filter(col("vec_id") =!= col("probe_id"))
-      .join(e.select(col("vec_id"), col("embedding"), col("nrm")), Seq("vec_id"))
-      .select(col("probe_id"), col("vec_id"),
-              round(dot(col("pe"), col("embedding")) /
-                (col("pnrm") * col("nrm")), 4).as("cos"))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("probe_id"))
-        .orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rn") <= k)
+      .join(e, Seq("vec_id"))
+      .select(col("probe_id"), col("vec_id"), col("plrn"), probeCos)
+  }
+
+  /** [[ivfCandidates]] cut to each probe's cosine top-`k`, in key order. */
+  private def ivfServe(e: DataFrame, cents: DataFrame,
+                       cdot: (Column, Column) => Column, isProbe: Column,
+                       nProbe: Int, k: Int): DataFrame =
+    AnnIndex.cosTopK(ivfCandidates(e, cents, cdot, isProbe, nProbe), k)
       .select(col("probe_id"), col("rn"), col("vec_id"), col("cos"))
       .orderBy(col("probe_id"), col("rn"))
-  }
 
   /** TRAINED centroid frame shared by the serving keys: one spherical-
     * Lloyd round ([[AnnIndex.trainCentroids]] — the identical arithmetic
@@ -1478,6 +1495,15 @@ object PipelineOps extends QueryPack {
       // build (never unpersisted), saving the dedicated training job
       .localCheckpoint(eager = false)
 
+  /** Dot product of a float corpus vector with a double centroid mean:
+    * through the double HOF, sequential-order sums, so the cosines stay
+    * bit-reproducible cross-engine. */
+  private def trainedDot(v: Column, c: Column): Column =
+    AnnIndex.dotD(transform(v, x => x.cast("double")), c)
+
+  /** The fixture probes of the serving keys: vec_ids 10-14. */
+  private val fixtureProbes: Column = col("vec_id") >= 10 && col("vec_id") < 15
+
   /** [[ivfTopK]] served from TRAINED centroids (r16, VERDICT r15 item 3):
     * the q_ann_ivf contract key's form — identical inverted-file serve
     * shape, but the lists hang off the one-round spherical-Lloyd means
@@ -1490,50 +1516,13 @@ object PipelineOps extends QueryPack {
                      k: Int): DataFrame = {
     require(nLists >= 1 && nProbe >= 1 && k >= 1,
       "ivfTopKTrained params must be >= 1")
-    val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
-      sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
-    val cents = trainedCents(s, d, nLists)
-    val vd = transform(col("embedding"), v => v.cast("double"))
-    // r20 opt: same mergeable max-struct argmax as [[ivfTopK]] (see its
-    // comment) — the |V|×nLists window shuffle+sort becomes a map-side-
-    // combined |V|-row aggregation; identical assignment (highest cc,
-    // ties to the smallest cent_id).
-    val asg = e.join(broadcast(cents))
-      .groupBy(col("vec_id"))
-      .agg(max(struct(
-        (AnnIndex.dotD(vd, col("ce")) /
-          (col("nrm") * col("cnrm"))).as("cc"),
-        (-col("cent_id")).as("negc"))).as("top"))
-      .select(col("vec_id"), (-col("top.negc")).as("cent_id"))
-    val probes = e.filter(col("vec_id") >= 10 && col("vec_id") < 15)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-              col("nrm").as("pnrm"))
-    val plists = probes.join(broadcast(cents))
-      .select(col("probe_id"), col("pe"), col("pnrm"), col("cent_id"),
-        (AnnIndex.dotD(transform(col("pe"), v => v.cast("double")),
-          col("ce")) /
-          (col("pnrm") * col("cnrm"))).as("pc"))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("probe_id"))
-        .orderBy(col("pc").desc, col("cent_id"))))
-      .filter(col("rn") <= nProbe)
-      .select(col("probe_id"), col("pe"), col("pnrm"), col("cent_id"))
-    plists.join(asg, Seq("cent_id"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .join(e.select(col("vec_id"), col("embedding"), col("nrm")),
-            Seq("vec_id"))
-      .select(col("probe_id"), col("vec_id"),
-              round(dot(col("pe"), col("embedding")) /
-                (col("pnrm") * col("nrm")), 4).as("cos"))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("probe_id"))
-        .orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rn") <= k)
-      .select(col("probe_id"), col("rn"), col("vec_id"), col("cos"))
-      .orderBy(col("probe_id"), col("rn"))
+    ivfServe(withNorm(Tables.embeddings(s, d)), trainedCents(s, d, nLists),
+      trainedDot, fixtureProbes, nProbe, k)
   }
 
-  /** recall@k of [[ivfTopK]] against the exact brute-force top-k on the
-    * same probes, swept over `nProbes` — one row per nprobe setting with
-    * integer hit counts and the recall ratio. Shares ONE centroid
+  /** recall@k of [[ivfTopKTrained]] against the exact brute-force top-k on
+    * the same probes, swept over `nProbes` — one row per nprobe setting
+    * with integer hit counts and the recall ratio. Shares ONE centroid
     * assignment and ONE candidate frame across the sweep (the per-nprobe
     * results are prefix-filters of the widest probe list, so the corpus
     * is scanned once, not |nProbes| times); the candidate frame is
@@ -1544,72 +1533,25 @@ object PipelineOps extends QueryPack {
   def annRecall(s: SparkSession, d: String, nLists: Int = 16,
                 nProbes: Seq[Int] = Seq(1, 2, 4, 8, 16),
                 k: Int = 5): DataFrame = {
-    val isProbe = col("vec_id") >= 10 && col("vec_id") < 15
-    val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
-      sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
-    // r15: the inverted lists hang off TRAINED centroids — the same
-    // spherical-Lloyd round [[AnnIndex.trainCentroids]] persists for the
-    // production index — instead of the first nLists raw vectors. The
-    // 16-row centroid frame is localCheckpointed because both the
-    // assignment and the probe-routing arms consume it (re-deriving it
-    // would re-run the training job). Mixed float/double dots go through
-    // the double HOF (the centroid means are doubles); the cosine values
-    // stay bit-reproducible cross-engine (sequential-order sums).
-    val cents = trainedCents(s, d, nLists)
-    val vd = transform(col("embedding"), v => v.cast("double"))
-    // r20 opt: same mergeable max-struct argmax as [[ivfTopK]] (see its
-    // comment) — the |V|×nLists window shuffle+sort becomes a map-side-
-    // combined |V|-row aggregation; identical assignment (highest cc,
-    // ties to the smallest cent_id).
-    val asg = e.join(broadcast(cents))
-      .groupBy(col("vec_id"))
-      .agg(max(struct(
-        (AnnIndex.dotD(vd, col("ce")) /
-          (col("nrm") * col("cnrm"))).as("cc"),
-        (-col("cent_id")).as("negc"))).as("top"))
-      .select(col("vec_id"), (-col("top.negc")).as("cent_id"))
-    val probes = e.filter(isProbe)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"),
-              col("nrm").as("pnrm"))
+    val e = withNorm(Tables.embeddings(s, d))
     // exact ground truth: brute-force top-k (the q_similarity_topk shape)
-    val exact = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        round(dot(col("pe"), col("embedding")) /
-          (col("pnrm") * col("nrm")), 4).as("cos"))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("probe_id"))
-        .orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rn") <= k)
+    val exact = AnnIndex.cosTopK(
+        e.join(broadcast(probesOf(e, fixtureProbes)),
+            col("vec_id") =!= col("probe_id"))
+          .select(col("probe_id"), col("vec_id"), probeCos), k)
       .select(col("probe_id"), col("vec_id"), lit(1).as("hit"))
       // r19 opt: the exact arm feeds BOTH the denominator count and the
       // hit join; without a cut the brute-force corpus pass + its top-k
       // window re-ran per consumer (AQE reuses no exchange across
       // branches). The frame is k·|probes| rows — trivial to pin.
       .localCheckpoint(eager = false)
-    val plists = probes.join(broadcast(cents))
-      .select(col("probe_id"), col("pe"), col("pnrm"), col("cent_id"),
-        (AnnIndex.dotD(transform(col("pe"), v => v.cast("double")),
-          col("ce")) /
-          (col("pnrm") * col("cnrm"))).as("pc"))
-      .withColumn("plrn", row_number().over(Window.partitionBy(col("probe_id"))
-        .orderBy(col("pc").desc, col("cent_id"))))
-      .filter(col("plrn") <= nProbes.max)
-      .select(col("probe_id"), col("pe"), col("pnrm"), col("cent_id"),
-              col("plrn"))
-    val cand = plists.join(asg, Seq("cent_id"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .join(e.select(col("vec_id"), col("embedding"), col("nrm")),
-            Seq("vec_id"))
-      .select(col("probe_id"), col("vec_id"), col("plrn"),
-        round(dot(col("pe"), col("embedding")) /
-          (col("pnrm") * col("nrm")), 4).as("cos"))
+    val cand = ivfCandidates(e, trainedCents(s, d, nLists), trainedDot,
+        fixtureProbes, nProbes.max)
       // lazy (r20): nothing unpersists it, so the first sweep branch can
       // materialize it inside its own job instead of a dedicated one
       .localCheckpoint(eager = false)
     val ivf = nProbes.map { np =>
-      cand.filter(col("plrn") <= np)
-        .withColumn("rn", row_number().over(Window.partitionBy(col("probe_id"))
-          .orderBy(col("cos").desc, col("vec_id"))))
-        .filter(col("rn") <= k)
+      AnnIndex.cosTopK(cand.filter(col("plrn") <= np), k)
         .select(lit(np).as("nprobe"), col("probe_id"), col("vec_id"))
     }.reduce(_ unionByName _)
     val ne = exact.agg(count(lit(1)).as("n_exact"))
@@ -1783,13 +1725,12 @@ object PipelineOps extends QueryPack {
   /** Language profiles from a LABELED corpus: top-`profileSize` words per
     * lang (count desc, word asc). Tiny result — meant to be broadcast. */
   def languageProfiles(labeled: DataFrame, profileSize: Int): DataFrame =
-    labeled.select(col("lang").as("p_lang"),
-        explode(split(col("text"), " ")).as("word"))
-      .groupBy(col("p_lang"), col("word"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("p_lang")).orderBy(col("n").desc, col("word"))))
-      .filter(col("rn") <= profileSize)
+    QueryPack.topK(
+        labeled.select(col("lang").as("p_lang"),
+            explode(split(col("text"), " ")).as("word"))
+          .groupBy(col("p_lang"), col("word"))
+          .agg(count(lit(1)).as("n")),
+        Seq("p_lang"), Seq(col("n").desc, col("word")), profileSize)
       .select(col("p_lang"), col("word"))
 
   /** Profile-vote prediction for any (doc_id, text) frame: each doc votes
@@ -1797,19 +1738,14 @@ object PipelineOps extends QueryPack {
     * the lexicographically first lang). Docs with zero profile overlap
     * are absent from the result. Returns (doc_id, pred_lang). */
   def predictLanguage(docs: DataFrame, profiles: DataFrame): DataFrame =
-    docs.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-      .distinct()
-      .join(broadcast(profiles), Seq("word"))
-      .groupBy(col("doc_id"), col("p_lang"))
-      .agg(count(lit(1)).as("score"))
-      // r20 opt: the vote argmax was a row_number window (shuffle + sort
-      // of the per-(doc, lang) score frame). min(struct(-score, lang)) is
-      // the same selection (highest score, ties to the lexicographically
-      // first lang) as a MERGEABLE aggregate — map-side combined, no sort.
-      .groupBy(col("doc_id"))
-      .agg(min(struct((-col("score")).as("ns"), col("p_lang").as("pl")))
-        .as("top"))
-      .select(col("doc_id"), col("top.pl").as("pred_lang"))
+    QueryPack.argmaxBy(
+        docs.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
+          .distinct()
+          .join(broadcast(profiles), Seq("word"))
+          .groupBy(col("doc_id"), col("p_lang"))
+          .agg(count(lit(1)).as("score")),
+        Seq("doc_id"), Seq(col("score").desc, col("p_lang")), Seq("p_lang"))
+      .select(col("doc_id"), col("p_lang").as("pred_lang"))
 
   // ---------------- DuckDB oracles ----------------
 

@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types._
 
 /** One pack per SURVEY.md §2.B category. `queries` are the engine
   * implementations; `oracles` the equivalent DuckDB SQL (omit a key for
@@ -98,5 +98,70 @@ trait QueryPack {
       .withColumn("rn", col("off") + col("rnb").cast("long"))
     val sizes = bandCnts.groupBy(col(group)).agg(sum(col("cntb")).as("n"))
     (ranked, sizes)
+  }
+}
+
+/** The two ways to pick rows per group. Every per-group pick in the packs,
+  * the ANN index and the training pipeline goes through one of them. */
+object QueryPack {
+
+  /** Each `group`'s first `k` rows in `order`, numbered 1..k in column
+    * `rn`. This is the `row_number` + `rn <= k` filter that Spark plans as
+    * a `WindowGroupLimit`: each partition forwards at most k rows per
+    * group to the window shuffle. Rows tied on every `order` key number
+    * arbitrarily, so end `order` in a unique key. */
+  def topK(df: DataFrame, group: Seq[String], order: Seq[Column], k: Int,
+           rn: String = "rn"): DataFrame =
+    df.withColumn(rn, row_number().over(
+        Window.partitionBy(group.map(col): _*).orderBy(order: _*)))
+      .filter(col(rn) <= k)
+
+  /** One row per `group`: the row `row_number() over (partitionBy(group)
+    * orderBy(order)) == 1` keeps, as its `group`, `keep` and `also`
+    * columns. `also` are further aggregates over the whole group, computed
+    * in the same pass.
+    *
+    * The pick is one mergeable `min(struct)` aggregate, so partial
+    * aggregation collapses each partition to one row per group before the
+    * shuffle, and no window sort runs. Each `order` key becomes struct
+    * fields whose ascending order is the key's sort order:
+    *  - a nullable key leads with a null flag, unless it sorts ascending
+    *    with nulls first, which is how struct fields order;
+    *  - a `desc` key is reversed: `~x` for integers (no overflow), `-x`
+    *    for decimals, and for floats a NaN flag (NaN sorts above every
+    *    number) ahead of `-x`. Other `desc` types fail.
+    * The tie-break rule is therefore `order` itself; rows tied on every
+    * `order` key resolve to the smallest tuple of the other `keep`
+    * columns, one of the rows the window could keep. End `order` in a
+    * unique key to make the pick independent of that. */
+  def argmaxBy(df: DataFrame, group: Seq[String], order: Seq[Column],
+               keep: Seq[String], also: Column*): DataFrame = {
+    // a `keep` column that is already a plain sort field is read from it
+    val keys = order.flatMap(sortFields(df, _))
+    val fields =
+      keys ++ keep.filterNot(k => keys.exists(_.toString == k)).map(col)
+    val named = fields.zipWithIndex.map { case (c, i) => c.as(s"f$i") }
+    val out = df.groupBy(group.map(col): _*)
+      .agg(min(struct(named: _*)).as("top"), also: _*)
+    out.select(group.map(col) ++
+      keep.map(k => col(s"top.f${fields.indexWhere(_.toString == k)}").as(k)) ++
+      out.columns.drop(group.size + 1).map(col): _*)
+  }
+
+  /** Struct fields of one sort key for [[argmaxBy]], smallest first. */
+  private def sortFields(df: DataFrame, o: Column): Seq[Column] = {
+    val (c, asc, nullsFirst) = GraftShim.sortKey(o)
+    val f = df.select(c).schema.head
+    val nullFlag =
+      if (!f.nullable || (asc && nullsFirst)) Nil
+      else Seq(if (nullsFirst) c.isNotNull else c.isNull)
+    if (asc) nullFlag :+ c
+    else nullFlag ++ (f.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => Seq(bitwiseNOT(c))
+      case FloatType | DoubleType => Seq(!isnan(c), -c)
+      case _: DecimalType => Seq(-c)
+      case t => throw new IllegalArgumentException(
+        s"argmaxBy: no descending struct key for ${f.name}: ${t.simpleString}")
+    })
   }
 }

@@ -93,12 +93,9 @@ object SortSetOps extends QueryPack {
 
     // Top-3 orders per customer by total price.
     "q_topk_per_group" -> { (s, d) =>
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      Tables.orders(s, d)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
-                row_number().over(w).as("rn"))
-        .filter(col("rn") <= 3)
+      QueryPack.topK(Tables.orders(s, d)
+          .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice")),
+          Seq("o_custkey"), Seq(col("o_totalprice").desc, col("o_orderkey")), 3)
         .orderBy(col("o_custkey"), col("rn"))
     },
 

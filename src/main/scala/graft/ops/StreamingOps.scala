@@ -207,11 +207,8 @@ object StreamingOps extends QueryPack {
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("win_start"), col("event_type"), col("n"))
-      counts
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("win_start"))
-            .orderBy(col("n").desc, col("event_type"))).cast("int"))
-        .filter(col("rk") <= 3)
+      QueryPack.topK(counts, Seq("win_start"),
+          Seq(col("n").desc, col("event_type")), 3, "rk")
         .orderBy(col("win_start"), col("rk"))
     }
   )

@@ -521,10 +521,7 @@ object TextOps extends QueryPack {
           round(dot(col("pe"), col("embedding")) /
             (sqrt(dot(col("pe"), col("pe"))) *
              sqrt(dot(col("embedding"), col("embedding")))), 4).as("cos"))
-      val w = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      pairs.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
+      AnnIndex.cosTopK(pairs, 5)
         .select(col("probe_id"), col("rn"), col("vec_id"), col("cos"))
         .orderBy(col("probe_id"), col("rn"))
     },
@@ -579,22 +576,19 @@ object TextOps extends QueryPack {
     // of the components labels: instead of keeping the lowest id, each
     // near-dup cluster keeps its BEST member (here: max n_chars, doc_id
     // tie-break — in production the quality score plugs into the same
-    // ORDER BY). The rep choice is one row_number window partitioned by
-    // comp — clusters are tiny (bounded by near-dup radius), so the window
-    // is skew-free by construction; the docs join moves only (doc_id,
-    // n_chars), never text. Same O(diameter) label propagation underneath.
+    // order). The rep, the member count and the size total are one
+    // aggregate per comp ([[QueryPack.argmaxBy]] with the two sums riding
+    // along); the docs join moves only (doc_id, n_chars), never text.
+    // Same O(diameter) label propagation underneath.
     "q_dedup_cluster_rep" -> { (s, d) =>
       val docs = Tables.documents(s, d)
       val pairs = minhashPairs(docs, 0.5).select(col("d1"), col("d2"))
-      val w = Window.partitionBy(col("comp"))
-        .orderBy(col("n_chars").desc, col("id"))
-      Components.connectedComponents(pairs)
-        .join(docs.select(col("doc_id").as("id"), col("n_chars")), Seq("id"))
-        .withColumn("rk", row_number().over(w))
-        .groupBy(col("comp"))
-        .agg(max(when(col("rk") === 1, col("id"))).as("rep_id"),
-             count(lit(1)).as("n_members"),
-             sum(col("n_chars")).as("cluster_chars"))
+      QueryPack.argmaxBy(Components.connectedComponents(pairs)
+          .join(docs.select(col("doc_id").as("id"), col("n_chars")), Seq("id")),
+          Seq("comp"), Seq(col("n_chars").desc, col("id")), Seq("id"),
+          count(lit(1)).as("n_members"), sum(col("n_chars")).as("cluster_chars"))
+        .select(col("comp"), col("id").as("rep_id"), col("n_members"),
+                col("cluster_chars"))
         .orderBy(col("comp"))
     },
 
@@ -776,10 +770,7 @@ object TextOps extends QueryPack {
         h.iterator.map { case (vid, c) => (p, vid, c) }
       }
     }.toDF("probe_id", "vec_id", "cos")
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    local.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    AnnIndex.cosTopK(local, k)
       .select(col("probe_id"), col("rn"), col("vec_id"), col("cos"))
       .orderBy(col("probe_id"), col("rn"))
   }

@@ -1,7 +1,7 @@
 package graft.pipeline
 
+import graft.ops.QueryPack
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** User-facing composition of the engine's training-data operators as
@@ -109,13 +109,17 @@ object TrainingPipeline {
           "[\\s\\u00A0]+", " ")))
       .withColumn("n_chars", length(col("text")))
 
-  /** Exact dedup: keep the lowest-id doc per md5(text). One shuffle of
-    * (digest, id) — the text column never moves. */
-  def dedupExact(docs: DataFrame): DataFrame = {
-    val w = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-    docs.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
-  }
+  /** Exact dedup: keep the lowest-id doc per md5(text), as one argmax
+    * aggregate per digest. Partial aggregation keeps one row per digest
+    * per partition, so whole rows shuffle only for distinct texts. */
+  def dedupExact(docs: DataFrame): DataFrame =
+    firstPerKey(docs.withColumn("text_md5", md5(col("text"))), "text_md5",
+      docs.columns)
+
+  /** The lowest-doc_id row per `key`, as its `cols`. */
+  private def firstPerKey(docs: DataFrame, key: String,
+                          cols: Seq[String]): DataFrame =
+    QueryPack.argmaxBy(docs, Seq(key), Seq(col("doc_id")), cols).drop(key)
 
   /** The canon digest ledger (q_dedup_incremental semantics): one
     * (digest) row per doc — md5 of the full text by default, or of the
@@ -140,9 +144,7 @@ object TrainingPipeline {
     val fresh = docs
       .withColumn("digest", graft.ops.TextOps.prefixDigest(prefixWords))
       .join(canonDigests, Seq("digest"), "left_anti")
-    val w = Window.partitionBy(col("digest")).orderBy(col("doc_id"))
-    fresh.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn", "digest")
+    firstPerKey(fresh, "digest", docs.columns.filterNot(_ == "digest"))
   }
 
   /** One crawl cycle of the incremental-dedup ledger, SNAPSHOT-COMMITTED
@@ -245,9 +247,8 @@ object TrainingPipeline {
     * maximizes `quality` (doc_id breaks ties) instead of
     * [[dedupNearCanonical]]'s lowest-id rule — the production finisher
     * when a quality score exists (pass e.g. the LM score column; the
-    * default keeps the longest doc). The rank is one `row_number` window
-    * per comp — clusters are near-dup-radius-bounded, so the window is
-    * skew-free; only (id, quality) rows move, never text. */
+    * default keeps the longest doc). The pick is one argmax aggregate
+    * per comp; only (id, quality) rows move, never text. */
   def dedupNearKeepBest(docs: DataFrame, quality: Column = col("n_chars"),
                         threshold: Double = 0.5,
                         maxIters: Int = 50): DataFrame =
@@ -262,12 +263,11 @@ object TrainingPipeline {
                                  maxIters: Int): DataFrame = {
     val comps = graft.ops.Components.connectedComponents(
       pairs.select(col("d1"), col("d2")), maxIters)
-    val w = Window.partitionBy(col("comp"))
-      .orderBy(col("q").desc, col("id"))
-    val losers = comps
-      .join(docs.select(col("doc_id").as("id"), quality.as("q")), Seq("id"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") =!= 1)
+    val best = QueryPack.argmaxBy(
+      comps.join(docs.select(col("doc_id").as("id"), quality.as("q")), Seq("id")),
+      Seq("comp"), Seq(col("q").desc, col("id")), Seq("id"))
+    // members missing from docs join no doc, so dropping them is moot
+    val losers = comps.join(best.select(col("id")), Seq("id"), "left_anti")
       .select(col("id").as("doc_id"))
     docs.join(losers, Seq("doc_id"), "left_anti")
   }

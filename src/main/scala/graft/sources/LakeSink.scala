@@ -499,7 +499,15 @@ object SnapshotLake {
         case Array("#schema", "rename", from, to) =>
           (d.columns.contains(from), d.columns.contains(to)) match {
             case (true, true) =>
-              d.withColumn(to, coalesce(col(to), col(from))).drop(from)
+              // one column, at whichever name the merged schema lists
+              // first: that is the column's place in every footer, and
+              // the other name is appended by whichever dir the merged
+              // read saw first, so its place varies with the dir order
+              val at = math.min(d.columns.indexOf(from), d.columns.indexOf(to))
+              val rest = d.columns.toSeq.filterNot(c => c == from || c == to)
+                .map(col)
+              d.select((rest.take(at) :+ coalesce(col(to), col(from)).as(to))
+                ++ rest.drop(at): _*)
             case (true, false) => d.withColumnRenamed(from, to)
             case _             => d
           }

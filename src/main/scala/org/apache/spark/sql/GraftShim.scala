@@ -11,6 +11,15 @@ object GraftShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** A sort column's (key, ascending, nulls first). A plain column sorts
+    * ascending with nulls first, as in `Window.orderBy`. */
+  def sortKey(c: Column): (Column, Boolean, Boolean) = c.node match {
+    case internal.SortOrder(child, dir, nulls, _) =>
+      (new Column(child), dir == internal.SortOrder.Ascending,
+       nulls == internal.SortOrder.NullsFirst)
+    case _ => (c, true, true)
+  }
+
   /** Re-materialize a micro-batch DataFrame handed to a V1 streaming
     * `Sink.addBatch` as an ordinary batch frame over the SAME physical
     * plan (`queryExecution.toRdd`), so a sink can run its own batch

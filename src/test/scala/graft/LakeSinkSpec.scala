@@ -522,6 +522,23 @@ class LakeSinkSpec extends AnyFunSuite {
     SnapshotLake.renameColumn(s, table, "value", "price")
     assert(SnapshotLake.readLatest(s, table).columns.toSeq ==
       Seq("k", "price"))
+    // the renamed column keeps its place whichever dir's footer the
+    // merged read sees first: the pre-rename dir first lists
+    // (k, amount, note, value), the post-rename dir (k, value, note, amount)
+    val t3 = tmpDir("snap-alter-rename-order")
+    SnapshotLake.commit(Seq((1L, 10.0, "a")).toDF("k", "amount", "note"), t3)
+    SnapshotLake.renameColumn(s, t3, "amount", "value")
+    val id3 = SnapshotLake.commit(Seq((2L, 20.0, "b")).toDF("k", "value",
+      "note"), t3, append = true)
+    val dirs3 = SnapshotLake.manifestDirs(s, t3, id3)
+    val dv3 = SnapshotLake.manifestDirectives(s, t3, id3)
+    for (ds <- Seq(dirs3, dirs3.reverse))
+      assert(SnapshotLake.applyDirectives(SnapshotLake.readMergedRaw(s, ds),
+        dv3).columns.toSeq == Seq("k", "value", "note"))
+    assert(SnapshotLake.readLatest(s, t3).columns.toSeq ==
+      Seq("k", "value", "note"))
+    assert(s.read.format("graftlake").load(t3).schema.fieldNames.toSeq ==
+      Seq("k", "value", "note"))
   }
 
   test("dropColumn: drop-by-mapping — history byte-stable, appends refuse, " +

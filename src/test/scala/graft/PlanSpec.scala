@@ -805,4 +805,53 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("GreaterThanOrEqual(l_shipdate"),
       s"delta-branch shipdate bound not pushed:\n$plan")
   }
+
+  test("per-group top-k keys keep their partial group limit (WindowGroupLimit)") {
+    // QueryPack.topK writes the row_number + rn <= k filter Spark plans as
+    // a partial limit before the window shuffle; every top-k key that
+    // planned one before the helper still does
+    for (key <- Seq("q_tfidf", "q_similarity_topk", "q_stratified_sample",
+        "q_stream_topk", "q_topk_per_group", "q_lang_id", "q_ann_ivf",
+        "q_ann_recall")) {
+      val s = finalPlan(key).split("== Initial Plan ==")(0)
+      assert(s.contains("WindowGroupLimit"),
+        s"$key lost its partial group limit:\n$s")
+    }
+  }
+
+  test("argmax keys pick with a mergeable aggregate, not a window") {
+    // QueryPack.argmaxBy: no Window ranks the pick's group, and the
+    // partial min(struct) runs before the exchange to the final one
+    def pinned(key: String, pickGroup: String, mapSide: Boolean): Unit = {
+      val s = finalPlan(key).split("== Initial Plan ==")(0)
+      assert(!s.contains(s"windowspecdefinition($pickGroup#"),
+        s"$key ranks its $pickGroup pick with a window:\n$s")
+      if (mapSide) {
+        val lines = s.linesIterator.toIndexedSeq
+        val fin = lines.indexWhere(_.contains("functions=[min(struct("))
+        val part = lines.indexWhere(_.contains("partial_min(struct("), fin)
+        assert(fin >= 0 && part > fin &&
+            lines.slice(fin, part).exists(_.contains("Exchange hashpartitioning")),
+          s"$key: no partial argmax below the exchange:\n$s")
+      }
+    }
+    pinned("q_median_mode", "l_returnflag", mapSide = true)
+    pinned("q_dedup_cluster_rep", "comp", mapSide = true)
+    pinned("q_lang_id", "doc_id", mapSide = true)
+    pinned("q_ann_ivf", "vec_id", mapSide = true)
+    // the recall sweep's assignment runs inside its checkpointed candidate
+    // build (the q_ann_ivf code path), so only the window's absence shows
+    pinned("q_ann_recall", "vec_id", mapSide = false)
+    // the CUSUM windows already partition by event_type, so the pick's
+    // partial and final aggregates share their stage: no extra shuffle,
+    // and only the |sdev| ranking window is gone
+    val cp = finalPlan("q_changepoint").split("== Initial Plan ==")(0)
+    assert(cp.contains("partial_min(struct("),
+      s"q_changepoint picks without the argmax aggregate:\n$cp")
+    // the CUSUM windows order by day ascending; the old pick ranked by
+    // |sdev| DESC under a one-row WindowGroupLimit
+    assert(!cp.contains("WindowGroupLimit") &&
+        "windowspecdefinition\\(event_type#\\d+, \\S+ DESC".r.findFirstIn(cp).isEmpty,
+      s"q_changepoint ranks |sdev| with a window:\n$cp")
+  }
 }
