@@ -615,15 +615,7 @@ object AnnIndex {
       .agg(array_sort(collect_list(struct(col("sub"),
         transform(col("codes"), c => c.getField("carr")).as("arrs"))))
         .as("cbs"))
-    val probes = withClist(
-        checkedQ.select(col("probe_id").as("vec_id"), col("pe").as("vec"))
-          .withColumn("nrm", sqrt(dotD(col("vec"), col("vec")))),
-        cents)
-      .select(col("vec_id").as("probe_id"), col("vec").as("pe"),
-        col("nrm").as("pnrm"),
-        posexplode(slice(col("clist"), 1, nProbe)).as(Seq("pp", "dc")))
-      .select(col("probe_id"), col("pe"), col("pnrm"),
-        col("dc").getField("cid").as("cid"))
+    val probes = routeProbes(checkedQ, cents, nProbe)
       // the coarse term, once per (probe, list): <probe, centroid[cid]>
       .join(broadcast(cents), Seq("cid"))
       .withColumn("qc", dotD(col("pe"), col("carr")))
@@ -649,11 +641,7 @@ object AnnIndex {
         Seq(col("adc").desc, col("vec_id")), k * refine, "arn")
       .select(col("probe_id"), col("pe"), col("pnrm"), col("cid"),
         col("vec_id"))
-    cosTopK(shortlist.join(lists, Seq("cid", "vec_id"))
-      .select(col("probe_id"), col("vec_id"),
-        round(dotD(col("pe"), col("vec")) /
-          (col("pnrm") * col("nrm")), 4).as("cos")), k)
-      .select(col("probe_id"), col("rn"), col("vec_id"), col("cos"))
+    serveTopK(shortlist.join(lists, Seq("cid", "vec_id")), k)
   }
 
   /** Serve cosine top-`k` for a (probe_id, pe ARRAY<DOUBLE>) query frame
@@ -669,7 +657,15 @@ object AnnIndex {
     val lists = SnapshotLake.readLatest(spark, s"$root/lists")
     val checkedQ = queries
       .withColumn("pe", checkedVec(col("pe"), centroidDim(cents), "probe"))
-    val plists = withClist(
+    serveTopK(routeProbes(checkedQ, cents, nProbe).join(lists, Seq("cid"))
+      .filter(col("vec_id") =!= col("probe_id")), k)
+  }
+
+  /** Each probe of a (probe_id, pe) frame routed to its `nProbe` best
+    * lists (the withClist order), as (probe_id, pe, pnrm, cid). */
+  private def routeProbes(checkedQ: DataFrame, cents: DataFrame,
+                          nProbe: Int): DataFrame =
+    withClist(
         checkedQ.select(col("probe_id").as("vec_id"), col("pe").as("vec"))
           .withColumn("nrm", sqrt(dotD(col("vec"), col("vec")))),
         cents)
@@ -678,11 +674,13 @@ object AnnIndex {
         posexplode(slice(col("clist"), 1, nProbe)).as(Seq("pp", "dc")))
       .select(col("probe_id"), col("pe"), col("pnrm"),
         col("dc").getField("cid").as("cid"))
-    cosTopK(plists.join(lists, Seq("cid"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
+
+  /** [[cosTopK]] of routed probe rows joined to their list vectors
+    * (probe_id, pe, pnrm, vec_id, vec, nrm), scored by exact round-4
+    * cosine, as (probe_id, rn, vec_id, cos). */
+  private def serveTopK(cand: DataFrame, k: Int): DataFrame =
+    cosTopK(cand.select(col("probe_id"), col("vec_id"),
         round(dotD(col("pe"), col("vec")) /
           (col("pnrm") * col("nrm")), 4).as("cos")), k)
       .select(col("probe_id"), col("rn"), col("vec_id"), col("cos"))
-  }
 }

@@ -102,7 +102,11 @@ trait QueryPack {
 }
 
 /** The two ways to pick rows per group. Every per-group pick in the packs,
-  * the ANN index and the training pipeline goes through one of them. */
+  * the ANN index and the training pipeline goes through one of them; the
+  * filters that keep every row but the first (q_dedup_passage, the
+  * training pipeline's cluster finisher) number rows themselves. A pick
+  * of whole wide rows (text) is a one-row `topK`, since an argmax struct
+  * would carry every column. */
 object QueryPack {
 
   /** Each `group`'s first `k` rows in `order`, numbered 1..k in column
@@ -121,47 +125,79 @@ object QueryPack {
     * columns. `also` are further aggregates over the whole group, computed
     * in the same pass.
     *
-    * The pick is one mergeable `min(struct)` aggregate, so partial
-    * aggregation collapses each partition to one row per group before the
-    * shuffle, and no window sort runs. Each `order` key becomes struct
-    * fields whose ascending order is the key's sort order:
-    *  - a nullable key leads with a null flag, unless it sorts ascending
-    *    with nulls first, which is how struct fields order;
-    *  - a `desc` key is reversed: `~x` for integers (no overflow), `-x`
-    *    for decimals, and for floats a NaN flag (NaN sorts above every
-    *    number) ahead of `-x`. Other `desc` types fail.
+    * The pick is one mergeable `min(struct)` or `max(struct)` aggregate,
+    * so partial aggregation collapses each partition to one row per group
+    * before the shuffle, and no window sort runs. Each `order` key becomes
+    * struct fields whose order under the aggregate is the key's sort
+    * order:
+    *  - a key sorted the aggregate's way (`asc` under `min`, `desc` under
+    *    `max`) is its own field; one sorted the other way is reversed:
+    *    `~x` for integers (no overflow), `-x` for decimals, and for floats
+    *    a NaN flag (NaN sorts above every number) ahead of `-x`. Other
+    *    types cannot be reversed;
+    *  - a nullable key leads with a null flag, unless it is its own field
+    *    and its nulls fall where struct order puts them: first under
+    *    `min`, last under `max` (the default of `asc` and `desc`).
+    * Of the two aggregates the one with fewer flags is used, ties going
+    * to the leading key's direction; so a leading `desc` key of any
+    * orderable type works as long as the later keys can be reversed. A
+    * `keep` column that is a sort key is read back from its value field.
     * The tie-break rule is therefore `order` itself; rows tied on every
-    * `order` key resolve to the smallest tuple of the other `keep`
-    * columns, one of the rows the window could keep. End `order` in a
-    * unique key to make the pick independent of that. */
+    * `order` key resolve to the smallest (`min`) or largest (`max`) tuple
+    * of the other `keep` columns, one of the rows the window could keep.
+    * End `order` in a unique key to make the pick independent of that. */
   def argmaxBy(df: DataFrame, group: Seq[String], order: Seq[Column],
                keep: Seq[String], also: Column*): DataFrame = {
-    // a `keep` column that is already a plain sort field is read from it
-    val keys = order.flatMap(sortFields(df, _))
-    val fields =
-      keys ++ keep.filterNot(k => keys.exists(_.toString == k)).map(col)
-    val named = fields.zipWithIndex.map { case (c, i) => c.as(s"f$i") }
+    val sortKeys = order.map(GraftShim.sortKey)
+    val lead = sortKeys.head._2
+    val types = df.select(sortKeys.map(_._1): _*).schema
+    // fewest flags first; the stable sort keeps the leading key's on ties
+    val (hi, keys) = Seq(!lead, lead)
+      .flatMap(hi => structKeys(sortKeys.zip(types), hi).map(hi -> _))
+      .sortBy(_._2.map(_.flags.size).sum).headOption
+      .getOrElse(throw new IllegalArgumentException(
+        s"argmaxBy: no struct order for ${order.mkString(", ")}"))
+    // each key's flags and value, then the `keep` columns no key gives back
+    val keyFields = keys.flatMap(k => k.flags :+ k.value)
+    val rest = keep.filterNot(k => keys.exists(_.name == k))
+    val fields = keyFields ++ rest.map(col)
+    val top = struct(fields.zipWithIndex.map { case (c, i) => c.as(s"f$i") }: _*)
     val out = df.groupBy(group.map(col): _*)
-      .agg(min(struct(named: _*)).as("top"), also: _*)
-    out.select(group.map(col) ++
-      keep.map(k => col(s"top.f${fields.indexWhere(_.toString == k)}").as(k)) ++
+      .agg((if (hi) max(top) else min(top)).as("top"), also: _*)
+    def field(i: Int) = col(s"top.f$i")
+    val kept = keep.map(k => keys.find(_.name == k) match {
+      case Some(key) => key.back(field(keyFields.indexWhere(_ eq key.value))).as(k)
+      case None => field(keyFields.size + rest.indexOf(k)).as(k)
+    })
+    out.select(group.map(col) ++ kept ++
       out.columns.drop(group.size + 1).map(col): _*)
   }
 
-  /** Struct fields of one sort key for [[argmaxBy]], smallest first. */
-  private def sortFields(df: DataFrame, o: Column): Seq[Column] = {
-    val (c, asc, nullsFirst) = GraftShim.sortKey(o)
-    val f = df.select(c).schema.head
-    val nullFlag =
-      if (!f.nullable || (asc && nullsFirst)) Nil
-      else Seq(if (nullsFirst) c.isNotNull else c.isNull)
-    if (asc) nullFlag :+ c
-    else nullFlag ++ (f.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => Seq(bitwiseNOT(c))
-      case FloatType | DoubleType => Seq(!isnan(c), -c)
-      case _: DecimalType => Seq(-c)
-      case t => throw new IllegalArgumentException(
-        s"argmaxBy: no descending struct key for ${f.name}: ${t.simpleString}")
-    })
+  /** One [[argmaxBy]] sort key as struct fields: its `flags`, then its
+    * `value`, from which `back` gives the column `name` back. */
+  private case class StructKey(name: String, flags: Seq[Column], value: Column,
+                               back: Column => Column)
+
+  /** [[argmaxBy]]'s sort keys ((key, ascending, nulls first), field) as
+    * struct fields for `max(struct)` if `hi`, else `min(struct)`; None if
+    * a key would need a reversal its type has none of. */
+  private def structKeys(keys: Seq[((Column, Boolean, Boolean), StructField)],
+                         hi: Boolean): Option[Seq[StructKey]] = {
+    val fields = keys.map { case ((c, asc, nullsFirst), f) =>
+      val own = asc != hi
+      val nullFlag =
+        if (!f.nullable || (own && nullsFirst != hi)) Nil
+        else Seq(if (nullsFirst != hi) c.isNotNull else c.isNull)
+      if (own) Some(StructKey(c.toString, nullFlag, c, identity))
+      else (f.dataType match {
+        case ByteType | ShortType | IntegerType | LongType =>
+          Some(StructKey(c.toString, nullFlag, bitwiseNOT(c), bitwiseNOT))
+        case FloatType | DoubleType =>
+          Some(StructKey(c.toString, nullFlag :+ !isnan(c), -c, -_))
+        case _: DecimalType => Some(StructKey(c.toString, nullFlag, -c, -_))
+        case _ => None
+      })
+    }
+    if (fields.forall(_.isDefined)) Some(fields.flatten) else None
   }
 }

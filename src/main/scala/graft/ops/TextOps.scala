@@ -513,17 +513,7 @@ object TextOps extends QueryPack {
 
     // Brute-force cosine top-5 for 5 broadcast probe vectors.
     "q_similarity_topk" -> { (s, d) =>
-      val e = Tables.embeddings(s, d)
-      val probes = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-      val pairs = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id"),
-          round(dot(col("pe"), col("embedding")) /
-            (sqrt(dot(col("pe"), col("pe"))) *
-             sqrt(dot(col("embedding"), col("embedding")))), 4).as("cos"))
-      AnnIndex.cosTopK(pairs, 5)
-        .select(col("probe_id"), col("rn"), col("vec_id"), col("cos"))
-        .orderBy(col("probe_id"), col("rn"))
+      servedTopK(AnnIndex.cosTopK(probePairs(s, d), 5))
     },
 
     // Tokenize → explode → global top-20 words.
@@ -743,16 +733,7 @@ object TextOps extends QueryPack {
   def similarityTopKBlocked(s: SparkSession, d: String,
                             k: Int = 5): DataFrame = {
     import s.implicits._
-    val e = Tables.embeddings(s, d)
-    val probes = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-    val pairs = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        round(dot(col("pe"), col("embedding")) /
-          (sqrt(dot(col("pe"), col("pe"))) *
-           sqrt(dot(col("embedding"), col("embedding")))), 4).as("cos"))
-      .as[(Long, Long, Double)]
-    val local = pairs.mapPartitions { it =>
+    val local = probePairs(s, d).as[(Long, Long, Double)].mapPartitions { it =>
       // head of each queue = the WEAKEST kept candidate (lowest cos,
       // then highest vec_id) so one dequeue evicts it on overflow
       val weakestFirst = Ordering.by[(Long, Double), (Double, Long)] {
@@ -770,10 +751,27 @@ object TextOps extends QueryPack {
         h.iterator.map { case (vid, c) => (p, vid, c) }
       }
     }.toDF("probe_id", "vec_id", "cos")
-    AnnIndex.cosTopK(local, k)
-      .select(col("probe_id"), col("rn"), col("vec_id"), col("cos"))
-      .orderBy(col("probe_id"), col("rn"))
+    servedTopK(AnnIndex.cosTopK(local, k))
   }
+
+  /** q_similarity_topk's candidates: the 5 probe vectors (vec_id < 5,
+    * broadcast) against every other vector, with their round-4 cosine,
+    * as (probe_id, vec_id, cos). */
+  private def probePairs(s: SparkSession, d: String): DataFrame = {
+    val e = Tables.embeddings(s, d)
+    val probes = e.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+    e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+      .select(col("probe_id"), col("vec_id"),
+        round(dot(col("pe"), col("embedding")) /
+          (sqrt(dot(col("pe"), col("pe"))) *
+           sqrt(dot(col("embedding"), col("embedding")))), 4).as("cos"))
+  }
+
+  /** A [[AnnIndex.cosTopK]] result in q_similarity_topk's output shape. */
+  private def servedTopK(top: DataFrame): DataFrame =
+    top.select(col("probe_id"), col("rn"), col("vec_id"), col("cos"))
+      .orderBy(col("probe_id"), col("rn"))
 
   /** Corpus unigram LM score per doc: p(w) = count(w)/total_tokens over
     * the whole corpus, score = Σ tf·ln(p(w)) / Σ tf (unrounded). The token

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.ops.QueryPack
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** User-facing composition of the engine's training-data operators as
@@ -109,17 +110,18 @@ object TrainingPipeline {
           "[\\s\\u00A0]+", " ")))
       .withColumn("n_chars", length(col("text")))
 
-  /** Exact dedup: keep the lowest-id doc per md5(text), as one argmax
-    * aggregate per digest. Partial aggregation keeps one row per digest
-    * per partition, so whole rows shuffle only for distinct texts. */
+  /** Exact dedup: keep the lowest-id doc per md5(text). One window
+    * shuffle of whole rows, after a partial group limit that keeps one
+    * row per digest per partition. */
   def dedupExact(docs: DataFrame): DataFrame =
-    firstPerKey(docs.withColumn("text_md5", md5(col("text"))), "text_md5",
-      docs.columns)
+    firstPerKey(docs.withColumn("text_md5", md5(col("text"))), "text_md5")
 
-  /** The lowest-doc_id row per `key`, as its `cols`. */
-  private def firstPerKey(docs: DataFrame, key: String,
-                          cols: Seq[String]): DataFrame =
-    QueryPack.argmaxBy(docs, Seq(key), Seq(col("doc_id")), cols).drop(key)
+  /** The lowest-doc_id row per `key`, without `key`. A one-row
+    * [[QueryPack.topK]], not an argmax aggregate: its struct would carry
+    * every column, text included, and over mostly distinct texts the
+    * partial aggregate would merge almost nothing. */
+  private def firstPerKey(docs: DataFrame, key: String): DataFrame =
+    QueryPack.topK(docs, Seq(key), Seq(col("doc_id")), 1).drop(key, "rn")
 
   /** The canon digest ledger (q_dedup_incremental semantics): one
     * (digest) row per doc — md5 of the full text by default, or of the
@@ -144,7 +146,7 @@ object TrainingPipeline {
     val fresh = docs
       .withColumn("digest", graft.ops.TextOps.prefixDigest(prefixWords))
       .join(canonDigests, Seq("digest"), "left_anti")
-    firstPerKey(fresh, "digest", docs.columns.filterNot(_ == "digest"))
+    firstPerKey(fresh, "digest")
   }
 
   /** One crawl cycle of the incremental-dedup ledger, SNAPSHOT-COMMITTED
@@ -247,8 +249,9 @@ object TrainingPipeline {
     * maximizes `quality` (doc_id breaks ties) instead of
     * [[dedupNearCanonical]]'s lowest-id rule — the production finisher
     * when a quality score exists (pass e.g. the LM score column; the
-    * default keeps the longest doc). The pick is one argmax aggregate
-    * per comp; only (id, quality) rows move, never text. */
+    * default keeps the longest doc). The rank is one `row_number` window
+    * per comp — clusters are near-dup-radius-bounded, so the window is
+    * skew-free; only (id, quality) rows move, never text. */
   def dedupNearKeepBest(docs: DataFrame, quality: Column = col("n_chars"),
                         threshold: Double = 0.5,
                         maxIters: Int = 50): DataFrame =
@@ -263,11 +266,14 @@ object TrainingPipeline {
                                  maxIters: Int): DataFrame = {
     val comps = graft.ops.Components.connectedComponents(
       pairs.select(col("d1"), col("d2")), maxIters)
-    val best = QueryPack.argmaxBy(
-      comps.join(docs.select(col("doc_id").as("id"), quality.as("q")), Seq("id")),
-      Seq("comp"), Seq(col("q").desc, col("id")), Seq("id"))
-    // members missing from docs join no doc, so dropping them is moot
-    val losers = comps.join(best.select(col("id")), Seq("id"), "left_anti")
+    // every member but each comp's first is a loser: one window numbers
+    // them, where an argmax would need a second pass to find the rest
+    val w = Window.partitionBy(col("comp"))
+      .orderBy(col("q").desc, col("id"))
+    val losers = comps
+      .join(docs.select(col("doc_id").as("id"), quality.as("q")), Seq("id"))
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") =!= 1)
       .select(col("id").as("doc_id"))
     docs.join(losers, Seq("doc_id"), "left_anti")
   }

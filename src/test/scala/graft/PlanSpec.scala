@@ -821,24 +821,29 @@ class PlanSpec extends AnyFunSuite {
 
   test("argmax keys pick with a mergeable aggregate, not a window") {
     // QueryPack.argmaxBy: no Window ranks the pick's group, and the
-    // partial min(struct) runs before the exchange to the final one
-    def pinned(key: String, pickGroup: String, mapSide: Boolean): Unit = {
+    // partial min/max(struct) runs before the exchange to the final one
+    def pinned(key: String, pickGroup: String, mapSide: Boolean): String = {
       val s = finalPlan(key).split("== Initial Plan ==")(0)
       assert(!s.contains(s"windowspecdefinition($pickGroup#"),
         s"$key ranks its $pickGroup pick with a window:\n$s")
       if (mapSide) {
         val lines = s.linesIterator.toIndexedSeq
-        val fin = lines.indexWhere(_.contains("functions=[min(struct("))
-        val part = lines.indexWhere(_.contains("partial_min(struct("), fin)
+        val fin = lines.indexWhere(_.matches(".*functions=\\[m(in|ax)\\(struct\\(.*"))
+        val part = lines.indexWhere(_.matches(".*partial_m(in|ax)\\(struct\\(.*"), fin)
         assert(fin >= 0 && part > fin &&
             lines.slice(fin, part).exists(_.contains("Exchange hashpartitioning")),
           s"$key: no partial argmax below the exchange:\n$s")
       }
+      s
     }
     pinned("q_median_mode", "l_returnflag", mapSide = true)
     pinned("q_dedup_cluster_rep", "comp", mapSide = true)
     pinned("q_lang_id", "doc_id", mapSide = true)
-    pinned("q_ann_ivf", "vec_id", mapSide = true)
+    // best cosine first is max's own order: the |V| x nLists fan-out
+    // carries cc with no null or NaN flag
+    val ivf = pinned("q_ann_ivf", "vec_id", mapSide = true)
+    assert(ivf.contains("partial_max(struct(") && !ivf.contains("isnan"),
+      s"q_ann_ivf's assignment struct carries flags:\n$ivf")
     // the recall sweep's assignment runs inside its checkpointed candidate
     // build (the q_ann_ivf code path), so only the window's absence shows
     pinned("q_ann_recall", "vec_id", mapSide = false)

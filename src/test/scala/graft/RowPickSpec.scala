@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** `QueryPack.topK` and `QueryPack.argmaxBy` against the inline
   * `row_number() over (partitionBy(g) orderBy(order))` form on a generated
   * frame: ties on the first key, mixed `asc`/`desc` keys, a string `asc`
-  * key (the q_lang_id vote), null and NaN keys in both directions, long
-  * extremes, one-row groups, and `k` larger than any group. Every order
+  * key (the q_lang_id vote), string and date `desc` keys, null and NaN
+  * keys in both directions, long extremes, one-row groups, and `k` larger
+  * than any group. Every order
   * ends in a unique key, so the window's pick is deterministic. */
 class RowPickSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -22,7 +23,8 @@ class RowPickSpec extends AnyFunSuite {
     StructField("l", LongType),
     StructField("x", DoubleType),
     StructField("s", StringType),
-    StructField("id", LongType, nullable = false)))
+    StructField("id", LongType, nullable = false),
+    StructField("d", DateType)))
 
   /** 40 groups of 1-20 rows drawn from small domains (so every key ties),
     * plus five one-row groups; spread over 4 partitions so the argmax's
@@ -33,12 +35,15 @@ class RowPickSpec extends AnyFunSuite {
       Double.PositiveInfinity, -0.0, 0.0, 1.5, -2.5, 3.0)
     val ls: Seq[Any] = Seq(null, Long.MinValue, Long.MaxValue, -1L, 0L, 7L)
     val ss = Seq(null, "de", "en", "fr")
+    val ds = Seq(null, java.sql.Date.valueOf("1970-01-01"),
+      java.sql.Date.valueOf("2024-02-29"), java.sql.Date.valueOf("2026-10-19"))
     var id = 0L
     val rows = ((0 until 40).flatMap(g => Seq.fill(1 + rnd.nextInt(20))(g)) ++
         (100 until 105)).map { g =>
       id += 1
       Row(g, rnd.nextInt(3), ls(rnd.nextInt(ls.size)),
-        xs(rnd.nextInt(xs.size)), ss(rnd.nextInt(ss.size)), id * 7919 % 10007)
+        xs(rnd.nextInt(xs.size)), ss(rnd.nextInt(ss.size)), id * 7919 % 10007,
+        ds(rnd.nextInt(ds.size)))
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
   }
@@ -65,7 +70,10 @@ class RowPickSpec extends AnyFunSuite {
     "double desc, nulls first" -> Seq(col("x").desc_nulls_first, col("id")),
     "long desc, nulls last" -> Seq(col("l").desc, col("id")),
     "long desc, nulls first" -> Seq(col("l").desc_nulls_first, col("id")),
-    "string asc, nulls last" -> Seq(col("s").asc_nulls_last, col("id").desc))
+    "string asc, nulls last" -> Seq(col("s").asc_nulls_last, col("id").desc),
+    "string desc key" -> Seq(col("s").desc, col("a"), col("l").desc, col("id")),
+    "date desc, nulls first" -> Seq(col("d").desc_nulls_first, col("x"), col("id")),
+    "date desc key" -> Seq(col("d").desc, col("x").desc, col("id")))
 
   for ((name, order) <- orders) test(s"argmaxBy == row_number pick: $name") {
     val got = QueryPack.argmaxBy(frame, Seq("g"), order, keep)
@@ -92,10 +100,22 @@ class RowPickSpec extends AnyFunSuite {
     assert(!got.queryExecution.executedPlan.toString.contains("Window"))
   }
 
-  test("argmaxBy refuses a descending key it cannot reverse") {
-    val e = intercept[IllegalArgumentException](
-      QueryPack.argmaxBy(frame, Seq("g"), Seq(col("s").desc), keep))
-    assert(e.getMessage.contains("no descending struct key for s"))
+  test("argmaxBy uses the aggregate with the fewer struct fields") {
+    // x desc (nulls last) is max's own order: no null or NaN flag
+    def plan(order: Column*) = QueryPack.argmaxBy(frame, Seq("g"), order,
+      Seq("id")).queryExecution.analyzed.toString
+    val ivf = plan(col("x").desc, col("id"))
+    assert(ivf.contains("max(struct(") && !ivf.contains("isnan"), ivf)
+    // ~a, x, id under min against a, x's null and NaN flags, -x, ~id
+    // under max
+    val mode = plan(col("a").desc, col("x"), col("id"))
+    assert(mode.contains("min(struct(") && !mode.contains("isnan"), mode)
+  }
+
+  test("argmaxBy refuses an order that neither aggregate can reverse") {
+    val e = intercept[IllegalArgumentException](QueryPack.argmaxBy(frame,
+      Seq("g"), Seq(col("s").desc, lower(col("s")), col("id")), keep))
+    assert(e.getMessage.contains("no struct order"))
   }
 
   for (k <- Seq(1, 3, 25)) test(s"topK == row_number <= $k") {

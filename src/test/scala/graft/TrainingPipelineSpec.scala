@@ -94,6 +94,9 @@ class TrainingPipelineSpec extends AnyFunSuite {
     assert(out.select(md5(col("text"))).distinct().count() == out.count())
     // fixture has no exact dups, so nothing should be dropped
     assert(out.count() == docs.count())
+    // the pick is a one-row window behind its partial group limit
+    val plan = out.queryExecution.executedPlan.toString
+    assert(plan.contains("WindowGroupLimit"), plan)
   }
 
   test("incremental dedup drops canon-known digests and in-batch copies, keeps the rest") {
