@@ -202,8 +202,9 @@ object ScaleSmoke {
   /** Auto-gated embedding dedup across three decades (r18, VERDICT r17
     * item 5): the fixed-gate q_dedup_embed decade row measured 99.8×
     * pairs at 10× (the background-tail quadratic); this mode runs
-    * [[graft.ops.PipelineOps.embedNearDupAuto]] — signBits/minCos sized
-    * from the corpus itself — at sf0.1, sf1, and sf10 and prints the
+    * [[graft.ops.PipelineOps.embedNearDup]] at the signBits/minCos that
+    * [[graft.ops.PipelineOps.sizeEmbedGate]] sizes from the corpus itself
+    * — at sf0.1, sf1, and sf10 and prints the
     * chosen gates, pair counts, and seconds. PASS shape: pair growth
     * ≈ linear in corpus size (the gate outruns the tail).
     * Run with `runMain graft.ScaleSmoke embedAuto`. */

@@ -281,7 +281,7 @@ object Aggregates extends QueryPack {
     // Median + deterministic mode per group. Spark's built-in mode() is
     // explicitly non-deterministic on ties, so the mode here is the
     // pinned-tiebreak form (highest count, then smallest value) computed
-    // as a groupBy + argmax ([[quantityMode]]).
+    // as a groupBy + argmax.
     // Median interpolates (quantile_cont semantics in both engines);
     // quantities are integral doubles so the midpoint is exact.
     // SCALE SWAP (SCALE.md "median / percentiles"): exact median() buffers
@@ -296,7 +296,14 @@ object Aggregates extends QueryPack {
       val med = li.groupBy(col("l_returnflag"))
         .agg(round(median(col("l_quantity")), 4).as("med_qty"),
              count(lit(1)).as("n"))
-      med.join(quantityMode(li), Seq("l_returnflag"))
+      val mode = QueryPack.argmaxBy(
+          li.groupBy(col("l_returnflag"), col("l_quantity"))
+            .agg(count(lit(1)).as("cnt")),
+          Seq("l_returnflag"), Seq(col("cnt").desc, col("l_quantity")),
+          Seq("l_quantity", "cnt"))
+        .select(col("l_returnflag"), col("l_quantity").as("mode_qty"),
+                col("cnt").as("mode_n"))
+      med.join(mode, Seq("l_returnflag"))
         .orderBy(col("l_returnflag"))
     },
 
@@ -393,54 +400,6 @@ object Aggregates extends QueryPack {
         .orderBy(col("l_orderkey"), col("l_linenumber"))
     }
   )
-
-  /** The IMPLEMENTED corpus-scale swap for q_agg_percentiles (SCALE.md
-    * "median / percentiles"): the exact `percentile` aggregate buffers
-    * every group value in one final-stage buffer; `approx_percentile`
-    * (t-digest) keeps a bounded sketch per group and its partials merge
-    * map-side, so the plan is an ordinary two-phase hash agg at any
-    * group size. Same output schema as the key; AggSwapSpec pins it
-    * within sketch tolerance of the exact form and asserts the exact
-    * buffering aggregate is gone from the plan. */
-  def aggPercentilesApprox(s: SparkSession, d: String): DataFrame = {
-    Tables.lineitem(s, d)
-      .groupBy(col("l_returnflag"))
-      .agg(expr(
-        "approx_percentile(l_extendedprice, array(0.5D, 0.9D, 0.99D), 100000)")
-             .as("ps"),
-           count(lit(1)).as("n"))
-      .select(col("l_returnflag"),
-              round(element_at(col("ps"), 1), 4).as("p50"),
-              round(element_at(col("ps"), 2), 4).as("p90"),
-              round(element_at(col("ps"), 3), 4).as("p99"),
-              col("n"))
-      .orderBy(col("l_returnflag"))
-  }
-
-  /** The mode of l_quantity per return flag, shared by q_median_mode and
-    * [[medianModeApprox]]: highest count, then smallest value. */
-  private def quantityMode(li: DataFrame): DataFrame =
-    QueryPack.argmaxBy(
-        li.groupBy(col("l_returnflag"), col("l_quantity"))
-          .agg(count(lit(1)).as("cnt")),
-        Seq("l_returnflag"), Seq(col("cnt").desc, col("l_quantity")),
-        Seq("l_quantity", "cnt"))
-      .select(col("l_returnflag"), col("l_quantity").as("mode_qty"),
-              col("cnt").as("mode_n"))
-
-  /** The IMPLEMENTED corpus-scale swap for q_median_mode: the exact
-    * `median` becomes an `approx_percentile(…, 0.5)` sketch; the mode is
-    * the key's own mergeable argmax, so no Window appears anywhere in the
-    * plan. */
-  def medianModeApprox(s: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(s, d)
-    val med = li.groupBy(col("l_returnflag"))
-      .agg(round(expr("approx_percentile(l_quantity, 0.5D, 100000)"), 4)
-             .as("med_qty"),
-           count(lit(1)).as("n"))
-    med.join(quantityMode(li), Seq("l_returnflag"))
-      .orderBy(col("l_returnflag"))
-  }
 
   def oracles: Map[String, String] = Map(
     "q_agg_global" -> """

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -1279,100 +1279,6 @@ object Analytics extends QueryPack {
            max(col("sec")).as("end_sec"),
            (max(col("sec")) - min(col("sec"))).as("dur_sec"),
            outd(sum(dec(col("value")))).as("sum_value"))
-  }
-
-  /** The IMPLEMENTED corpus-scale swap for q_rfm (SCALE.md): the three
-    * global-order `ntile(4)` windows become one `approx_percentile`
-    * cutpoint agg (a 1-row frame) broadcast back onto the customer grain
-    * — arithmetic binning, no global sort anywhere. Trades exact
-    * equal-size quartiles for fixed sketch boundaries: customers at a
-    * boundary can land one bucket off the exact key, which is the
-    * documented trade; AggSwapSpec bounds the disagreement rate and
-    * asserts the no-Window plan. Same output schema as the key.
-    * Scores keep ntile's DESC orientation: 1 = top quartile. */
-  def rfmApprox(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.orders(s, d)
-      .groupBy(col("o_custkey").as("custkey"))
-      .agg(max(col("o_orderdate")).as("last_order"),
-           count(lit(1)).as("frequency"),
-           outd(sum(dec(col("o_totalprice")))).as("monetary"))
-    val cuts = base.agg(
-      expr("approx_percentile(CAST(last_order AS LONG), " +
-           "array(0.25D, 0.5D, 0.75D), 100000)").as("rc"),
-      expr("approx_percentile(frequency, array(0.25D, 0.5D, 0.75D), 100000)")
-        .as("fc"),
-      expr("approx_percentile(monetary, array(0.25D, 0.5D, 0.75D), 100000)")
-        .as("mc"))
-    // DESC ntile semantics: bucket 1 holds the highest values, so the
-    // score counts how many ASCENDING cutpoints the value clears.
-    def score(v: Column, c: Column): Column =
-      when(v >= element_at(c, 3), 1)
-        .when(v >= element_at(c, 2), 2)
-        .when(v >= element_at(c, 1), 3)
-        .otherwise(4)
-    base.crossJoin(broadcast(cuts))
-      .withColumn("r_score", score(col("last_order").cast("long"), col("rc")))
-      .withColumn("f_score", score(col("frequency"), col("fc")))
-      .withColumn("m_score", score(col("monetary"), col("mc")))
-      .withColumn("segment",
-        when(col("r_score") === 1 && col("f_score") === 1, lit("champion"))
-          .when(col("r_score") <= 2 && col("f_score") <= 2, lit("loyal"))
-          .when(col("r_score") >= 3 && col("f_score") <= 2, lit("at_risk"))
-          .otherwise(lit("other")))
-      .select(col("custkey"), col("last_order"), col("frequency"),
-              col("monetary"), col("r_score"), col("f_score"),
-              col("m_score"), col("segment"))
-      .orderBy(col("custkey"))
-  }
-
-  /** The IMPLEMENTED corpus-scale swap for q_auc (SCALE.md q_auc row;
-    * exact form: the collapse-then-sweep at Analytics "q_auc" above).
-    * With CONTINUOUS scores |distinct scores| ≈ |rows|, so the exact
-    * rank-sum sweep's global-order window would sort a fact-sized frame.
-    * Quantizing the score to a fixed `quantum` bounds the sweep domain
-    * BY CONSTRUCTION (range/quantum buckets — independent of row count):
-    * one fact-sized two-phase hash agg collapses to the bucket grain,
-    * the bounded bucket frame rides to the driver (the q_sort_multi
-    * O(|buckets|) offsets discipline), the strictly-below negative
-    * prefix is a plain driver scan, and the readout aggregates the
-    * enriched LocalRelation — no Window, no Sort, no shuffle past the
-    * collapse. Quantization error: scores inside one quantum become ties
-    * and take the standard half credit, so |Δauc| is bounded by the pair
-    * mass that lands within `quantum` of each other. */
-  def aucApprox(s: SparkSession, d: String,
-                quantum: Double = 0.1, maxBuckets: Int = 4096): DataFrame = {
-    import s.implicits._
-    val scored = Tables.events(s, d)
-      .select(col("value").cast("double").as("value"),
-        when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"))
-    // Bound the driver grid BY CONSTRUCTION (r16 verdict nit): the grid is
-    // range/quantum buckets — fine for a bounded score, UNBOUNDED for an
-    // arbitrary column. One cheap single-column min/max pre-pass coarsens
-    // the quantum so the grid never exceeds maxBuckets (+1); a sane range
-    // keeps the requested quantum and byte-identical buckets.
-    val mm = scored.agg(min(col("value")), max(col("value"))).head
-    val q =
-      if (mm.isNullAt(0)) quantum
-      else math.max(quantum, (mm.getDouble(1) - mm.getDouble(0)) / maxBuckets)
-    val buckets = scored
-      .select(floor(col("value") / q).cast("long").as("b"), col("y"))
-      .groupBy(col("b"))
-      .agg(sum(col("y")).as("pos"), (count(lit(1)) - sum(col("y"))).as("neg"))
-      .collect()
-      .sortBy(_.getLong(0))
-    var cum = 0L
-    val enriched = buckets.map { r =>
-      val out = (r.getLong(0), r.getAs[Long]("pos"), r.getAs[Long]("neg"), cum)
-      cum += r.getAs[Long]("neg")
-      out
-    }.toSeq
-    enriched.toDF("b", "pos", "neg", "cum_neg")
-      .agg(
-        round(sum(col("pos") * (lit(2) * col("cum_neg") + col("neg")))
-            .cast("double") /
-          (lit(2) * sum(col("pos")) * sum(col("neg"))).cast("double"), 4)
-          .as("auc"),
-        sum(col("pos")).as("n_pos"), sum(col("neg")).as("n_neg"))
   }
 
   def oracles: Map[String, String] = Map(

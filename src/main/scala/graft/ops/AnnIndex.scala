@@ -238,16 +238,13 @@ object AnnIndex {
     * replaces its centroid with two (the first keeps the old cid, the
     * second takes a fresh id above the current max), and ONLY the hot
     * lists' vectors re-file — cold lists are untouched rows in the
-    * rewritten snapshot. The PQ layer, when present, re-encodes exactly
-    * the moved vectors against their new residuals under the PERSISTED
-    * codebook (codebook drift is [[rebuild]]+buildPq territory;
-    * AnnPqSpec measures recall across the split).
+    * rewritten snapshot.
     *
     * Same single-CAS discipline as [[rebuild]]: the lists rewrite
     * targets exactly base+1 and returns None on a lost race (a racing
-    * [[append]] is never dropped); centroids and codes follow after the
-    * lists CAS lands (the one-commit windows only misroute probes, not
-    * correctness, and close at the next statement). Returns
+    * [[append]] is never dropped); centroids follow after the lists CAS
+    * lands (the one-commit window only misroutes probes, not
+    * correctness, and closes at the next statement). Returns
     * Some(new lists snapshot id), Some(base) when nothing is hot. */
   def rebalance(spark: SparkSession, root: String,
                 maxSkew: Double = 2.0): Option[Long] = {
@@ -326,25 +323,6 @@ object AnnIndex {
     val newCents = splits.map(_._2)
       .foldLeft(cents.filter(!col("cid").isin(splitCids: _*)))(_ unionByName _)
     SnapshotLake.commit(newCents, s"$root/centroids", append = false)
-    // PQ layer catch-up: re-encode exactly the moved vectors' residuals
-    val codesT = s"$root/pq/codes"
-    if (SnapshotLake.latest(spark, codesT).isDefined) {
-      val cb = SnapshotLake.readLatest(spark, s"$root/pq/codebook")
-      val m = cb.agg(countDistinct(col("sub"))).head.getLong(0).toInt
-      val moved = splits.map(_._3).reduce(_ unionByName _)
-      val resid = withResiduals(moved,
-        splits.map(_._2).reduce(_ unionByName _))
-      val movedCodes = encodePq(
-          resid.select(col("vec_id"), col("rvec").as("vec")),
-          groupCodebook(cb), m)
-        .join(resid.select(col("cid"), col("vec_id"), col("nrm")),
-          Seq("vec_id"))
-        .select(col("cid"), col("vec_id"), col("codes"), col("nrm"))
-      val keep = SnapshotLake.readLatest(spark, codesT)
-        .filter(!col("cid").isin(splitCids: _*))
-      SnapshotLake.commit(keep.unionByName(movedCodes)
-        .repartitionByRange(col("cid")), codesT, append = false)
-    }
     Some(base + 1)
   }
 
@@ -362,287 +340,12 @@ object AnnIndex {
     * exactly base+1 and returns None on a lost race, so a racing
     * [[append]] is never dropped — the caller re-invokes on the new
     * base. Centroids are untouched (an emptied list simply serves
-    * nothing). The PQ layer, when present, drops the same ids AFTER the
-    * lists CAS lands (the standard follow-the-authority discipline of
-    * this file; the one-commit window where a stale code survives can
-    * only waste a shortlist slot — the exact re-rank joins the lists
-    * table, where the vector is already gone). Returns Some(new lists
-    * snapshot id), Some(base) when no id is present. */
+    * nothing). Returns Some(new lists snapshot id), Some(base) when no
+    * id is present. */
   def delete(spark: SparkSession, root: String,
-             ids: DataFrame): Option[Long] = {
-    val listsT = s"$root/lists"
-    val keys = ids.select(col("vec_id"))
-    SnapshotLake.deleteMatching(spark, listsT, keys, Seq("vec_id")) match {
-      case None => None
-      case some =>
-        val codesT = s"$root/pq/codes"
-        if (SnapshotLake.latest(spark, codesT).isDefined) {
-          // codes maintenance is single-writer by the same assumption
-          // appendPq makes; a bounded retry absorbs its own CAS noise
-          var attempts = 0
-          var done = false
-          while (!done && attempts < 8) {
-            done = SnapshotLake.deleteMatching(spark, codesT, keys,
-              Seq("vec_id")).isDefined
-            attempts += 1
-          }
-          require(done,
-            s"PQ code removal lost $attempts CAS races at $codesT — " +
-            "a concurrent codes writer is live; re-run delete")
-        }
-        some
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // Product quantization (r16): compressed-domain serving. At corpus
-  // scale the lists table is the cost — d doubles + norm per vector
-  // (64 dims = 512 B) — and every probe batch re-reads nProbe/nLists of
-  // it. PQ stores m small codes per vector instead (m=8 → ~8 B, a ~60×
-  // scan-size cut) and scores probes against the codes with an
-  // asymmetric-distance LUT: per probe, one m×nCodes table of partial
-  // inner products against the codebook, then each candidate costs m
-  // array lookups + adds instead of d multiplies. Serving is two-stage
-  // (the production IVF-PQ shape): ADC shortlist over the compressed
-  // codes, exact re-rank of the top k·refine against the full vectors —
-  // the full-vector read shrinks from "every candidate in the probed
-  // lists" to "the shortlist".
-  // ------------------------------------------------------------------
-
-  /** Per-(vector, subspace) best code: L2² argmin over the broadcast
-    * per-sub codebook, in-row (no explode of the candidate set), ties to
-    * the smaller code. `subs` = (vec_id, sub, svec); `cbBySub` = (sub,
-    * codes ARRAY<STRUCT<code, carr>>). */
-  private def assignCodes(subs: DataFrame, cbBySub: DataFrame): DataFrame =
-    subs.join(broadcast(cbBySub), Seq("sub"))
-      .withColumn("best", array_min(transform(col("codes"), c => struct(
-        aggregate(zip_with(col("svec"), c.getField("carr"),
-          (x, y) => (x - y) * (x - y)), lit(0.0), (a, b) => a + b).as("d2"),
-        c.getField("code").as("code")))))
-      .select(col("vec_id"), col("sub"),
-        col("best").getField("code").as("code"))
-
-  /** Explode (vec_id, vec) into (vec_id, sub, svec) — `m` contiguous
-    * subspaces of `size(vec)/m` dims each. */
-  private def subvectors(vecs: DataFrame, m: Int): DataFrame = {
-    val sw = (size(col("vec")) / m).cast("int")
-    vecs.select(col("vec_id"), col("vec"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub"))
-      .select(col("vec_id"), col("sub"),
-        slice(col("vec"), col("sub") * sw + 1, sw).as("svec"))
-  }
-
-  /** Group a (sub, code, carr) codebook into broadcastable per-sub rows:
-    * (sub, codes ARRAY<STRUCT<code, carr>> sorted by code). */
-  private def groupCodebook(cb: DataFrame): DataFrame =
-    cb.groupBy(col("sub"))
-      .agg(array_sort(collect_list(struct(col("code"), col("carr"))))
-        .as("codes"))
-
-  /** Train an m-subspace, nCodes-per-subspace product-quantizer codebook
-    * under the trainCentroids discipline: rank-seeded init (the sample's
-    * nCodes smallest vec_ids, per subspace), `rounds` Lloyd
-    * re-estimation rounds (PQ codebooks need more than the coarse
-    * quantizer's single round — they carry the fine structure), L2
-    * assignment on subvectors (the standard PQ metric — the codebook
-    * approximates the vectors themselves; serving computes inner
-    * products against the reconstruction), round-6 means from exact
-    * decimal sums, ties to the smaller code. A code that loses all its
-    * members in a round KEEPS its previous centroid (the m×nCodes shape
-    * is structural — buildPq requires it). Returns (sub INT, code INT,
-    * carr ARRAY<DOUBLE>). Requires size(vec) % m == 0 (fails in slice
-    * arithmetic otherwise — callers validate). */
-  def trainPq(emb: DataFrame, m: Int, nCodes: Int,
-              sampleMod: Int = 1, rounds: Int = 4): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val sample = vecsOf(emb).filter(col("vec_id") % sampleMod === 0)
-      .select(col("vec_id"), col("vec"))
-    // trainPq is public: validate divisibility HERE, not only in buildPq
-    // (r16 advisor item) — a non-divisible dim would otherwise floor the
-    // subvector width and silently TRUNCATE every vector's tail dims out
-    // of the codebook (silent recall corruption, not a loud failure).
-    val dTrain = sample.select(size(col("vec"))).head.getInt(0)
-    require(dTrain % m == 0,
-      s"vector dim $dTrain not divisible by m=$m subspaces")
-    val sw = (size(col("vec")) / m).cast("int")
-    var cb = sample.orderBy(col("vec_id")).limit(nCodes)
-      .select(
-        (row_number().over(Window.orderBy(col("vec_id"))) - 1)
-          .cast("int").as("code"),
-        col("vec"))
-      .select(col("code"), col("vec"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub"))
-      .select(col("sub"), col("code"),
-        transform(slice(col("vec"), col("sub") * sw + 1, sw),
-          v => round(v, 6)).as("carr"))
-      .localCheckpoint()
-    // the subvector grain is reused every round — cut its lineage once
-    val subs = subvectors(sample, m).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val means = assignCodes(subs, groupCodebook(cb))
-        .join(subs, Seq("vec_id", "sub"))
-        .select(col("sub"), col("code"),
-          posexplode(col("svec")).as(Seq("pos", "v")))
-        .groupBy(col("sub"), col("code"), col("pos"))
-        .agg(round(sum(col("v").cast(org.apache.spark.sql.types
-            .DecimalType(28, 10))).cast("double") /
-          count(lit(1)).cast("double"), 6).as("c"))
-        .groupBy(col("sub"), col("code"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-          pc => pc.getField("c")).as("mcarr"))
-      cb = cb.withColumnRenamed("carr", "prev")
-        .join(means, Seq("sub", "code"), "left")
-        .select(col("sub"), col("code"),
-          coalesce(col("mcarr"), col("prev")).as("carr"))
-        .localCheckpoint()
-    }
-    cb
-  }
-
-  /** Residuals of the lists corpus against its own coarse centroids:
-    * (cid, vec_id, vec, nrm, rvec = vec − centroid[cid]). Residual
-    * encoding is what makes IVF-PQ work — the coarse position is already
-    * paid for by cid, so the codes spend their bits on the fine
-    * structure. */
-  private def withResiduals(corpus: DataFrame, cents: DataFrame): DataFrame =
-    corpus.join(broadcast(cents), Seq("cid"))
-      .withColumn("rvec", zip_with(col("vec"), col("carr"),
-        (x, c) => x - c))
-      .drop("carr")
-
-  /** Encode (vec_id, vec) rows as (vec_id, codes ARRAY<INT> length m)
-    * against a trained codebook. */
-  private def encodePq(vecs: DataFrame, cbBySub: DataFrame,
-                       m: Int): DataFrame =
-    assignCodes(subvectors(vecs, m), cbBySub)
-      .groupBy(col("vec_id"))
-      .agg(transform(array_sort(collect_list(struct(col("sub"), col("code")))),
-        sc => sc.getField("code")).as("codes"))
-
-  /** Build the PQ layer over an ALREADY-BUILT index root: train the
-    * codebook on the corpus's RESIDUALS against its coarse centroids
-    * (the IVF-PQ form — cid already encodes the coarse position, so the
-    * codes spend their bits on the fine structure), encode every
-    * vector's residual, and commit `<root>/pq/codebook` (sub, code,
-    * carr) and `<root>/pq/codes` (cid, vec_id, codes, nrm — cid kept so
-    * probes prune the codes table exactly like the lists table;
-    * range-laid-out by cid). Full-replace commits: the PQ layer is a
-    * FUNCTION of the lists snapshot + centroids, rebuilt by re-running
-    * buildPq (or caught up incrementally by [[appendPq]]). Returns the
-    * codes snapshot id. */
-  def buildPq(spark: SparkSession, root: String, m: Int, nCodes: Int,
-              sampleMod: Int = 1, rounds: Int = 4): Long = {
-    val cents = SnapshotLake.readLatest(spark, s"$root/centroids")
-    val corpus = withResiduals(
-      SnapshotLake.readLatest(spark, s"$root/lists"), cents)
-    val d = corpus.select(size(col("vec"))).head.getInt(0)
-    require(d % m == 0, s"vector dim $d not divisible by m=$m subspaces")
-    val cb = trainPq(
-      corpus.select(col("vec_id"), col("rvec").as("embedding")),
-      m, nCodes, sampleMod, rounds).localCheckpoint()
-    val ncb = cb.count()
-    require(ncb == m.toLong * nCodes,
-      s"trainPq produced $ncb codebook entries, expected ${m * nCodes} — " +
-      "corpus sample too small or an empty code; not committing")
-    SnapshotLake.commit(cb, s"$root/pq/codebook", append = false)
-    val codes = encodePq(
-        corpus.select(col("vec_id"), col("rvec").as("vec")),
-        groupCodebook(cb), m)
-      .join(corpus.select(col("cid"), col("vec_id"), col("nrm")),
-        Seq("vec_id"))
-      .select(col("cid"), col("vec_id"), col("codes"), col("nrm"))
-      .repartitionByRange(col("cid"))
-    SnapshotLake.commit(codes, s"$root/pq/codes", append = false)
-  }
-
-  /** Incremental PQ maintenance after [[append]]: encode exactly the
-    * lists rows not yet in the codes table (anti-join on vec_id — one
-    * maintenance-time shuffle, self-healing regardless of how many
-    * appends landed since the last catch-up) against the PERSISTED
-    * codebook, and append one snapshot. Codebook and history stay
-    * byte-stable; like [[append]], accumulated drift is [[rebuild]] +
-    * buildPq territory. Returns the new codes snapshot id (None if
-    * already caught up). */
-  def appendPq(spark: SparkSession, root: String): Option[Long] = {
-    val lists = SnapshotLake.readLatest(spark, s"$root/lists")
-    val codesT = s"$root/pq/codes"
-    val have = SnapshotLake.readLatest(spark, codesT).select(col("vec_id"))
-    val missing = lists.join(have, Seq("vec_id"), "left_anti")
-    if (missing.isEmpty) return None
-    val cents = SnapshotLake.readLatest(spark, s"$root/centroids")
-    val cb = SnapshotLake.readLatest(spark, s"$root/pq/codebook")
-    val m = cb.agg(countDistinct(col("sub"))).head.getLong(0).toInt
-    val resid = withResiduals(missing, cents)
-    val codes = encodePq(resid.select(col("vec_id"), col("rvec").as("vec")),
-        groupCodebook(cb), m)
-      .join(resid.select(col("cid"), col("vec_id"), col("nrm")),
-        Seq("vec_id"))
-      .select(col("cid"), col("vec_id"), col("codes"), col("nrm"))
-      .repartitionByRange(col("cid"))
-    Some(SnapshotLake.commit(codes, codesT, append = true))
-  }
-
-  /** Two-stage IVF-PQ serving: route probes to `nProbe` lists (same
-    * centroid geometry as [[topK]]), ADC-score the probed lists'
-    * COMPRESSED codes (per probe: one m×nCodes LUT of partial inner
-    * products against the RESIDUAL codebook, then m lookups+adds per
-    * candidate plus the per-list coarse term <probe, centroid> — the
-    * reconstruction is centroid + residual codewords), shortlist the top
-    * k·`refine` per probe, and re-rank the shortlist EXACTLY against the
-    * full vectors (round-4 cosine, ties to smaller vec_id — byte-identical
-    * discipline to [[topK]]). The full-vector table is touched only for
-    * the shortlist, joined on (cid, vec_id) so the range layout prunes.
-    * `nProbe = nLists` with `refine` ≥ corpus/k degrades to exactly
-    * [[topK]]'s brute-force identity (AnnPqSpec pins it). ADC cosine is
-    * approximate (reconstruction-level); the refine stage restores exact
-    * scores, so `refine` trades recall against full-vector reads. */
-  def topKPq(spark: SparkSession, root: String, queries: DataFrame,
-             nProbe: Int, k: Int, refine: Int = 4): DataFrame = {
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    val cents = SnapshotLake.readLatest(spark, s"$root/centroids")
-    val cb = SnapshotLake.readLatest(spark, s"$root/pq/codebook")
-    val codes = SnapshotLake.readLatest(spark, s"$root/pq/codes")
-    val lists = SnapshotLake.readLatest(spark, s"$root/lists")
-    val m = cb.agg(countDistinct(col("sub"))).head.getLong(0).toInt
-    // probe-side dimension gates: wrong-dim queries fail loudly (not a
-    // null-padded cosine), and the in-row LUT slices assume d % m == 0
-    val d = centroidDim(cents)
-    require(d % m == 0, s"index dim $d not divisible by m=$m subspaces")
-    val checkedQ = queries
-      .withColumn("pe", checkedVec(col("pe"), d, "probe"))
-    // one-row broadcast codebook: [sub][code] -> carr
-    val cbRow = groupCodebook(cb)
-      .agg(array_sort(collect_list(struct(col("sub"),
-        transform(col("codes"), c => c.getField("carr")).as("arrs"))))
-        .as("cbs"))
-    val probes = routeProbes(checkedQ, cents, nProbe)
-      // the coarse term, once per (probe, list): <probe, centroid[cid]>
-      .join(broadcast(cents), Seq("cid"))
-      .withColumn("qc", dotD(col("pe"), col("carr")))
-      .drop("carr")
-      // the ADC lookup table, built in-row per (probe, list) grain:
-      // lut[sub][code] = <probe_subvector, residual_codebook[sub][code]>
-      .crossJoin(broadcast(cbRow))
-      .withColumn("lut", transform(col("cbs"), s0 =>
-        transform(s0.getField("arrs"), carr =>
-          aggregate(zip_with(
-            slice(col("pe"),
-              s0.getField("sub") * (size(col("pe")) / m).cast("int") + 1,
-              (size(col("pe")) / m).cast("int")),
-            carr, (x, y) => x * y), lit(0.0), (a, b) => a + b))))
-      .drop("cbs")
-    val scoredAdc = probes.join(codes, Seq("cid"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("adc",
-        (col("qc") + aggregate(zip_with(col("lut"), col("codes"),
-          (l, c) => element_at(l, c + 1)), lit(0.0), (a, b) => a + b)) /
-        (col("pnrm") * col("nrm")))
-    val shortlist = QueryPack.topK(scoredAdc, Seq("probe_id"),
-        Seq(col("adc").desc, col("vec_id")), k * refine, "arn")
-      .select(col("probe_id"), col("pe"), col("pnrm"), col("cid"),
-        col("vec_id"))
-    serveTopK(shortlist.join(lists, Seq("cid", "vec_id")), k)
-  }
+             ids: DataFrame): Option[Long] =
+    SnapshotLake.deleteMatching(spark, s"$root/lists",
+      ids.select(col("vec_id")), Seq("vec_id"))
 
   /** Serve cosine top-`k` for a (probe_id, pe ARRAY<DOUBLE>) query frame
     * from the persisted index: broadcast the centroid table, rank each
@@ -657,15 +360,8 @@ object AnnIndex {
     val lists = SnapshotLake.readLatest(spark, s"$root/lists")
     val checkedQ = queries
       .withColumn("pe", checkedVec(col("pe"), centroidDim(cents), "probe"))
-    serveTopK(routeProbes(checkedQ, cents, nProbe).join(lists, Seq("cid"))
-      .filter(col("vec_id") =!= col("probe_id")), k)
-  }
-
-  /** Each probe of a (probe_id, pe) frame routed to its `nProbe` best
-    * lists (the withClist order), as (probe_id, pe, pnrm, cid). */
-  private def routeProbes(checkedQ: DataFrame, cents: DataFrame,
-                          nProbe: Int): DataFrame =
-    withClist(
+    // each probe routed to its `nProbe` best lists (the withClist order)
+    val routed = withClist(
         checkedQ.select(col("probe_id").as("vec_id"), col("pe").as("vec"))
           .withColumn("nrm", sqrt(dotD(col("vec"), col("vec")))),
         cents)
@@ -674,13 +370,11 @@ object AnnIndex {
         posexplode(slice(col("clist"), 1, nProbe)).as(Seq("pp", "dc")))
       .select(col("probe_id"), col("pe"), col("pnrm"),
         col("dc").getField("cid").as("cid"))
-
-  /** [[cosTopK]] of routed probe rows joined to their list vectors
-    * (probe_id, pe, pnrm, vec_id, vec, nrm), scored by exact round-4
-    * cosine, as (probe_id, rn, vec_id, cos). */
-  private def serveTopK(cand: DataFrame, k: Int): DataFrame =
+    val cand = routed.join(lists, Seq("cid"))
+      .filter(col("vec_id") =!= col("probe_id"))
     cosTopK(cand.select(col("probe_id"), col("vec_id"),
         round(dotD(col("pe"), col("vec")) /
           (col("pnrm") * col("nrm")), 4).as("cos")), k)
       .select(col("probe_id"), col("rn"), col("vec_id"), col("cos"))
+  }
 }

@@ -437,90 +437,6 @@ object EvalOps extends QueryPack {
       .orderBy(col("bin"))
   }
 
-  /** The IMPLEMENTED corpus-scale swap for q_ntile_bins (SCALE.md): the
-    * global-order `ntile(10)` window becomes one `approx_percentile`
-    * boundary agg (a 1-row, 9-element array) broadcast back, and the bin
-    * is arithmetic — `1 + #(boundaries strictly below rev)` — so the plan
-    * is scan → two hash aggs with no Window and no global sort. Trades
-    * exact equal-depth bins for sketch boundaries (boundary-tied days can
-    * land one bin off); AggSwapSpec bounds the drift and asserts the
-    * no-Window plan. Same output schema as the key. */
-  def ntileBinsApprox(s: SparkSession, d: String): DataFrame = {
-    val daily = Tables.orders(s, d)
-      .groupBy(col("o_orderdate").cast("date").as("day"))
-      .agg(sum(dec(col("o_totalprice"))).as("rev"))
-    val bounds = daily.agg(
-      expr("approx_percentile(CAST(rev AS DOUBLE), " +
-           "array(0.1D,0.2D,0.3D,0.4D,0.5D,0.6D,0.7D,0.8D,0.9D), 100000)")
-        .as("bs"))
-    daily.crossJoin(broadcast(bounds))
-      .select(col("rev"),
-        (lit(1) + aggregate(col("bs"), lit(0),
-          (acc, b) => acc + when(col("rev").cast("double") > b, 1)
-            .otherwise(0))).as("bin"))
-      .groupBy(col("bin"))
-      .agg(count(lit(1)).as("n_days"),
-        round(min(col("rev")).cast("double"), 4).as("lo"),
-        round(max(col("rev")).cast("double"), 4).as("hi"),
-        round(sum(col("rev")).cast("double"), 4).as("total"))
-      .orderBy(col("bin"))
-  }
-
-  /** The IMPLEMENTED corpus-scale swap for q_lift_curve (SCALE.md
-    * q_lift_curve row; exact form: the collapse-then-sweep at EvalOps
-    * "q_lift_curve" above, which inherits q_auc's discipline). With
-    * continuous scores the exact form's ordered sweep runs over a
-    * fact-sized |distinct scores| frame; quantizing to a fixed `quantum`
-    * bounds it by construction. One fact-sized hash agg to the bucket
-    * grain, the bounded frame to the driver (q_sort_multi offsets
-    * discipline), the desc cumulative walk + decile assignment as a
-    * plain driver scan, and the decile readout aggregates the enriched
-    * LocalRelation — no Window anywhere; the only Sort orders the
-    * ≤10-row decile output. A bucket straddling a decile boundary lands
-    * wholly in one decile (the same whole-group rule the exact form
-    * applies at score grain), so per-decile counts drift by at most one
-    * bucket's mass. */
-  def liftCurveApprox(s: SparkSession, d: String,
-                      quantum: Double = 0.1,
-                      maxBuckets: Int = 4096): DataFrame = {
-    import s.implicits._
-    val scored = Tables.events(s, d)
-      .select(col("value").cast("double").as("value"),
-        when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"))
-    // grid bounded by construction (r16 verdict nit, same discipline as
-    // aucApprox): min/max pre-pass coarsens the quantum so the collected
-    // frame never exceeds maxBuckets (+1) rows whatever the score range
-    val mm = scored.agg(min(col("value")), max(col("value"))).head
-    val q =
-      if (mm.isNullAt(0)) quantum
-      else math.max(quantum, (mm.getDouble(1) - mm.getDouble(0)) / maxBuckets)
-    val buckets = scored
-      .select(floor(col("value") / q).cast("long").as("b"), col("y"))
-      .groupBy(col("b"))
-      .agg(count(lit(1)).as("tot"), sum(col("y")).as("pos"))
-      .collect()
-      .sortBy(-_.getLong(0)) // desc: best scores first
-    val n = buckets.map(_.getAs[Long]("tot")).sum
-    val p = buckets.map(_.getAs[Long]("pos")).sum
-    var cumTot = 0L
-    var cumPos = 0L
-    val enriched = buckets.map { r =>
-      cumTot += r.getAs[Long]("tot")
-      cumPos += r.getAs[Long]("pos")
-      (math.min(cumTot * 10 / n, 9L).toInt,
-        r.getAs[Long]("tot"), r.getAs[Long]("pos"), cumPos)
-    }.toSeq
-    enriched.toDF("decile", "tot", "pos", "cum_pos")
-      .groupBy(col("decile"))
-      .agg(sum(col("tot")).as("n_rows"), sum(col("pos")).as("n_pos"),
-        round(max(col("cum_pos")).cast("double") / p.toDouble, 4)
-          .as("capture"),
-        round((sum(col("pos")).cast("double") /
-            sum(col("tot")).cast("double")) /
-          (p.toDouble / n.toDouble), 4).as("lift"))
-      .orderBy(col("decile"))
-  }
-
   def oracles: Map[String, String] = Map(
 
     // Portable (DuckDB ∩ Spark) — own Spark twin via SqlOracleReuseSpec.

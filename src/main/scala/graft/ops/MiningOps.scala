@@ -491,7 +491,7 @@ object MiningOps extends QueryPack {
     // carries the rank, the median lookup, and the final agg.
     // CONTRACT (ADVICE r13): a group with n_nn = 0 (every value masked)
     // has no donor — median_used/mean_before/mean_after are null BY
-    // DESIGN (n and n_missing stay exact); same contract in imputeApprox.
+    // DESIGN (n and n_missing stay exact).
     // MiningDefinitionSpec pins it with an all-missing group.
     "q_impute" -> { (s, d) =>
       val wEt = Window.partitionBy(col("event_type"))
@@ -746,101 +746,6 @@ object MiningOps extends QueryPack {
         round(CAST(sum(CAST(ape AS DECIMAL(18,6))) OVER () AS DOUBLE) /
               CAST(count(*) OVER () AS DOUBLE), 6) AS mape
       FROM t ORDER BY day"""
-  }
-
-  /** The IMPLEMENTED corpus-scale swap for q_winsorize (SCALE.md): the
-    * exact per-group rank window becomes one map-combinable
-    * `approx_percentile` sketch agg — no per-group sort at any scale —
-    * and the clamp/trim arithmetic is unchanged. Same output schema as
-    * the key; MiningOpsSpec pins it within sketch tolerance of the exact
-    * form (the q_rfm `rollingDistinctViaDeltas` discipline: the swap is
-    * code, not a comment). */
-  def winsorizeApprox(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions.{percentile_approx => pap}
-    val b = Tables.lineitem(s, d)
-      .select(col("l_returnflag").as("rf"), col("l_extendedprice").as("pd"))
-      .groupBy(col("rf"))
-      .agg(count(lit(1)).as("n"),
-        pap(col("pd"), lit(0.05), lit(100000)).as("lo"),
-        pap(col("pd"), lit(0.95), lit(100000)).as("hi"))
-    Tables.lineitem(s, d)
-      .select(col("l_returnflag").as("rf"), dec(col("l_extendedprice")).as("p"))
-      .join(broadcast(b), Seq("rf"))
-      .groupBy(col("rf"))
-      .agg(max(col("n")).as("n"),
-        max(col("lo")).as("lo"), max(col("hi")).as("hi"),
-        round(sum(least(greatest(col("p").cast("double"), col("lo")),
-          col("hi")).cast(DecimalType(28, 10))).cast("double") /
-          max(col("n")).cast("double"), 4).as("wins_mean"),
-        round(sum(when(col("p") > col("lo") && col("p") <= col("hi"),
-            col("p"))).cast("double") /
-          sum(when(col("p") > col("lo") && col("p") <= col("hi"), 1L)
-            .otherwise(0L)).cast("double"), 4).as("trim_mean"))
-      .orderBy(col("rf"))
-  }
-
-  /** The IMPLEMENTED corpus-scale swap for q_impute: group medians from
-    * one `approx_percentile` sketch agg broadcast back onto the stream —
-    * no rank window, so a 6-value group column no longer serializes the
-    * sort onto 6 reducers. Same output schema as the key. */
-  def imputeApprox(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions.{percentile_approx => pap}
-    val r = Tables.events(s, d).select(col("event_type"),
-      when(col("event_id") % 97 === 0, lit(null).cast("double"))
-        .otherwise(col("value")).as("v"))
-    val med = r.groupBy(col("event_type"))
-      .agg(pap(col("v"), lit(0.5), lit(100000)).as("med"),
-        count(col("v")).as("n_nn"))
-    r.join(broadcast(med), Seq("event_type"))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("v").isNull, 1L).otherwise(0L)).as("n_missing"),
-        round(max(col("med")), 4).as("median_used"),
-        round(sum(dec10(col("v"))).cast("double") /
-          max(col("n_nn")).cast("double"), 4).as("mean_before"),
-        round(sum(dec10(coalesce(col("v"), col("med")))).cast("double") /
-          count(lit(1)).cast("double"), 4).as("mean_after"))
-      .orderBy(col("event_type"))
-  }
-
-  /** The IMPLEMENTED corpus-scale swap for q_pr_auc (SCALE.md q_pr_auc
-    * row; exact form: the collapse-then-sweep at MiningOps "q_pr_auc"
-    * above). The logistic score lives in (0,1) by construction, so the
-    * quantized domain is exactly `nBuckets` cells regardless of corpus
-    * size: one fact-sized hash agg collapses to the bucket grain, the
-    * bounded frame rides to the driver (q_sort_multi offsets
-    * discipline), the score-DESC inclusive prefix is a plain driver
-    * scan, and the step-interpolated Δrecall·precision terms aggregate
-    * over the enriched LocalRelation — no Window, no Sort, no shuffle
-    * past the collapse. */
-  def prAucApprox(s: SparkSession, d: String,
-                  nBuckets: Int = 4096): DataFrame = {
-    import s.implicits._
-    val buckets = Tables.events(s, d)
-      .select((lit(1.0) / (lit(1.0) +
-          exp(-(col("value") - lit(50.0)) / lit(10.0)))).as("p"),
-        when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"))
-      .select(least(floor(col("p") * nBuckets), lit(nBuckets - 1L))
-        .cast("long").as("b"), col("y"))
-      .groupBy(col("b"))
-      .agg(count(lit(1)).as("n"), sum(col("y")).as("npos"))
-      .collect()
-      .sortBy(-_.getLong(0)) // the sweep walks scores descending
-    val posTot = buckets.map(_.getAs[Long]("npos")).sum
-    var cumN = 0L
-    var cumPos = 0L
-    val enriched = buckets.map { r =>
-      cumN += r.getAs[Long]("n")
-      cumPos += r.getAs[Long]("npos")
-      (r.getAs[Long]("n"), r.getAs[Long]("npos"), cumN, cumPos)
-    }.toSeq
-    enriched.toDF("n", "npos", "cum_n", "cum_pos")
-      .select(col("n"),
-        round((col("npos").cast("double") / lit(posTot).cast("double")) *
-          (col("cum_pos").cast("double") / col("cum_n").cast("double")), 6)
-          .cast(DecimalType(18, 6)).as("term"))
-      .agg(sum(col("n")).as("n"), max(lit(posTot)).as("n_pos"),
-        round(sum(col("term")).cast("double"), 4).as("auc_pr"))
   }
 
   /** Single source for the q_negative_sample oracle AND its Spark twin —

@@ -695,9 +695,9 @@ object PipelineOps extends QueryPack {
     // ---- q_multimodal_meta: opaque-binary column plumbing -------------
     // Media bytes as a BinaryType column with typed metadata: byte length,
     // 4-byte magic prefix (hex), head bytes (base64), fixed-stride frame
-    // count. The decode stage itself is the MediaPipeline module (stubbed
-    // deterministically — no codecs in this environment); this key proves
-    // the schema/pushdown plumbing. Text fixture is pure ASCII, so DuckDB's
+    // count. No media decoder runs: the key reads only the byte-level
+    // metadata, which proves the binary schema/pushdown plumbing. Text
+    // fixture is pure ASCII, so DuckDB's
     // char-substr on text ≡ Spark's byte-substr on the cast binary.
     "q_multimodal_meta" -> { (s, d) =>
       val bin = col("text").cast("binary")
@@ -1099,7 +1099,7 @@ object PipelineOps extends QueryPack {
   }
 
   /** [[simhashPairs]] with the width sized by [[simhashWidthFor]] — the
-    * parameter-free deployment form (the [[embedNearDupAuto]] shape): no
+    * parameter-free deployment form (the [[sizeEmbedGate]] shape): no
     * corpus runs the 60-bit fixture banding at a scale where band
     * collisions go quadratic. Driver-side cost: one count. The contract
     * key `q_dedup_simhash` keeps the oracle-pinned 60-bit form; this is
@@ -1386,18 +1386,6 @@ object PipelineOps extends QueryPack {
       if (allowedP >= 1.0 || sd == 0.0) minCosFloor
       else math.max(minCosFloor, mu + invNorm(1.0 - allowedP) * sd)
     (signBits, math.min(0.9999, math.ceil(gate * 10000.0) / 10000.0))
-  }
-
-  /** [[embedNearDup]] with the gate sized by [[sizeEmbedGate]] — the
-    * parameter-free deployment form: no corpus can run the fixture
-    * defaults at a scale where the background tail goes quadratic. */
-  def embedNearDupAuto(emb: DataFrame, targetRowsPerBucket: Long = 2048L,
-                       pairsPerDoc: Double = 1.0,
-                       minCosFloor: Double = 0.35,
-                       sampleSize: Int = 2000): DataFrame = {
-    val (signBits, minCos) = sizeEmbedGate(emb, targetRowsPerBucket,
-      pairsPerDoc, minCosFloor, sampleSize)
-    embedNearDup(emb, signBits, minCos)
   }
 
   /** IVF-style approximate nearest neighbour: assign every vector to its

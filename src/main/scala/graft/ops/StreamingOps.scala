@@ -158,7 +158,8 @@ object StreamingOps extends QueryPack {
     },
 
     // Per-user running state (event count + value sum) — the batch twin of
-    // the transformWithState/flatMapGroupsWithState query in StreamingSpec.
+    // the mapGroupsWithState query in StreamingSpec and the
+    // transformWithState one in TransformWithStateSpec.
     "q_stateful_running" -> { (s, d) =>
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
@@ -304,95 +305,4 @@ object StreamingOps extends QueryPack {
       FROM r WHERE rk <= 3
       ORDER BY win_start, rk"""
   )
-
-  /** STREAMING twin of [[Analytics.sessionize]]: gap-based sessions over
-    * an unbounded event stream via `flatMapGroupsWithState` with an
-    * EVENT-TIME timeout — the custom-state API for operators whose output
-    * cardinality per group varies (0..n closed sessions per trigger),
-    * where `mapGroupsWithState`'s exactly-one-row contract can't serve.
-    *
-    * A session is emitted only when the WATERMARK SEALS it (watermark >
-    * session end + gap): no event still admissible under `latenessSec`
-    * can extend it or bridge it to a neighbor, so — unlike the tempting
-    * emit-inline-on-next-event design — out-of-order events that span
-    * micro-batches (a straggler landing BETWEEN two provisional sessions
-    * and merging them) produce exactly the sessions the batch twin
-    * computes on the same rows. The state per user is the short list of
-    * not-yet-sealed sessions — bounded by ~latenessSec/gapSec + 1, NOT by
-    * event count (events fold into (start, last, n) triples immediately;
-    * nothing buffers raw events). Sealed sessions are immutable facts:
-    * Append output mode, safe for exactly-once sinks. StreamingSpec pins
-    * stream ≡ batch-twin equivalence, including the cross-batch
-    * straggler-bridge case. */
-  def sessionizeStream(
-      events: org.apache.spark.sql.Dataset[SessionEvent], gapSec: Long,
-      latenessSec: Long = 10L)
-      : org.apache.spark.sql.Dataset[ClosedSession] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .withWatermark("ts", s"$latenessSec seconds")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionBuffer, ClosedSession](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[SessionEvent],
-         state: GroupState[SessionBuffer]) =>
-          // merge pending sessions + new events into the gap-partition of
-          // their union: sort by start, fold adjacent items whose gap is
-          // within bound — identical to the batch rule on the full set
-          val pending = state.getOption.map(_.sessions).getOrElse(Nil)
-          val units = rows.map { e =>
-            val sec = e.ts.getTime / 1000L; OpenSession(sec, sec, 1L)
-          }.toList
-          val merged = (pending ++ units).sortBy(o => (o.start, o.last))
-            .foldLeft(List.empty[OpenSession]) {
-              case (cur :: done, o) if o.start - cur.last <= gapSec =>
-                OpenSession(cur.start, math.max(cur.last, o.last),
-                            cur.n + o.n) :: done
-              case (acc, o) => o :: acc
-            }.reverse
-          val wmSec = state.getCurrentWatermarkMs() / 1000L
-          val (closedNow, live) = merged.partition(_.last + gapSec < wmSec)
-          if (live.isEmpty) state.remove()
-          else {
-            state.update(SessionBuffer(live))
-            // fire the instant the earliest live session becomes sealable:
-            // seal needs wmMs >= (last+gap+1)*1000 and Spark fires timers
-            // only when timeoutTs < watermark (STRICT), so aim 1 ms below
-            // the threshold — at the threshold itself the timer would
-            // never fire on a stalled whole-second watermark. Clamp above
-            // the current watermark (Spark rejects timers at/behind it).
-            val sealAt = (live.map(_.last).min + gapSec + 1) * 1000L - 1
-            // When sealAt collides with the current watermark the clamp
-            // lands at watermark+1, and the STRICT timer compare then needs
-            // the watermark to advance by >= 2 ms before firing — sealing
-            // can slip one micro-batch in that exact-collision case
-            // (ADVICE r8). Emission is still guaranteed (the watermark
-            // advances monotonically past any fixed timestamp), and the
-            // batch-twin equivalence is unaffected — only WHEN the sealed
-            // row appears moves, never whether/what.
-            state.setTimeoutTimestamp(
-              math.max(sealAt, state.getCurrentWatermarkMs() + 1))
-          }
-          closedNow.iterator
-            .map(o => ClosedSession(user, o.start, o.last, o.n))
-      }
-  }
 }
-
-/** One event of the streaming sessionizer (event-time `ts` carries the
-  * watermark). */
-case class SessionEvent(user_id: Long, ts: java.sql.Timestamp)
-
-/** One provisional (not yet watermark-sealed) session. */
-case class OpenSession(start: Long, last: Long, n: Long)
-
-/** Per-user state: the short list of not-yet-sealed sessions, ordered by
-  * start — bounded by ~lateness/gap + 1, never by event count. */
-case class SessionBuffer(sessions: List[OpenSession])
-
-/** An emitted (immutable, append-mode) closed session — same shape as the
-  * batch twin's per-session row. */
-case class ClosedSession(user_id: Long, start_sec: Long, end_sec: Long,
-                         n_events: Long)

@@ -511,9 +511,20 @@ object TextOps extends QueryPack {
         .orderBy(col("doc_id"))
     },
 
-    // Brute-force cosine top-5 for 5 broadcast probe vectors.
+    // Brute-force cosine top-5 for 5 broadcast probe vectors (vec_id < 5)
+    // against every other vector, round-4 cosine.
     "q_similarity_topk" -> { (s, d) =>
-      servedTopK(AnnIndex.cosTopK(probePairs(s, d), 5))
+      val e = Tables.embeddings(s, d)
+      val probes = e.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
+      val pairs = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+        .select(col("probe_id"), col("vec_id"),
+          round(dot(col("pe"), col("embedding")) /
+            (sqrt(dot(col("pe"), col("pe"))) *
+             sqrt(dot(col("embedding"), col("embedding")))), 4).as("cos"))
+      AnnIndex.cosTopK(pairs, 5)
+        .select(col("probe_id"), col("rn"), col("vec_id"), col("cos"))
+        .orderBy(col("probe_id"), col("rn"))
     },
 
     // Tokenize → explode → global top-20 words.
@@ -674,17 +685,6 @@ object TextOps extends QueryPack {
     }
   )
 
-  /** The IMPLEMENTED corpus-scale swap for q_similarity_topk (SCALE.md):
-    * the exact key shuffles ALL |probes|·|corpus| scored pairs into one
-    * per-probe window; here each input partition first reduces to its
-    * own top-k per probe with a bounded heap (mapPartitions — genuine
-    * per-partition imperative state, O(|probes|·k) memory), so the only
-    * shuffle carries ≤ partitions·|probes|·k candidate rows into the
-    * final (tiny) per-probe window. Probes stay broadcast; the corpus
-    * pass is narrow. The local heap and the window share one total order
-    * (cos desc, vec_id asc), so the result is EXACTLY the brute-force
-    * key's — a partition's discarded row can never be in the global
-    * top-k. AggSwapSpec pins row-for-row equality. */
   /** Corpus-scale fuzzy match (r19 — the q_fuzzy_match semantics with
     * SymSpell-style delete-neighborhood blocking). The contract key
     * blocks on (first char × length): granularity grows with the KEY
@@ -729,49 +729,6 @@ object TextOps extends QueryPack {
         col("n_occ"))
       .orderBy(col("probe"), col("word"))
   }
-
-  def similarityTopKBlocked(s: SparkSession, d: String,
-                            k: Int = 5): DataFrame = {
-    import s.implicits._
-    val local = probePairs(s, d).as[(Long, Long, Double)].mapPartitions { it =>
-      // head of each queue = the WEAKEST kept candidate (lowest cos,
-      // then highest vec_id) so one dequeue evicts it on overflow
-      val weakestFirst = Ordering.by[(Long, Double), (Double, Long)] {
-        case (vid, c) => (-c, vid)
-      }
-      val heaps = scala.collection.mutable.Map
-        .empty[Long, scala.collection.mutable.PriorityQueue[(Long, Double)]]
-      it.foreach { case (p, vid, c) =>
-        val h = heaps.getOrElseUpdate(p,
-          scala.collection.mutable.PriorityQueue.empty(weakestFirst))
-        h.enqueue((vid, c))
-        if (h.size > k) h.dequeue()
-      }
-      heaps.iterator.flatMap { case (p, h) =>
-        h.iterator.map { case (vid, c) => (p, vid, c) }
-      }
-    }.toDF("probe_id", "vec_id", "cos")
-    servedTopK(AnnIndex.cosTopK(local, k))
-  }
-
-  /** q_similarity_topk's candidates: the 5 probe vectors (vec_id < 5,
-    * broadcast) against every other vector, with their round-4 cosine,
-    * as (probe_id, vec_id, cos). */
-  private def probePairs(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val probes = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("pe"))
-    e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        round(dot(col("pe"), col("embedding")) /
-          (sqrt(dot(col("pe"), col("pe"))) *
-           sqrt(dot(col("embedding"), col("embedding")))), 4).as("cos"))
-  }
-
-  /** A [[AnnIndex.cosTopK]] result in q_similarity_topk's output shape. */
-  private def servedTopK(top: DataFrame): DataFrame =
-    top.select(col("probe_id"), col("rn"), col("vec_id"), col("cos"))
-      .orderBy(col("probe_id"), col("rn"))
 
   /** Corpus unigram LM score per doc: p(w) = count(w)/total_tokens over
     * the whole corpus, score = Σ tf·ln(p(w)) / Σ tf (unrounded). The token

@@ -80,6 +80,19 @@ class EventQueueSpec extends AnyFunSuite {
       .maxSizeBytes == 1024L) // BYTES, code-faithful (main.go:48)
   }
 
+  test("withOrigin mirrors NewWithOrigin: origin stamped, 1024 B, sa-east-1") {
+    val sink = new InMemorySink
+    val q = EventQueue.withOrigin("s", "app", sink).get
+      .asInstanceOf[BufferedEventQueue]
+    assert(q.maxSizeBytes == 1024L)
+    assert(q.region == "sa-east-1")
+    assert(q.enqueue(Map("event" -> "e")).isSuccess)
+    val Success(Seq(item)) = q.flush()
+    assert(item("origin") == "app")
+    assert(sink.records().size == 1)
+    assert(sink.records().head._1.contains("\"origin\":\"app\""))
+  }
+
   test("ARN extraction: exactly two /-parts or 'invalid ARN format'") {
     assert(EventQueue.extractStreamNameFromArn(
       "arn:aws:kinesis:us-east-1:123:stream/name").get == "name")

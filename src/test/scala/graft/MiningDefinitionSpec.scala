@@ -106,16 +106,14 @@ class MiningDefinitionSpec extends AnyFunSuite {
       (1L until 50L).map(i => (i, "a", i.toDouble))
     val dir = tmpDir("impAllMissing")
     writeEvents(dir, rows)
-    for (df <- Seq(SparkEntry.queries("q_impute")(spark, dir),
-                   graft.ops.MiningOps.imputeApprox(spark, dir))) {
-      val z = df.collect().find(_.getAs[String]("event_type") == "z").get
-      assert(z.getAs[Long]("n") == zIds.size &&
-        z.getAs[Long]("n_missing") == zIds.size)
-      assert(z.isNullAt(z.fieldIndex("median_used")) &&
-        z.isNullAt(z.fieldIndex("mean_before")) &&
-        z.isNullAt(z.fieldIndex("mean_after")),
-        "all-missing group must null median_used/mean_before/mean_after")
-    }
+    val z = SparkEntry.queries("q_impute")(spark, dir).collect()
+      .find(_.getAs[String]("event_type") == "z").get
+    assert(z.getAs[Long]("n") == zIds.size &&
+      z.getAs[Long]("n_missing") == zIds.size)
+    assert(z.isNullAt(z.fieldIndex("median_used")) &&
+      z.isNullAt(z.fieldIndex("mean_before")) &&
+      z.isNullAt(z.fieldIndex("mean_after")),
+      "all-missing group must null median_used/mean_before/mean_after")
   }
 
   test("q_interval_union == brute-force day-set union") {

@@ -342,50 +342,6 @@ class MiningOpsSpec extends AnyFunSuite {
     assert(row.getAs[Long]("n_pos") == posTot)
   }
 
-  test("winsorizeApprox: the implemented scale swap tracks the exact key") {
-    val exact = q("q_winsorize").collect()
-      .map(r => r.getAs[String]("rf") -> r).toMap
-    val approx = graft.ops.MiningOps
-      .winsorizeApprox(spark, TestSpark.Sf0001).collect()
-    // plan shape: the swap must NOT sort — no Window, no per-group rank
-    val plan = graft.ops.MiningOps.winsorizeApprox(spark, TestSpark.Sf0001)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), s"swap still plans a window:\n$plan")
-    approx.foreach { a =>
-      val e = exact(a.getAs[String]("rf"))
-      assert(a.getAs[Long]("n") == e.getAs[Long]("n"))
-      // sketch accuracy 1e5 on a 2k-row group: bounds land within a few
-      // ranks of the exact order statistics; means within 1%
-      def close(c: String, tol: Double) = {
-        val (av, ev) = (a.getAs[Double](c), e.getAs[Double](c))
-        assert(math.abs(av - ev) <= tol * math.max(1.0, math.abs(ev)),
-          s"${a.getAs[String]("rf")}.$c approx $av vs exact $ev")
-      }
-      close("lo", 0.02); close("hi", 0.02)
-      close("wins_mean", 0.01); close("trim_mean", 0.01)
-    }
-  }
-
-  test("imputeApprox: the implemented scale swap tracks the exact key") {
-    val exact = q("q_impute").collect()
-      .map(r => r.getAs[String]("event_type") -> r).toMap
-    val approxDf = graft.ops.MiningOps.imputeApprox(spark, TestSpark.Sf0001)
-    assert(!approxDf.queryExecution.executedPlan.toString.contains("Window"))
-    approxDf.collect().foreach { a =>
-      val e = exact(a.getAs[String]("event_type"))
-      assert(a.getAs[Long]("n") == e.getAs[Long]("n"))
-      assert(a.getAs[Long]("n_missing") == e.getAs[Long]("n_missing"))
-      assert(a.getAs[Double]("mean_before") == e.getAs[Double]("mean_before"))
-      val (am, em) = (a.getAs[Double]("median_used"),
-        e.getAs[Double]("median_used"))
-      assert(math.abs(am - em) <= 0.02 * math.max(1.0, math.abs(em)),
-        s"median approx $am vs exact $em")
-      assert(math.abs(a.getAs[Double]("mean_after") -
-        e.getAs[Double]("mean_after")) <= 0.01 *
-        math.max(1.0, math.abs(e.getAs[Double]("mean_after"))))
-    }
-  }
-
   test("q_schema_profile: one row per column, consistent counts") {
     val rows = q("q_schema_profile").collect()
     assert(rows.map(_.getAs[String]("col_name")).sorted.toSeq ==

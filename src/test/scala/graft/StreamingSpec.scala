@@ -256,163 +256,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("flatMapGroupsWithState sessionizer: inline + timeout closes match the batch twin") {
-    import spark.implicits._
-    import graft.ops.{ClosedSession, SessionEvent, StreamingOps}
-    val gap = 100L
-    // base offset: a row at event-time 0 sits exactly AT the initial
-    // watermark and is dropped as late — start the clock well past it
-    val base = 10000L
-    val epoch = (sec: Long) => new Timestamp((base + sec) * 1000L)
-    val input = MemoryStream[SessionEvent](spark)
-    val q = StreamingOps.sessionizeStream(input.toDS(), gap)
-      .writeStream.format("memory").queryName("sess_out")
-      .outputMode("append").start()
-    try {
-      // u1: one 3-event session then a far jump (inline close);
-      // u2: a single event, closed only by TIMEOUT (the watermark from
-      // u1's later traffic passes u2's last + gap with no new u2 rows)
-      input.addData(SessionEvent(1, epoch(0)), SessionEvent(1, epoch(10)),
-                    SessionEvent(1, epoch(20)), SessionEvent(2, epoch(5)))
-      q.processAllAvailable()
-      input.addData(SessionEvent(1, epoch(1000)))
-      q.processAllAvailable()
-      // watermark advances on batch COMPLETION: one more micro-batch so
-      // the event-time timer (u2: 5+100+1 < 1000-10) actually fires
-      input.addData(SessionEvent(1, epoch(1010)))
-      q.processAllAvailable()
-      val got = spark.table("sess_out").as[ClosedSession].collect().toSet
-      assert(got == Set(ClosedSession(1, base, base + 20, 3),
-                        ClosedSession(2, base + 5, base + 5, 1)),
-        s"got $got")
-      // the streaming closes equal the batch twin's sessions restricted
-      // to the stream's close rule: the watermark in effect during the
-      // last processed batch (1000 − 10) passed end + gap (sealing is
-      // the ONLY emission path — inline closes are deferred so
-      // stragglers can still bridge)
-      val rows = Seq((1L, 0L, base, 1.0), (1L, 1L, base + 10, 1.0),
-                     (1L, 2L, base + 20, 1.0), (2L, 3L, base + 5, 1.0),
-                     (1L, 4L, base + 1000, 1.0), (1L, 5L, base + 1010, 1.0))
-        .toDF("user_id", "event_id", "sec", "value")
-      val batch = graft.ops.Analytics.sessionize(rows, gap)
-      val batchClosed = batch
-        .filter(col("end_sec") + gap < lit(base + 990L))
-        .select(col("user_id"), col("start_sec"), col("end_sec"),
-                col("n_events"))
-        .as[ClosedSession].collect().toSet
-      assert(got == batchClosed, s"stream $got vs batch $batchClosed")
-    } finally q.stop()
-  }
-
-  test("sessionizer: a cross-batch straggler bridges two provisional sessions before sealing") {
-    import spark.implicits._
-    import graft.ops.{ClosedSession, SessionEvent, StreamingOps}
-    // gap 100, lateness 300: events 200 and 320 form TWO provisional
-    // sessions in batch 1; the in-lateness straggler 280 arrives a batch
-    // later and must merge them into ONE — the case an
-    // emit-inline-on-next-event design gets wrong
-    val (gap, late, base) = (100L, 300L, 10000L)
-    val epoch = (sec: Long) => new Timestamp((base + sec) * 1000L)
-    val input = MemoryStream[SessionEvent](spark)
-    val q = StreamingOps.sessionizeStream(input.toDS(), gap, late)
-      .writeStream.format("memory").queryName("sess_bridge_out")
-      .outputMode("append").start()
-    try {
-      input.addData(SessionEvent(3, epoch(200)), SessionEvent(3, epoch(320)))
-      q.processAllAvailable() // watermark after: 320 - 300 = 20
-      input.addData(SessionEvent(3, epoch(280)), SessionEvent(3, epoch(1000)))
-      q.processAllAvailable() // 280 >= 20: admitted, bridges; wm after: 700
-      input.addData(SessionEvent(3, epoch(1100)))
-      q.processAllAvailable() // wm 700 seals (200..320); (1000,1100) live
-      val got = spark.table("sess_bridge_out").as[ClosedSession]
-        .collect().toSet
-      assert(got == Set(ClosedSession(3, base + 200, base + 320, 3)),
-        s"got $got")
-      // batch twin on the same 5 rows, restricted to the sealing rule at
-      // the final in-effect watermark (1100 - 300)
-      val rows = Seq((3L, 0L, base + 200, 1.0), (3L, 1L, base + 320, 1.0),
-                     (3L, 2L, base + 280, 1.0), (3L, 3L, base + 1000, 1.0),
-                     (3L, 4L, base + 1100, 1.0))
-        .toDF("user_id", "event_id", "sec", "value")
-      val batchClosed = graft.ops.Analytics.sessionize(rows, gap)
-        .filter(col("end_sec") + gap < lit(base + 800L))
-        .select(col("user_id"), col("start_sec"), col("end_sec"),
-                col("n_events"))
-        .as[ClosedSession].collect().toSet
-      assert(got == batchClosed, s"stream $got vs batch $batchClosed")
-    } finally q.stop()
-  }
-
-  test("sessionizer: kill/restart recovers unsealed sessions — a post-restart straggler still bridges them") {
-    // r8 verdict item 3, mirroring the StreamingQueueSink kill/restart
-    // shape: one MemoryStream + one checkpoint dir across two query
-    // incarnations. Incarnation 1 leaves ONLY unsealed sessions in the
-    // state store (nothing emitted), is stopped mid-stream, and
-    // incarnation 2 must (a) recover those provisional sessions, (b) let
-    // an in-lateness straggler bridge two of them — proof the recovered
-    // state is the real session buffer, not a recomputation — and (c)
-    // fire the recovered u8 timer. Final sealed set == batch twin on all
-    // rows under the final in-effect watermark.
-    import spark.implicits._
-    import graft.ops.{ClosedSession, SessionEvent, StreamingOps}
-    val (gap, late, base) = (100L, 300L, 10000L)
-    val epoch = (sec: Long) => new Timestamp((base + sec) * 1000L)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("sess_recover_ckpt").toString
-    val input = MemoryStream[SessionEvent](spark)
-    // memory sink can't recover from a checkpoint — collect through
-    // foreachBatch (the recoverable sink the queue-sink scenarios use);
-    // the Set dedups the at-least-once replay of a recovered batch
-    val sealedOut = java.util.concurrent.ConcurrentHashMap
-      .newKeySet[ClosedSession]()
-    def start() = StreamingOps.sessionizeStream(input.toDS(), gap, late)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[ClosedSession],
-                       _: Long) => b.collect().foreach(sealedOut.add) }
-      .start()
-
-    // incarnation 1: two provisional u7 sessions (200 | 320, gap 120 >
-    // 100) + a lone u8 — watermark ends at 320-300=20, so NOTHING seals
-    val q1 = start()
-    try {
-      input.addData(SessionEvent(7, epoch(200)), SessionEvent(7, epoch(320)),
-                    SessionEvent(8, epoch(250)))
-      q1.processAllAvailable()
-      assert(sealedOut.isEmpty,
-        "a session sealed before the kill — the scenario needs unsealed state")
-    } finally q1.stop() // kill mid-stream with 3 unsealed sessions in state
-
-    // incarnation 2: straggler 280 (>= recovered wm 20: admissible) must
-    // merge the RECOVERED provisionals; 1000 then 1100 push the watermark
-    // to 800, sealing the bridged (200..320) and the u8 timer — while
-    // (1000,1100) stays live in state
-    val q2 = start()
-    try {
-      input.addData(SessionEvent(7, epoch(280)), SessionEvent(7, epoch(1000)))
-      q2.processAllAvailable()
-      input.addData(SessionEvent(7, epoch(1100)))
-      q2.processAllAvailable()
-      val got = {
-        import scala.jdk.CollectionConverters._
-        sealedOut.asScala.toSet
-      }
-      val rows = Seq((7L, 0L, base + 200, 1.0), (7L, 1L, base + 320, 1.0),
-                     (8L, 2L, base + 250, 1.0), (7L, 3L, base + 280, 1.0),
-                     (7L, 4L, base + 1000, 1.0), (7L, 5L, base + 1100, 1.0))
-        .toDF("user_id", "event_id", "sec", "value")
-      val batchClosed = graft.ops.Analytics.sessionize(rows, gap)
-        .filter(col("end_sec") + gap < lit(base + 800L))
-        .select(col("user_id"), col("start_sec"), col("end_sec"),
-                col("n_events"))
-        .as[ClosedSession].collect().toSet
-      assert(got == Set(ClosedSession(7, base + 200, base + 320, 3),
-                        ClosedSession(8, base + 250, base + 250, 1)),
-        s"got $got")
-      assert(got == batchClosed, s"stream $got vs batch $batchClosed")
-    } finally q2.stop()
-  }
-
   test("foreachBatch feeds the EventQueue facade with exactly-once counts") {
     import spark.implicits._
     val sink = new InMemorySink
