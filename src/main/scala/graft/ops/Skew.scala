@@ -160,4 +160,11 @@ object Skew {
         carry.flatMap(c => Seq(s"${c}1", s"${c}2")).tail
           .map(c => first(col(c)).as(c)): _*)
   }
+
+  /** Top-`n` hottest values of `key` with their row counts — the probe a
+    * pipeline runs before deciding to salt. One partial-aggregated pass. */
+  def hotKeys(df: DataFrame, key: String, n: Int = 10): DataFrame =
+    df.groupBy(col(key)).agg(count(lit(1)).as("n_rows"))
+      .orderBy(col("n_rows").desc, col(key))
+      .limit(n)
 }

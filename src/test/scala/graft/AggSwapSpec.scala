@@ -2,224 +2,17 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The r14 scale-swap contract (VERDICT r13 item 1): every documented
-  * approx/blocked alternate is EXECUTABLE code pinned against its exact
-  * contract key — within sketch tolerance where the algorithm is
-  * approximate, row-for-row where it is exact — and its plan mechanically
-  * lacks the construct the swap exists to remove (global-order Window /
-  * full-pair shuffle / unbounded sort buffer). Follows the r13
-  * winsorizeApprox/imputeApprox pattern in MiningOpsSpec.
+/** The scale swap that became a contract key: q_window_count_distinct
+  * runs the constant-memory delta form, and the collect_set form it
+  * replaced ([[graft.ops.Windows.windowCountDistinctSets]]) stays as its
+  * row-for-row witness. The key's plan must lack the construct the swap
+  * exists to remove (per-row set state).
   */
 class AggSwapSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
   private def q(name: String) =
     SparkEntry.queries(name)(spark, TestSpark.Sf0001)
-
-  private def close(a: Double, e: Double, tol: Double, what: String): Unit =
-    assert(math.abs(a - e) <= tol * math.max(1.0, math.abs(e)),
-      s"$what: approx $a vs exact $e")
-
-  test("aggPercentilesApprox tracks q_agg_percentiles, sketch agg only") {
-    val approx = graft.ops.Aggregates.aggPercentilesApprox(spark, TestSpark.Sf0001)
-    val plan = approx.queryExecution.executedPlan.toString
-    assert(plan.contains("approx_percentile"), "sketch aggregate missing")
-    assert(!plan.contains("Window"))
-    val exact = q("q_agg_percentiles").collect()
-      .map(r => r.getAs[String]("l_returnflag") -> r).toMap
-    val rows = approx.collect()
-    assert(rows.map(_.getAs[String]("l_returnflag")).toSet == exact.keySet)
-    rows.foreach { a =>
-      val e = exact(a.getAs[String]("l_returnflag"))
-      assert(a.getAs[Long]("n") == e.getAs[Long]("n"))
-      for (c <- Seq("p50", "p90", "p99"))
-        close(a.getAs[Double](c), e.getAs[Double](c), 0.02,
-          s"${a.getAs[String]("l_returnflag")}.$c")
-    }
-  }
-
-  test("medianModeApprox tracks q_median_mode with a window-free plan") {
-    val approx = graft.ops.Aggregates.medianModeApprox(spark, TestSpark.Sf0001)
-    val plan = approx.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), "mode argmax must be mergeable, not windowed")
-    assert(plan.contains("approx_percentile"))
-    val exact = q("q_median_mode").collect()
-      .map(r => r.getAs[String]("l_returnflag") -> r).toMap
-    approx.collect().foreach { a =>
-      val e = exact(a.getAs[String]("l_returnflag"))
-      assert(a.getAs[Long]("n") == e.getAs[Long]("n"))
-      // the mode half is EXACT in both forms (same pinned tie-break)
-      assert(a.getAs[Double]("mode_qty") == e.getAs[Double]("mode_qty"))
-      assert(a.getAs[Long]("mode_n") == e.getAs[Long]("mode_n"))
-      close(a.getAs[Double]("med_qty"), e.getAs[Double]("med_qty"), 0.02,
-        s"${a.getAs[String]("l_returnflag")}.med_qty")
-    }
-  }
-
-  test("rfmApprox: window-free plan, monotone scores, tracks q_rfm") {
-    val approx = graft.ops.Analytics.rfmApprox(spark, TestSpark.Sf0001)
-    val plan = approx.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), "cutpoint binning must not window")
-    val exact = q("q_rfm").collect()
-      .map(r => r.getAs[Long]("custkey") -> r).toMap
-    val rows = approx.collect()
-    assert(rows.map(_.getAs[Long]("custkey")).toSet == exact.keySet)
-    // base measures identical (the swap only changes the scoring)
-    rows.foreach { a =>
-      val e = exact(a.getAs[Long]("custkey"))
-      assert(a.getAs[Long]("frequency") == e.getAs[Long]("frequency"))
-      assert(a.getAs[Double]("monetary") == e.getAs[Double]("monetary"))
-    }
-    // scores are monotone in their measure: a strictly larger measure can
-    // never get a strictly larger (= worse, DESC orientation) score —
-    // the invariant equal-size ntile shares, so it pins the orientation
-    val byF = rows.sortBy(_.getAs[Long]("frequency"))
-    byF.toSeq.sliding(2).foreach { case Seq(lo, hi) =>
-      if (hi.getAs[Long]("frequency") > lo.getAs[Long]("frequency"))
-        assert(hi.getAs[Int]("f_score") <= lo.getAs[Int]("f_score"))
-      case _ => ()
-    }
-    val byM = rows.sortBy(_.getAs[Double]("monetary"))
-    byM.toSeq.sliding(2).foreach { case Seq(lo, hi) =>
-      if (hi.getAs[Double]("monetary") > lo.getAs[Double]("monetary"))
-        assert(hi.getAs[Int]("m_score") <= lo.getAs[Int]("m_score"))
-      case _ => ()
-    }
-    // and the buckets stay close to ntile's: most customers score the
-    // same as the exact key (ties at a boundary are the documented drift)
-    for (c <- Seq("r_score", "f_score", "m_score")) {
-      val agree = rows.count(a =>
-        a.getAs[Int](c) == exact(a.getAs[Long]("custkey")).getAs[Int](c))
-      assert(agree >= rows.length * 0.5,
-        s"$c agrees on only $agree/${rows.length}")
-      assert(rows.map(_.getAs[Int](c)).toSet.subsetOf(Set(1, 2, 3, 4)))
-    }
-  }
-
-  test("ntileBinsApprox: window-free plan, equi-depth within sketch drift") {
-    val approx = graft.ops.EvalOps.ntileBinsApprox(spark, TestSpark.Sf0001)
-    val plan = approx.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), "arithmetic binning must not window")
-    val exact = q("q_ntile_bins").collect()
-    val rows = approx.collect().sortBy(_.getAs[Int]("bin"))
-    // same day population and same revenue mass, redistributed
-    assert(rows.map(_.getAs[Long]("n_days")).sum ==
-      exact.map(_.getAs[Long]("n_days")).sum)
-    close(rows.map(_.getAs[Double]("total")).sum,
-      exact.map(_.getAs[Double]("total")).sum, 1e-6, "total revenue")
-    // near-equi-depth: daily revenue is effectively tie-free, so each
-    // bin sits within a couple of days of n/10
-    val n = rows.map(_.getAs[Long]("n_days")).sum.toDouble
-    rows.foreach { r =>
-      assert(math.abs(r.getAs[Long]("n_days") - n / 10) <= 3,
-        s"bin ${r.getAs[Int]("bin")} depth ${r.getAs[Long]("n_days")}")
-    }
-    // bins tile the revenue axis in order
-    rows.toSeq.sliding(2).foreach { case Seq(a, b) =>
-      assert(a.getAs[Double]("hi") <= b.getAs[Double]("lo"))
-      case _ => ()
-    }
-  }
-
-  // The r15 continuous-score sweep family (VERDICT r14 item 2): the exact
-  // forms sweep an ordered |distinct scores| frame — fact-sized when
-  // scores are continuous. Each swap quantizes the score to a fixed-size
-  // bucket domain, collapses facts with ONE hash agg, and runs the sweep
-  // over the bounded bucket frame via the q_sort_multi driver-offsets
-  // discipline. The returned plan must carry NO Window and NO fact scan:
-  // everything past the collapse rides a LocalRelation.
-
-  test("aucApprox tracks q_auc with no window and no sort in the readout") {
-    val approx = graft.ops.Analytics.aucApprox(spark, TestSpark.Sf0001)
-    val plan = approx.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), "sweep must not window")
-    assert(!plan.contains("Sort"), "sweep must not sort")
-    assert(!plan.contains("Scan parquet"),
-      "readout must aggregate the bounded LocalRelation, not rescan facts")
-    val e = q("q_auc").head()
-    val a = approx.head()
-    // quantization never drops rows — the label counts stay exact
-    assert(a.getAs[Long]("n_pos") == e.getAs[Long]("n_pos"))
-    assert(a.getAs[Long]("n_neg") == e.getAs[Long]("n_neg"))
-    close(a.getAs[Double]("auc"), e.getAs[Double]("auc"), 0.02, "auc")
-  }
-
-  test("prAucApprox tracks q_pr_auc with no window and no sort in the readout") {
-    val approx = graft.ops.MiningOps.prAucApprox(spark, TestSpark.Sf0001)
-    val plan = approx.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), "sweep must not window")
-    assert(!plan.contains("Sort"), "sweep must not sort")
-    assert(!plan.contains("Scan parquet"),
-      "readout must aggregate the bounded LocalRelation, not rescan facts")
-    val e = q("q_pr_auc").head()
-    val a = approx.head()
-    assert(a.getAs[Long]("n") == e.getAs[Long]("n"))
-    assert(a.getAs[Long]("n_pos") == e.getAs[Long]("n_pos"))
-    close(a.getAs[Double]("auc_pr"), e.getAs[Double]("auc_pr"), 0.02, "auc_pr")
-  }
-
-  test("liftCurveApprox tracks q_lift_curve per decile, window-free") {
-    val approx = graft.ops.EvalOps.liftCurveApprox(spark, TestSpark.Sf0001)
-    val plan = approx.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), "sweep must not window")
-    assert(!plan.contains("Scan parquet"),
-      "readout must aggregate the bounded LocalRelation, not rescan facts")
-    val exact = q("q_lift_curve").collect()
-      .map(r => r.getAs[Int]("decile") -> r).toMap
-    val rows = approx.collect()
-    assert(rows.map(_.getAs[Int]("decile")).toSet == exact.keySet)
-    // totals are conserved exactly; per-decile masses drift by at most
-    // one straddling bucket (whole-group decile rule at bucket grain)
-    assert(rows.map(_.getAs[Long]("n_rows")).sum ==
-      exact.values.map(_.getAs[Long]("n_rows")).sum)
-    assert(rows.map(_.getAs[Long]("n_pos")).sum ==
-      exact.values.map(_.getAs[Long]("n_pos")).sum)
-    rows.foreach { a =>
-      val e = exact(a.getAs[Int]("decile"))
-      close(a.getAs[Long]("n_rows").toDouble,
-        e.getAs[Long]("n_rows").toDouble, 0.03,
-        s"decile ${a.getAs[Int]("decile")} n_rows")
-      close(a.getAs[Double]("capture"), e.getAs[Double]("capture"), 0.03,
-        s"decile ${a.getAs[Int]("decile")} capture")
-      close(a.getAs[Double]("lift"), e.getAs[Double]("lift"), 0.10,
-        s"decile ${a.getAs[Int]("decile")} lift")
-    }
-  }
-
-  test("approx sweeps bound the driver grid on a pathological score range (r17)") {
-    // r16 verdict nit: floor(value/quantum) grids are range/quantum rows —
-    // UNBOUNDED for an arbitrary score column. A synthetic events fixture
-    // with a ±1e9 value range must still collect <= maxBuckets(+1) rows
-    // (the min/max pre-pass coarsens the quantum), and label totals stay
-    // exact because coarsening never drops rows.
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("aggswap-path")
-      .toFile.getAbsolutePath
-    val n = 5000
-    val ev = (1 to n).map { i =>
-      val sign = if (i % 2 == 0) 1.0 else -1.0
-      (i.toLong, if (i % 3 == 0) "purchase" else "view",
-        java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
-        sign * i.toDouble * 400000.0) // range ~ 4e9 >> 0.1 quantum
-    }.toDF("user_id", "event_type", "ts", "value")
-    ev.write.parquet(s"$dir/events.parquet")
-    val mb = 512
-    val auc = graft.ops.Analytics.aucApprox(spark, dir, maxBuckets = mb)
-    val aucRow = auc.head()
-    assert(aucRow.getAs[Long]("n_pos") == n / 3)
-    assert(aucRow.getAs[Long]("n_neg") == n - n / 3)
-    val lift = graft.ops.EvalOps.liftCurveApprox(spark, dir, maxBuckets = mb)
-    val liftRows = lift.collect()
-    assert(liftRows.map(_.getAs[Long]("n_rows")).sum == n)
-    // the driver grid itself: recompute the bucket cardinality the swap
-    // would collect — must respect the bound
-    val mm = ev.agg(org.apache.spark.sql.functions.min($"value"),
-      org.apache.spark.sql.functions.max($"value")).head()
-    val q0 = math.max(0.1, (mm.getDouble(1) - mm.getDouble(0)) / mb)
-    val grid = ev.select(org.apache.spark.sql.functions
-        .floor($"value" / q0).as("b")).distinct().count()
-    assert(grid <= mb + 1, s"grid $grid exceeds bound ${mb + 1}")
-  }
 
   test("q_window_count_distinct (delta form) == the set form row-for-row, no set state") {
     // r15 sf1-gate finding: collect_set-over-range-frame costs
@@ -236,15 +29,5 @@ class AggSwapSpec extends AnyFunSuite {
     val a = key.collect().map(_.toSeq)
     assert(a.toSeq == e.toSeq,
       s"delta form diverged: ${a.length} vs ${e.length} rows")
-  }
-
-  test("similarityTopKBlocked == q_similarity_topk row-for-row") {
-    val blocked = graft.ops.TextOps.similarityTopKBlocked(spark, TestSpark.Sf0001)
-    val plan = blocked.queryExecution.executedPlan.toString
-    assert(plan.contains("MapPartitions"),
-      "local heap stage missing — the full pair set would shuffle")
-    val e = q("q_similarity_topk").collect().map(_.toSeq)
-    val b = blocked.collect().map(_.toSeq)
-    assert(b.toSeq == e.toSeq, "blocked top-k must equal brute force exactly")
   }
 }

@@ -19,10 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  4. non-append histories fail LOUDLY (a compact in the tailed range
   *     must not re-emit rewritten rows as inserts);
   *  5. batches align to the query-start schema (a mid-stream addColumn
-  *     append neither reshapes nor breaks a running query);
-  *  6. `changeFeed` streams mutations as `_change_type`-tagged rows keyed
-  *     off the manifest dir-diff, `feedColumns` prunes its schema, and the
-  *     plain tail refuses a mutation by pointing at the feed.
+  *     append neither reshapes nor breaks a running query).
   */
 class GraftLakeSourceSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
@@ -167,77 +164,6 @@ class GraftLakeSourceSpec extends AnyFunSuite {
       assert(got.schema.fieldNames.toSeq == Seq("k", "v"),
         "a running query keeps its start schema")
       assert(rows(got) == Set(Seq[Any](1L, "a"), Seq[Any](2L, "b")))
-    } finally q.stop()
-  }
-
-  test("change feed tags dir-diff rows with type and commit version") {
-    import s.implicits._
-    val t = tmpDir("cdc-feed")
-    SnapshotLake.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t)
-    SnapshotLake.commit(Seq((3L, "c")).toDF("k", "v"), t, append = true)
-    SnapshotLake.delete(s, t, col("k") === 1L) // rewrites dir1: 2 stays
-    val q = s.readStream.format("graftlake").option("changeFeed", "true")
-      .load(t)
-      .writeStream.format("memory").queryName("cdc_feed")
-      .option("checkpointLocation", tmpDir("cdc-feed-cp")).start()
-    try {
-      q.processAllAvailable()
-      val got = s.table("cdc_feed").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-          r.getLong(3))).toSet
-      assert(got == Set(
-        (1L, "a", "insert", 1L), (2L, "b", "insert", 1L),
-        (3L, "c", "insert", 2L),
-        // the DELETE rewrote dir1: its rows emit as deletes, the
-        // surviving row re-emits as an insert at the same version
-        (1L, "a", "delete", 3L), (2L, "b", "delete", 3L),
-        (2L, "b", "insert", 3L)),
-        s"unexpected feed: $got")
-      // a live UPDATE streams as delete+insert pairs
-      SnapshotLake.update(s, t, col("k") === 3L,
-        Map("v" -> lit("C")))
-      q.processAllAvailable()
-      val v4 = s.table("cdc_feed").collect()
-        .filter(_.getLong(3) == 4L)
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-      assert(v4 == Set((3L, "c", "delete"), (3L, "C", "insert")))
-    } finally q.stop()
-  }
-
-  test("feedColumns prunes the change feed's schema; an unknown column refuses") {
-    import s.implicits._
-    val t = tmpDir("cdc-wide")
-    SnapshotLake.commit(Seq(
-      (1L, "a", 1.0, "pad1", "pad2", "pad3"),
-      (2L, "b", 2.0, "pad1", "pad2", "pad3"))
-      .toDF("k", "v", "score", "w1", "w2", "w3"), t)
-    // the SOURCE schema itself prunes — the projection lands inside each
-    // batch plan, so the parquet scan reads only the requested width
-    val rawFeed = s.readStream.format("graftlake")
-      .option("changeFeed", "true").option("feedColumns", "k,v").load(t)
-    assert(rawFeed.schema.fieldNames.toSeq ==
-      Seq("k", "v", "_change_type", "_commit_version"))
-    // unknown feed columns refuse at query definition
-    val exCols = intercept[Exception] {
-      s.readStream.format("graftlake").option("changeFeed", "true")
-        .option("feedColumns", "k,nope").load(t)
-    }
-    assert(exCols.getMessage.contains("nope"))
-  }
-
-  test("the plain append-only tail still refuses mutations, pointing at changeFeed") {
-    import s.implicits._
-    val t = tmpDir("cdc-refuse")
-    SnapshotLake.commit(Seq((1L, "a")).toDF("k", "v"), t)
-    val q = s.readStream.format("graftlake").load(t)
-      .writeStream.format("memory").queryName("cdc_refuse")
-      .option("checkpointLocation", tmpDir("cdc-refuse-cp")).start()
-    try {
-      q.processAllAvailable()
-      SnapshotLake.delete(s, t, col("k") === 1L)
-      val ex = intercept[Exception] { q.processAllAvailable() }
-      assert(ex.getMessage.contains("changeFeed"),
-        s"refusal must advertise the change feed: ${ex.getMessage}")
     } finally q.stop()
   }
 }

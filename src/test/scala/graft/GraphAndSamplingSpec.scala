@@ -156,22 +156,18 @@ class GraphAndSamplingSpec extends AnyFunSuite {
     }
   }
 
-  test("q_window_count_distinct (delta form) == the set form row-for-row, no set state") {
-    // r15 sf1-gate finding: collect_set-over-range-frame costs
-    // O(users-in-window) PER ROW inside |event_type| partitions (12× at
-    // 10× data). r16 promoted the EXACT delta form INTO the contract key;
-    // the pedagogical set form is now the equality witness. Full row
-    // equality (interval algebra, not a sketch), and the KEY's plan must
-    // carry no collect_set (the quadratic state the swap removed).
-    val key = SparkEntry.queries("q_window_count_distinct")(
-      spark, TestSpark.Sf0001)
-    val plan = key.queryExecution.executedPlan.toString
-    assert(!plan.contains("collect_set"), "set state crept back into the key")
-    val e = graft.ops.Windows.windowCountDistinctSets(spark, TestSpark.Sf0001)
-      .collect().map(_.toSeq)
-    val a = key.collect().map(_.toSeq)
-    assert(a.toSeq == e.toSeq,
-      s"delta form diverged: ${a.length} vs ${e.length} rows")
+  test("rollingDistinctViaDeltas == q_window_count_distinct (both constant-memory since r16)") {
+    val act = Tables.events(spark, TestSpark.Sf0001)
+      .select(col("event_type"), to_date(col("ts")).as("day"), col("user_id"))
+      .distinct()
+    val viaDeltas = graft.ops.Windows.rollingDistinctViaDeltas(act, 7)
+      .collect()
+      .map(r => (r.getString(0), r.getDate(1).toString, r.getLong(2))).toSet
+    val viaSets = run("q_window_count_distinct")
+      .map(r => (r.getString(0), r.getDate(1).toString, r.getLong(3))).toSet
+    assert(viaDeltas == viaSets,
+      s"delta form diverged: only-deltas=${(viaDeltas -- viaSets).take(5)} " +
+      s"only-sets=${(viaSets -- viaDeltas).take(5)}")
   }
 
   // ---- q_weighted_sample -------------------------------------------------

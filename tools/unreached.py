@@ -57,7 +57,7 @@ ROOT_TYPES = {
 # deletion candidates).
 KEEP = {
     "Windows.windowCountDistinctSets":
-        "reference: the collect_set form GraphAndSamplingSpec checks "
+        "reference: the collect_set form AggSwapSpec checks "
         "q_window_count_distinct against row for row",
     "SnapshotLake.readAtTag":
         "reference: LakeSinkSpec checks the V1 reader's `tag` option "
@@ -82,6 +82,14 @@ KEEP = {
         "test-only: the foreachBatch form of the exactly-once writer "
         "that writeStream.format(\"graftlake\") provides (StreamingSpec, "
         "TrainingPipelineSpec, LakeParityProbe)",
+    "GraftLakeCdc":
+        "test-only: the lake-to-lake keyed view over the change feed "
+        "(GraftLakeCdcSpec, whose suite also holds the feed's tests)",
+    "Windows.rollingDistinctViaDeltas":
+        "test-only: the width-parameterized delta form of "
+        "q_window_count_distinct (GraphAndSamplingSpec)",
+    "Skew.hotKeys":
+        "test-only: the one-pass skew probe (SkewAndBucketSpec)",
     "SnapshotLake.update":
         "test-only: the lake suites' UPDATE fixture; SQL UPDATE is "
         "planned by Spark's row-level rewrite through the catalog",
