@@ -482,12 +482,7 @@ object Analytics extends QueryPack {
           .as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"),
                 col("e.w").as("w"))
-      // checkpointEvery = 2 measured quiet-host (r13 verdict item 9):
-      // ce=1 ≈ 6.5 s, ce=2 ≈ 4.4-6.3 s (mean ~5.5), ce=4 ≈ 7.8 s at
-      // sf0.1 — halving the materialization count wins ~1 s of fixed job
-      // overhead; beyond that the nested broadcast recompute dominates.
-      GraphRank.pagerank(edges, iters = PrIters, damping = PrDamping,
-          checkpointEvery = 2)
+      GraphRank.pagerank(edges, iters = PrIters, damping = PrDamping)
         .select(
           when(col("node") % 2 === 0, lit("customer"))
             .otherwise(lit("supplier")).as("kind"),

@@ -21,40 +21,33 @@ import org.apache.spark.sql.types.DecimalType
   * the result. The DuckDB oracle is the same recurrence unrolled as
   * chained CTEs; its SQL is portable enough to be its own Spark twin.
   *
-  * Scale notes (100 TB lens): each iteration is one join of the rank frame
-  * (|V| rows, two longs + a double) against the edge frame hash-partitioned
-  * by src, then one agg by dst — both map-side combinable; no global
-  * structure, no driver collect except the one-time node count. The edge
-  * frame (with out-weights merged in ONCE, outside the loop) is
-  * `localCheckpoint`ed so iteration k's plan does not replay iterations
-  * 1..k−1 (the same lineage discipline as [[Components]]); rank snapshots
-  * are checkpointed per round and the previous one unpersisted, bounding
-  * executor storage at two |V|-sized frames. Iteration count is fixed (the
-  * production norm — convergence tests on ranks are float-fragile), so the
-  * wall cost is exactly `iters` shuffle rounds of |E| + |V| rows.
+  * Scale notes (100 TB lens): each iteration is one join of the broadcast
+  * rank frame (|V| rows, two longs + a double) against the edge frame
+  * hash-partitioned by dst, then one agg by dst — both map-side
+  * combinable; no global structure, no collect except the one-time node
+  * count. The edge frame (with out-weights merged in ONCE, outside
+  * the loop) is `localCheckpoint`ed so iteration k's plan does not replay
+  * iterations 1..k−1 (the same lineage discipline as [[Components]]); rank
+  * snapshots are checkpointed every [[CutEvery]] rounds and the previous
+  * one unpersisted, bounding executor storage at two |V|-sized frames.
+  * Iteration count is fixed (the production norm — convergence tests on
+  * ranks are float-fragile), so the wall cost is exactly `iters` shuffle
+  * rounds of |E| + |V| rows.
   */
 object GraphRank {
+
+  /** Rounds between rank-frame cuts (q_pagerank at sf0.1 ran fastest at
+    * 2 of 1, 2 and 4). */
+  private val CutEvery = 2
 
   /** `edges` must have three columns (src LONG, dst LONG, w LONG), one row
     * per directed edge, no nulls. Every node that should receive rank must
     * have at least one out-edge (callers with dangling nodes symmetrize or
     * add self-loops first — the fixture key feeds a symmetrized bipartite
     * graph, so N(out) = N(in) = N). Returns (node, r) with r rounded to 12
-    * decimals, one row per node.
-    *
-    * `checkpointEvery` trades broadcast-recompute against materialization
-    * count: each iteration BROADCASTS the rank frame, and a broadcast
-    * subtree re-evaluates its chain back to the last materialization — so
-    * with per-round cuts (the default) every broadcast reads a
-    * checkpointed RDD and an iteration costs exactly one in-memory pass
-    * over the edge frame with ZERO recompute; the rank frame is |V| rows
-    * of two longs, so the per-round materialization is trivial. Raising
-    * the interval trades k−1 of those trivial cuts for re-running up to
-    * k−1 iterations inside nested broadcast jobs — only worth it when |V|
-    * is large enough that materializing ranks is itself expensive. */
-  def pagerank(edges: DataFrame, iters: Int = 8, damping: Double = 0.85,
-               checkpointEvery: Int = 1,
-               broadcastRanks: Boolean = true): DataFrame = {
+    * decimals, one row per node. */
+  def pagerank(edges: DataFrame, iters: Int = 8,
+               damping: Double = 0.85): DataFrame = {
     val Seq(srcC, dstC, wC) = edges.columns.toSeq.take(3)
     // one evaluation of the caller's edge pipeline, ever: outw, the n
     // count, and the ew build all read this in-memory snapshot.
@@ -80,18 +73,9 @@ object GraphRank {
     // keeps an ENSURE_REQUIREMENTS exchange above the partial agg: AQE's
     // partition coalescing voids the checkpointed hash partitioning, but
     // what crosses it is the already-combined per-dst rows). When |V|
-    // itself outgrows broadcast (billions of nodes), flip to
-    // src-partitioning + a co-partitioned shuffle join and pay the
-    // edge-sized per-iteration exchange — the classic trade.
-    // broadcastRanks = false IS that flip, implemented below.
-    // broadcastRanks = false is that flip (r17, implemented): the edge
-    // frame pre-partitions by SRC once, each iteration hash-partitions
-    // the rank frame by node (a |V|-row exchange) and the join runs
-    // CO-PARTITIONED with no broadcast and no edge-side shuffle; the
-    // groupBy(dst) then pays the per-iteration edge-sized exchange the
-    // broadcast form avoids. Arithmetic is identical (same decimal
-    // rounding discipline), so the two strategies are row-equal —
-    // GraphRankLargeSpec pins it and the no-broadcast plan shape.
+    // itself outgrows broadcast (billions of nodes), the classic trade is
+    // src-partitioning + a co-partitioned shuffle join that pays an
+    // edge-sized exchange per iteration.
     // r19 opt: the node universe rides INSIDE the edge frame as one
     // zero-weight self-loop row per node (w = 0 ⇒ its contribution is
     // round(r·0/1, 12) = 0.00000000000000 exactly, so every per-dst
@@ -104,7 +88,7 @@ object GraphRank {
       .join(outw, Seq("src"))
       .unionByName(outw.select(col("src"), col("src").as("dst"),
         lit(0L).as("w"), lit(1L).as("ow")))
-      .repartition(if (broadcastRanks) col("dst") else col("src"))
+      .repartition(col("dst"))
       // lazy (r20): materializes inside iteration 1's first job; ew is
       // never unpersisted, so deferred materialization is safe
       .localCheckpoint(eager = false)
@@ -117,9 +101,6 @@ object GraphRank {
       // rounded to 12 decimals, and per-node sums are bounded by the total
       // rank mass (= 1), so 4 integer digits are plenty — and 18 digits
       // keeps the value long-backed (compact) in the aggregation buffer
-      val rankSide =
-        if (broadcastRanks) broadcast(ranks)
-        else ranks.repartition(col("node"))
       // coalesce keeps the degenerate all-null-contribution group (only
       // possible when every real in-edge divides by a zero out-weight)
       // computing round((1−d)/N + d·0, 12), exactly as the old
@@ -134,7 +115,7 @@ object GraphRank {
       // word). Total rank mass is 1, so Σk ≤ ~1e12 at ANY graph size —
       // exact in a long and exact in a double — and s/1e12 casts to the
       // identical double the decimal sum produced. Bit-identical ranks.
-      ranks = ew.join(rankSide, col("node") === col("src"))
+      ranks = ew.join(broadcast(ranks), col("node") === col("src"))
         .select(col("dst"),
           round(round(col("r") * col("w") / col("ow"), 12) * 1e12)
             .cast("long").as("c"))
@@ -144,7 +125,7 @@ object GraphRank {
           lit(damping) *
             (coalesce(col("s"), lit(0L)).cast("double") / 1e12), 12).as("r"))
       sinceCut += 1
-      if (checkpointEvery > 0 && sinceCut >= checkpointEvery) {
+      if (sinceCut >= CutEvery) {
         val cut = ranks.localCheckpoint()
         // bound executor storage at one rank snapshot (+ the in-flight one)
         prevCut.foreach(_.unpersist())

@@ -1003,116 +1003,6 @@ object PipelineOps extends QueryPack {
       .select(col("d1"), col("d2"), col("hamming"))
   }
 
-  /** 120-bit SimHash near-dup pairs — the corpus-scale widening of
-    * [[simhashPairs]] (r18, the sf10 decade catch): at 60 bits the
-    * guaranteed-recall banding is stuck at 4×15 bits (pigeonhole for
-    * Hamming ≤ 3 needs ≥ 4 bands), so band-collision candidates grow
-    * n²/2^16-shaped — measured 38× wall at the sf1 → sf10 decade. This
-    * variant concatenates TWO independent 60-bit fingerprints (the h60
-    * digest half and an xxhash64-derived half — different hash families,
-    * so bits are independent) and bands 4×30: per-band collision
-    * probability drops 2^15-fold, candidate volume is n²/2^31-shaped —
-    * linear-bounded into the billions — while the pigeonhole guarantee
-    * is PRESERVED (Hamming ≤ 3 over the 120-bit fingerprint still forces
-    * some 30-bit band to match exactly). Hamming distance spans both
-    * halves. Same skew knob, same (d1, d2, hamming) shape. Near-dup
-    * recall is STRICTLY STRONGER at the same Hamming budget: 120 bits
-    * halve the per-bit noise rate of borderline pairs (SimHashProps'
-    * concentration argument applies per half). */
-  /** The (doc_id, simA, simB) 2×60-bit signature frame behind
-    * [[simhashPairs128]] — exposed at package level so the spec can
-    * brute-force all-pairs Hamming and pin the banding's completeness. */
-  private[graft] def simhash128Signatures(docs: DataFrame): DataFrame = {
-    val wh = docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism,
-        col("doc_id"))
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-      .select(col("doc_id"), h60(col("word")).as("h"),
-        // independent second family: xxhash64 masked to 60 bits (h60 is
-        // md5-derived — no shared structure between the halves)
-        xxhash64(col("word")).bitwiseAND(lit((1L << 60) - 1)).as("g"))
-      .distinct()
-    val bitCols =
-      (0 until SimBits).map { i =>
-        sum(when(shiftright(col("h"), i).bitwiseAND(lit(1L)) === 1L, 1)
-          .otherwise(-1)).as(s"a$i")
-      } ++ (0 until SimBits).map { i =>
-        sum(when(shiftright(col("g"), i).bitwiseAND(lit(1L)) === 1L, 1)
-          .otherwise(-1)).as(s"c$i")
-      }
-    wh.groupBy(col("doc_id")).agg(bitCols.head, bitCols.tail: _*)
-      .select(col("doc_id"),
-        (0 until SimBits).map(i =>
-          when(col(s"a$i") > 0, lit(1L << i)).otherwise(lit(0L)))
-          .reduce(_ + _).as("simA"),
-        (0 until SimBits).map(i =>
-          when(col(s"c$i") > 0, lit(1L << i)).otherwise(lit(0L)))
-          .reduce(_ + _).as("simB"))
-  }
-
-  def simhashPairs128(docs: DataFrame,
-                      bandSaltFactor: Int = 1): DataFrame = {
-    val sim = simhash128Signatures(docs).localCheckpoint(eager = false)
-    val mask30 = (1L << 30) - 1
-    val bands = sim.select(col("doc_id"), col("simA"), col("simB"),
-        explode(array(
-          struct(lit(0).as("bj"),
-            col("simA").bitwiseAND(lit(mask30)).as("bv")),
-          struct(lit(1).as("bj"),
-            shiftright(col("simA"), 30).bitwiseAND(lit(mask30)).as("bv")),
-          struct(lit(2).as("bj"),
-            col("simB").bitwiseAND(lit(mask30)).as("bv")),
-          struct(lit(3).as("bj"),
-            shiftright(col("simB"), 30).bitwiseAND(lit(mask30)).as("bv"))))
-          .as("bk"))
-      .select(col("doc_id"), col("simA"), col("simB"),
-              col("bk.bj").as("bj"), col("bk.bv").as("bv"))
-    Skew.selfPairs(bands, keyCols = Seq("bj", "bv"), idCol = "doc_id",
-        carry = Seq("simA", "simB"), saltFactor = bandSaltFactor)
-      .withColumn("hamming",
-        (bit_count(col("simA1").bitwiseXOR(col("simA2"))) +
-         bit_count(col("simB1").bitwiseXOR(col("simB2")))).cast("long"))
-      .filter(col("hamming") <= 3)
-      .select(col("d1"), col("d2"), col("hamming"))
-  }
-
-  /** Width-by-corpus sizing rule for SimHash near-dup (r19, VERDICT r18
-    * item 3 — the [[sizeEmbedGate]] discipline for the text side). The
-    * 60-bit fingerprint's guaranteed-recall banding is fixed at 4×15
-    * bits, so its random band-collision candidate volume is
-    * `C(n,2)·4/2^15 ≈ n²/2^14` — quadratic with a small constant that
-    * stops being small past ~10⁵ docs (measured 38× wall at the sf1→sf10
-    * decade, SCALE.md). Keep expected candidates ≤ `pairsPerDoc · n`
-    * (linear):
-    *
-    *  - 60-bit holds while `n ≤ pairsPerDoc · 2^14`;
-    *  - beyond that, the 120-bit / 4×30-band form: candidates
-    *    `n²·4/2^31`, linear-bounded until `n ≈ pairsPerDoc · 2^29`
-    *    (billions) — same Hamming ≤ 3 pigeonhole recall guarantee.
-    *
-    * Defaults: `pairsPerDoc = 8` puts the crossover at n = 131 072 — the
-    * SCALE.md "past ~10⁵ docs" rule as an executable constant. */
-  def simhashWidthFor(nDocs: Long, pairsPerDoc: Double = 8.0): Int = {
-    require(nDocs >= 0, s"negative corpus size: $nDocs")
-    require(pairsPerDoc > 0.0, "pairsPerDoc must be positive")
-    if (nDocs.toDouble <= pairsPerDoc * (1L << 14).toDouble) 60 else 120
-  }
-
-  /** [[simhashPairs]] with the width sized by [[simhashWidthFor]] — the
-    * parameter-free deployment form (the [[sizeEmbedGate]] shape): no
-    * corpus runs the 60-bit fixture banding at a scale where band
-    * collisions go quadratic. Driver-side cost: one count. The contract
-    * key `q_dedup_simhash` keeps the oracle-pinned 60-bit form; this is
-    * what deployments call. Both widths return (d1, d2, hamming) with
-    * the identical Hamming ≤ 3 gate; pairs differ only in the wider
-    * form's strictly lower band-collision noise (SimHashProps pins the
-    * subset relation on the fixture). */
-  def simhashPairsAuto(docs: DataFrame, bandSaltFactor: Int = 1,
-                       pairsPerDoc: Double = 8.0): DataFrame =
-    if (simhashWidthFor(docs.count(), pairsPerDoc) == 60)
-      simhashPairs(docs, bandSaltFactor)
-    else simhashPairs128(docs, bandSaltFactor)
-
   /** Per-lang token-budget sampling (q_token_budget semantics): docs in
     * content-hash order until each lang's running token total crosses
     * `budget` (the crossing doc is kept — fill-until-exceeded, so one
@@ -1286,106 +1176,6 @@ object PipelineOps extends QueryPack {
         round(dot(col("e1"), col("e2")) / (col("n1") * col("n2")), 4).as("cos"))
       .filter(col("cos") >= minCos)
       .orderBy(col("v1"), col("v2"))
-  }
-
-  /** Inverse standard-normal CDF (Acklam's rational approximation,
-    * relative error < 1.15e-9 — driver-side scalar math for the gate
-    * sizing below). */
-  private def invNorm(p: Double): Double = {
-    require(p > 0.0 && p < 1.0, s"invNorm domain: $p")
-    val a = Array(-3.969683028665376e+01, 2.209460984245205e+02,
-      -2.759285104469687e+02, 1.383577518672690e+02,
-      -3.066479806614716e+01, 2.506628277459239e+00)
-    val b = Array(-5.447609879822406e+01, 1.615858368580409e+02,
-      -1.556989798598866e+02, 6.680131188771972e+01,
-      -1.328068155288572e+01)
-    val c = Array(-7.784894002430293e-03, -3.223964580411365e-01,
-      -2.400758277161838e+00, -2.549732539343734e+00,
-      4.374664141464968e+00, 2.938163982698783e+00)
-    val dd = Array(7.784695709041462e-03, 3.224671290700398e-01,
-      2.445134137142996e+00, 3.754408661907416e+00)
-    val pl = 0.02425
-    if (p < pl) {
-      val q = math.sqrt(-2 * math.log(p))
-      (((((c(0) * q + c(1)) * q + c(2)) * q + c(3)) * q + c(4)) * q + c(5)) /
-        ((((dd(0) * q + dd(1)) * q + dd(2)) * q + dd(3)) * q + 1)
-    } else if (p <= 1 - pl) {
-      val q = p - 0.5; val r = q * q
-      (((((a(0) * r + a(1)) * r + a(2)) * r + a(3)) * r + a(4)) * r + a(5)) *
-        q /
-        (((((b(0) * r + b(1)) * r + b(2)) * r + b(3)) * r + b(4)) * r + 1)
-    } else {
-      val q = math.sqrt(-2 * math.log(1 - p))
-      -(((((c(0) * q + c(1)) * q + c(2)) * q + c(3)) * q + c(4)) * q + c(5)) /
-        ((((dd(0) * q + dd(1)) * q + dd(2)) * q + dd(3)) * q + 1)
-    }
-  }
-
-  /** Self-sizing gate for [[embedNearDup]] (r18, VERDICT r17 item 5 —
-    * the SCALE.md rule made executable). The r17 sf10 decade measured
-    * the failure mode empirically: at FIXED (signBits, minCos) the
-    * background cosine tail crosses the gate quadratically with corpus
-    * size (99.8× pairs at 10×), so fixture-calibrated defaults must
-    * never run at corpus scale. This sizes both knobs from the corpus
-    * itself:
-    *
-    *  - `signBits = clamp(ceil(log2(n / targetRowsPerBucket)), 1, min(62, d))`
-    *    — the operator doc's bucket rule: per-bucket membership stays
-    *    ~targetRowsPerBucket, so candidate volume is
-    *    C ≈ n²/2^(signBits+1) ≈ n·targetRowsPerBucket/2, linear in n;
-    *  - the BACKGROUND tail is measured, not assumed: a deterministic
-    *    `vec_id % step == 0` sample (RNG-free, partitioning-invariant),
-    *    paired first-half-to-second-half (sorted by vec_id, so the two
-    *    halves are id-distant — unrelated by construction), gives the
-    *    random-pair cosine mean μ and sd σ;
-    *  - `minCos = max(floor, μ + z·σ)` with
-    *    `z = Φ⁻¹(1 − pairsPerDoc·n/C)` — the smallest gate at which the
-    *    EXPECTED background crossings stay ≤ pairsPerDoc·n (linear);
-    *    genuine near-dups add their own linear mass on top. Rounded UP
-    *    to the 4-dp grain pair cosines round to (conservative).
-    *
-    * Driver-side cost: one count, one `sampleSize`-row collect. The
-    * contract key `q_dedup_embed` keeps its fixture parameters (the
-    * oracle pins them); this is the deployment path. Returns
-    * (signBits, minCos). */
-  def sizeEmbedGate(emb: DataFrame, targetRowsPerBucket: Long = 2048L,
-                    pairsPerDoc: Double = 1.0, minCosFloor: Double = 0.35,
-                    sampleSize: Int = 2000): (Int, Double) = {
-    require(targetRowsPerBucket >= 1, "targetRowsPerBucket must be >= 1")
-    require(pairsPerDoc > 0.0, "pairsPerDoc must be positive")
-    require(sampleSize >= 16, s"sampleSize too small to estimate a tail: " +
-      s"$sampleSize")
-    require(minCosFloor >= -1.0 && minCosFloor < 1.0,
-      s"minCosFloor out of range: $minCosFloor")
-    val n = emb.count()
-    require(n >= 2, s"corpus too small to gate: $n rows")
-    val d = emb.select(size(col("embedding"))).head.getInt(0)
-    val signBits = math.max(1, math.min(math.min(62, d),
-      math.ceil(math.log(n.toDouble / targetRowsPerBucket) /
-        math.log(2.0)).toInt))
-    val step = math.max(1L, n / sampleSize)
-    val vs = emb.filter(col("vec_id") % step === 0)
-      .orderBy(col("vec_id")).limit(sampleSize)
-      .select(col("embedding")).collect()
-      .map(_.getAs[scala.collection.Seq[Float]](0).map(_.toDouble).toArray)
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var dp = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        dp += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-      }
-      dp / math.sqrt(na * nb)
-    }
-    val half = vs.length / 2
-    val coss = (0 until half).map(i => cos(vs(i), vs(i + half)))
-    val mu = coss.sum / coss.length
-    val sd = math.sqrt(coss.map(x => (x - mu) * (x - mu)).sum /
-      math.max(1, coss.length - 1))
-    val cand = n.toDouble * n / math.pow(2.0, signBits + 1.0)
-    val allowedP = pairsPerDoc * n / math.max(cand, 1.0)
-    val gate =
-      if (allowedP >= 1.0 || sd == 0.0) minCosFloor
-      else math.max(minCosFloor, mu + invNorm(1.0 - allowedP) * sd)
-    (signBits, math.min(0.9999, math.ceil(gate * 10000.0) / 10000.0))
   }
 
   /** IVF-style approximate nearest neighbour: assign every vector to its

@@ -233,30 +233,9 @@ object TextOps extends QueryPack {
     * join, and the sizes — one text scan total. */
   def minhashRecall(s: SparkSession, d: String,
                     thresholds: Seq[Double] =
-                      Seq(0.2, 0.3, 0.5, 0.7, 0.9)): DataFrame =
-    minhashRecallFrame(s, Tables.documents(s, d), thresholds)
-
-  /** The corpus-scale recall audit (r19, the "at 100 TB audit a SAMPLE"
-    * rule made executable): the identical readout over a DETERMINISTIC
-    * 1-in-`sampleOneIn` document sample (`xxhash64(doc_id) % k == 0` —
-    * content-independent, restart-stable). Truth-join work scales by
-    * 1/k² (per-shingle doc lists shrink by 1/k, pairs by 1/k²), and the
-    * recall estimate is unbiased over the sampled pair population —
-    * banding treats pairs i.i.d., so sampled recall converges on the
-    * full-corpus figure (ScaleSmoke recallSampled pins the decade). */
-  def minhashRecallSampled(s: SparkSession, d: String, sampleOneIn: Int,
-                           thresholds: Seq[Double] =
-                             Seq(0.2, 0.3, 0.5, 0.7, 0.9)): DataFrame = {
-    require(sampleOneIn >= 1, s"sampleOneIn must be >= 1, got $sampleOneIn")
-    minhashRecallFrame(s, Tables.documents(s, d)
-      .filter(pmod(xxhash64(col("doc_id")), lit(sampleOneIn)) === 0),
-      thresholds)
-  }
-
-  private def minhashRecallFrame(s: SparkSession, docs: DataFrame,
-                                 thresholds: Seq[Double]): DataFrame = {
+                      Seq(0.2, 0.3, 0.5, 0.7, 0.9)): DataFrame = {
     import s.implicits._
-    val sh = shingleHashes(docs)
+    val sh = shingleHashes(Tables.documents(s, d))
       .localCheckpoint(eager = false)
     val sigs = signatureFrame(sh).localCheckpoint(eager = false)
     val cand = bandCandidates(sigs, bandSaltFactor = 1)
@@ -684,51 +663,6 @@ object TextOps extends QueryPack {
         .orderBy(col("doc_id"))
     }
   )
-
-  /** Corpus-scale fuzzy match (r19 — the q_fuzzy_match semantics with
-    * SymSpell-style delete-neighborhood blocking). The contract key
-    * blocks on (first char × length): granularity grows with the KEY
-    * DOMAIN, which is fine until the vocabulary's initial-character
-    * distribution skews — the r19 sf10 smoke measured 21.5× wall at 10×
-    * data when a hot first-char block concentrated the vocabulary
-    * (candidates grow with the largest block², and real corpora have
-    * hot initials too: 's' in English, CJK romanization prefixes).
-    *
-    * This variant blocks on the DELETE NEIGHBORHOOD instead: each
-    * string keys on itself plus its `len` single-character deletions,
-    * and two strings within edit distance 1 ALWAYS share a key
-    * (equal → identity key; substitution at i → both delete i;
-    * insertion → the longer side's delete at the edit IS the shorter
-    * side), so recall is exact by construction — FuzzyDeleteProps
-    * fuzzes it, and the spec pins row-equality with the contract key
-    * on the fixture. Work is O(Σ len(word)) keys with per-key groups
-    * bounded by alphabet-sized delete collisions — independent of
-    * initial-letter skew, linear in vocabulary. Same output shape
-    * (probe, word, dist, n_occ). */
-  def fuzzyMatchDeletes(docs: DataFrame): DataFrame = {
-    val words = docs
-      .select(explode(split(col("text"), " ")).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("n_occ"))
-      .localCheckpoint(eager = false) // feeds probes AND the word side
-    val probes = words
-      .select(expr("substr(word, 1, length(word) - 1)").as("probe"))
-      .filter(length(col("probe")) >= 3).distinct()
-    def deleteKeys(name: String): Column =
-      array_union(array(col(name)), expr(
-        s"transform(sequence(1, length($name)), i -> " +
-        s"concat(substr($name, 1, i - 1), substr($name, i + 1)))"))
-    val pk = probes.select(col("probe"),
-      explode(deleteKeys("probe")).as("dk"))
-    val wk = words.select(col("word"), col("n_occ"),
-      explode(deleteKeys("word")).as("dk"))
-    pk.join(wk, Seq("dk"))
-      .select(col("probe"), col("word"), col("n_occ")).distinct()
-      .filter(levenshtein(col("probe"), col("word")) <= 1)
-      .select(col("probe"), col("word"),
-        levenshtein(col("probe"), col("word")).cast("long").as("dist"),
-        col("n_occ"))
-      .orderBy(col("probe"), col("word"))
-  }
 
   /** Corpus unigram LM score per doc: p(w) = count(w)/total_tokens over
     * the whole corpus, score = Σ tf·ln(p(w)) / Σ tf (unrounded). The token

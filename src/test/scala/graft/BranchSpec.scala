@@ -4,6 +4,7 @@ import graft.sources.SnapshotLake
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Branches (r19): write-audit-publish on the manifest protocol. A
   * branch is a full SnapshotLake table rooted under
@@ -59,6 +60,32 @@ class BranchSpec extends AnyFunSuite {
     assert(SnapshotLake.dropBranch(s, t, "audit"))
     assert(SnapshotLake.branches(s, t).isEmpty)
     assert(s.read.format("graftlake").load(t).count() == 16)
+  }
+
+  test("branch and fast-forward copy zero data bytes: the branch root " +
+       "holds no data and publishing leaves main's files as they were") {
+    val t = tmpDir("br-zero")
+    SnapshotLake.commit(frame(10), t)
+    SnapshotLake.commit(frame(10, 100), t)
+    def dataFiles(root: String): Map[String, Long] = {
+      val d = new java.io.File(s"$root/data").toPath
+      if (!java.nio.file.Files.exists(d)) Map.empty
+      else {
+        val w = java.nio.file.Files.walk(d)
+        try w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+          .map(f => f.toString -> java.nio.file.Files.size(f)).toMap
+        finally w.close()
+      }
+    }
+    val before = dataFiles(t)
+    assert(before.values.sum > 0)
+    SnapshotLake.branch(s, t, "zc")
+    assert(dataFiles(SnapshotLake.branchRoot(t, "zc")).isEmpty,
+      "branching must copy no data")
+    assert(SnapshotLake.fastForward(s, t, "zc").isDefined)
+    assert(dataFiles(t) == before, "publishing must copy no data")
+    assert(rows(s.read.format("graftlake").load(t)) ==
+      rows(frame(10).unionAll(frame(10, 100))))
   }
 
   test("diverged main refuses fast-forward loudly; abandoned branch " +

@@ -45,57 +45,6 @@ class CorpusPrepSpec extends AnyFunSuite {
     assert(got == expected)
   }
 
-  test("simhashPairs128: banded join == brute-force all-pairs Hamming ≤ 3 " +
-       "on the fixture; exact dups at hamming 0 (r18)") {
-    import s.implicits._
-    val docs = Tables.documents(s, TestSpark.Sf0001)
-    val got = graft.ops.PipelineOps.simhashPairs128(docs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    // brute force over the SAME signatures (500 docs -> 125k pairs): the
-    // 4x30 banding must lose nothing at Hamming <= 3 (pigeonhole)
-    val sigs = graft.ops.PipelineOps.simhash128Signatures(docs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    val brute = (for {
-      i <- sigs.indices; j <- (i + 1) until sigs.length
-      h = java.lang.Long.bitCount(sigs(i)._2 ^ sigs(j)._2) +
-          java.lang.Long.bitCount(sigs(i)._3 ^ sigs(j)._3)
-      if h <= 3
-    } yield (sigs(i)._1, sigs(j)._1, h.toLong)).toSet
-    assert(got == brute,
-      s"banded (${got.size}) != brute force (${brute.size})")
-    // identical texts must pair at hamming 0
-    val twins = Seq((9000001L, "alpha beta gamma delta epsilon"),
-                    (9000002L, "alpha beta gamma delta epsilon"),
-                    (9000003L, "utterly unrelated words entirely elsewhere"))
-      .toDF("doc_id", "text")
-    val tp = graft.ops.PipelineOps.simhashPairs128(twins)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(tp.toSeq == Seq((9000001L, 9000002L, 0L)))
-  }
-
-  test("simhashPairsAuto picks the width deterministically and matches " +
-       "the fixed-width form it picked (r19)") {
-    val docs = Tables.documents(s, TestSpark.Sf0001)
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .toSet
-    // 500 fixture docs sit far below the default crossover -> 60-bit
-    assert(graft.ops.PipelineOps.simhashWidthFor(docs.count()) == 60)
-    assert(pairs(graft.ops.PipelineOps.simhashPairsAuto(docs)) ==
-      pairs(graft.ops.PipelineOps.simhashPairs(docs)))
-    // a tiny pair budget forces the 120-bit form (n > pairsPerDoc·2^14)
-    val tinyBudget = 500.0 / (1 << 14) / 2
-    assert(graft.ops.PipelineOps
-      .simhashWidthFor(docs.count(), tinyBudget) == 120)
-    assert(pairs(graft.ops.PipelineOps
-        .simhashPairsAuto(docs, pairsPerDoc = tinyBudget)) ==
-      pairs(graft.ops.PipelineOps.simhashPairs128(docs)))
-    // the default crossover is the SCALE.md rule: ~1.3e5 docs
-    assert(graft.ops.PipelineOps.simhashWidthFor(131072L) == 60)
-    assert(graft.ops.PipelineOps.simhashWidthFor(131073L) == 120)
-  }
-
   test("q_dedup_passage never removes the canonical first occurrence") {
     val rows = TextOps.queries("q_dedup_passage")(s, TestSpark.Sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))

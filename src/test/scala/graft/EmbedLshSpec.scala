@@ -292,40 +292,4 @@ class EmbedLshSpec extends AnyFunSuite {
     assert(trained >= 0.90,
       s"trained recall floor broken at the key's operating point: $trained")
   }
-
-  test("sizeEmbedGate: deterministic, linearity-bounding, floor-respecting " +
-       "(r18 — the SCALE.md rule made executable)") {
-    val (bits, gate) = PipelineOps.sizeEmbedGate(emb)
-    // deterministic: the sample is vec_id-stepped, not RNG'd
-    assert(PipelineOps.sizeEmbedGate(emb) == ((bits, gate)))
-    // fixture is ~500 rows < targetRowsPerBucket → one bit, floor gate
-    assert(bits == 1, s"500-row corpus should size to 1 bit, got $bits")
-    assert(gate >= 0.35, s"gate must respect the floor: $gate")
-    // the defining inequality: expected background crossings stay linear.
-    // Re-measure the sample tail INDEPENDENTLY and check
-    // C × P̂(cos ≥ gate) ≤ pairsPerDoc·n (2× slack for the normal fit)
-    val vs = emb.orderBy(col("vec_id")).select(col("embedding")).collect()
-      .map(_.getAs[scala.collection.Seq[Float]](0).map(_.toDouble).toArray)
-    def cosOf(a: Array[Double], b: Array[Double]): Double = {
-      var dp = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        dp += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-      }
-      dp / math.sqrt(na * nb)
-    }
-    val half = vs.length / 2
-    val coss = (0 until half).map(i => cosOf(vs(i), vs(i + half)))
-    val n = vs.length.toDouble
-    val cand = n * n / math.pow(2.0, bits + 1.0)
-    val crossing = coss.count(_ >= gate).toDouble / coss.length * cand
-    assert(crossing <= 2.0 * n,
-      s"expected background crossings $crossing exceed linear bound ${2 * n}")
-    // tightening: a stricter pairs budget can only raise the gate; a
-    // smaller bucket target can only widen the bits
-    val (bits2, gate2) = PipelineOps.sizeEmbedGate(emb,
-      targetRowsPerBucket = 8L, pairsPerDoc = 1e-4)
-    assert(bits2 > bits && gate2 >= gate,
-      s"($bits2, $gate2) should tighten ($bits, $gate)")
-    assert(bits2 == 6, s"ceil(log2(500/8)) = 6, got $bits2") // 500-row fixture
-  }
 }

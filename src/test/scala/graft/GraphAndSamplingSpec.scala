@@ -24,34 +24,6 @@ class GraphAndSamplingSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
   }
 
-  test("pagerank co-partitioned strategy == broadcast strategy row-for-row (r17)") {
-    // the billions-of-nodes flip: src-partitioned edges + per-iteration
-    // node-partitioned ranks, shuffle join, no broadcast — the arithmetic
-    // (decimal contributions, round-12 ranks) is strategy-independent so
-    // the results must be byte-equal, and the plan must actually carry
-    // the co-partitioned shape (no broadcast of the rank frame)
-    import spark.implicits._
-    val edges = Tables.lineitem(spark, TestSpark.Sf0001)
-      .join(Tables.orders(spark, TestSpark.Sf0001),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_custkey").as("a"), col("l_suppkey").as("b"))
-      .agg(count(lit(1)).as("w"))
-    val sym = edges.select(col("a").as("src"), (col("b") + 1000000L).as("dst"), col("w"))
-      .unionByName(edges.select((col("b") + 1000000L).as("src"),
-        col("a").as("dst"), col("w")))
-    val iters = 4
-    val bc = graft.ops.GraphRank.pagerank(sym, iters = iters)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val cp = graft.ops.GraphRank.pagerank(sym, iters = iters,
-      broadcastRanks = false)
-    val cpPlan = cp.queryExecution.executedPlan.toString
-    assert(!cpPlan.contains("BroadcastHashJoin"),
-      s"co-partitioned strategy must not broadcast:\n$cpPlan")
-    val cpMap = cp.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(cpMap == bc,
-      "strategies diverged — the decimal discipline must make them byte-equal")
-  }
-
   test("pagerank: symmetric 2-cycle splits rank evenly and conserves mass") {
     val r = rankMap(Seq((1L, 2L, 1L), (2L, 1L, 1L)))
     assert(r.keySet == Set(1L, 2L))

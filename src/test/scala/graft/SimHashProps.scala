@@ -47,61 +47,4 @@ object SimHashProps extends Properties("SimHash") {
     forAll(sig60, sig60, sig60) { (a, b, c) =>
       hamming(a, c) <= hamming(a, b) + hamming(b, c)
     }
-
-  // ---- the 120-bit widening (r18, simhashPairs128) -------------------
-
-  private def bands120(simA: Long, simB: Long): Seq[Long] =
-    Seq(simA & 0x3fffffffL, (simA >> 30) & 0x3fffffffL,
-        simB & 0x3fffffffL, (simB >> 30) & 0x3fffffffL)
-
-  private val flips120: Gen[Seq[Int]] = for {
-    k <- Gen.chooseNum(0, 3)
-    bits <- Gen.listOfN(k, Gen.chooseNum(0, 119))
-  } yield bits
-
-  // The same pigeonhole, one fingerprint width out: Hamming ≤ 3 over the
-  // CONCATENATED 120 bits forces some 30-bit band to match exactly —
-  // the guarantee the wider candidate join relies on at corpus scale.
-  property("120-bit pairs within Hamming 3 always share a 30-bit band") =
-    forAll(sig60, sig60, flips120) { (simA, simB, flips) =>
-      var a2 = simA; var b2 = simB
-      flips.foreach { i =>
-        if (i < 60) a2 ^= 1L << i else b2 ^= 1L << (i - 60)
-      }
-      hamming(simA, a2) + hamming(simB, b2) > 3 ||
-        bands120(simA, simB).zip(bands120(a2, b2)).exists(p => p._1 == p._2)
-    }
-
-  property("4 × 30-bit bands partition the 120-bit signature") =
-    forAll(sig60, sig60) { (simA, simB) =>
-      val bs = bands120(simA, simB)
-      (bs(0) | (bs(1) << 30)) == simA && (bs(2) | (bs(3) << 30)) == simB
-    }
-
-  // ---- the width-by-corpus sizing rule (r19, simhashWidthFor) --------
-
-  // The rule is the linearity inequality made executable: at the chosen
-  // width, expected random band collisions C(n,2)·4/2^(w/4) stay at or
-  // under pairsPerDoc·n; it is monotone (never narrows as n grows) and
-  // lands the SCALE.md crossover (~10⁵ docs at the default budget).
-  property("simhashWidthFor keeps expected collisions ≤ pairsPerDoc·n") =
-    forAll(Gen.chooseNum(2L, 4000000000L),
-           Gen.chooseNum(1, 64)) { (n, p) =>
-      val w = graft.ops.PipelineOps.simhashWidthFor(n, p.toDouble)
-      val expected = n.toDouble * (n - 1) / 2.0 * 4.0 /
-        math.pow(2.0, w / 4.0)
-      (w == 60 || w == 120) &&
-        (expected <= p.toDouble * n ||
-          // past the 120-bit linear range there is no wider rung —
-          // the rule must have picked the widest form
-          w == 120)
-    }
-
-  property("simhashWidthFor is monotone in corpus size") =
-    forAll(Gen.chooseNum(2L, 1000000000L), Gen.chooseNum(2L, 1000000000L),
-           Gen.chooseNum(1, 64)) { (n1, n2, p) =>
-      val (lo, hi) = if (n1 <= n2) (n1, n2) else (n2, n1)
-      graft.ops.PipelineOps.simhashWidthFor(lo, p.toDouble) <=
-        graft.ops.PipelineOps.simhashWidthFor(hi, p.toDouble)
-    }
 }

@@ -26,9 +26,14 @@ reflection or through an external interface without `override`.
 Comments are stripped before matching; string literals are kept, because
 Spark resolves classes by name.
 
+Reachability is computed twice: from every root, and again without the
+probe mains (PROBE_ROOTS: ScaleSmoke). A probe main may run only what
+some other root reaches; anything it alone keeps alive is a one-off form.
+
 Output: one line per unreached item. An item on KEEP prints as `KEEP`
 with its reason; anything else prints as `UNREACHED` and the exit status
-is 1. Private members are not reported.
+is 1. Private members are not reported. Each item only a probe main
+reaches prints as `PROBE-ONLY`, also with exit status 1.
 """
 import os
 import re
@@ -50,6 +55,11 @@ ROOT_TYPES = {
     # the training pipeline's public stages
     "TrainingPipeline",
 }
+
+# Probe mains: roots for the scan, but nothing may be reached through
+# them alone. A probe runs SparkEntry keys; a form only a probe reaches is
+# printed as PROBE-ONLY.
+PROBE_ROOTS = {"ScaleSmoke"}
 
 # Unreached on purpose, Owner.member -> reason. Two kinds: reference forms
 # that a remaining test checks reachable code against, and test-only API
@@ -93,6 +103,8 @@ KEEP = {
     "SnapshotLake.update":
         "test-only: the lake suites' UPDATE fixture; SQL UPDATE is "
         "planned by Spark's row-level rewrite through the catalog",
+    "RuntimeDirPruning.runtimePrunedDirs":
+        "test hook: RuntimePruneSpec counts pruned dirs through it",
 }
 
 MODS = r"(?:(?:final|sealed|abstract|case|implicit|lazy|override|private|protected)(?:\[\w+\])?\s+)*"
@@ -228,23 +240,53 @@ def main():
         a != m.owner and any(x.name == m.name for x in by_owner.get(a, []))
         for a in ancestors(m.owner))}
 
-    reached = set()   # keys
-    work = []         # (body, path, own type, own key)
+    def reach_from(roots):
+        reached = set()   # keys
+        work = []         # (body, path, own type, own key)
 
-    def reach(d):
-        if d.key in reached:
-            return
-        reached.add(d.key)
-        work.append((d.body, d.path, d.owner or d.name, d.key))
+        def reach(d):
+            if d.key in reached:
+                return
+            reached.add(d.key)
+            work.append((d.body, d.path, d.owner or d.name, d.key))
 
-    def reach_type(name, whole=False):
-        for t in types:
-            if t.name == name:
-                reach(t)
-        for m in by_owner.get(name, []):
-            if whole or "override" in m.mods or "implicit" in m.mods \
-                    or m.name in EXEMPT or m.key in implements:
-                reach(m)
+        def reach_type(name, whole=False):
+            for t in types:
+                if t.name == name:
+                    reach(t)
+            for m in by_owner.get(name, []):
+                if whole or "override" in m.mods or "implicit" in m.mods \
+                        or m.name in EXEMPT or m.key in implements:
+                    reach(m)
+
+        for r in sorted(roots):
+            reach_type(r, whole=True)
+
+        while work:
+            body, path, own, own_key = work.pop()
+            idents = set(IDENT.findall(body))
+            quals = set(re.findall(r"\b(\w+)\s*\.\s*(\w+)", body))
+            imps = file_imports.get(path, [])
+            # types: any mention reaches the type (and its exempt members)
+            for n in idents & type_names:
+                reach_type(n)
+            visible = ancestors(own) if own else set()
+            for m in members:
+                if m.key in reached or m.key == own_key \
+                        or m.name not in idents:
+                    continue
+                is_object = kinds.get(m.owner) == {"object"}
+                hit = (m.owner, m.name) in quals or m.owner in visible
+                if not hit:
+                    hit = any(o == m.owner and (ns is None or m.name in ns)
+                              for o, ns in imps)
+                if not hit and not is_object:
+                    hit = m.owner in reached  # instance member, by name
+                if hit:
+                    reach(m)
+                    if m.owner not in reached:
+                        reach_type(m.owner)
+        return reached
 
     roots = set(ROOT_TYPES)
     for t in types:
@@ -263,32 +305,12 @@ def main():
                 t = strip_comments(open(os.path.join(d, f),
                                         encoding="utf-8").read())
                 roots.update(set(IDENT.findall(t)) & type_names)
-    for r in sorted(roots):
-        reach_type(r, whole=True)
-
-    while work:
-        body, path, own, own_key = work.pop()
-        idents = set(IDENT.findall(body))
-        quals = set(re.findall(r"\b(\w+)\s*\.\s*(\w+)", body))
-        imps = file_imports.get(path, [])
-        # types: any mention reaches the type (and its exempt members)
-        for n in idents & type_names:
-            reach_type(n)
-        visible = ancestors(own) if own else set()
-        for m in members:
-            if m.key in reached or m.key == own_key or m.name not in idents:
-                continue
-            is_object = kinds.get(m.owner) == {"object"}
-            hit = (m.owner, m.name) in quals or m.owner in visible
-            if not hit:
-                hit = any(o == m.owner and (ns is None or m.name in ns)
-                          for o, ns in imps)
-            if not hit and not is_object:
-                hit = m.owner in reached  # instance member, matched by name
-            if hit:
-                reach(m)
-                if m.owner not in reached:
-                    reach_type(m.owner)
+    reached = reach_from(roots)
+    # what only a probe main reaches: a probe mode must run keys, not keep
+    # a form alive that nothing else runs
+    probe_only = reached - reach_from(roots - PROBE_ROOTS) - {
+        d.key for d in types + members
+        if d.name in PROBE_ROOTS or d.owner in PROBE_ROOTS}
 
     out, bad = [], 0
     for t in types:
@@ -308,6 +330,11 @@ def main():
     for k in stale:
         bad += 1
         print(f"STALE KEEP {k} -- reached or gone; drop it from KEEP")
+    for d in sorted((d for d in types + members if d.key in probe_only),
+                    key=lambda d: (d.path, d.line)):
+        bad += 1
+        print(f"PROBE-ONLY {d.key}  ({os.path.relpath(d.path, ROOT)}:"
+              f"{d.line}) -- only {'/'.join(sorted(PROBE_ROOTS))} reaches it")
     return 1 if bad else 0
 
 
