@@ -109,8 +109,6 @@ object Components {
       converged = s.compareTo(prevSum) == 0
       prevSum = s
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        Console.err.println(s"[cc] round $iter sum=$s converged=$converged")
     }
     require(converged, s"connectedComponents did not converge in $maxIters rounds")
     labels

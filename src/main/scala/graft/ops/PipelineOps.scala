@@ -498,42 +498,12 @@ object PipelineOps extends QueryPack {
 
     // ---- q_dedup_ngram: word-bigram Jaccard with rare-gram candidates -
     // Candidates = pairs sharing ≥1 bigram with doc-frequency ≤ 20 (prefix
-    // filtering); exact Jaccard ≥ 0.4 on the full bigram sets.
+    // filtering, [[rareGramOverlap]]); exact Jaccard ≥ 0.4 on the full
+    // bigram sets.
     "q_dedup_ngram" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      // Bigrams via the codegen'd WordShingles (empty set for single-word
-      // docs — they can't be near-dups; exact dedup catches identical
-      // short texts), digested to h60 immediately: every downstream
-      // shuffle, distinct, and join then moves 8-byte longs instead of
-      // bigram strings. Gram STRINGS must match the oracle's
-      // `ws[i] || ' ' || ws[i+1]` exactly — h60 runs on them.
-      // r19 opt: same multi-consumer shape as q_containment — grams has
-      // five subtree copies and rare self-joins; cut both once (lazy
-      // localCheckpoint) instead of re-running scan+shingle+digest+
-      // distinct per copy. Both frames are narrow (doc_id, h60 long).
-      val grams = docs.select(col("doc_id"),
-          explode(graft.expr.WordShingles.of(col("text"), 2)).as("gs"))
-        .select(col("doc_id"), graft.expr.Md5Prefix60.h60(col("gs")).as("g"))
-        .distinct()
-        .localCheckpoint(eager = false)
-      val sizes = grams.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val rare = grams.join(
-        grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= 20).select(col("g")), Seq("g"))
-        .localCheckpoint(eager = false)
-      val cand = rare.alias("x").join(rare.alias("y"),
-          col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-        .distinct()
-      val inter = cand
-        .join(grams.select(col("doc_id").as("d1"), col("g")), Seq("d1"))
-        .join(grams.select(col("doc_id").as("d2"), col("g")), Seq("d2", "g"))
-        .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("n_inter"))
-      inter
-        .join(sizes.select(col("doc_id").as("d1"), col("n").as("n1")), Seq("d1"))
-        .join(sizes.select(col("doc_id").as("d2"), col("n").as("n2")), Seq("d2"))
-        .withColumn("jaccard", round(col("n_inter").cast("double") /
-          (col("n1") + col("n2") - col("n_inter")), 4))
+      rareGramOverlap(Tables.documents(s, d), 2)
+        .withColumn("jaccard", round(col("ov").cast("double") /
+          (col("n1") + col("n2") - col("ov")), 4))
         .filter(col("jaccard") >= 0.4)
         .select(col("d1"), col("d2"), col("jaccard"))
         .orderBy(col("d1"), col("d2"))
@@ -552,8 +522,8 @@ object PipelineOps extends QueryPack {
     },
 
     // ---- q_ann_ivf: IVF-style ANN (16 lists, nprobe=4, top-5) ---------
-    // r16: served from TRAINED centroids ([[ivfTopKTrained]] — the same
-    // Lloyd round the persisted AnnIndex commits; the oracle trains the
+    // r16: served from TRAINED centroids ([[ivfTopKTrained]] — one
+    // Lloyd round, AnnIndex.trainCentroids; the oracle trains the
     // identical round via the shared trainedCentsSql generator). The
     // seeded [[ivfTopK]] stays as the pedagogical form; its doc carries
     // the ~√n list-count sizing rule. The 100 TB path is unchanged — the
@@ -829,39 +799,11 @@ object PipelineOps extends QueryPack {
     // Containment C(A→B) = |A∩B|/|A| over distinct 5-gram sets — the
     // near-dup signal Jaccard structurally misses: a short doc pasted
     // inside a long one has tiny Jaccard (union is big) but containment
-    // ≈ 1. Candidates come from the same rare-gram blocking as
-    // q_dedup_ngram (df ≤ 20 — recall bounded by the blocking, identical
-    // in the oracle by construction); the exact intersection then runs
-    // only inside candidate pairs, and both directions come out of ONE
-    // overlap count. Grams travel as h60 longs end-to-end.
+    // ≈ 1. Candidates and overlaps come from [[rareGramOverlap]], the
+    // kernel q_dedup_ngram runs over bigrams (df ≤ 20 blocking — recall
+    // bounded by it, identical in the oracle by construction).
     "q_containment" -> { (s, d) =>
-      // r19 opt: the gram frame feeds FIVE subtree copies (sizes, both
-      // rare sides, both intersection sides) and rare feeds its own
-      // self-join twice; AQE reuses none of them across branches, so the
-      // scan+shingle+digest+distinct pipeline re-ran per copy. grams is
-      // (doc_id, long) rows and rare is its df<=20 slice — both trivial
-      // to materialize once via the lazy-checkpoint discipline.
-      val grams = Tables.documents(s, d)
-        .select(col("doc_id"),
-          explode(graft.expr.WordShingles.of(col("text"), 5)).as("gs"))
-        .select(col("doc_id"), h60(col("gs")).as("g"))
-        .distinct()
-        .localCheckpoint(eager = false)
-      val sizes = grams.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val rare = grams.join(
-        grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
-          .filter(col("df") <= 20).select(col("g")), Seq("g"))
-        .localCheckpoint(eager = false)
-      val cand = rare.alias("x").join(rare.alias("y"),
-          col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-        .distinct()
-      cand
-        .join(grams.select(col("doc_id").as("d1"), col("g")), Seq("d1"))
-        .join(grams.select(col("doc_id").as("d2"), col("g")), Seq("d2", "g"))
-        .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("ov"))
-        .join(sizes.select(col("doc_id").as("d1"), col("n").as("n1")), Seq("d1"))
-        .join(sizes.select(col("doc_id").as("d2"), col("n").as("n2")), Seq("d2"))
+      rareGramOverlap(Tables.documents(s, d), 5)
         .withColumn("c12", round(col("ov").cast("double") / col("n1"), 4))
         .withColumn("c21", round(col("ov").cast("double") / col("n2"), 4))
         .filter(greatest(col("c12"), col("c21")) >= 0.6)
@@ -933,6 +875,49 @@ object PipelineOps extends QueryPack {
         .orderBy(col("label"), col("pos"))
     }
   )
+
+  /** The rare-gram candidate kernel of q_dedup_ngram (word bigrams) and
+    * q_containment (word 5-grams): (d1, d2, ov, n1, n2) for every doc
+    * pair d1 < d2 sharing at least one gram of doc-frequency ≤ 20 (prefix
+    * filtering), with `ov` = |G1 ∩ G2| over the docs' full distinct gram
+    * sets of sizes n1 and n2.
+    *
+    * Grams come from the codegen'd WordShingles (empty set for docs
+    * shorter than `width` words — they can't be near-dups; exact dedup
+    * catches identical short texts), digested to h60 immediately: every
+    * downstream shuffle, distinct, and join then moves 8-byte longs
+    * instead of gram strings. Gram STRINGS must match the oracles'
+    * space-joined words exactly — h60 runs on them.
+    *
+    * r19 opt: the gram frame feeds FIVE subtree copies (sizes, both rare
+    * sides, both intersection sides) and rare feeds its own self-join
+    * twice; AQE reuses none of them across branches, so the
+    * scan+shingle+digest+distinct pipeline re-ran per copy. Both are
+    * narrow (doc_id, h60 long) rows, cut once with lazy localCheckpoints.
+    * The exact intersection runs only inside candidate pairs, and both
+    * directions of it come out of ONE overlap count. */
+  private def rareGramOverlap(docs: DataFrame, width: Int): DataFrame = {
+    val grams = docs.select(col("doc_id"),
+        explode(graft.expr.WordShingles.of(col("text"), width)).as("gs"))
+      .select(col("doc_id"), h60(col("gs")).as("g"))
+      .distinct()
+      .localCheckpoint(eager = false)
+    val sizes = grams.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    val rare = grams.join(
+      grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
+        .filter(col("df") <= 20).select(col("g")), Seq("g"))
+      .localCheckpoint(eager = false)
+    val cand = rare.alias("x").join(rare.alias("y"),
+        col("x.g") === col("y.g") && col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
+      .distinct()
+    cand
+      .join(grams.select(col("doc_id").as("d1"), col("g")), Seq("d1"))
+      .join(grams.select(col("doc_id").as("d2"), col("g")), Seq("d2", "g"))
+      .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("ov"))
+      .join(sizes.select(col("doc_id").as("d1"), col("n").as("n1")), Seq("d1"))
+      .join(sizes.select(col("doc_id").as("d2"), col("n").as("n2")), Seq("d2"))
+  }
 
   /** Greedy sequence packing as a streaming secondary sort. Input must have
     * columns (doc_id LONG, lang STRING, tok LONG); output adds pack_id.
@@ -1260,10 +1245,10 @@ object PipelineOps extends QueryPack {
       .orderBy(col("probe_id"), col("rn"))
 
   /** TRAINED centroid frame shared by the serving keys: one spherical-
-    * Lloyd round ([[AnnIndex.trainCentroids]] — the identical arithmetic
-    * the persisted index commits), norms precomputed, localCheckpointed
-    * because both the list-assignment and probe-routing arms read it
-    * (re-deriving the lineage would re-run the training job). */
+    * Lloyd round ([[AnnIndex.trainCentroids]]), norms precomputed,
+    * localCheckpointed because both the list-assignment and
+    * probe-routing arms read it (re-deriving the lineage would re-run
+    * the training job). */
   private def trainedCents(s: SparkSession, d: String,
                            nLists: Int): DataFrame =
     AnnIndex.trainCentroids(Tables.embeddings(s, d), nLists)
@@ -1285,7 +1270,7 @@ object PipelineOps extends QueryPack {
   /** [[ivfTopK]] served from TRAINED centroids (r16, VERDICT r15 item 3):
     * the q_ann_ivf contract key's form — identical inverted-file serve
     * shape, but the lists hang off the one-round spherical-Lloyd means
-    * the persisted [[AnnIndex]] commits, not the first-nLists raw seed
+    * [[AnnIndex.trainCentroids]] computes, not the first-nLists raw seed
     * vectors the pedagogical [[ivfTopK]] uses. Recall at fixed nProbe is
     * measurably higher (EmbedLshSpec pins trained ≥ seeded at the key's
     * nProbe=4). Scale shape unchanged: centroids broadcast, corpus
@@ -1362,8 +1347,8 @@ object PipelineOps extends QueryPack {
     * r16 corpus-shape-independent rule AnnIndex.trainCentroids runs),
     * then round-6 exact-decimal means. Single source for BOTH the
     * q_ann_ivf and q_ann_recall oracles and their Spark twins, so the
-    * serving keys and the persisted index can never train differently
-    * from what the oracle checks. */
+    * serving keys can never train differently from what the oracle
+    * checks. */
   private def trainedCentsSql(duck: Boolean, nLists: Int): String = {
     val cos = sqlCos(duck) _
     val cast =
@@ -1405,7 +1390,7 @@ object PipelineOps extends QueryPack {
 
   /** Single source for the q_ann_ivf oracle AND its Spark twin (r16,
     * VERDICT r15 item 3: the contract key now serves from the TRAINED
-    * centroids — the same Lloyd round the persisted [[AnnIndex]] runs —
+    * centroids — the Lloyd round of [[AnnIndex.trainCentroids]] —
     * instead of the first-nLists seed vectors). */
   def annIvfSql(duck: Boolean, nLists: Int = 16, nProbe: Int = 4,
                 k: Int = 5): String = {

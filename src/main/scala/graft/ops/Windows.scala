@@ -314,61 +314,4 @@ object Windows extends QueryPack {
       FROM wn GROUP BY event_type, day
       ORDER BY event_type, day"""
   )
-
-  /** The constant-memory scale path for q_window_count_distinct — rolling
-    * distinct users WITHOUT per-row sets. A user active on day d is
-    * "covered" for days [d, d+w−1]; consecutive activity days with gap < w
-    * merge into one coverage interval, so a user contributes +1 at each
-    * interval start and −1 just past its end, and the trailing-w distinct
-    * count at any day is the prefix sum of those deltas. Memory per window
-    * row is O(1) (two longs), vs collect_set's O(distinct users in frame) —
-    * the difference between a dashboard query and an OOM when one event
-    * type covers half a 100 TB feed with a 90-day window.
-    *
-    * Shape: one shuffle by (type, user) for the run detection (lag + the
-    * sessionize conditional-cumsum), one run aggregation on the same
-    * partitioning, then a per-type prefix-sum window over the DELTA frame
-    * — ≤ 2 rows per coverage interval, calendar-dense at worst, never
-    * fact-sized. The activity days ride through the same window as
-    * delta-0 markers (RANGE frame, so a day's +1/−1 pairs all land before
-    * the day is read). Equality with the collect_set form is pinned by
-    * GraphAndSamplingSpec on the fixture.
-    *
-    * `act` must be DISTINCT (event_type, day DATE, user_id) rows; returns
-    * (event_type, day, u7) for exactly the activity days, u7 = distinct
-    * users active in the trailing `w` days. */
-  def rollingDistinctViaDeltas(act: DataFrame, w: Int): DataFrame = {
-    val dn = datediff(col("day"), lit("2024-01-01").cast("date"))
-    val perUser = Window.partitionBy(col("event_type"), col("user_id"))
-      .orderBy(col("dn"))
-    val runs = act.select(col("event_type"), col("user_id"), dn.as("dn"))
-      .withColumn("new_run",
-        when(col("dn") - lag(col("dn"), 1).over(perUser) >= w, 1)
-          .otherwise(when(lag(col("dn"), 1).over(perUser).isNull, 1)
-            .otherwise(0)))
-      .withColumn("run_id", sum(col("new_run")).over(
-        perUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("event_type"), col("user_id"), col("run_id"))
-      .agg(min(col("dn")).as("start_dn"), (max(col("dn")) + w).as("end_dn"))
-    val deltas = runs
-      .select(col("event_type"), col("start_dn").as("dn"), lit(1L).as("delta"))
-      .unionByName(runs.select(col("event_type"), col("end_dn").as("dn"),
-        lit(-1L).as("delta")))
-      .groupBy(col("event_type"), col("dn"))
-      .agg(sum(col("delta")).as("delta"))
-    // activity days ride the SAME prefix-sum window as delta-0 marker
-    // rows; the RANGE frame makes every +1/−1 at dn ≤ D visible to the
-    // day-D reading, including the −1 that lands exactly on D
-    val days = act.select(col("event_type"), col("day"), dn.as("dn")).distinct()
-    val perType = Window.partitionBy(col("event_type")).orderBy(col("dn"))
-      .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    deltas
-      .select(col("event_type"), col("dn"),
-        lit(null).cast("date").as("day"), col("delta"))
-      .unionByName(days.select(col("event_type"), col("dn"), col("day"),
-        lit(0L).as("delta")))
-      .withColumn("u", sum(col("delta")).over(perType))
-      .filter(col("day").isNotNull)
-      .select(col("event_type"), col("day"), col("u").as("u7"))
-  }
 }

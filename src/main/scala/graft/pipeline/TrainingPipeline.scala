@@ -176,36 +176,6 @@ object TrainingPipeline {
     (survivors, id)
   }
 
-  /** [[dedupCycle]] + ANN-index hygiene (r18, VERDICT r17 item 4): after
-    * the cycle commits, the batch rows dedup REMOVED (exact dups against
-    * the canon or inside the batch) also leave the persisted ANN index
-    * at `annRoot` — [[graft.ops.AnnIndex.delete]]'s dir-granular CoW, so
-    * a removed document's vector stops serving from probes without a
-    * rebuild (vec_id = doc_id, the pipeline convention). The delete
-    * retries through lost CAS races against concurrent appends (bounded)
-    * — an append is never dropped, and the removed ids always leave.
-    * Returns (survivors, canon snapshot id). */
-  def dedupCycleWithIndex(batch: DataFrame, canonTable: String,
-                          annRoot: String,
-                          prefixWords: Int = 0): (DataFrame, Long) = {
-    val spark = batch.sparkSession
-    val (survivors0, id) = dedupCycle(batch, canonTable, prefixWords)
-    val survivors = survivors0.localCheckpoint(false)
-    val removed = batch.select(col("doc_id"))
-      .join(survivors.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .select(col("doc_id").as("vec_id"))
-    var attempts = 0
-    var done = false
-    while (!done && attempts < 16) {
-      done = graft.ops.AnnIndex.delete(spark, annRoot, removed).isDefined
-      attempts += 1
-    }
-    require(done, s"ANN vector deletion lost $attempts CAS races at " +
-      s"$annRoot — a concurrent lists writer is hot; re-run the cycle's " +
-      "hygiene pass")
-    (survivors, id)
-  }
-
   /** Near-dup removal via the MinHash LSH pipeline (q_dedup_minhash
     * semantics): every doc that is the HIGHER id of any ≥-threshold pair
     * is dropped. Conservative: in a transitive chain (1~2, 2~3, 1≁3),
@@ -393,7 +363,7 @@ object TrainingPipeline {
     * repetition/LM scores cost one token shuffle each, dedup's LSH is
     * the most expensive — each stage shrinks the next one's input.
     * Returns the cleaned, annotated corpus; persist with
-    * [[graft.sources.LakeSink]] between runs at scale. Incremental
+    * [[graft.sources.SnapshotLake]] between runs at scale. Incremental
     * (per-crawl) flows run [[dedupAgainstCanon]] on the raw batch FIRST
     * — against the prior snapshot's [[contentDigests]] ledger — so
     * prepare() never pays quality/LSH work for docs the corpus already

@@ -124,8 +124,9 @@ class GraftLakeCatalog extends TableCatalog
       .NoSuchFunctionException(ident)
 
   /** `CALL graftlake.system.<proc>(...)` — the maintenance procedures
-    * (r18): compact / expire / zorder / rebalance, each ≡ its object-API
-    * twin under the same CAS discipline (see [[GraftProcedures]]). */
+    * (r18): compact / expire / zorder and the history, tag, rollback and
+    * branch procedures, each ≡ its object-API twin under the same CAS
+    * discipline (see [[GraftProcedures]]). */
   override def loadProcedure(ident: Identifier)
       : org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure = {
     val known = GraftProcedures.names.mkString(", ")

@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure,
   ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType,
-  IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType,
+  LongType, StringType, StructField, StructType}
 
 /** SQL maintenance procedures (r18, VERDICT r17 item 7) — the
   * `CALL`-style entry points a Delta/Iceberg operator expects, served
@@ -17,17 +17,15 @@ import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType,
   *   CALL graftlake.system.compact(table => '/t')
   *   CALL graftlake.system.expire(table => '/t', keep_last => 3)
   *   CALL graftlake.system.zorder(table => '/t', cols => 'k,v', bits => 8)
-  *   CALL graftlake.system.rebalance(index_root => '/idx', max_skew => 2.0)
   * }}}
   *
   * Each procedure IS its object-API twin ([[SnapshotLake.compact]],
-  * [[SnapshotLake.expire]], [[SnapshotLake.compactZOrder]],
-  * [[graft.ops.AnnIndex.rebalance]]) — same CAS discipline, surfaced in
-  * the result row instead of an Option: `(committed BOOLEAN,
-  * snapshot_id BIGINT)` where a lost optimistic-concurrency race reads
-  * `(false, NULL)` and the statement is safe to re-run (the losing
-  * rewrite is an invisible orphan, GC'd by expire — exactly the object
-  * API's contract). `expire` returns the retained snapshot count. */
+  * [[SnapshotLake.expire]], [[SnapshotLake.compactZOrder]]) — same CAS
+  * discipline, surfaced in the result row instead of an Option:
+  * `(committed BOOLEAN, snapshot_id BIGINT)` where a lost optimistic-
+  * concurrency race reads `(false, NULL)` and the statement is safe to
+  * re-run (the losing rewrite is an invisible orphan, GC'd by expire —
+  * exactly the object API's contract). `expire` returns the retained snapshot count. */
 private[graft] object GraftProcedures {
 
   private def spark: SparkSession = SparkSession.active
@@ -106,17 +104,6 @@ private[graft] object GraftProcedures {
         args.getUTF8String(0).toString, cols, args.getInt(2),
         args.getInt(3), args.getLong(4)))
     }
-  }
-
-  private object Rebalance extends Proc("rebalance",
-    "split hot ANN inverted lists past max_skew x mean residency " +
-      "(AnnIndex.rebalance)",
-    Seq(in("index_root", StringType),
-      inDefault("max_skew", DoubleType, "2.0")),
-    casResult) {
-    override protected def run(args: InternalRow): Array[InternalRow] =
-      casRow(graft.ops.AnnIndex.rebalance(spark,
-        args.getUTF8String(0).toString, args.getDouble(1)))
   }
 
   private object History extends Proc("history",
@@ -234,7 +221,7 @@ private[graft] object GraftProcedures {
   }
 
   private val all: Seq[Proc] =
-    Seq(Compact, Expire, ZOrder, Rebalance, History, Tag, DropTag,
+    Seq(Compact, Expire, ZOrder, History, Tag, DropTag,
       Rollback, Branch, FastForward, DropBranch)
 
   def names: Seq[String] = all.map(_.name())

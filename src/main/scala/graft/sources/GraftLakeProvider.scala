@@ -68,10 +68,9 @@ import org.apache.spark.sql.types.StructType
   *    count — manifests are the source of truth);
   *  - `ds.writeStream.format("graftlake").option("checkpointLocation",
   *    cp).start(table)` — each micro-batch commits through
-  *    [[SnapshotLake.commitIdempotent]] keyed on the batchId: the
-  *    exactly-once discipline of [[SnapshotLake.streamWriter]] behind the
-  *    format-level API (a restart's replayed batch is a recorded no-op,
-  *    a crashed half-write is healed and rewritten). Append output mode
+  *    [[SnapshotLake.commitIdempotent]] keyed on the batchId: exactly
+  *    once (a restart's replayed batch is a recorded no-op, a crashed
+  *    half-write is healed and rewritten). Append output mode
   *    only — Complete/Update re-emit updated result rows, which an
   *    append-only snapshot history would duplicate, so they are refused
   *    at start.
@@ -271,9 +270,14 @@ class GraftLakeProvider extends RelationProvider
     }
   }
 
-  /** Streaming sink: exactly-once micro-batch commits keyed on batchId —
-    * `SnapshotLake.streamWriter`'s discipline behind
-    * `writeStream.format("graftlake")`. */
+  /** Streaming sink: exactly-once micro-batch commits keyed on batchId.
+    * Structured Streaming re-delivers an uncommitted micro-batch after a
+    * restart with the SAME batchId (offset-log contract), and that id is
+    * the [[SnapshotLake.commitIdempotent]] dedupKey: a crash between data
+    * write and manifest rename leaves an unreferenced dir the replay
+    * rewrites, a crash after the rename makes the replay a recorded
+    * no-op. Each micro-batch becomes one atomic snapshot, so downstream
+    * consumers can tail the table with [[SnapshotLake.readIncremental]]. */
   override def createSink(sqlContext: SQLContext,
                           parameters: Map[String, String],
                           partitionColumns: Seq[String],

@@ -1,67 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-/** Partitioned parquet "lake" writer — the batch sink a 100 TB pipeline
-  * actually uses between stages (persisting dedup signatures, enriched
-  * events, features), as opposed to the per-record StreamSink of the
-  * ingestion façade.
-  *
-  * Layout policy, all standard data-lake idioms:
-  *  - directory-partitioned by a low-cardinality derived date column
-  *    (`dt=yyyy-MM-dd`) so readers get partition pruning for free;
-  *  - `repartition(partition cols)` before the write so each output
-  *    directory is written by the tasks that own its rows — without it,
-  *    every task writes a file into every partition (tasks × partitions
-  *    small files, the classic lake pathology);
-  *  - `maxRecordsPerFile` caps file size instead of a fixed file count,
-  *    so the same writer works at any scale factor.
-  */
-object LakeSink {
-
-  /** Write `df` date-partitioned on timestamp column `tsCol`.
-    *
-    * The pre-write repartition keys on (dt, bounded salt), not dt alone:
-    * hashing only the low-cardinality date would funnel each entire day
-    * into ONE task — a multi-TB day written single-threaded. The salt
-    * gives every day up to `writersPerDay` parallel writers while still
-    * bounding files per directory to `writersPerDay` (not tasks ×
-    * partitions).
-    */
-  def writeByDay(df: DataFrame, tsCol: String, path: String,
-                 maxRecordsPerFile: Long = 1000000L,
-                 writersPerDay: Int = 4): Unit =
-    // raw ts column, NOT pre-hashed: writeByKey applies the single xxhash64
-    // (double-hashing would silently change writer-bucket assignment vs the
-    // original pmod(xxhash64(ts), writers) layout)
-    writeByKey(df.withColumn("dt", date_format(col(tsCol), "yyyy-MM-dd")),
-      "dt", col(tsCol), path, maxRecordsPerFile, writersPerDay)
-
-  /** Generic form: partition directories by any low-cardinality column
-    * (a language, a source, a corpus split — the partitions a training
-    * pipeline reads selectively). Same layout policy as [[writeByDay]]:
-    * salted repartition for up to `writersPerKey` parallel writers per
-    * directory without the tasks×partitions small-file blow-up.
-    * `saltExpr` must be a deterministic column expression with enough
-    * cardinality to spread within a partition (a row id, a content hash).
-    */
-  def writeByKey(df: DataFrame, partCol: String, saltExpr:
-                 org.apache.spark.sql.Column, path: String,
-                 maxRecordsPerFile: Long = 1000000L,
-                 writersPerKey: Int = 4): Unit =
-    df.repartition(col(partCol),
-        pmod(xxhash64(saltExpr), lit(writersPerKey.toLong)))
-      .write
-      .partitionBy(partCol)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .mode("overwrite")
-      .parquet(path)
-
-  /** Read back with partition pruning available on `dt`. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-}
 
 /** Snapshot-committed lake table — the manifest-commit protocol (the
   * Iceberg/Delta core idea, reduced to its invariants) layered over plain
@@ -440,7 +380,7 @@ object SnapshotLake {
     * kills the dominant exchange at 100 TB. The line is maintained by
     * [[commitBucketed]], by compact/ALTER (layout-preserving since r18),
     * and — since r19 — by the row-level mutations ([[delete]]/[[update]]/
-    * [[merge]]/[[deleteMatching]] and the SQL row-level path), which
+    * [[merge]] and the SQL row-level path), which
     * route their rewritten directories through the SAME bucket function
     * and keep the line; a plain [[commit]] append still refuses loudly,
     * so the line's presence IS the invariant that all dirs carry
@@ -814,8 +754,8 @@ object SnapshotLake {
                   val (r0, n0, pmn, pmx) = acc.getOrElse(name,
                     (0L, 0L, None: Option[BigDecimal],
                      None: Option[BigDecimal]))
-                  def merge(a: Option[BigDecimal], b: Option[BigDecimal],
-                            f: (BigDecimal, BigDecimal) => BigDecimal) =
+                  def combine(a: Option[BigDecimal], b: Option[BigDecimal],
+                              f: (BigDecimal, BigDecimal) => BigDecimal) =
                     (a, b) match {
                       case (Some(x), Some(y)) => Some(f(x, y))
                       case (x, None) => x
@@ -823,7 +763,7 @@ object SnapshotLake {
                     }
                   acc(name) = (r0 + block.getRowCount,
                     n0 + s0.getNumNulls,
-                    merge(pmn, mn, _ min _), merge(pmx, mx, _ max _))
+                    combine(pmn, mn, _ min _), combine(pmx, mx, _ max _))
                 }
               }
             }
@@ -1333,29 +1273,6 @@ object SnapshotLake {
       replayed = committedIds.nonEmpty)
   }
 
-  /** `foreachBatch` sink: exactly-once streaming ingest into the snapshot
-    * table. Wire with
-    * `ds.writeStream.option("checkpointLocation", cp)
-    *    .foreachBatch(SnapshotLake.streamWriter(table)).start()`.
-    *
-    * Structured Streaming re-delivers an uncommitted micro-batch after a
-    * restart with the SAME batchId (offset-log contract), and that id is
-    * the [[commitIdempotent]] dedupKey — so unlike the ledger-based
-    * [[graft.queue.StreamingQueueSink]] (whose sink is a fire-and-forget
-    * queue), there is NO at-least-once residue here at all: a crash
-    * between data write and manifest rename leaves an unreferenced dir
-    * the replay rewrites, a crash after the rename makes the replay a
-    * recorded no-op. Each micro-batch becomes one atomic snapshot, so
-    * downstream consumers can tail the table with [[readIncremental]]
-    * checkpointed on snapshot ids. */
-  def streamWriter[T](table: String, maxRecordsPerFile: Long = 1000000L):
-      (Dataset[T], Long) => Unit =
-    (batch, batchId) => {
-      commitIdempotent(batch.toDF(), table, s"batch-$batchId",
-        maxRecordsPerFile)
-      ()
-    }
-
   /** OPTIMIZE: rewrite the CURRENT table contents as one fresh data
     * directory (bin-packing the accumulated per-commit small files into
     * `maxRecordsPerFile`-bounded ones) and commit it as a full-replace
@@ -1509,8 +1426,8 @@ object SnapshotLake {
                              addDirectives: Seq[String] = Nil)
 
   /** The one copy-on-write rewrite (the Delta/Iceberg CoW shape at
-    * data-directory granularity) behind [[delete]], [[update]], [[merge]]
-    * and [[deleteMatching]]. It resolves dirs, directives, evolved schema
+    * data-directory granularity) behind [[delete]], [[update]] and
+    * [[merge]]. It resolves dirs, directives, evolved schema
     * and bucket layout at `base`, lets `plan` validate against them and
     * name the [[Rewrite]], probes each dir, carries the untouched dirs
     * into the new manifest by identity (their files keep identity for
@@ -1659,35 +1576,6 @@ object SnapshotLake {
         addDirectives = extras.map(f =>
           s"#schema\tadd\t${f.name}\t${f.dataType.sql}").toSeq)
     }
-  }
-
-  /** Keyed row DELETE — [[merge]] without the insert half (r18): every
-    * target row whose `keys` match a row of `doomed` is removed, at the
-    * same directory granularity (broadcast semi-join probe per dir — the
-    * doomed set is the small side by construction; affected dirs rewrite
-    * via an anti join). The API [[delete]] cannot give when the doomed
-    * set is a FRAME rather than a predicate (an `isin` over a collected
-    * list stops being a plan at scale). None on a lost race (a racing
-    * append is never dropped), Some(base) untouched when nothing
-    * matches. */
-  def deleteMatching(spark: SparkSession, table: String, doomed: DataFrame,
-                     keys: Seq[String],
-                     maxRecordsPerFile: Long = 1000000L): Option[Long] =
-    deleteMatchingFrom(spark, table, requireLatest(spark, table), doomed,
-      keys, maxRecordsPerFile)
-
-  private[graft] def deleteMatchingFrom(spark: SparkSession, table: String,
-                                        base: Long, doomed: DataFrame,
-                                        keys: Seq[String],
-                                        maxRecordsPerFile: Long)
-      : Option[Long] = {
-    require(keys.nonEmpty, "deleteMatching needs at least one key column")
-    val k = doomed.select(keys.map(col): _*).distinct()
-      .localCheckpoint(false) // one evaluation feeds every dir probe
-    if (k.isEmpty) return Some(base)
-    val bk = broadcast(k)
-    copyOnWrite(spark, table, base, maxRecordsPerFile)((_, _) =>
-      Rewrite(_.join(bk, keys, "left_semi"), _.join(bk, keys, "left_anti")))
   }
 
   /** ROLLBACK (r19): restore the table head to the state of an earlier

@@ -435,15 +435,6 @@ class GraftLakeCatalogSpec extends AnyFunSuite {
       SnapshotLake.snapshots(s, t) == SnapshotLake.snapshots(s, twin)
         .map(_ => SnapshotLake.snapshots(s, t).head))
     assert(SnapshotLake.snapshots(s, t).length == 1)
-    // rebalance: a cold index is a committed no-op at the same base
-    val idx = tmpDir("cat-proc-idx")
-    graft.ops.AnnIndex.build(Tables.embeddings(s, TestSpark.Sf0001),
-      idx, 8)
-    val base = SnapshotLake.latest(s, s"$idx/lists").get
-    val r = s.sql(
-      s"CALL graftlake.system.rebalance(index_root => '$idx')").collect()
-    assert(r(0).getBoolean(0) && r(0).getLong(1) == base,
-      "a balanced index must be a committed no-op at the same base")
     // history: one row per snapshot, ids and counts off the manifests
     val h = s.sql(s"CALL graftlake.system.history(table => '$twin')")
       .collect()

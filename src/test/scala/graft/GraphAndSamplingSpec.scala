@@ -128,20 +128,6 @@ class GraphAndSamplingSpec extends AnyFunSuite {
     }
   }
 
-  test("rollingDistinctViaDeltas == q_window_count_distinct (both constant-memory since r16)") {
-    val act = Tables.events(spark, TestSpark.Sf0001)
-      .select(col("event_type"), to_date(col("ts")).as("day"), col("user_id"))
-      .distinct()
-    val viaDeltas = graft.ops.Windows.rollingDistinctViaDeltas(act, 7)
-      .collect()
-      .map(r => (r.getString(0), r.getDate(1).toString, r.getLong(2))).toSet
-    val viaSets = run("q_window_count_distinct")
-      .map(r => (r.getString(0), r.getDate(1).toString, r.getLong(3))).toSet
-    assert(viaDeltas == viaSets,
-      s"delta form diverged: only-deltas=${(viaDeltas -- viaSets).take(5)} " +
-      s"only-sets=${(viaSets -- viaDeltas).take(5)}")
-  }
-
   // ---- q_weighted_sample -------------------------------------------------
 
   test("q_weighted_sample: selection == brute-force A-ES top-25 recomputed locally") {

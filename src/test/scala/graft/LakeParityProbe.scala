@@ -1,7 +1,8 @@
 package graft
 
 import graft.sources.SnapshotLake
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.functions._
 import scala.util.Try
 
@@ -35,6 +36,18 @@ object LakeParityProbe {
         norm(String.valueOf(e.getMessage)).take(160) }.get
       log += s"$name -> $r"
     }
+    // one micro-batch through writeStream.format("graftlake"): `df` lands
+    // as new files in the table's stream source dir, and the query,
+    // restarted on the table's checkpoint, reads only those files as its
+    // next batch id
+    def streamBatch(table: String, df: DataFrame): Unit = {
+      df.write.mode("append").parquet(s"$table-stream/src")
+      s.readStream.schema(df.schema).parquet(s"$table-stream/src")
+        .writeStream.format("graftlake")
+        .option("checkpointLocation", s"$table-stream/cp")
+        .trigger(Trigger.AvailableNow()).start(table)
+        .awaitTermination()
+    }
     val t = s"$root/t"
     step("commit1")(SnapshotLake.commit(Seq((1L, "a", 1.0), (2L, "b", 2.0),
       (3L, "c", 3.0)).toDF("k", "v", "score"), t))
@@ -45,8 +58,8 @@ object LakeParityProbe {
       append = false))
     step("commit3")(SnapshotLake.commit(Seq((6L, "f", 6.0))
       .toDF("k", "v", "score"), t))
-    step("stream0")(SnapshotLake.streamWriter[Row](t)(
-      Seq((7L, "g", 7.0)).toDF("k", "v", "score"), 0L))
+    step("stream0")(streamBatch(t,
+      Seq((7L, "g", 7.0)).toDF("k", "v", "score")))
     step("stream0 replay")(SnapshotLake.commitIdempotent(
       Seq((7L, "g", 7.0)).toDF("k", "v", "score"), t, "batch-0"))
     step("addColumn")(SnapshotLake.addColumn(s, t, "note", "string"))
@@ -61,13 +74,11 @@ object LakeParityProbe {
       Map("note" -> lit("upd"))))
     step("merge")(SnapshotLake.merge(s, t, Seq((3L, "C", 33.0, "m"),
       (10L, "j", 10.0, "m")).toDF("k", "label", "score", "note"), Seq("k")))
-    step("deleteMatching")(SnapshotLake.deleteMatching(s, t,
-      Seq(4L).toDF("k"), Seq("k")))
     step("dropColumn")(SnapshotLake.dropColumn(s, t, "score"))
     step("append dropped")(SnapshotLake.commit(Seq((20L, "x", 1.0, "n"))
       .toDF("k", "label", "score", "note"), t))
-    step("stream2")(SnapshotLake.streamWriter[Row](t)(
-      Seq((11L, "k", "n11")).toDF("k", "label", "note"), 2L))
+    step("stream1")(streamBatch(t,
+      Seq((11L, "k", "n11")).toDF("k", "label", "note")))
     step("merge evolve")(SnapshotLake.merge(s, t,
       Seq((12L, "l", "n12", 1)).toDF("k", "label", "note", "extra"),
       Seq("k")))
@@ -119,7 +130,7 @@ object LakeParityProbe {
       b, Seq("k"), 4, Seq("v")))
     step("b plain append")(SnapshotLake.commit(bframe(3, "z"), b))
     step("b sql insert")(s.sql(s"INSERT INTO graftlake.`$b` VALUES (100L, 'q', 1.5)"))
-    step("b stream")(SnapshotLake.streamWriter[Row](b)(bframe(5, "s"), 0L))
+    step("b stream")(streamBatch(b, bframe(5, "s")))
     step("b delete")(SnapshotLake.delete(s, b, col("k") === 3L))
     step("b update")(SnapshotLake.update(s, b, col("k") === 4L,
       Map("v" -> lit("U"))))

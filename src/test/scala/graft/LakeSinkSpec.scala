@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{LakeSink, SnapshotLake}
+import graft.sources.SnapshotLake
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,29 +11,6 @@ class LakeSinkSpec extends AnyFunSuite {
     val d = java.nio.file.Files.createTempDirectory(name).toFile
     d.deleteOnExit()
     d.getAbsolutePath
-  }
-
-  test("writes hive-style dt= directories and round-trips rows") {
-    val dir = tmpDir("lake")
-    val events = Tables.events(s, TestSpark.Sf0001)
-    LakeSink.writeByDay(events, "ts", dir)
-    val dts = new java.io.File(dir).listFiles().map(_.getName)
-      .filter(_.startsWith("dt=")).sorted
-    assert(dts.nonEmpty && dts.forall(_.matches("dt=\\d{4}-\\d{2}-\\d{2}")))
-    assert(LakeSink.read(s, dir).count() == events.count())
-  }
-
-  test("files per partition directory bounded by writersPerDay") {
-    val dir = tmpDir("lake-files")
-    LakeSink.writeByDay(Tables.events(s, TestSpark.Sf0001), "ts", dir,
-      writersPerDay = 4)
-    val perDir = new java.io.File(dir).listFiles().filter(_.getName.startsWith("dt="))
-      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
-    assert(perDir.nonEmpty)
-    perDir.foreach { case (dt, n) =>
-      assert(n >= 1 && n <= 4,
-        s"$dt has $n files; salted repartition-before-write broken")
-    }
   }
 
   // ---- SnapshotLake: manifest-commit protocol (r10 verdict item 3) ----
@@ -163,42 +140,6 @@ class LakeSinkSpec extends AnyFunSuite {
       "retry must replace the torn half-write, not merge with it")
   }
 
-  test("streamWriter: each micro-batch is one atomic snapshot, exactly-once across restart") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import s.implicits._
-    val table = tmpDir("snap-stream")
-    val ckpt = tmpDir("snap-stream-ckpt")
-    val input = MemoryStream[(Long, String)](s)
-    def start() = input.toDS().toDF("k", "v").writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch(SnapshotLake.streamWriter[org.apache.spark.sql.Row](table))
-      .start()
-    val q1 = start()
-    try {
-      input.addData((1L, "a"), (2L, "b"))
-      q1.processAllAvailable()
-      input.addData((3L, "c"))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    assert(SnapshotLake.snapshots(s, table) == Seq(1L, 2L))
-    // incremental tail: snapshot 2 is exactly micro-batch 1
-    assert(SnapshotLake.readIncremental(s, table, 1L, 2L)
-      .as[(Long, String)].collect().toSeq == Seq((3L, "c")))
-    // restart on the same checkpoint: new batches land, replayed ids don't
-    val q2 = start()
-    try {
-      input.addData((4L, "d"))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    assert(SnapshotLake.readLatest(s, table)
-      .as[(Long, String)].collect().sorted.toSeq ==
-      Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
-    // a zombie replay of an already-committed batch id: recorded no-op
-    assert(SnapshotLake.commitIdempotent(
-      Seq((1L, "a"), (2L, "b")).toDF("k", "v"), table, "batch-0").isEmpty)
-    assert(SnapshotLake.readLatest(s, table).count() == 4L)
-  }
-
   test("readIncremental returns exactly the rows added between two snapshots") {
     import s.implicits._
     val table = tmpDir("snap-incr")
@@ -238,19 +179,6 @@ class LakeSinkSpec extends AnyFunSuite {
     // the incremental delta carries the evolved shape
     assert(SnapshotLake.readIncremental(s, table, 1L, 2L)
       .columns.sorted.toSeq == Seq("k", "score", "v"))
-  }
-
-  test("a dt filter prunes the scan to matching partitions") {
-    val dir = tmpDir("lake-prune")
-    LakeSink.writeByDay(Tables.events(s, TestSpark.Sf0001), "ts", dir)
-    // partition-column inference types dt as DATE on read
-    val firstDt = LakeSink.read(s, dir)
-      .agg(min(col("dt").cast("string"))).head.getString(0)
-    val df = LakeSink.read(s, dir).filter(col("dt") === lit(firstDt))
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [") &&
-           plan.contains("dt"), s"no partition filter in:\n$plan")
   }
 
   test("delete is copy-on-write: untouched dirs survive by identity, " +

@@ -128,14 +128,6 @@ class SkewAndBucketSpec extends AnyFunSuite {
     } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("hotKeys surfaces the heaviest join keys first") {
-    val hot = Skew.hotKeys(Tables.lineitem(s, TestSpark.Sf0001), "l_suppkey", 3)
-      .collect()
-    assert(hot.length == 3)
-    val counts = hot.map(_.getLong(1))
-    assert(counts.zip(counts.tail).forall { case (a, b) => a >= b })
-  }
-
   test("joining two tables bucketed on the key plans no shuffle") {
     // warehouse dir is a static conf — uses the session default
     // (spark-warehouse/, gitignored); drop catalog entries AND any

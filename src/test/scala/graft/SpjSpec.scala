@@ -181,9 +181,8 @@ class SpjSpec extends AnyFunSuite {
     assert(SnapshotLake.merge(s, a, src, Seq("k")).isDefined)
     assert(SnapshotLake.manifestBucket(s, a,
       SnapshotLake.latest(s, a).get).contains((8, Seq("k"), Seq())))
-    // deleteMatching keeps it
-    assert(SnapshotLake.deleteMatching(s, a,
-      Seq(Tuple1(7L)).toDF("k"), Seq("k")).isDefined)
+    // DELETE keeps it
+    assert(SnapshotLake.delete(s, a, col("k") === 7L).isDefined)
     assert(SnapshotLake.manifestBucket(s, a,
       SnapshotLake.latest(s, a).get).contains((8, Seq("k"), Seq())))
     // every post-mutation file still routes exactly per Spark's function

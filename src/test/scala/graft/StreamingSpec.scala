@@ -464,8 +464,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming PSI drift monitor: V2 stream → snapshot lake → psiOf == batch q_psi") {
     // r13 verdict item 7: the r13 drift key runs INCREMENTALLY — the V2
-    // micro-batch source feeds SnapshotLake.streamWriter (exactly-once,
-    // one atomic snapshot per batch), and the PSI readout recomputes over
+    // micro-batch source feeds writeStream.format("graftlake") (exactly-
+    // once, one atomic snapshot per batch), and the PSI readout recomputes over
     // the accumulated lake after each increment. The claim: after any
     // prefix of batches the monitor equals the batch q_psi over the same
     // rows — drift monitoring is a pure function of the lake state.
@@ -487,13 +487,10 @@ class StreamingSpec extends AnyFunSuite {
     val batch1 = (0L until 40L).map(i => i -> (rnd.nextInt(1000) / 10.0))
     val batch2 = (40L until 90L).map(i => i -> (rnd.nextInt(400) / 10.0 + 60.0))
     drop("b1.json", batch1)
-    val writer = SnapshotLake.streamWriter[org.apache.spark.sql.Row](table)
     val q = spark.readStream.format(fmt).load(srcDir.getAbsolutePath)
       .select(col("event_id"), col("value"))
-      .writeStream.option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        writer(b, id)
-      }.start()
+      .writeStream.format("graftlake").option("checkpointLocation", ckpt)
+      .start(table)
     import spark.implicits._
     def psiOfLake() = graft.ops.EvalOps.psiOf(
       SnapshotLake.readLatest(spark, table)

@@ -153,38 +153,6 @@ class TrainingPipelineSpec extends AnyFunSuite {
     assert(s3.count() == 0L, "replayed batch should be fully canon-known")
   }
 
-  test("dedupCycleWithIndex: removed docs' vectors leave the ANN index, " +
-       "survivors' stay (r18)") {
-    import s.implicits._
-    val canon = java.nio.file.Files.createTempDirectory("canon-ann").toString
-    val annRoot = java.nio.file.Files.createTempDirectory("ann-hyg").toString
-    // index over the embeddings fixture (vec_id = doc_id convention)
-    val emb = Tables.embeddings(s, TestSpark.Sf0001)
-    graft.ops.AnnIndex.build(emb, annRoot, 8)
-    val listsT = s"$annRoot/lists"
-    val before = graft.sources.SnapshotLake.readLatest(s, listsT)
-      .select("vec_id").as[Long].collect().toSet
-    // batch: docs 1 and 2 are exact dups (2 drops), 3 unique (keeps)
-    val batch = Seq(
-      (1L, "alpha beta gamma delta"),
-      (2L, "alpha beta gamma delta"),
-      (3L, "completely different text here")).toDF("doc_id", "text")
-    val (survivors, id1) =
-      TrainingPipeline.dedupCycleWithIndex(batch, canon, annRoot)
-    assert(id1 == 1L)
-    assert(survivors.select("doc_id").as[Long].collect().sorted.toSeq ==
-      Seq(1L, 3L))
-    val after = graft.sources.SnapshotLake.readLatest(s, listsT)
-      .select("vec_id").as[Long].collect().toSet
-    assert(after == before - 2L,
-      "exactly the dedup-removed doc's vector must leave the index")
-    // replaying the batch drops everything — all three vectors leave
-    TrainingPipeline.dedupCycleWithIndex(batch, canon, annRoot)
-    val replayed = graft.sources.SnapshotLake.readLatest(s, listsT)
-      .select("vec_id").as[Long].collect().toSet
-    assert(replayed == before -- Seq(1L, 2L, 3L))
-  }
-
   test("sampleTokens fills each lang's budget and never overshoots before the crossing doc") {
     val budget = 500L
     val out = TrainingPipeline.sampleTokens(docs, budget)
@@ -300,9 +268,8 @@ class TrainingPipelineSpec extends AnyFunSuite {
     // lang=... directories rather than reading the whole lake
     val out = java.nio.file.Files.createTempDirectory("lake_e2e").toString
     val prepared = TrainingPipeline.prepare(docs).filter(col("pred_lang").isNotNull)
-    graft.sources.LakeSink.writeByKey(prepared, "lang", col("doc_id"),
-      out, writersPerKey = 2)
-    val back = graft.sources.LakeSink.read(s, out)
+    prepared.write.partitionBy("lang").mode("overwrite").parquet(out)
+    val back = s.read.parquet(out)
     assert(back.count() == prepared.count(), "lake round-trip lost rows")
     val one = back.filter(col("lang") === "en")
     val expect = prepared.filter(col("lang") === "en")
@@ -341,12 +308,11 @@ class TrainingPipelineSpec extends AnyFunSuite {
     assert(early == 0, "pack closed early — boundary diverges from q_seq_pack")
     // multiple packs actually exist (the invariants weren't vacuous)
     assert(packs.count() > manifest.select("lang").distinct().count())
-    // composes with the lake sink: manifest + text, pack-partitioned read-back
+    // composes with a lake write: manifest + text, lang-partitioned read-back
     val dir = java.nio.file.Files.createTempDirectory("pack_lake").toString
     val withText = manifest.join(prepared.select("doc_id", "text"), Seq("doc_id"))
-    graft.sources.LakeSink.writeByKey(withText, "lang", col("pack_id"), dir,
-      writersPerKey = 2)
-    assert(graft.sources.LakeSink.read(s, dir).count() == manifest.count(),
+    withText.write.partitionBy("lang").mode("overwrite").parquet(dir)
+    assert(s.read.parquet(dir).count() == manifest.count(),
       "packed lake round-trip lost rows")
   }
 
@@ -357,12 +323,12 @@ class TrainingPipelineSpec extends AnyFunSuite {
     assert(out.columns.contains("pred_lang"))
     // predictions exist for every doc (shared vocabulary ⇒ profile overlap)
     assert(out.filter(col("pred_lang").isNull).count() == 0)
-    // composes with the lake sink (smoke: write + read back)
+    // composes with the snapshot lake (smoke: commit + read back)
     val dir = java.nio.file.Files.createTempDirectory("prep").toFile
     dir.deleteOnExit()
-    out.withColumn("ts", lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
-      .transform(df => { graft.sources.LakeSink.writeByDay(df, "ts", dir.getAbsolutePath); df })
-    assert(graft.sources.LakeSink.read(s, dir.getAbsolutePath).count() == out.count())
+    graft.sources.SnapshotLake.commit(out, dir.getAbsolutePath)
+    assert(graft.sources.SnapshotLake.readLatest(s, dir.getAbsolutePath)
+      .count() == out.count())
   }
 
   test("prepare() with lmDropFraction inserts the LM gate between heuristics and dedup") {

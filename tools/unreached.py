@@ -32,8 +32,10 @@ some other root reaches; anything it alone keeps alive is a one-off form.
 
 Output: one line per unreached item. An item on KEEP prints as `KEEP`
 with its reason; anything else prints as `UNREACHED` and the exit status
-is 1. Private members are not reported. Each item only a probe main
-reaches prints as `PROBE-ONLY`, also with exit status 1.
+is 1. A KEEP reason must begin with `reference:` or `test hook:`; any
+other prints as `BAD KEEP`, also with exit status 1. Private members are
+not reported. Each item only a probe main reaches prints as
+`PROBE-ONLY`, also with exit status 1.
 """
 import os
 import re
@@ -61,10 +63,13 @@ ROOT_TYPES = {
 # printed as PROBE-ONLY.
 PROBE_ROOTS = {"ScaleSmoke"}
 
-# Unreached on purpose, Owner.member -> reason. Two kinds: reference forms
-# that a remaining test checks reachable code against, and test-only API
-# whose removal takes tests with it (ROADMAP lists them as the next
-# deletion candidates).
+# Unreached on purpose, Owner.member -> reason. Two kinds, and each
+# reason names its kind first: `reference:` for a form that a remaining
+# test checks reachable code against, `test hook:` for a probe a test
+# observes internals through. Anything else only a test keeps alive is
+# deleted with the tests whose subject it is; a reason of another kind
+# prints `BAD KEEP` and fails the check.
+KEEP_KINDS = ("reference:", "test hook:")
 KEEP = {
     "Windows.windowCountDistinctSets":
         "reference: the collect_set form AggSwapSpec checks "
@@ -74,35 +79,21 @@ KEEP = {
         "against it",
     "SnapshotLake.readBranch":
         "reference: BranchSpec reads each branch head through it",
+    "SnapshotLake.readLatest":
+        "reference: GraftLakeProviderSpec checks the V1 reader's latest "
+        "read and GraftLakeCatalogSpec checks catalog SELECT against it",
     "SnapshotLake.audit":
         "reference: LakeSinkSpec checks it against q_snapshot_drift's "
         "output shape",
     "PipelineOps.ivfTopK":
         "reference: the seeded-centroid IVF that EmbedLshSpec checks "
         "q_ann_recall and q_ann_ivf against",
-    "AnnIndex.build":
-        "creates the index the `rebalance` procedure and "
-        "TrainingPipeline.dedupCycleWithIndex maintain",
-    "AnnIndex.rebuild":
-        "test-only: drift retrain of that index (AnnIndexSpec)",
-    "LakeSink":
-        "test-only: the date/key-partitioned parquet writer "
-        "(LakeSinkSpec)",
-    "SnapshotLake.streamWriter":
-        "test-only: the foreachBatch form of the exactly-once writer "
-        "that writeStream.format(\"graftlake\") provides (StreamingSpec, "
-        "TrainingPipelineSpec, LakeParityProbe)",
-    "GraftLakeCdc":
-        "test-only: the lake-to-lake keyed view over the change feed "
-        "(GraftLakeCdcSpec, whose suite also holds the feed's tests)",
-    "Windows.rollingDistinctViaDeltas":
-        "test-only: the width-parameterized delta form of "
-        "q_window_count_distinct (GraphAndSamplingSpec)",
-    "Skew.hotKeys":
-        "test-only: the one-pass skew probe (SkewAndBucketSpec)",
     "SnapshotLake.update":
-        "test-only: the lake suites' UPDATE fixture; SQL UPDATE is "
-        "planned by Spark's row-level rewrite through the catalog",
+        "reference: GraftLakeCatalogSpec checks SQL UPDATE (Spark's "
+        "row-level rewrite through the catalog) against it",
+    "SnapshotLake.merge":
+        "reference: GraftLakeCatalogSpec checks SQL MERGE INTO (Spark's "
+        "row-level rewrite through the catalog) against it",
     "RuntimeDirPruning.runtimePrunedDirs":
         "test hook: RuntimePruneSpec counts pruned dirs through it",
 }
@@ -313,6 +304,11 @@ def main():
         if d.name in PROBE_ROOTS or d.owner in PROBE_ROOTS}
 
     out, bad = [], 0
+    for key, why in sorted(KEEP.items()):
+        if not why.startswith(KEEP_KINDS):
+            bad += 1
+            print(f"BAD KEEP   {key} -- reason must begin with "
+                  f"{' or '.join(KEEP_KINDS)}: {why}")
     for t in types:
         if t.name not in reached:
             out.append((t, t.name))
